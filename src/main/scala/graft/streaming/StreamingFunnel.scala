@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Incremental funnel tracking over an event stream — the streaming twin
@@ -52,12 +52,5 @@ object StreamingFunnel {
           if (cur.depth > 0 || state.exists) state.update(cur)
           cur
       }
-  }
-
-  /** Convenience: (user_id, event_type, us) columns → [[funnelDepth]]. */
-  def funnelDepthFromColumns(events: DataFrame, steps: Seq[String]): Dataset[FunnelState] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    funnelDepth(events.selectExpr("user_id", "event_type", "us").as[FunnelEvent], steps)
   }
 }

@@ -3,14 +3,15 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
-import scala.concurrent.ExecutionContext
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import scala.concurrent.{ExecutionContext, blocking}
 import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analytics.MonitoringAnalytics
 import graft.config.ConfigTables
-import graft.ingest.{FakeReportSource, TokenManager}
+import graft.ingest.{FakeReportSource, ReportSource, Retry, TokenManager}
 import graft.model.{JobRun, Status}
 import graft.run.{Monitoring, Orchestrator}
 
@@ -27,6 +28,38 @@ object PipelineSpec {
   val sourceFactory: () => FakeReportSource = () => new FakeReportSource(25)
   val tokenFactory: () => TokenManager =
     () => new TokenManager(() => TokenManager.Token("test-token", 3600))
+
+  /** Each generate call counts the latch down, then waits for it to open.
+    * Two reports both succeed only when they are in flight at once: run
+    * one after another, the first waits out its bound and fails.
+    */
+  @volatile var latch = new CountDownLatch(2)
+  val latchSourceFactory: () => ReportSource = () => new ReportSource {
+    private val fake = new FakeReportSource(5)
+    override def generateReport(t: String, n: String, f: String, to: String): String = {
+      val l = latch
+      l.countDown()
+      if (!blocking(l.await(20, TimeUnit.SECONDS)))
+        throw Retry.TerminalFailure(s"$n ran alone: no sibling report in flight")
+      fake.generateReport(t, n, f, to)
+    }
+    override def downloadReport(t: String, id: String): String = fake.downloadReport(t, id)
+  }
+
+  /** Reports whose first generate attempt has already failed. */
+  val attempted: ConcurrentHashMap[String, java.lang.Boolean] = new ConcurrentHashMap()
+  /** Fails every report's first generate attempt retriably, then behaves
+    * like [[FakeReportSource]] (so `_fail` and `_empty` keep their paths).
+    */
+  val flakySourceFactory: () => ReportSource = () => new ReportSource {
+    private val fake = new FakeReportSource(25)
+    override def generateReport(t: String, n: String, f: String, to: String): String = {
+      if (attempted.putIfAbsent(n, true) == null)
+        throw Retry.RetriableFailure(s"HTTP 503 generating $n (first attempt)")
+      fake.generateReport(t, n, f, to)
+    }
+    override def downloadReport(t: String, id: String): String = fake.downloadReport(t, id)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -140,6 +173,46 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(driver.job.status == dist.job.status)
     // distributed mode also wrote the files (executor-side sink, A12)
     assert(new java.io.File(s"$outB/call_volume/2024-02-29_to_2024-03-01.csv").exists)
+  }
+
+  test("distributed mode runs one partition's reports concurrently") {
+    PipelineSpec.latch = new CountDownLatch(2)
+    val out = Files.createTempDirectory("graft-conc").toString
+    // two tasks make one partition (PartitionTargetSize = 100)
+    val tasks = Seq("conc_a", "conc_b").map(n =>
+      Orchestrator.ReportTask("run-c", n, 1, 30, "2024-02-29", "2024-03-01"))
+    val res = Orchestrator.runDistributed(
+      spark, PipelineSpec.latchSourceFactory, PipelineSpec.tokenFactory, tasks, out,
+      "2024-02-29", "2024-03-01", backoffBase = 1.milli)
+    assert(res.reports.map(r => (r.report_name, r.status, r.error_message)).sortBy(_._1) ==
+      Seq(("conc_a", Status.Success, None), ("conc_b", Status.Success, None)))
+    assert(res.job.status == Status.Success)
+  }
+
+  test("retried, empty and failing reports end the same in both modes") {
+    val tasks = mkTasks("run-f", extra = Seq("report_empty", "broken_fail"))
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    PipelineSpec.attempted.clear()
+    val driver = Orchestrator.runDriverParallel(
+      PipelineSpec.flakySourceFactory(), tokenManager(), tasks,
+      Files.createTempDirectory("graft-flaky-a").toString,
+      "2024-02-29", "2024-03-01", backoffBase = 1.milli, now = fixedNow)
+    PipelineSpec.attempted.clear()
+    val dist = Orchestrator.runDistributed(
+      spark, PipelineSpec.flakySourceFactory, PipelineSpec.tokenFactory, tasks,
+      Files.createTempDirectory("graft-flaky-b").toString,
+      "2024-02-29", "2024-03-01", backoffBase = 1.milli)
+    def key(r: graft.model.ReportRun) = (r.report_name, r.status, r.rows_written)
+    val driverKeys = driver.reports.map(key).sortBy(_._1)
+    assert(driverKeys == dist.reports.map(key).sortBy(_._1))
+    assert(driver.job.status == dist.job.status)
+    assert(driver.job.status == Status.PartialSuccess)
+    // every report the source lets succeed survived its failed first attempt
+    val retriable = driverKeys.filterNot(k => k._1.endsWith("_fail") || k._1.endsWith("_empty"))
+    assert(retriable.size == 8)
+    assert(retriable.forall(k => k._2 == Status.Success && k._3 == 25), retriable)
+    assert(driverKeys.filter(_._1.endsWith("_fail")).map(_._2) == Seq(Status.Failed))
+    assert(driverKeys.filter(_._1.endsWith("_empty")).map(_._2) == Seq(Status.Failed))
   }
 
   test("monitoring store: batched append, latest-wins job view, derived status") {

@@ -2459,9 +2459,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val outDir = java.nio.file.Files.createTempDirectory("graft-anom-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-anom-ckpt").toString
     val srcDir = java.nio.file.Files.createTempDirectory("graft-anom-src").toString
+    // one file per landing: a multi-file append is committed file by file,
+    // so a running stream could split days 11-12 across two batches
     def land(days: Range): Unit =
       days.flatMap(dayEvents).toDF("ts", "event_type")
-        .write.mode("append").parquet(srcDir)
+        .coalesce(1).write.mode("append").parquet(srcDir)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ts",
         org.apache.spark.sql.types.TimestampType),
