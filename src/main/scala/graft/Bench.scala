@@ -423,11 +423,7 @@ object Bench {
       org.apache.logging.log4j.Level.ERROR)
 
   private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // AFTER setLogLevel — which calls log4j setAllLevels and would wipe
     // the scoped override

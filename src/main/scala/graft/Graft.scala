@@ -1,12 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.GraftExtensions.{NativeFunction, PlannerStrategy}
 
-/** One-call session setup for the library: UTC session time zone (the
+/** The one way a graft session is built: UTC session time zone (the
   * reference's monitoring timestamps are UTC), AQE on, shuffle
-  * parallelism sized to the machine instead of the 200 default, and the
-  * native vector functions injected — everything the individual
-  * entry points otherwise configure piecemeal.
+  * parallelism sized to the machine instead of the 200 default, and every
+  * [[GraftExtensions.injections]] entry (native functions, as-of
+  * strategy) in place before any operator runs.
   *
   * {{{
   * val spark = Graft.session()                  // local dev
@@ -30,9 +31,22 @@ object Graft {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .getOrCreate()
-    // extensions only apply to newly-built sessions; if getOrCreate reused
-    // an existing one, fall back to runtime registration
-    graft.functions.VectorFunctions.register(spark)
+    installMissing(spark)
     spark
+  }
+
+  /** Extensions only apply to newly built sessions. When getOrCreate
+    * hands back one built without them (a notebook's `spark`), install
+    * each injection it lacks, checked one by one.
+    */
+  private def installMissing(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.injections.foreach {
+      case NativeFunction(id, info, build) =>
+        if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+      case PlannerStrategy(strategy) =>
+        if (!spark.sessionState.planner.strategies.contains(strategy))
+          spark.experimental.extraStrategies :+= strategy
+    }
   }
 }

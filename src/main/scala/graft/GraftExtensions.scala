@@ -3,38 +3,53 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSim, PortableHash64, VecDot}
+import org.apache.spark.sql.execution.SparkStrategy
+import graft.functions.{BloomMightContain, CosineSim, LongDiv, NfcNormalize, PortableHash64, VecDot}
 
-/** Session-extension entry point: injects the engine's native Catalyst
-  * functions at session build, the idiomatic deployment path —
+/** Session-extension entry point: injects [[GraftExtensions.injections]]
+  * (the engine's six native Catalyst functions and the as-of planner
+  * strategy) at session build —
   *
   * {{{
   * SparkSession.builder()
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
   *   ...
-  * // or programmatically: .withExtensions(new GraftExtensions)
   * }}}
   *
-  * after which `cosine_sim` / `vec_dot` resolve in any SQL or
-  * `call_function` expression with no per-session registration call, and
-  * the [[graft.plans.AsOfJoinNode]] custom operator plans through
-  * [[graft.plans.AsOfJoinStrategy]].
+  * or, in one call, [[Graft.session]], which also installs whatever a
+  * reused session (a notebook's pre-existing `spark`) lacks. Every graft
+  * operator and column helper assumes a session from one of these two
+  * paths: none of them registers anything itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  import GraftExtensions._
 
-  private def info(name: String, clazz: Class[_]) =
-    new ExpressionInfo(clazz.getCanonicalName, name)
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", classOf[CosineSim]),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", classOf[VecDot]),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("portable_hash64"),
-      info("portable_hash64", classOf[PortableHash64]),
-      (exprs: Seq[Expression]) => PortableHash64(exprs(0))))
+  override def apply(e: SparkSessionExtensions): Unit = injections.foreach {
+    case NativeFunction(id, info, build) => e.injectFunction((id, info, build))
+    case PlannerStrategy(strategy) => e.injectPlannerStrategy(_ => strategy)
   }
+}
+
+object GraftExtensions {
+
+  sealed trait Injection
+  final case class NativeFunction(id: FunctionIdentifier, info: ExpressionInfo,
+      build: Seq[Expression] => Expression) extends Injection
+  final case class PlannerStrategy(strategy: SparkStrategy) extends Injection
+
+  private def fn(name: String, clazz: Class[_])(build: Seq[Expression] => Expression) =
+    NativeFunction(FunctionIdentifier(name),
+      new ExpressionInfo(clazz.getCanonicalName, name), build)
+
+  /** Everything a graft session needs; the one list both the extension
+    * and the [[Graft.session]] fallback install from. */
+  val injections: Seq[Injection] = Seq(
+    fn("vec_dot", classOf[VecDot])(e => VecDot(e(0), e(1))),
+    fn("cosine_sim", classOf[CosineSim])(e => CosineSim(e(0), e(1))),
+    fn("portable_hash64", classOf[PortableHash64])(e => PortableHash64(e(0))),
+    fn("long_div", classOf[LongDiv])(e => LongDiv(e(0), e(1))),
+    fn("nfc_normalize", classOf[NfcNormalize])(e => NfcNormalize(e(0))),
+    fn("bloom_might_contain", classOf[BloomMightContain])(
+      e => BloomMightContain(e(0), e(1))),
+    PlannerStrategy(graft.plans.AsOfJoinStrategy))
 }

@@ -10,9 +10,7 @@ object Prof {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Graft.session("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
     def noop(df: org.apache.spark.sql.DataFrame): Long = {
       df.write.format("noop").mode("overwrite").save(); 0L

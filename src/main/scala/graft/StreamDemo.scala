@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.OutputMode
 import graft.model.{ReportRun, Status}
 import graft.streaming.MonitoringStream
@@ -13,13 +12,7 @@ import graft.streaming.MonitoringStream
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[4]", 4, "graft-stream-demo")
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

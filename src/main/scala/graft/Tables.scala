@@ -2,11 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SQL entry surface: registers the testdata tables as temp views and the
-  * engine's native functions, so the whole operator surface is reachable
-  * from `spark.sql(...)` as well as the DataFrame API — e.g.
+/** SQL entry surface: registers the testdata tables as temp views, so the
+  * whole operator surface is reachable from `spark.sql(...)` as well as
+  * the DataFrame API. The native functions come with the session itself
+  * ([[Graft.session]] or `spark.sql.extensions=graft.GraftExtensions`) —
+  * e.g.
   *
   * {{{
+  * val spark = Graft.session()
   * Tables.registerAll(spark, "/root/testdata/sf0.01")
   * spark.sql("""
   *   SELECT a.vec_id, b.vec_id, cosine_sim(a.embedding, b.embedding) AS cos
@@ -27,6 +30,5 @@ object Tables {
       case n =>
         Queries.table(spark, dir, n).createOrReplaceTempView(n)
     }
-    graft.functions.VectorFunctions.register(spark)
   }
 }

@@ -1218,7 +1218,6 @@ object Dedup {
 
   def embeddingCandidatePairs(emb: DataFrame, numPlanes: Int = 4, dim: Int = 64,
       numTables: Int = 2): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     // cache the INPUT once (r16): this plan scans `emb` four times — one
     // bucket projection per table plus the two payload joins of the
     // verify stage — and callers routinely pass DERIVED embedding frames
@@ -1416,7 +1415,6 @@ object Dedup {
     * [[embeddingTopPairsBucketed]]/[[embeddingNearDups]].
     */
   def embeddingTopPairs(emb: DataFrame, k: Int = 20): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val cos = Similarity.cosine(col("emb_a"), col("emb_b"))
     val a = emb.select(col("vec_id").as("a"), col("embedding").as("emb_a"))
     val b = emb.select(col("vec_id").as("b"), col("embedding").as("emb_b"))
@@ -1607,7 +1605,6 @@ object Dedup {
 
   def semanticDedupPairs(emb: DataFrame, n: Int = 20,
       nCells: Int = 8, iters: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val (_, assign) = Similarity.kmeansFit(emb, nCells, iters)
     val withCell = emb.join(assign.select(col("vec_id"), col("cell")), Seq("vec_id"))
     val a = withCell.select(col("cell"), col("vec_id").as("a"),

@@ -47,7 +47,6 @@ object Similarity {
     * operators (and their oracles/specs) built on it.
     */
   private def scoredScan(emb: DataFrame, queryIds: Seq[Long]): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val queries = emb.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     emb.crossJoin(broadcast(queries))
@@ -158,7 +157,6 @@ object Similarity {
     * no shuffle; at scale this runs in the scan stage.
     */
   def lshBuckets(emb: DataFrame, numPlanes: Int = 12, dim: Int = 64, seed: Long = 42L): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val planes = hyperplanes(numPlanes, dim, seed)
     val bucket = planes.zipWithIndex.map { case (p, i) =>
       val planeCol = array(p.toIndexedSeq.map(lit): _*)
@@ -680,7 +678,6 @@ object Similarity {
   def mmrRerank(emb: DataFrame, queryEvery: Int = 100, poolK: Int = 10,
       k: Int = 5, lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && poolK >= k, s"need poolK >= k >= 1, got poolK=$poolK k=$k")
-    VectorFunctions.register(emb.sparkSession)
     val q = emb.filter(col("vec_id") % queryEvery === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     // the pool CARRIES its members' embeddings (poolK × queries vectors —
@@ -750,7 +747,6 @@ object Similarity {
     * Centroids are broadcast — k × dim doubles, always driver-bounded.
     */
   def kmeansAssign(emb: DataFrame, centroids: Seq[(Int, Array[Double])]): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     import emb.sparkSession.implicits._
     val centDf = broadcast(centroids.toDF("cell", "centroid"))
     val d2 = dot(col("embedding"), col("embedding")) +
@@ -1093,7 +1089,6 @@ object Similarity {
 
   def jlProject(emb: DataFrame, k: Int = 16): DataFrame = {
     require(k == 16, "k is pinned to 16 (exact dyadic 1/sqrt(k) = 1/4)")
-    VectorFunctions.register(emb.sparkSession)
     // k codegen'd VecDot loops per row against literal sign rows — pure
     // map work, no explode, no shuffle before the 16-rows-per-vector
     // output (the r9 rewrite: the explode + (vec, axis)-keyed aggregate
@@ -1113,7 +1108,6 @@ object Similarity {
     * both engines score the identical reduced space).
     */
   private def jlReduced(emb: DataFrame): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val signs = jlSigns(16, maxDim = 512)
     val ys = (0 until 16).map { j =>
       round(VectorFunctions.vecDot(col("embedding"),
@@ -1185,7 +1179,6 @@ object Similarity {
     */
   def jlTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 200): DataFrame = {
-    VectorFunctions.register(spark)
     val root = resolveIndexRoot(spark, dir)
     val reduced = spark.read.parquet(s"$root/reduced")
     val vectors = spark.read.parquet(s"$root/vectors")
@@ -1229,7 +1222,6 @@ object Similarity {
     */
   def jlShortlistTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       shortlist: Int = 200): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val cand = bruteForceTopK(jlReduced(emb), queryIds, shortlist)
       .select(col("query_id"), col("vec_id"))
     val queries = emb.filter(col("vec_id").isInCollection(queryIds))
@@ -1445,7 +1437,6 @@ object Similarity {
     */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, nProbe: Int = 2): DataFrame = {
-    VectorFunctions.register(spark)
     val root = resolveIndexRoot(spark, dir)
     val vectors = spark.read.parquet(s"$root/vectors")
     val centDf = spark.read.parquet(s"$root/centroids")
@@ -1488,7 +1479,6 @@ object Similarity {
     */
   def ivfDensePool(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryEvery: Int, poolK: Int = 20, nProbe: Int = 2): DataFrame = {
-    VectorFunctions.register(spark)
     val root = resolveIndexRoot(spark, dir)
     val vectors = spark.read.parquet(s"$root/vectors")
     val centDf = spark.read.parquet(s"$root/centroids")
@@ -1570,7 +1560,6 @@ object Similarity {
     */
   def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       nProbe: Int = 2, cellCol: String = "label"): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val centroids = ivfCentroids(emb, cellCol)
     val queries = emb.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -1638,9 +1627,6 @@ object Similarity {
   private[graft] def pqFitJoint(emb: DataFrame, m: Int, ks: Int, iters: Int,
       dim: Int): (Seq[Seq[(Int, Array[Double])]], DataFrame) = {
     import emb.sparkSession.implicits._
-    // the assign expression below calls vec_dot; register here so pqFit /
-    // buildPqIndex work as the session's first vector operation (r15 ADVICE)
-    VectorFunctions.register(emb.sparkSession)
     val subDim = dim / m
     require(m * subDim == dim, s"dim $dim must divide into $m subspaces")
     val sub = emb.select(col("vec_id"), explode(array((0 until m).map { s =>
@@ -1732,7 +1718,6 @@ object Similarity {
   def pqTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       m: Int = 8, ks: Int = 16, iters: Int = 2, dim: Int = 64,
       shortlist: Int = 0): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     // joint fit + ONE aggregate to the wide codes table (r15): the codes
     // used to be re-assembled from the m per-subspace assignments with an
     // m-way self-join — m−1 join stages over slices of one checkpoint
@@ -2104,7 +2089,6 @@ object Similarity {
     */
   def int8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 50): DataFrame = {
-    VectorFunctions.register(spark)
     val root = resolveIndexRoot(spark, dir)
     val codes = spark.read.parquet(s"$root/codes")
     val vectors = spark.read.parquet(s"$root/vectors")
@@ -2123,7 +2107,6 @@ object Similarity {
     */
   private def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, Seq[Column], Int) = {
-    VectorFunctions.register(spark)
     val root = resolveIndexRoot(spark, dir)
     val codes = spark.read.parquet(s"$root/codes")
     val vectors = spark.read.parquet(s"$root/vectors")
@@ -2188,7 +2171,6 @@ object Similarity {
   def ivfpqTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       nCells: Int = 8, nProbe: Int = 2, m: Int = 8, ks: Int = 16,
       iters: Int = 2, dim: Int = 64, shortlist: Int = 50): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     import emb.sparkSession.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -2246,7 +2228,6 @@ object Similarity {
   def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       numPlanes: Int = 12, dim: Int = 64, nProbes: Int = 1,
       numTables: Int = 1): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     // L independent hash tables (seeds 42, 43, …): recall compounds as
     // 1−(1−p)^L while each table still prunes to nProbes/2^b of the
     // corpus — the standard E2LSH recall lever alongside multi-probe.

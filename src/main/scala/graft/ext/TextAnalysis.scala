@@ -3650,7 +3650,7 @@ object TextAnalysis {
       // it is partial-aggregation-order-dependent AND `round(double, 4)`
       // splits Spark's HALF_UP against DuckDB's double-scaled rounding.
       // Scaled-long sum + integer HALF_UP re-round is order-free and
-      // engine-exact (Exact.sumQLR; sqlSumQLR in the 4 oracle twins).
+      // engine-exact (Exact.sumQLR; the 4 oracle twins inline its SQL).
       // The 6-dp quantization IS sumQLR's ⌊x·10^6+0.5⌋ snap — one pure-
       // double op per matched row (an explicit round(_, 6) before it was
       // a second, BigDecimal-backed quantization of the same grid point;
@@ -3903,7 +3903,6 @@ object TextAnalysis {
     val sparse = sparseHits
       .select(col("query_id"), col("doc_id"), col("rank").as("rank_sparse"))
 
-    graft.functions.VectorFunctions.register(emb.sparkSession)
     val q = emb.filter(col("vec_id") % queryEvery === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val dense = emb.crossJoin(broadcast(q))

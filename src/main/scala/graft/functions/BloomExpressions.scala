@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -60,23 +60,14 @@ case class BloomMightContain(valueExpr: Expression, bloomExpr: Expression)
     copy(valueExpr = newLeft, bloomExpr = newRight)
 }
 
+/** Column helper plus filter serialization; `bloom_might_contain`
+  * resolves in sessions from [[graft.Graft.session]] or
+  * `spark.sql.extensions=graft.GraftExtensions`.
+  */
 object BloomFunctions {
-  def register(spark: SparkSession): Unit = {
-    // idempotence guard — same rationale as VectorFunctions.register:
-    // re-registration logs a WARN per call; the builder is pure
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_might_contain")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction(
-        "bloom_might_contain",
-        exprs => BloomMightContain(exprs(0), exprs(1)), "scala_udf")
-  }
-
   /** Column form: `value` BIGINT probed against `bloom` (serialized). */
-  def mightContainLong(value: Column, bloomBytes: Column): Column = {
-    register(SparkSession.active)
+  def mightContainLong(value: Column, bloomBytes: Column): Column =
     call_function("bloom_might_contain", value, bloomBytes)
-  }
 
   def serialize(bloom: BloomFilter): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()

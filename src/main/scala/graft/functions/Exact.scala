@@ -242,19 +242,4 @@ object Exact {
     val s = "1" + ("0" * r)
     s"(CAST((($n * 2 * $s + $d) // (2 * ($d))) AS DOUBLE) / $s)"
   }
-
-  /** The DuckDB replay of [[sumQL]]. */
-  def sqlSumQL(x: String, s: Int): String = {
-    val scale = s"1e$s"
-    s"(CAST(sum(CAST(round($x * $scale) AS BIGINT)) AS DOUBLE) / $scale)"
-  }
-
-  /** The DuckDB replay of [[sumQLR]] (`//` is exact HUGEINT floor
-    * division; the sum of BIGINTs is a 128-bit HUGEINT in DuckDB, so no
-    * overflow on the oracle side either).
-    */
-  def sqlSumQLR(x: String, s: Int, r: Int): String = {
-    val down = math.pow(10, s - r).toLong
-    s"(CAST((sum(CAST(round(($x) * 1e$s) AS BIGINT)) + ${down / 2}) // $down AS DOUBLE) / 1e$r)"
-  }
 }

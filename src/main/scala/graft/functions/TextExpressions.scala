@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -49,18 +49,9 @@ object NfcNormalize {
       s.toString, java.text.Normalizer.Form.NFC))
 }
 
+/** Column helper; `nfc_normalize` resolves in sessions from
+  * [[graft.Graft.session]] or `spark.sql.extensions=graft.GraftExtensions`.
+  */
 object TextFunctions {
-  def register(spark: SparkSession): Unit = {
-    // idempotence guard — same rationale as VectorFunctions.register
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize")
-    if (!reg.functionExists(id))
-      reg.createOrReplaceTempFunction("nfc_normalize",
-        exprs => NfcNormalize(exprs(0)), "scala_udf")
-  }
-
-  def nfcNormalize(c: Column): Column = {
-    register(SparkSession.active)
-    call_function("nfc_normalize", c)
-  }
+  def nfcNormalize(c: Column): Column = call_function("nfc_normalize", c)
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -197,39 +197,15 @@ case class LongDiv(left: Expression, right: Expression) extends BinaryExpression
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column helpers (via `call_function`, which works
-  * across the Spark 4 Column API without touching internal constructors).
+/** Column helpers (via `call_function`, which works across the Spark 4
+  * Column API without touching internal constructors). The functions
+  * resolve in sessions from [[graft.Graft.session]] or
+  * `spark.sql.extensions=graft.GraftExtensions`; nothing registers them
+  * here.
   */
 object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotence guard: register() is called from every query
-    // constructor (16 call sites), and createOrReplaceTempFunction logs a
-    // "replacing existing function" WARN on each re-registration —
-    // registry churn spam through every bench/verify tail. The builders
-    // are pure, so if the name already resolves there is nothing to do.
-    val probe = org.apache.spark.sql.catalyst.FunctionIdentifier("portable_hash64")
-    if (!reg.functionExists(probe)) {
-      reg.createOrReplaceTempFunction("vec_dot",
-        exprs => VecDot(exprs(0), exprs(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("cosine_sim",
-        exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-      reg.createOrReplaceTempFunction("portable_hash64",
-        exprs => PortableHash64(exprs(0)), "scala_udf")
-      reg.createOrReplaceTempFunction("long_div",
-        exprs => LongDiv(exprs(0), exprs(1)), "scala_udf")
-    }
-  }
-
-  def longDiv(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    call_function("long_div", a, b)
-  }
-
+  def longDiv(a: Column, b: Column): Column = call_function("long_div", a, b)
   def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
-  def portableHash64(c: Column): Column = {
-    register(SparkSession.active)
-    call_function("portable_hash64", c)
-  }
+  def portableHash64(c: Column): Column = call_function("portable_hash64", c)
 }

@@ -50,7 +50,6 @@ object CorpusIO {
     * portable hash of the file path (stable across runs and listings).
     */
   def readTextDir(spark: SparkSession, path: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     spark.read.format("text")
       .option("wholetext", "true")
       .load(path)

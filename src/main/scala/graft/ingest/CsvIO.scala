@@ -2,21 +2,16 @@ package graft.ingest
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.DataFrame
 
 /** CSV payload row count + sink — SURVEY §2 C4/C5.
   *
   * Sink mirrors the single-file-per-report layout
   * `…/{report}/{from}_to_{to}.csv`
   * (`databricks/talkdesk_databricks_etl.py:441-446`,
-  * `local/async_utils.py:132-140`). Two paths:
-  *   - [[writeTextVerbatim]] — the local variant's raw passthrough; exact
-  *     filename, no Spark job. Correct for API-sized payloads (bounded per
-  *     report by contract, `README.md:204-207`).
-  *   - [[writeCsvDistributed]] — Spark-native writer for payloads that are
-  *     NOT driver-bounded: part-files under the report directory. This is
-  *     the 100 TB-safe path; exact single-file naming is inherently a
-  *     single-writer operation and is kept only for reference fidelity.
+  * `local/async_utils.py:132-140`) through [[writeTextVerbatim]], the
+  * local variant's raw passthrough: exact filename, no Spark job. Correct
+  * for API-sized payloads (bounded per report by contract,
+  * `README.md:204-207`).
   */
 object CsvIO {
 
@@ -38,8 +33,4 @@ object CsvIO {
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
       StandardOpenOption.WRITE)
   }
-
-  /** C5, scale path: header'd CSV directory write through Spark. */
-  def writeCsvDistributed(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(dir)
 }

@@ -9,12 +9,12 @@ package graft.ingest
   * exactly that contract; implementations must be Serializable so the
   * distributed orchestrator can ship them to executors.
   *
-  * An HTTP implementation would wrap `java.net.http.HttpClient` inside
-  * [[Retry.retry]] with per-report `retries`/`timeout_sec`; this container
-  * has zero egress, so the shipped implementation is [[FakeReportSource]],
-  * a deterministic in-process issuer that preserves every observable
+  * Two implementations ship: [[HttpReportSource]], the wire client on
+  * `java.net.http` (the orchestrator wraps its calls in [[Retry.retry]]
+  * with per-report `retries`/`timeout_sec`), and [[FakeReportSource]], a
+  * deterministic in-process issuer that preserves every observable
   * behavior (report-id indirection, CSV payload with header, empty-payload
-  * and failure paths).
+  * and failure paths) for runs without a Talkdesk endpoint.
   */
 trait ReportSource extends Serializable {
   /** POST /reports/generate — returns an opaque report id. */

@@ -371,10 +371,7 @@ object AsOfJoinPlans {
     * TIMESTAMP, days for DATE, raw units for integral columns); a match
     * requires `leftTime - rightTime <= tolerance`, so `Some(0)` means
     * "exactly at the left time" and `None` means unbounded (classic
-    * as-of). Registers [[AsOfJoinStrategy]] on the session's experimental
-    * strategies if absent, so it works in any session; deployments using
-    * `spark.sql.extensions=graft.GraftExtensions` get the strategy
-    * injected at session build instead.
+    * as-of).
     */
   def asOfJoinExecKeys(
       left: DataFrame, right: DataFrame,
@@ -385,9 +382,6 @@ object AsOfJoinPlans {
       direction: String = "backward",
       allowExactMatches: Boolean = true): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     require(keys.nonEmpty, "as-of join needs at least one key column")
     // backward = latest right at-or-before (ties: LARGEST rightTieBreak
     // wins — later rows overwrite); forward = earliest right at-or-after

@@ -6,7 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AsOfJoin
-import graft.plans.{AsOfJoinPlans, AsOfJoinStrategy}
+import graft.plans.AsOfJoinPlans
 
 /** The custom Catalyst as-of operator (logical node → strategy → physical
   * sort-merge exec) must be INDISTINGUISHABLE in results from the composed
@@ -16,13 +16,7 @@ import graft.plans.{AsOfJoinPlans, AsOfJoinStrategy}
   */
 class AsOfJoinExecSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-asof-exec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-asof-exec")
 
   override def afterAll(): Unit = spark.stop()
 
@@ -429,7 +423,5 @@ class AsOfJoinExecSpec extends AnyFunSuite with BeforeAndAfterAll {
     val signupScan = plan.linesIterator.filter(_.contains("ReadSchema"))
       .find(_.contains("value")).get
     assert(!signupScan.contains("props"), signupScan)
-    // the strategy self-registers on the session's experimental hooks
-    assert(spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
   }
 }

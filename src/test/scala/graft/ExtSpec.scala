@@ -11,13 +11,7 @@ import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
   */
 class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-ext")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-ext")
 
   override def afterAll(): Unit = spark.stop()
 
@@ -1399,7 +1393,6 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("native CosineSim/VecDot expressions are bit-identical with the HOF formulation") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val a = emb.select(col("vec_id").as("a"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("b"), col("embedding").as("eb"))
     val pairs = a.crossJoin(b).filter(col("a") < col("b")).limit(2000)

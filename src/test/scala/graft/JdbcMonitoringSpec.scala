@@ -13,13 +13,7 @@ import graft.run.{JdbcMonitoring, Monitoring}
   */
 class JdbcMonitoringSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-jdbc")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[2]", 2, "graft-jdbc")
 
   override def afterAll(): Unit = spark.stop()
 

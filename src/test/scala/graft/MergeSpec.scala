@@ -13,13 +13,7 @@ import graft.run.Monitoring
   */
 class MergeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-merge")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-merge")
 
   override def afterAll(): Unit = spark.stop()
 

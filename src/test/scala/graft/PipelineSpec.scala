@@ -64,13 +64,7 @@ object PipelineSpec {
 
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-test")
 
   override def afterAll(): Unit = spark.stop()
 

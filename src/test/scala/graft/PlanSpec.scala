@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-plan")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-plan")
 
   override def afterAll(): Unit = spark.stop()
 
@@ -87,7 +81,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("similarity cosine runs through the native codegen expression") {
-    graft.functions.VectorFunctions.register(spark)
     val emb = Queries.table(spark, sf, "embeddings")
     val plan = planOf(graft.ext.Similarity.bruteForceTopK(emb, Seq(0L), 5))
     assert(plan.contains("cosinesim") || plan.contains("CosineSim"), plan.take(3000))

@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-smoke")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-smoke")
 
   override def afterAll(): Unit = spark.stop()
 

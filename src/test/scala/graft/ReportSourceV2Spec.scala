@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ReportSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-dsv2")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-dsv2")
 
   override def afterAll(): Unit = spark.stop()
 

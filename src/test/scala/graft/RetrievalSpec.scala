@@ -11,13 +11,7 @@ import graft.ext.{FuzzyJoin, Similarity, TextAnalysis}
   */
 class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-retrieval")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-retrieval")
 
   override def afterAll(): Unit = spark.stop()
 

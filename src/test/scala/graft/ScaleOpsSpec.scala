@@ -8,16 +8,7 @@ import graft.operators.ScaleOps
 
 class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val warehouse = java.nio.file.Files.createTempDirectory("graft-wh").toString
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-scaleops")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-scaleops")
 
   override def afterAll(): Unit = spark.stop()
 

@@ -18,13 +18,7 @@ final case class CorpusDoc(doc_id: Long, text: String, lang: String,
 
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-streaming")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Graft.session("local[4]", 4, "graft-streaming")
 
   override def afterAll(): Unit = spark.stop()
 
