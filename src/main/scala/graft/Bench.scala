@@ -373,10 +373,7 @@ object Bench {
     // that lands on whichever query runs late in the sequence — the
     // mechanism behind median≫min rep anomalies). Harness hygiene,
     // outside the timed window.
-    // SPARK_GRAFT_NO_GC_KICK: diagnostic escape hatch — disabling the kick
-    // reintroduces measurable rep anomalies (median >> min), so the
-    // default stays ON
-    if (!sys.env.contains("SPARK_GRAFT_NO_GC_KICK")) System.gc()
+    System.gc()
   }
 
   private def jstr(s: String) =

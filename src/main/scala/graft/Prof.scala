@@ -1,621 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
-/** Ad-hoc profiling harness (dev tool, not part of the library surface).
-  * Usage: sbt "runMain graft.Prof [a8|kmeans|simhash|all]"
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Profile or explain registered queries (`SparkEntry.queries`) at
+  * `SPARK_GRAFT_SF_DIR`:
+  * {{{
+  * sbt "runMain graft.Prof profile q1_pricing_summary sim_topk_ivfpq"
+  * sbt "runMain graft.Prof explain q1_pricing_summary"
+  * }}}
+  * `profile` runs each query cold, then warm, with `Bench.sweep` between
+  * runs, and prints one [[QueryProfile]] JSON line per run. `explain`
+  * prints the formatted plan of each query's DataFrame without writing it.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val mode = args.headOption.getOrElse("all")
+    val usage = "usage: graft.Prof profile|explain <query>..."
+    require(args.length >= 2 && Set("profile", "explain")(args(0)), usage)
+    val names = args.toSeq.tail
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Graft.session("local[32]", 32)
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("WARN")
-    def noop(df: org.apache.spark.sql.DataFrame): Long = {
-      df.write.format("noop").mode("overwrite").save(); 0L
-    }
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val n = f
-      println(f"PROF $name: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n)")
-    }
-
-    if (mode == "a8" || mode == "all") {
-      val ev = Queries.events(spark, sfDir)
-      time("events_count")(ev.count())
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
-      time("a8_rn_only")(ev.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).count())
-      time("a8_no_datefmt")(noop(ev.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-        .orderBy(col("user_id"))))
-      time("a8_full_1")(noop(Queries.a8LatestWins(spark, sfDir)))
-      time("a8_full_2")(noop(Queries.a8LatestWins(spark, sfDir)))
-      time("a8_datefmt_only")(noop(ev.select(
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"))))
-    }
-    if (mode == "new8") {
-      // r8-session heavy queries: warm rep (JIT/codegen) then a timed rep,
-      // at whatever SPARK_GRAFT_SF_DIR points to — run at sf0.1 and
-      // sf1_cache to read off the 10x scaling ratio per query
-      for (n <- Seq("text_lr_predict", "retrieval_eval", "dedup_best_survivors",
-          "agg_countmin", "text_shards", "pipeline_stage_report")) {
-        val f = SparkEntry.queries(n)
-        time(s"${n}_warm")(noop(f(spark, sfDir)))
-        Bench.sweep(spark)
-        time(n)(noop(f(spark, sfDir)))
-        Bench.sweep(spark)
-      }
-    }
-    if (mode == "new8b") {
-      // this session's new families: warm rep then timed, at
-      // SPARK_GRAFT_SF_DIR — run at sf0.1 and sf1_cache for the 10x ratio
-      for (n <- Seq("dedup_prefix_jaccard", "dedup_semantic_contamination",
-          "events_scd2", "events_scd2_lookup", "ml_eval_auc",
-          "ml_eval_thresholds", "ml_eval_calibration")) {
-        val f = SparkEntry.queries(n)
-        time(s"${n}_warm")(noop(f(spark, sfDir)))
-        Bench.sweep(spark)
-        time(n)(noop(f(spark, sfDir)))
-        Bench.sweep(spark)
-      }
-    }
-    if (mode == "new8c") {
-      // third-session additions, second wave: warm + timed at
-      // SPARK_GRAFT_SF_DIR — run at sf0.1 and sf1_cache for the 10x ratio
-      for (n <- Seq("dedup_bitext_pairs", "dedup_bitext_margin",
-          "dedup_source_similarity", "text_bpe_fertility",
-          "corpus_concentration", "events_rolling_distinct",
-          "events_user_overlap", "events_attribution",
-          "dedup_semantic_contamination_store")) {
-        val f = SparkEntry.queries(n)
-        time(s"${n}_warm")(noop(f(spark, sfDir)))
-        Bench.sweep(spark)
-        time(n)(noop(f(spark, sfDir)))
-        Bench.sweep(spark)
-      }
-    }
-    if (mode == "pj") {
-      // prefix-jaccard stage anatomy at SPARK_GRAFT_SF_DIR
-      import org.apache.spark.sql.functions.{col, count, lit, xxhash64, ceil, countDistinct}
-      val docs = Queries.table(spark, sfDir, "documents")
-      val sh = graft.ext.Dedup.shingles(docs)
-        .select(col("doc_id"), xxhash64(col("sh")).as("sh")).cache()
-      println(s"PROF pj shingle_rows=${sh.count()}")
-      val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      println(s"PROF pj vocab=${dfreq.count()}")
-      val top = dfreq.orderBy(col("df").desc).limit(5).collect()
-        .map(r => r.getLong(1)).mkString(",")
-      println(s"PROF pj top_df=$top")
-      val counts = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      val pref = sh.join(dfreq, Seq("sh")).join(counts, Seq("doc_id"))
-        .withColumn("pos", org.apache.spark.sql.functions.row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-            .orderBy(col("df"), col("sh"))))
-        .filter(col("pos") <= col("n_sh") - ceil(lit(0.8) * col("n_sh") - lit(1e-9)) + 1)
-      println(s"PROF pj prefix_rows=${pref.count()}")
-      val prefDf = pref.groupBy(col("sh")).agg(count(lit(1)).as("pdf"))
-      val work = prefDf.agg(org.apache.spark.sql.functions.sum(col("pdf") * col("pdf")))
-        .collect()(0).getLong(0)
-      println(s"PROF pj candidate_work=$work")
-      val cand = graft.ext.Dedup.prefixJaccardCandidates(sh, 0.8)
-      println(s"PROF pj candidates=${cand.count()}")
-      time("pj_full")(noop(graft.ext.Dedup.prefixJaccardPairs(docs, 0.8)))
-      sh.unpersist()
-    }
-    if (mode == "kmeans" || mode == "all") {
-      val emb = Queries.table(spark, sfDir, "embeddings")
-      time("emb_count")(emb.count())
-      time("kmeans_cents")(
-        { graft.ext.Similarity.kmeansCentroids(emb, 8, 3); 0L })
-      time("ivf_kmeans_full")(noop(
-        graft.ext.Similarity.ivfTopKKmeans(emb, Seq(0L, 1L, 2L), 10, nProbe = 2, nCells = 8)))
-    }
-    if (mode == "lsh") {
-      val emb = Queries.table(spark, "/root/testdata/sf0.001", "embeddings")
-      val qids = (0L until 10L).toSeq
-      val bf = graft.ext.Similarity.bruteForceTopK(emb, qids, 10)
-        .select("query_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      for (planes <- Seq(4, 6, 8); probes <- Seq(4, 8); tables <- Seq(1, 2, 4)) {
-        val got = graft.ext.Similarity.lshTopK(emb, qids, 10,
-            numPlanes = planes, nProbes = probes, numTables = tables)
-          .select("query_id", "vec_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        println(f"PROF lsh planes=$planes probes=$probes tables=$tables recall=${bf.intersect(got).size.toDouble / bf.size}%.3f")
-        spark.catalog.clearCache()
-      }
-    }
-    if (mode == "tpipe") {
-      val docs = Queries.table(spark, sfDir, "documents")
-      for (i <- 1 to 4) {
-        time(s"tpipe_$i")(noop(graft.ext.TrainingPipeline.trainingSet(docs)))
-        spark.catalog.clearCache()
-      }
-    }
-    if (mode == "pipeline_plan") {
-      val docs = Queries.table(spark, "/root/testdata/sf0.001", "documents")
-      val df = graft.ext.Dedup.nearDupPipeline(docs, 0.8)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      val nEx = "Exchange".r.findAllIn(plan).length
-      println(s"PROF pipeline exchanges=$nEx")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        .linesIterator.takeWhile(!_.startsWith("(1)")).mkString("\n"))
-    }
-    if (mode == "pipeline") {
-      val docs = Queries.table(spark, sfDir, "documents")
-      // stage-by-stage: shingle+hash scan, signatures, banding+candidates,
-      // restricted verify
-      time("p_shingles")(graft.ext.Dedup.shinglesMultiset(docs).count())
-      time("p_full_1")(noop(graft.ext.Dedup.nearDupPipeline(docs, 0.8)))
-      spark.catalog.clearCache()
-      time("p_full_2")(noop(graft.ext.Dedup.nearDupPipeline(docs, 0.8)))
-      spark.catalog.clearCache()
-      time("p_minhash_only")(noop(graft.ext.Dedup.minhashCandidatePairs(docs)))
-      spark.catalog.clearCache()
-    }
-    if (mode == "tstages") for (it <- 1 to 3) {
-      val docs = Queries.table(spark, sfDir, "documents")
-      val shAll = graft.ext.Dedup.shinglesMultiset(docs)
-        .select(col("doc_id"), xxhash64(col("sh")).as("sh")).cache()
-      time("s_shAll")(shAll.count())
-      val rep = graft.ext.TextAnalysis.repetitionScoresFromHashed(shAll)
-        .select(col("doc_id"), col("rep_ratio"))
-      val gate = graft.ext.TextAnalysis.qualityScores(docs)
-        .select(col("doc_id"), col("n_tokens"), col("stopword_ratio"))
-        .join(rep, Seq("doc_id"))
-        .filter(col("n_tokens") >= 30 && col("stopword_ratio") >= 0.01 &&
-          col("rep_ratio") <= 0.6)
-        .select(col("doc_id")).cache()
-      time("s_gate")(gate.count())
-      val clean = docs.join(gate, Seq("doc_id"), "left_semi").cache()
-      time("s_clean")(clean.count())
-      val shClean = shAll.join(gate, Seq("doc_id"), "left_semi")
-      val dropped = graft.ext.Dedup.nearDupPipelineFromHashedShingles(shClean, 0.8)
-        .select(col("b").as("doc_id")).distinct()
-      time("s_dropped")(dropped.count())
-      val surviving = clean.join(dropped, Seq("doc_id"), "left_anti")
-      val sampled = graft.ext.TextAnalysis.stratifiedSample(surviving, "lang", Map("en" -> 0.5))
-      val train = graft.ext.TextAnalysis.deterministicSplit(sampled)
-        .filter(col("split") === "train").drop("split").cache()
-      time("s_train")(train.count())
-      time("s_pack")(noop(graft.ext.TextAnalysis.packSequences(train, 512)))
-      println(s"PROF --- end iteration $it ---")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
-    if (mode == "pipewarm" || mode == "pipecold") {
-      // first-run-latency experiment for pipeline_training_set (r6 ask):
-      // is the fresh-session warm-up data work or code compilation?
-      //   pipecold: fresh JVM → run at sf0.1 three times.
-      //   pipewarm: fresh JVM → run ONCE at sf0.001 (tiny data, same code
-      //             paths: pays Janino codegen + C2 JIT on ~1/100th the
-      //             rows), then the same three sf0.1 runs.
-      // If warm's first sf0.1 run lands near cold's steady state, the
-      // warm-up is JIT/codegen (data-independent) and "warm on a sample"
-      // is the production pattern for one-shot jobs.
-      def sweep(): Unit = {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      }
-      def onePipe(dir: String): Unit = {
-        noop(graft.ext.TrainingPipeline.trainingSet(
-          Queries.table(spark, dir, "documents")))
-        sweep()
-      }
-      if (mode == "pipewarm")
-        time("pipe_sf0.001_prewarm")({ onePipe("/root/testdata/sf0.001"); 0L })
-      (1 to 3).foreach { i =>
-        time(s"pipe_sf0.1_run$i")({ onePipe(sfDir); 0L })
-      }
-    }
-    if (mode == "pipeprewarm") {
-      // the SUPPORTED pre-warm path (TrainingPipeline.preWarm): fresh JVM
-      // -> preWarm on a hash-sample of the real input -> 3 full runs.
-      // Acceptance (r7 ask #2): run1 <= 1.5x steady (min of runs 2-3).
-      val docs = Queries.table(spark, sfDir, "documents")
-      time("prewarm")({ graft.ext.TrainingPipeline.preWarm(docs); 0L })
-      val runs = (1 to 3).map { i =>
-        val t0 = System.nanoTime()
-        noop(graft.ext.TrainingPipeline.trainingSet(docs))
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"PROF pipe_run$i: $s%.2f s")
-        s
-      }
-      val steady = runs.tail.min
-      println(f"PROF prewarm_ratio: first=${runs.head}%.2f steady=$steady%.2f ratio=${runs.head / steady}%.2f (accept <= 1.5)")
-    }
-    if (mode == "scaleup") {
-      // smoke the bench's scale-up + calibration plumbing at sf0.01 → ×10
-      time("calibrate")({ println(f"PROF calib_s=${Bench.calibrate(spark)}%.2f"); 0L })
-      val out = "target/prof_sf1_smoke"
-      time("scaleup_gen")({
-        println(f"PROF gen_s=${ScaleUp.ensure(spark, "/root/testdata/sf0.01", out)}%.2f"); 0L })
-      for (t <- Seq("lineitem", "documents", "embeddings", "events")) {
-        val n0 = Queries.table(spark, "/root/testdata/sf0.01", t).count()
-        val n1 = Queries.table(spark, out, t).count()
-        println(s"PROF scaleup $t: $n0 -> $n1 (x${n1 / n0})")
-      }
-      // dedup density must stay per-copy-local: pair count should scale
-      // ~10x, not ~100x (the quadratic lie verbatim replication would tell)
-      val p0 = graft.ext.Dedup.nearDupPipeline(
-        Queries.table(spark, "/root/testdata/sf0.01", "documents"), 0.8).count()
-      val p1 = graft.ext.Dedup.nearDupPipeline(
-        Queries.table(spark, out, "documents"), 0.8).count()
-      println(s"PROF scaleup dedup_pairs: $p0 -> $p1 (x${if (p0 > 0) p1.toDouble / p0 else -1})")
-      // joins must still land: q5-shaped join row counts scale linearly
-      val j0 = Queries.q5LocalSupplier(spark, "/root/testdata/sf0.01").count()
-      val j1 = Queries.q5LocalSupplier(spark, out).count()
-      println(s"PROF scaleup q5_rows: $j0 -> $j1")
-    }
-    if (mode == "asofexec") {
-      val sf = "/root/testdata/sf0.001"
-      val b = Queries.asofJoinExecQuery(spark, sf)
-      println("=== analyzed ===\n" + b.queryExecution.analyzed.toString)
-      println("=== optimized ===\n" + b.queryExecution.optimizedPlan.toString)
-      println("=== physical ===\n" + b.queryExecution.executedPlan.toString)
-      val a = Queries.asofJoinQuery(spark, sf).collect().toSeq
-      val rows = b.collect().toSeq
-      println(s"PROF asofexec composed=${a.size} exec=${rows.size} equal=${a == rows}")
-    }
-    if (mode == "plans9") {
-      val sf = "/root/testdata/sf0.001"
-      for (name <- Seq("q6_revenue_delta", "q8_market_share", "q10_returned_items",
-          "q13_order_distribution", "q15_top_supplier", "q16_supplier_count",
-          "q17_small_quantity", "q18_large_orders", "q19_disjunctive_revenue",
-          "q21_waiting_supplier", "q22_dormant_customers")) {
-        val df = SparkEntry.queries(name)(spark, sf)
-        println(s"===== $name")
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      }
-    }
-    if (mode == "planaudit") {
-      val sf = "/root/testdata/sf0.001"
-      for ((name, fn) <- Seq(
-          ("events_pivot", Queries.eventsPivot _),
-          ("events_value_quartiles", Queries.eventsValueQuartiles _),
-          ("corpus_expectations", Queries.corpusExpectations _),
-          ("text_top_per_lang", (s: SparkSession, d: String) => Queries.textTopPerLang(s, d)),
-          ("text_dedup_segments", (s: SparkSession, d: String) =>
-            graft.ext.TextAnalysis.dedupSegments(
-              Queries.table(s, d, "documents"), maxDfFrac = 0.78, delim = " ")),
-          ("text_perplexity", (s: SparkSession, d: String) =>
-            graft.ext.TextAnalysis.bigramPerplexity(Queries.table(s, d, "documents"))),
-          ("dedup_contamination_bloom", (s: SparkSession, d: String) => {
-            val docs = Queries.table(s, d, "documents")
-            graft.ext.Dedup.contaminationBloom(
-              docs.filter(org.apache.spark.sql.functions.col("doc_id") % 50 =!= 0),
-              docs.filter(org.apache.spark.sql.functions.col("doc_id") % 50 === 0), 3, 5)
-          }),
-          ("events_retention", Queries.eventsRetention _),
-          ("events_rolling", Queries.eventsRolling _),
-          ("events_funnel", Queries.eventsFunnel _),
-          ("asof_join_tol", Queries.asofJoinTolQuery _),
-          ("asof_join_fwd", Queries.asofJoinFwdQuery _),
-          ("asof_join_nearest", Queries.asofJoinNearestQuery _),
-          ("asof_join_strict", Queries.asofJoinStrictQuery _),
-          ("sim_hard_negatives", (s: SparkSession, d: String) =>
-            graft.ext.Similarity.hardNegatives(
-              Queries.table(s, d, "embeddings"), Seq(0L, 1L, 2L), 10, 0.15, 0.30)),
-          ("layout_zorder", Queries.layoutZorder _),
-          ("text_mix_domains", (s: SparkSession, d: String) =>
-            graft.ext.TextAnalysis.mixDomains(Queries.table(s, d, "documents"),
-              Map("en" -> 0.5, "de" -> 0.25, "es" -> 0.125, "fr" -> 0.125), "lang")),
-          ("text_sample_temperature", (s: SparkSession, d: String) =>
-            graft.ext.TextAnalysis.temperatureSample(Queries.table(s, d, "documents"))),
-          ("multimodal_audio_energy", Queries.multimodalAudioEnergy _),
-          ("dedup_pipeline", (s: SparkSession, d: String) =>
-            graft.ext.Dedup.nearDupPipeline(Queries.table(s, d, "documents"), 0.8)),
-          ("text_dsir_weights", SparkEntry.queries("text_dsir_weights")),
-          ("text_dsir_select", SparkEntry.queries("text_dsir_select")),
-          ("corpus_diff", SparkEntry.queries("corpus_diff")),
-          ("corpus_profile", SparkEntry.queries("corpus_profile")),
-          ("sim_drift_psi", SparkEntry.queries("sim_drift_psi")),
-          ("text_upsample_epochs", SparkEntry.queries("text_upsample_epochs")),
-          ("text_split_leakage", SparkEntry.queries("text_split_leakage")),
-          ("sim_pagerank", SparkEntry.queries("sim_pagerank")),
-          ("multimodal_image_dedup", SparkEntry.queries("multimodal_image_dedup")),
-          ("retrieval_hybrid_rrf", SparkEntry.queries("retrieval_hybrid_rrf")),
-          ("events_anomaly", SparkEntry.queries("events_anomaly")),
-          ("text_vocab_drift", SparkEntry.queries("text_vocab_drift")),
-          ("text_quality_calibrated", SparkEntry.queries("text_quality_calibrated")),
-          ("sim_mmr_rerank", SparkEntry.queries("sim_mmr_rerank")),
-          ("text_bpe_merges", SparkEntry.queries("text_bpe_merges")),
-          ("events_cusum", SparkEntry.queries("events_cusum")),
-          ("events_coverage", SparkEntry.queries("events_coverage")),
-          ("events_cooccurrence", SparkEntry.queries("events_cooccurrence")),
-          ("events_mad", SparkEntry.queries("events_mad")),
-          ("text_entropy", SparkEntry.queries("text_entropy")),
-          ("corpus_chi2", SparkEntry.queries("corpus_chi2")),
-          ("corpus_histogram", SparkEntry.queries("corpus_histogram")),
-          ("text_weighted_sample", SparkEntry.queries("text_weighted_sample")))) {
-        val df = fn(spark, sf)
-        // materialize through df's OWN QueryExecution (collect, small
-        // sf0.001 results): a write would wrap the logical plan in a NEW
-        // QueryExecution and leave df.queryExecution un-executed — the
-        // audit would silently read the initial plan, where a self-join
-        // prints its shared child twice (overstated shuffles, reused=0)
-        df.collect()
-        // walk the AQE-final PHYSICAL nodes: the final plan's tree STRING
-        // hides upstream exchanges inside materialized query-stage
-        // references (undercount) while the initial tree duplicates
-        // shared subplans (overcount) — node identity is the honest count
-        import org.apache.spark.sql.execution.SparkPlan
-        import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-        import org.apache.spark.sql.execution.exchange.{
-          BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
-        var sh = 0; var bc = 0; var reused = 0
-        def walk(n: SparkPlan): Unit = {
-          n match {
-            case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-            case s: QueryStageExec => walk(s.plan)
-            case _: ShuffleExchangeExec => sh += 1
-            case _: BroadcastExchangeExec => bc += 1
-            case _: ReusedExchangeExec => reused += 1
-            case _ =>
-          }
-          n.children.foreach(walk)
+    try args(0) match {
+      case "profile" =>
+        for (name <- names; run <- Seq("cold", "warm")) {
+          println(QueryProfile(spark, name, sfDir).json("run" -> run))
+          Bench.sweep(spark)
         }
-        walk(df.queryExecution.executedPlan)
-        val plan = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        val scans = plan.linesIterator.filter(_.contains("ReadSchema")).map(_.trim.takeRight(100)).toSeq
-        println(s"PROF $name shuffles=$sh broadcast=$bc reused=$reused")
-        scans.foreach(s => println(s"  scan: $s"))
-      }
-    }
-    if (mode == "exactab") {
-      // r10 q1 exactness-tax A/B: the same q1-shaped aggregation under
-      // each sum discipline, interleaved 3 rounds in ONE session so
-      // machine drift can't masquerade as a variant difference.
-      import org.apache.spark.sql.types.DecimalType
-      import graft.functions.Exact
-      val li = Queries.table(spark, sfDir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("date"))
-      def q1With(sums: Seq[org.apache.spark.sql.Column]) =
-        li.groupBy(col("l_returnflag"), col("l_linestatus"))
-          .agg(sums.head, sums.tail: _*)
-          .orderBy(col("l_returnflag"), col("l_linestatus"))
-      val disc = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      val charge = disc * (lit(1) + col("l_tax"))
-      val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "plain_double" -> (() => q1With(Seq(
-          round(sum(col("l_extendedprice")), 2).as("a"),
-          round(sum(disc), 2).as("b"), round(sum(charge), 2).as("c"),
-          round(avg(col("l_extendedprice")), 4).as("d"),
-          round(avg(col("l_discount")), 4).as("e")))),
-        "sumQ38" -> (() => q1With(Seq(
-          round(Exact.sumQ(col("l_extendedprice"), 2), 2).as("a"),
-          Exact.sumQR(disc, 4, 2).as("b"), Exact.sumQR(charge, 6, 2).as("c"),
-          Exact.avgQR(col("l_extendedprice"), 2, 4).as("d"),
-          Exact.avgQR(col("l_discount"), 2, 4).as("e")))),
-        "cast18" -> (() => q1With(Seq(
-          round(sum(col("l_extendedprice").cast(DecimalType(18, 2))).cast("double"), 2).as("a"),
-          round(sum(disc.cast(DecimalType(18, 4))), 2).cast("double").as("b"),
-          round(sum(charge.cast(DecimalType(18, 6))), 2).cast("double").as("c"),
-          round(avg(col("l_extendedprice")), 4).as("d"),
-          round(avg(col("l_discount")), 4).as("e")))),
-        "compact" -> (() => q1With(Seq(
-          round(Exact.sumQC(col("l_extendedprice"), 2), 2).as("a"),
-          Exact.sumQRC(disc, 4, 2).as("b"), Exact.sumQRC(charge, 6, 2).as("c"),
-          Exact.avgQL(col("l_extendedprice"), 2, 4).as("d"),
-          Exact.avgQL(col("l_discount"), 2, 4).as("e")))),
-        // the r10 compact path WITHOUT the r11 fail-loud envelope guard —
-        // isolates the guard's per-row cost (null check + long compare)
-        "compact_raw" -> (() => {
-          import org.apache.spark.sql.Column
-          def qc(c: Column, s: Int) =
-            floor(c * math.pow(10, s) + lit(0.5)).cast("long")
-              .cast(DecimalType(18, 0))
-          def un(s: Int) = lit(java.math.BigDecimal.valueOf(1L, s))
-          q1With(Seq(
-            round((sum(qc(col("l_extendedprice"), 2)) * un(2)).cast("double"), 2).as("a"),
-            round(sum(qc(disc, 4)) * un(4), 2).cast("double").as("b"),
-            round(sum(qc(charge, 6)) * un(6), 2).cast("double").as("c"),
-            Exact.avgQL(col("l_extendedprice"), 2, 4).as("d"),
-            Exact.avgQL(col("l_discount"), 2, 4).as("e")))
-        }))
-      // value parity gate before timing: compact must equal sumQ38 exactly
-      val ref = variants(1)._2().collect().map(_.toSeq)
-      val cmp = variants(3)._2().collect().map(_.toSeq)
-      println(s"PROF exactab values_equal=${ref.sameElements(cmp) || ref.toSeq == cmp.toSeq}")
-      variants.foreach { case (n, f) => noop(f()); Bench.sweep(spark) } // warm all
-      for (round <- 1 to 3; (n, f) <- variants) {
-        time(f"${n}_r$round")(noop(f()))
-        Bench.sweep(spark)
-      }
-    }
-    if (mode == "wand") {
-      // champion-list (impact-ordered pruning) twin vs the exact postings
-      // serve, interleaved, plus the certificate coverage — run at sf0.1
-      // and sf1_cache for the scale ratio. 16-term queries = the heavy
-      // retrieval_eval join shape, where pruning matters most.
-      import graft.ext.{IndexCache, TextAnalysis}
-      val idx = IndexCache.ensure(spark, sfDir, "bm25", table = "documents",
-        params = "v4,versioned,champions-m128") { d =>
-        TextAnalysis.buildBm25Index(Queries.table(spark, sfDir, "documents"), d)
-      }
-      val idxRoot = graft.ext.Similarity.resolveIndexRoot(spark, idx)
-      val full = spark.read.parquet(s"$idxRoot/tf").count()
-      val top = spark.read.parquet(s"$idxRoot/tf_top").count()
-      println(f"PROF wand postings: full=$full champions=$top (${100.0 * top / full}%.1f%%)")
-      def exact() = noop(TextAnalysis.bm25TopKFromIndex(spark, idx,
-        queryTerms = 16, topK = 10, maxQueries = 30))
-      def champ() = noop(TextAnalysis.bm25TopKFromChampions(spark, idx,
-        queryTerms = 16, topK = 10, maxQueries = 30))
-      exact(); Bench.sweep(spark); champ(); Bench.sweep(spark) // warm
-      for (r <- 1 to 3) {
-        time(s"exact_r$r")(exact()); Bench.sweep(spark)
-        time(s"champ_r$r")(champ()); Bench.sweep(spark)
-      }
-      val cert = TextAnalysis.bm25ChampionCertificate(spark, idx,
-        queryTerms = 16, topK = 10, maxQueries = 30).collect()
-      println(s"PROF wand certified: ${cert.count(_.getBoolean(4))}/${cert.length}")
-      // r12: the composed certified serve (champion + exact re-score +
-      // fallback), at the eval panel's own shape (200 queries)
-      val cert200 = TextAnalysis.bm25ChampionCertificate(spark, idx,
-        queryTerms = 16, topK = 10, maxQueries = 200).collect()
-      println(s"PROF wand certified@200: ${cert200.count(_.getBoolean(4))}/${cert200.length}")
-      val cert4 = TextAnalysis.bm25ChampionCertificate(spark, idx,
-        queryTerms = 4, topK = 5, maxQueries = 200).collect()
-      println(s"PROF wand certified@4term: ${cert4.count(_.getBoolean(4))}/${cert4.length}")
-      cert200.take(5).foreach(r => println(
-        s"PROF cert16 q=${r.getLong(0)} theta=${r.getDouble(1)} ub=${r.getDouble(2)} cont=${r.getDouble(3)}"))
-      cert4.take(5).foreach(r => println(
-        s"PROF cert4 q=${r.getLong(0)} theta=${r.getDouble(1)} ub=${r.getDouble(2)} cont=${r.getDouble(3)}"))
-      def evalExact() = noop(TextAnalysis.retrievalEvalFromIndex(spark, idx))
-      def evalCert() = noop(TextAnalysis.retrievalEvalCertified(spark, idx))
-      def certOnly() = noop(TextAnalysis.bm25ChampionCertificate(spark, idx,
-        queryTerms = 16, topK = 10, maxQueries = 200))
-      evalExact(); Bench.sweep(spark); evalCert(); Bench.sweep(spark) // warm
-      certOnly(); Bench.sweep(spark)
-      for (r <- 1 to 3) {
-        time(s"eval_exact_r$r")(evalExact()); Bench.sweep(spark)
-        time(s"eval_cert_r$r")(evalCert()); Bench.sweep(spark)
-        time(s"cert_only_r$r")(certOnly()); Bench.sweep(spark)
-      }
-    }
-    if (mode == "bm25") {
-      // retrieval_eval cost anatomy at SPARK_GRAFT_SF_DIR: index scan vs
-      // matched-postings volume vs the groupBy shuffle
-      val docs = Queries.table(spark, sfDir, "documents")
-      val idxDir = sys.props("java.io.tmpdir") + "/graft_prof_bm25_idx"
-      time("build")({ graft.ext.TextAnalysis.buildBm25Index(docs, idxDir); 0L })
-      val tf = spark.read.parquet(
-        s"${graft.ext.Similarity.resolveIndexRoot(spark, idxDir)}/tf")
-      time("tf_rows")(tf.count())
-      val q = tf.filter(col("doc_id") % 100 === 0 && col("doc_id") < 20000)
-        .withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("doc_id")).orderBy(col("first_pos"))))
-        .filter(col("rk") <= 16)
-        .select(col("doc_id").as("query_id"), col("token"))
-      time("qtokens")(q.count())
-      val matched = broadcast(q).join(tf, Seq("token"))
-      time("matched_rows")(matched.count())
-      time("grouped")(matched.groupBy(col("query_id"), col("doc_id"))
-        .agg(sum(col("tf"))).count())
-      time("eval_full")(noop(
-        graft.ext.TextAnalysis.retrievalEvalFromIndex(spark, idxDir)))
-      time("eval_full_2")(noop(
-        graft.ext.TextAnalysis.retrievalEvalFromIndex(spark, idxDir)))
-    }
-    if (mode == "simhash" || mode == "all") {
-      val docs = Queries.table(spark, sfDir, "documents")
-      time("simhash_sig")(graft.ext.Dedup.simhash64(docs).count())
-      time("simhash_full")(noop(graft.ext.Dedup.simhashCandidatePairs(docs, 3)))
-    }
-    if (mode == "explain15") {
-      // dump .explain("formatted") for the named queries to
-      // $SPARK_GRAFT_PLAN_DIR/<name>_<suffix>.txt (the r15 plan-evidence
-      // deliverable). Lazy plans only — no execution.
-      val dir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r15")
-      val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val names = sys.env.get("SPARK_GRAFT_PROF_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-      for (n <- names; f <- SparkEntry.queries.get(n)) {
-        val plan = f(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, s"${n}_$suffix.txt"),
-          plan.getBytes("UTF-8"))
-        val nEx = "Exchange hashpartitioning".r.findAllIn(plan).size
-        val nBc = "BroadcastExchange".r.findAllIn(plan).size
-        println(s"PROF explain15 $n -> $dir/${n}_$suffix.txt " +
-          s"(shuffle exchanges=$nEx, broadcasts=$nBc)")
-      }
-    }
-    if (mode == "certplan") {
-      // dump the champion certificate's OWN lazy plan (the composed
-      // certified serves checkpoint it away at construction, so the
-      // registered rows' plan files never show it) — r16 plan evidence
-      val dir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r16")
-      val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val idx = SparkEntry.bm25Index(spark, sfDir)
-      val plan = graft.ext.TextAnalysis.bm25ChampionCertificate(spark, idx)
-        .queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, s"bm25_champion_certificate_$suffix.txt"),
-        plan.getBytes("UTF-8"))
-      val nEx = "Exchange hashpartitioning".r.findAllIn(plan).size
-      val nJoin = "SortMergeJoin|BroadcastHashJoin".r.findAllIn(plan).size
-      println(s"PROF certplan -> $dir/bm25_champion_certificate_$suffix.txt " +
-        s"(hash exchanges=$nEx, joins=$nJoin)")
-    }
-    if (mode == "pipejobs") {
-      // r16 cold-run anatomy for pipeline_training_set: one COLD run in a
-      // fresh JVM, per-job wall durations + the job's first-stage name so
-      // a bimodal cold run can be attributed to a specific job instead of
-      // guessed at. (Job duration here is submission→end wall; jobs can
-      // overlap, but the pipeline's driver loop is sequential.)
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val site = j.stageInfos.map(_.name).headOption.getOrElse("?")
-          starts.put(j.jobId, (System.nanoTime(), site)); ()
+      case "explain" =>
+        for (name <- names) {
+          println(s"== $name")
+          println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
         }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(starts.get(j.jobId)).foreach { case (t0, site) =>
-            lines.add(f"PROF pipejobs job=${j.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%7.2f s  $site")
-          }
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      noop(graft.ext.TrainingPipeline.trainingSet(
-        Queries.table(spark, sfDir, "documents")))
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftshim.PlanBridge.drainListenerBus(spark)
-      lines.forEach(l => println(l))
-      println(f"PROF pipejobs total: $sec%.2f s")
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    if (mode == "jobs15") {
-      // r15 optimization-round anatomy: per registered query, the number
-      // of Spark jobs and stages a warm run launches (jobs ≈ driver
-      // actions; stages ≈ exchanges + scans) — the fixed-cost structure
-      // that dominates sub-10 s rows at sf0.1 and the exchange count that
-      // dominates at 100 TB. SPARK_GRAFT_PROF_ONLY=a,b,c selects rows.
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val names = sys.env.get("SPARK_GRAFT_PROF_ONLY")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Seq("text_lr_model", "text_lr_predict", "ml_eval_auc_ci",
-          "sim_communities", "text_bm25_certified", "dedup_containment_index",
-          "dedup_clusters_dist", "retrieval_eval_certified", "sim_topk_pq",
-          "retrieval_hybrid_rrf_certified", "pipeline_stage_report"))
-      for (n <- names; f <- SparkEntry.queries.get(n)) {
-        noop(f(spark, sfDir)); Bench.sweep(spark) // warm: JIT/codegen/caches
-        // drain the async bus so the warm run's events don't leak into the
-        // counted window (r15 ADVICE: fixed sleeps raced late events)
-        org.apache.spark.sql.graftshim.PlanBridge.drainListenerBus(spark)
-        jobs.set(0); stages.set(0)
-        val t0 = System.nanoTime()
-        noop(f(spark, sfDir))
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graftshim.PlanBridge.drainListenerBus(spark)
-        println(f"PROF jobs15 $n%-32s ${sec}%6.2f s  jobs=${jobs.get}%3d stages=${stages.get}%3d")
-        Bench.sweep(spark)
-      }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

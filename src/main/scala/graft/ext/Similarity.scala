@@ -1612,8 +1612,9 @@ object Similarity {
   /** The m per-subspace Lloyd fits as ONE joint loop over exploded
     * (vec_id, s, subvector) rows (r15, guide §1.2/§2.4): the previous
     * shape ran m concurrently-submitted [[kmeansFit]]s — m corpus caches,
-    * m×iters assign jobs and m×iters driver collects (the jobs15 profile
-    * measured sim_topk_pq at 151 jobs, the registry's worst) — and every
+    * m×iters assign jobs and m×iters driver collects (`graft.Prof jobs15`
+    * as of commit af7eb30 measured sim_topk_pq at 151 jobs, the registry's
+    * worst) — and every
     * consumer then re-assembled the codes with an m-way self-join. One
     * exploded frame fits all subspaces in iters assign jobs + iters
     * bounded collects (centroid rows are m×ks×subDim doubles — the same

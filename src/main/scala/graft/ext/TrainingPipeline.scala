@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
   * long-lived sessions should release them (`spark.catalog.clearCache()`
   * or unpersist by plan). The harness mains do this between queries.
   *
-  * First-run latency (measured, `graft.Prof pipecold`/`pipewarm`,
-  * local[32]): a fresh session pays ~17 s for its first run at sf0.1 vs
-  * ~6 s steady — and the SAME ~17 s for a first run at sf0.001, on 1/100th
-  * the data. The warm-up is therefore ≥95 % data-independent code cost
+  * First-run latency (measured with the `pipecold`/`pipewarm` modes of
+  * `graft.Prof` as of commit af7eb30, local[32]): a fresh session pays
+  * ~17 s for its first run at sf0.1 vs ~6 s steady — and the SAME ~17 s
+  * for a first run at sf0.001, on 1/100th the data. The warm-up is
+  * therefore ≥95 % data-independent code cost
   * (Janino whole-stage-codegen compilation, C2 JIT, Catalyst
   * analysis/optimization of the composed plan — all cached per session,
   * keyed by generated source). At production scale this is noise
@@ -41,8 +42,9 @@ import org.apache.spark.sql.functions._
   * repeated serving, [[preWarm]] is the SUPPORTED entry: run it once
   * during idle time (or pass `warmFirst = true` to [[trainingSet]]) and
   * the first full-scale run lands at ~1.2× steady state instead of ~3×
-  * (measured, `graft.Prof pipeprewarm`, sf0.1 local[32]: pre-warm 12.3 s
-  * on the 2% hash sample, then 7.1 s first full run vs 6.0 s steady —
+  * (measured with `graft.Prof pipeprewarm` as of commit af7eb30, sf0.1
+  * local[32]: pre-warm 12.3 s on the 2% hash sample, then 7.1 s first
+  * full run vs 6.0 s steady —
   * the plan-shape-preserving filter warms the RIGHT generated classes,
   * where the earlier limit-based experiment still paid 1.47×).
   */

@@ -19,8 +19,9 @@ object PlanBridge {
 
   /** Block until the async listener bus has delivered every posted event —
     * `SparkContext.listenerBus` is `private[spark]`, reachable from this
-    * shim package. Used by the `Prof jobs15` job/stage counter so a warm
-    * run's late-draining events never inflate the counted window.
+    * shim package. [[graft.QueryProfile]] drains at both edges of its
+    * window so no late event leaks into or out of it (the `Prof jobs15`
+    * counter of commit af7eb30 did the same).
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()

@@ -1486,8 +1486,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     def start() = graft.streaming.StreamingCorpus.upsampleIngest(
       spark.readStream.schema(schema).parquet(srcDir), outDir, ckpt,
       targets, budget)
+    // one file per chunk: chunk 2 lands into the live q2, and a
+    // multi-file append can be committed across two micro-batches
     def land(c: Seq[CorpusDoc]): Unit =
-      c.toDF().write.mode("append").parquet(srcDir)
+      c.toDF().coalesce(1).write.mode("append").parquet(srcDir)
     land(chunks(0))
     val q1 = start(); q1.processAllAvailable(); q1.stop()
     land(chunks(1))
