@@ -1,57 +1,50 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark harness: runs every registered query against
   * `SPARK_GRAFT_SF_DIR`, materializing through the noop v2 sink.
   *
   * Output contract: stdout carries ONE COMPACT JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},...}` — the
-  * wrapper that invokes this parses it out of the last ~2KB of the log
-  * tail, so the line MUST stay short (runs/medians per query live in the
-  * `SPARK_GRAFT_BENCH_OUT` file, default `bench_out.json`, which carries
-  * the full-detail JSON). r3 regression to avoid: embedding raw per-run
-  * arrays on stdout pushed the line past the tail window and the wrapper
-  * recorded `parsed: null`.
+  * `{"metric":"total","value":N,"unit":"sec","n_errors":K,"errors":{...},...}`
+  * — the wrapper that invokes this parses it out of the last ~2KB of the
+  * log tail, so the line MUST stay short (runs/medians per query live in
+  * the `SPARK_GRAFT_BENCH_OUT` file, default `bench_out.json`, which
+  * carries the full-detail JSON). r3 regression to avoid: embedding raw
+  * per-run arrays on stdout pushed the line past the tail window and the
+  * wrapper recorded `parsed: null`.
   *
   * Per-query failures are REPORTED in an `"errors"` map and the failing
   * query's time is recorded as -1 — a crashing query must read as broken,
-  * never as fast. Each query runs one UNTIMED warm-up rep (r5 finding:
-  * rep-1 absorbs JIT/codegen/page-cache and the median>1.5×min anomaly
-  * detector fired on warm-up, the opposite of the state-pollution it was
-  * built to catch), then `SPARK_GRAFT_BENCH_REPS` timed reps (default 3)
-  * and reports the MIN (load-robust); the per-query MEDIAN ships in the
-  * detail file, and any query whose median exceeds 1.5× its min surfaces
-  * in the stdout `"rep_anomalies"` map. With warm-up outside the window,
-  * median≫min again means genuine rep-over-rep degradation.
+  * never as fast. Each query runs one UNTIMED warm-up rep (r5: the
+  * anomaly detector fired on rep-1's JIT/codegen/page-cache cost), then
+  * `SPARK_GRAFT_BENCH_REPS` timed reps (default 3), and reports the MIN
+  * (load-robust); a median above 1.5× the min surfaces in the stdout
+  * `"rep_anomalies"` map as genuine rep-over-rep degradation.
   *
-  * Degrade ladder invariant (r5 driver artifact hid 4 anomalies): every
-  * rung of the stdout ladder keeps `rep_anomalies` + `n_errors` + the
-  * probe totals — only `queries`/`errors`/`skipped` detail is shed.
+  * Line invariant (r5 driver artifact hid 4 anomalies): [[stdoutLine]]
+  * caps every name-keyed map with a `"_more"` count; its one fallback
+  * form drops only `rows` and `queries_top`.
   *
   * Probe phase: after the full run, the session is torn down and a pinned
-  * ~15-query comparable subset (`Bench.probeSubset`) re-runs in a FRESH
-  * SparkSession. r5 evidence: full-92-query mins ran ~1.33–2.6× above
-  * isolated reruns of the same build (population-level JVM state — codegen
-  * cache, broadcast/shuffle handles, GC pressure), so cross-round
-  * comparisons need a low-population number recorded per round. Since r12
-  * every probe-session row ships in the unified stdout `"rows"` map —
-  * `[probe_s, delta_vs_prior_norm, sf1_s, sf1_exp]` — with ONE
-  * interleaved calibration pass between rows, so each row's cross-round
-  * delta is normalized by its own bracketing anchors (r11 ask #3: raw
-  * per-query deltas were unreadable under 33–49 % within-run machine
-  * drift, and adjudicating one took a 20-run manual A/B). Compare `rows`
-  * deltas and `probe_normalized` round-over-round; the full-run total is
-  * only a coverage smoke signal.
+  * comparable subset (`probeSubset` ++ `probeAdditions`) re-runs in a FRESH
+  * SparkSession: full-run mins ran ~1.33–2.6× above isolated reruns of
+  * the same build (r5; codegen cache, shuffle handles, GC pressure). Each
+  * probe row ships in the stdout `"rows"` map as `[probe_s, delta]`.
+  * Compare `rows` deltas and `probe_normalized` round-over-round; the
+  * full-run total is only a coverage smoke signal.
   *
-  * Between reps the harness does a BLOCKING sweep of both the catalog
-  * cache AND all persistent RDDs: operators that `localCheckpoint` their
-  * intermediates (k-means fits, dup clustering rounds, LSH candidate
-  * sets) leave blocks that `clearCache()` alone never frees, and across
-  * 60+ queries × N reps that residue squeezes the storage region on a
-  * memory-tight machine. The sweep runs OUTSIDE the timed window — it is
-  * harness hygiene, not query cost.
+  * Between reps the harness runs a blocking [[sweep]] of cached plans,
+  * persistent RDDs and `localCheckpoint` blocks, OUTSIDE the timed window.
+  *
+  * Knobs (environment, all optional): `SPARK_GRAFT_SF_DIR`,
+  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_BENCH_REPS`, `SPARK_GRAFT_BENCH_WARMUP`,
+  * `SPARK_GRAFT_BENCH_ONLY`, `SPARK_GRAFT_PRIOR_BENCH`,
+  * `SPARK_GRAFT_BENCH_OUT`.
   */
 object Bench {
+
+  private type Query = (SparkSession, String) => DataFrame
 
   /** Pinned comparable subset: headliners + one per operator family.
     * Recorded isolated (fresh session) every round so round-over-round
@@ -62,20 +55,13 @@ object Bench {
     "q1_pricing_summary", "q3_top_orders", "q5_local_supplier", // TPC-H headliners
     "events_funnel",                                            // analytics
     "agg_percentiles",                                          // exact-percentile agg
-    // r15: dedup_containment auto-demoted (servingTwin — r14 measured a
-    // 1.64 decade exponent on the block-unique sf1 corpus); its
-    // dedup_containment_index serving twin is pinned via heavySubset,
-    // so the probe keeps a containment-tier row. probe_legacy_total
-    // drops ~2-3 s vs prior rounds (inside the 25% flag threshold).
+    // r15: dedup_containment auto-demoted (servingTwin): the legacy
+    // total dropped ~2-3 s, inside the 25% flag threshold
     "dedup_minhash", "dedup_pipeline",                          // dedup family
     "dedup_clusters",                                           // clustering driver path
     "sim_topk_bruteforce", "sim_topk_pq",                       // ANN family
-    "sim_topk_agg",        // r6 flagged a full-run rep anomaly here; the
-                           // fresh-session probe pins its honest number
-                           // every round (r7 investigation: 2× isolated
-                           // 10-rep runs + 2× full-run replays all flat —
-                           // the r6 [0.27, 2.30, 1.97] was transient
-                           // machine interference, not session state)
+    "sim_topk_agg",        // r6 full-run rep anomaly; the probe pins its
+                           // honest number every round
     "text_pack", "text_perplexity", "text_surprisal",           // text family
     "pipeline_training_set"                                     // flagship composition
   )
@@ -84,8 +70,7 @@ object Bench {
     * probe row, so cross-round regression tracking was blind to exactly
     * the queries most likely to regress. Kept SEPARATE from
     * [[probeSubset]] so `probe_normalized` (computed over the legacy
-    * subset only) stays directly comparable to r8's recorded 26.7; the
-    * expanded total ships as `probe_normalized_full`.
+    * subset only) stays directly comparable to r8's recorded 26.7.
     */
   val probeAdditions: Seq[String] = Seq(
     "ml_eval_auc",           // histogram-reduction class
@@ -95,79 +80,29 @@ object Bench {
     "retrieval_eval_certified"
   )
 
-  /** The 10 heaviest registered queries of the r8 full run (r8 ask #5):
-    * exactly the ones NOT in the probe, so the sf1 scale-up smoke now
-    * measures their exponents in-artifact instead of in a commit
-    * message. Base sf times for the exponent come from a fresh-session
-    * single-rep pass (`scale_base` in the detail file), not the
-    * population-biased full-run mins.
+  /** Wall budget (r14 ask #1: the driver kills the bench at 60 minutes).
+    * A probe window (first or retry) only STARTS with [[probeReserveS]] of
+    * headroom; a refused start is recorded in `shed`, never silent.
     */
-  val heavySubset: Seq[String] = Seq(
-    "pipeline_stage_report", "ml_eval_thresholds", "ml_eval_auc",
-    // r12: the gated agg_approx_distinct row (exact twin as in-row error
-    // gate) moved to verifierOnly; the bench times the serving sketch
-    "agg_approx_distinct_sketch", "text_lr_predict", "ml_eval_calibration",
-    "text_lr_model", "sim_pca_project", "sim_whiten",
-    // r9 additions in the same cost tier (each self-trains the LR
-    // scorer) plus the round's new graph family
-    "ml_eval_pr_auc", "ml_eval_ks", "sim_communities",
-    // r13: retrieval_eval (exact postings form) auto-demoted via
-    // servingTwin; retrieval_eval_certified moved up into the probe.
-    // The spread certified row is the round's NEW production branch
-    // (champion serve + bounded re-score actually firing) — its sf1
-    // exponent is the scale evidence for the tier
-    "text_bm25_certified_spread",
-    // r14: the two sf10 flagship rows that had no sf1 denominator —
-    // without a base+sf1 time their sf10 exponents were uncomputable
-    "dedup_containment_index", "sim_topk_ivf_index",
-    // r14: the champion-tier eval monitor — the bounded answer to
-    // retrieval_eval_certified's measured 1.04 decade exponent on the
-    // 0-coverage corpus; its exponent is the row's whole point
-    "retrieval_eval_champions")
+  val budgetS: Double = 3000.0
+  /** Headroom one probe window needs: r15's measured 248 s at sf0.1. */
+  private val probeReserveS = 300.0
 
-  /** r13 judge ask #3: flagship serving rows probed one more decade up
-    * (sf1_cache × 10 → sf10_cache), single rep, so the scale grade
-    * rests on exponents measured over TWO decades (sf0.1→sf1→sf10)
-    * instead of one hop plus plan arguments. Keep this list short — the
-    * sf10 pass pays each row's index build at 100× the base SF.
+  /** Calm-window gate (r13 judge ask #6): a probe window whose anchors
+    * spread beyond this re-runs ONCE in a fresh session. `probe_windows`
+    * records every window's spread; the last one carries the numbers.
     */
-  val sf10Subset: Seq[String] = Seq(
-    // r15 (r14 finding #5): retrieval_eval_certified dropped from the
-    // decade probe — at sf10 it measures the exact FALLBACK on the
-    // 0-coverage base index (159 s + 231 s warmup ≈ 47% of the whole
-    // phase, exponent 0.90 — the fallback behaving as documented, not
-    // the certified path). The spread row (coverage 1.0) and the
-    // champions monitor (exponent 0.12) are the scale-representative
-    // probes for the tier; the hostile base row stays benched at sf0.1.
-    "text_bm25_certified_spread",
-    "retrieval_eval_champions",
-    "dedup_containment_index", "sim_topk_ivf_index",
-    "agg_approx_distinct_sketch")
+  val calmSpread: Double = 1.5
 
-  /** Rows excluded from the sf1 scale sweep while still probed at the
-    * base SF (r14 finding #5 follow-through): `retrieval_eval_certified`
-    * serves the deliberately-hostile base index whose champion coverage
-    * is 0.0 by fixture design, so every scale hop measures the exact
-    * corpus-proportional fallback — behaviour the row documents, not a
-    * regression signal worth ~42 s of the sf1 window every round. The
-    * spread/champions rows carry the tier's scale exponents.
-    */
-  val sf1Exclude: Set[String] = Set("retrieval_eval_certified")
-
-  /** The prior round's regression baseline, BUNDLED (r10 advisor
-    * finding: three separately hardcoded values that had to be updated
-    * in lockstep each round — normalized probe, per-query mins, probe
-    * calibration — drift apart the round someone forgets one).
-    * `source` travels into the artifact as `prior_source` so the judge
-    * can see where the baseline came from.
+  /** The prior round's regression baseline, bundled so its values can't
+    * drift apart (r10); `source` ships as `prior_source`.
     */
   final case class PriorSnapshot(source: String, normalized: Double,
       perQuery: Map[String, Double], calibProbe: Double,
       annRecall: Map[String, Double] = Map.empty)
 
   /** Ultimate fallback if no prior artifact is readable: r9's recorded
-    * values (BENCH_r09; single-anchor calib — r10+ artifacts carry dual
-    * anchors and load as their mean).
+    * values (BENCH_r09; single-anchor calib).
     */
   val builtinPrior: PriorSnapshot = PriorSnapshot("builtin-r9", 33.4,
     Map(
@@ -181,125 +116,76 @@ object Bench {
       "pipeline_training_set" -> 4.75),
     0.529)
 
-  /** Load the regression baseline from the newest driver bench artifact
-    * (`BENCH_r<N>.json` in the working directory, highest N; override
-    * with `SPARK_GRAFT_PRIOR_BENCH=<path>`), falling back to
-    * [[builtinPrior]] — the r10 gate went stale-prone because the
-    * baseline was a hand-edited constant. The artifact wraps the bench
-    * stdout line under `"parsed"`; extraction is a string-aware
-    * balanced-brace scan + field regexes (no JSON lib on the classpath),
-    * and ANY parse failure falls back rather than failing the bench.
+  /** Read one bench artifact as a prior: a driver `BENCH_r<N>.json` (the
+    * stdout line wrapped under `"parsed"`, pretty-printed, the same JSON
+    * also embedded as an escaped string in `"tail"`) or a `bench_out`
+    * detail file. Any read or shape failure is `None`, so a bad artifact
+    * falls back rather than failing the bench.
     */
-  private[graft] def parseArtifact(path: java.nio.file.Path,
-      label: String): Option[PriorSnapshot] = {
-    val num = "(-?[0-9][0-9.eE+-]*)"
+  private[graft] def parseArtifact(path: Path, label: String): Option[PriorSnapshot] =
     scala.util.Try {
-        val txt = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-        // isolate the "parsed":{...} object (string-aware brace matching:
-        // the sibling "tail" field embeds the same JSON as an escaped
-        // string and would defeat naive regexes)
-        val start = txt.indexOf("\"parsed\":")
-        val body = if (start < 0) txt else {
-          val open = txt.indexOf('{', start)
-          var i = open; var depth = 0; var inStr = false; var esc = false
-          var end = -1
-          while (end < 0 && i < txt.length) {
-            val c = txt.charAt(i)
-            if (esc) esc = false
-            else if (inStr) { if (c == '\\') esc = true else if (c == '"') inStr = false }
-            else c match {
-              case '"' => inStr = true
-              case '{' => depth += 1
-              case '}' => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          if (end > open) txt.substring(open, end + 1) else txt
-        }
-        // whitespace-tolerant: the driver PRETTY-PRINTS the artifact
-        // (newlines/indentation between every token), while bench_out and
-        // the stdout line are compact
-        val normalized = s""""probe_normalized"\\s*:\\s*$num""".r
-          .findFirstMatchIn(body).map(_.group(1).toDouble)
-        val calib = s""""calib_probe"\\s*:\\s*\\[\\s*$num\\s*,\\s*$num\\s*\\]""".r
-          .findFirstMatchIn(body)
-          .map(m => (m.group(1).toDouble + m.group(2).toDouble) / 2)
-          .orElse(s""""calib_probe"\\s*:\\s*$num""".r
-            .findFirstMatchIn(body).map(_.group(1).toDouble))
-        // per-query probe mins: r12+ artifacts carry the unified "rows"
-        // map ("name":[probe,delta,sf1,exp] — element 0 is the probe
-        // min); ≤ r11 artifacts carry the flat "probe" map
-        val perQueryRows = """"rows"\s*:\s*\{([^}]*)\}""".r
-          .findFirstMatchIn(body).map(_.group(1)).map { inner =>
-            """"([^"]+)"\s*:\s*\[([^\]]*)\]""".r.findAllMatchIn(inner)
-              .flatMap { m =>
-                val parts = m.group(2).split(",").map(_.trim)
-                scala.util.Try(parts(0).toDouble).toOption
-                  .filter(_ > 0).map(m.group(1) -> _)
-              }.toMap
-          }.filter(_.nonEmpty)
-        val probeMap = """"probe"\s*:\s*\{([^}]*)\}""".r
-          .findFirstMatchIn(body).map(_.group(1)).map { inner =>
-            s""""([^"]+)"\\s*:\\s*$num""".r.findAllMatchIn(inner)
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .filter(_._2 > 0).toMap
-          }.filter(_.nonEmpty)
-        // when the artifact carries BOTH maps (bench_out.json does), the
-        // full-precision probe values OVERLAY the 2-sig-digit rows map —
-        // rows entries the probe map lacks (scale-base names) survive —
-        // so next-round deltas don't inherit jnum2's ~5% quantization
-        val perQuery = (perQueryRows, probeMap) match {
-          case (Some(r), Some(p)) => r ++ p
-          case (r, p) => r.orElse(p).getOrElse(Map.empty[String, Double])
-        }
-        // prior ann_recall map (r14 ask #5's trend gate): absent in
-        // pre-r14 artifacts — the gate simply has no baseline then
-        val annPrior = """"ann_recall"\s*:\s*\{([^}]*)\}""".r
-          .findFirstMatchIn(body).map(_.group(1)).map { inner =>
-            s""""([^"]+)"\\s*:\\s*$num""".r.findAllMatchIn(inner)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }.getOrElse(Map.empty[String, Double])
-        for (n <- normalized; c <- calib; if n > 0 && c > 0)
-          yield PriorSnapshot(label, n, perQuery, c, annPrior)
-      }.toOption.flatten
-  }
+      import com.fasterxml.jackson.databind.JsonNode
+      import scala.jdk.CollectionConverters._
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(path.toFile)
+      // a driver artifact whose run died carries "parsed": null — no prior
+      val body = if (root.has("parsed")) root.get("parsed") else root
+      def num(n: JsonNode) = Option(n).filter(_.isNumber).map(_.asDouble)
+      def entries(field: String): Seq[(String, JsonNode)] =
+        Option(body.get(field)).filter(_.isObject).toSeq
+          .flatMap(_.properties.asScala.map(e => e.getKey -> e.getValue))
+      def numMap(field: String) =
+        entries(field).flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+      // r10+ artifacts carry the probe window's [start, end] anchors (their
+      // mean is the window's calibration); ≤ r9 artifacts a single scalar
+      val calib = Option(body.get("calib_probe")) match {
+        case Some(a) if a.isArray && a.size == 2 =>
+          for (s <- num(a.get(0)); e <- num(a.get(1))) yield (s + e) / 2
+        case other => other.flatMap(num)
+      }
+      // per-query probe mins: "rows" element 0 (r12+) overlaid by the
+      // full-precision "probe" map (≤ r11, and bench_out files); -1 = not
+      // measured, on either side, never clobbers a measured value
+      val rows = entries("rows").flatMap { case (k, v) =>
+        Option(v).filter(_.isArray).flatMap(a => num(a.get(0))).map(k -> _) }.toMap
+      val perQuery = rows.filter(_._2 > 0) ++ numMap("probe").filter(_._2 > 0)
+      // ann_recall (r14 ask #5's trend gate): absent in pre-r14 artifacts
+      // — the gate simply has no baseline then
+      for (n <- num(body.get("probe_normalized")); c <- calib; if n > 0 && c > 0)
+        yield PriorSnapshot(label, n, perQuery, c, numMap("ann_recall"))
+    }.toOption.flatten
 
   /** The round currently IN PROGRESS, inferred from VERDICT.md ("VERDICT
     * — round N" is written at the END of round N, so the live round is
-    * N+1). Used to exclude the live round's own BENCH artifact from the
-    * prior scan (r11 advisor catch: once the driver writes BENCH_r12.json
-    * mid-round, a bench rerun would otherwise compare against ITSELF and
-    * the regression gate could never fire again that round).
+    * N+1). Excludes the live round's own artifact from the prior scan
+    * (r11: a mid-round rerun would otherwise compare against ITSELF).
     */
   private[graft] def currentRound(): Option[Int] = scala.util.Try {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("VERDICT.md")), "UTF-8")
-    // deliberately loose (case-insensitive, any separator run between
-    // 'verdict' and 'round'): a silent non-match here reopens the
-    // self-compare hole, so the coupling to VERDICT.md's header is
-    // pinned by BenchPriorSpec against the real file
+    val txt = new String(Files.readAllBytes(Paths.get("VERDICT.md")), "UTF-8")
+    // deliberately loose: a silent non-match reopens the self-compare
+    // hole, so BenchPriorSpec pins it against the real file
     "(?is)verdict\\W{0,20}round\\s+(\\d+)".r.findFirstMatchIn(txt)
       .map(_.group(1).toInt + 1)
   }.toOption.flatten
 
+  /** Load the regression baseline from the newest prior artifact in the
+    * working directory (override with `SPARK_GRAFT_PRIOR_BENCH=<path>`),
+    * falling back to [[builtinPrior]] — the r10 gate went stale-prone
+    * because the baseline was a hand-edited constant.
+    */
   private[graft] def loadPrior(): PriorSnapshot = {
     val explicit = sys.env.get("SPARK_GRAFT_PRIOR_BENCH").flatMap { p =>
-      parseArtifact(java.nio.file.Paths.get(p), s"env:$p")
+      parseArtifact(Paths.get(p), s"env:$p")
     }
     def newestArtifact: Option[PriorSnapshot] = scala.util.Try {
-      val cwd = java.nio.file.Paths.get(".")
-      // both prior sources rank by round: the driver's wrapped artifact
-      // AND the committed local detail file (r15: BENCH_r14 carries
-      // parsed=null from the timeout kill, but bench_out_r14_local.json
-      // holds the full round telemetry — a round whose driver artifact
-      // failed must not silently roll the baseline back a round). Within
-      // a round the driver artifact wins (it is the adjudicated one).
+      // both prior sources rank by round — the driver's artifact AND the
+      // committed local detail file (BENCH_r14 is parsed=null from its
+      // timeout kill; bench_out_r14_local.json holds that round) — and
+      // within a round the driver artifact wins.
       val reDriver = "BENCH_r(\\d+)\\.json".r
       val reLocal = "bench_out_r(\\d+)_local\\.json".r
       val live = currentRound()
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(cwd).iterator.asScala
+      Files.list(Paths.get(".")).iterator.asScala
         .flatMap { p =>
           val fn = p.getFileName.toString
           reDriver.findFirstMatchIn(fn)
@@ -320,41 +206,28 @@ object Bench {
   /** Machine-drift calibration anchor (r7 ask #1): a FIXED,
     * data-independent workload timed in every bench session, so
     * cross-round probe comparison can separate code regressions from
-    * machine drift — r7's pinned probe reported a phantom 36% regression
-    * (22.6 s vs 16.6 s) that took a two-build A/B to falsify; the
-    * mechanism built for honest comparison could not itself tell how
-    * fast the machine was that day.
-    *
-    * Workload: one CPU-bound pass (2e9-row range, per-row xxhash64 —
-    * nothing Catalyst can fold away) plus one small fixed shuffle
-    * (2e6 rows → 1024 keys), covering the two resources (cores, shuffle
-    * machinery) the probe queries actually contend on. One untimed warm
-    * pass pays codegen, then min-of-2 timed passes. The artifact records
-    * `calib_s` per session and `probe_normalized = probe_total /
-    * calib_probe`; compare THE NORMALIZED number across rounds — a slow
-    * machine inflates numerator and denominator together.
+    * machine drift (r7's phantom 36% regression). One CPU-bound pass
+    * (2e9-row range, per-row xxhash64 — nothing Catalyst can fold away)
+    * plus one small fixed shuffle (2e6 rows → 1024 keys): the two
+    * resources the probe queries contend on. One untimed warm pass, then
+    * min-of-2 timed passes.
     */
-  /** One timed pass of the calibration workload — the interleaved
-    * per-row anchor (r11 ask #3). Assumes codegen already warmed by a
-    * preceding [[calibrate]] in the same session.
-    */
-  private[graft] def calibPass(spark: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    // mask the hash to 20 bits before summing: 2e9 × 2^20 ≈ 2^51 keeps
-    // the running sum inside a long under ANSI overflow checking
-    spark.range(0L, 2000000000L, 1L, 32)
-      .selectExpr("sum(xxhash64(id) & 1048575) s")
-      .write.format("noop").mode("overwrite").save()
-    spark.range(0L, 2000000L, 1L, 32)
-      .selectExpr("pmod(xxhash64(id), 1024) k", "id v")
-      .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   private[graft] def calibrate(spark: SparkSession): Double = {
-    calibPass(spark) // warm: codegen + JIT, untimed
-    math.min(calibPass(spark), calibPass(spark))
+    def pass(): Double = {
+      val t0 = System.nanoTime()
+      // mask the hash to 20 bits before summing: 2e9 × 2^20 ≈ 2^51 keeps
+      // the running sum inside a long under ANSI overflow checking
+      spark.range(0L, 2000000000L, 1L, 32)
+        .selectExpr("sum(xxhash64(id) & 1048575) s")
+        .write.format("noop").mode("overwrite").save()
+      spark.range(0L, 2000000L, 1L, 32)
+        .selectExpr("pmod(xxhash64(id), 1024) k", "id v")
+        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
+        .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    pass() // warm: codegen + JIT, untimed
+    math.min(pass(), pass())
   }
 
   /** Drop every cached plan and every persistent RDD (including
@@ -367,17 +240,12 @@ object Bench {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     // give the ContextCleaner its GC trigger: shuffle files and broadcast
-    // blocks are reclaimed only when their driver-side handles are
-    // collected, so across 70+ queries × N reps the local dirs otherwise
-    // accumulate every shuffle ever written (disk + page-cache pressure
-    // that lands on whichever query runs late in the sequence — the
-    // mechanism behind median≫min rep anomalies). Harness hygiene,
-    // outside the timed window.
+    // blocks are reclaimed only once their driver-side handles are
+    // collected; otherwise every shuffle ever written piles up and slows
+    // whichever query runs late (a median≫min anomaly mechanism)
     System.gc()
   }
 
-  private def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
   /** Compact number form: 3 significant digits, no exponent for the
     * magnitudes a query time can take (0.001 .. 9999 s). Locale.ROOT:
     * a comma-decimal default locale would otherwise emit invalid JSON.
@@ -390,29 +258,15 @@ object Bench {
     else if (v >= 10) fmt("%.1f", v)
     else if (v >= 1) fmt("%.2f", v)
     else fmt("%.3f", v)
-  /** 2-significant-digit form for the unified rows map: ~1 % value
-    * quantization, far inside machine drift (33–49 % within-run, r10/
-    * r11) — each dropped digit buys a top-N full-run row on the 2 KB
-    * tail. Full precision always in bench_out.json.
-    */
-  private def jnum2(v: Double): String =
-    if (v < 0) "-1"
-    else if (v >= 10) fmt("%.0f", v)
-    else if (v >= 1) fmt("%.1f", v)
-    else fmt("%.2f", v)
 
   /** name, min, median, raw timed runs, warm-up seconds, error */
-  private case class QRes(name: String, min: Double, med: Double,
-                          runs: Seq[Double], warm: Double, err: Option[String])
+  private[graft] final case class QRes(name: String, min: Double, med: Double,
+      runs: Seq[Double], warm: Double, err: Option[String])
 
   /** Scope WindowExec's logger to ERROR for harness runs: the only
-    * single-partition windows in the registered surface are the two
-    * ≤`buckets`-row prefix-sum windows in `packSequences` /
-    * `selectScoredByTokenBudget` (bounded by construction — see the
-    * comments there), and their "No Partition Defined" WARN spammed
-    * every bench tail 8×, triggering a scale-hazard audit each round.
-    * Harness-scoped on purpose: library users still get the WARN, and
-    * the plan-quality specs (PlanSpec) keep guarding the actual hazard.
+    * single-partition windows are the two bounded prefix-sum windows in
+    * `packSequences` / `selectScoredByTokenBudget`. Harness-scoped on
+    * purpose: library users still get the WARN, and PlanSpec guards it.
     */
   private[graft] def quietExpectedWindowWarn(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -431,8 +285,15 @@ object Bench {
     spark
   }
 
+  private def stopSession(spark: SparkSession): Unit = {
+    spark.stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    System.gc()
+  }
+
   private def runOne(spark: SparkSession, sfDir: String, reps: Int, warmup: Boolean)(
-      name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): QRes = {
+      name: String, fn: Query): QRes = {
     var err: Option[String] = None
     def rep(): Double = {
       val t0 = System.nanoTime()
@@ -449,10 +310,8 @@ object Bench {
       sweep(spark)
       sec
     }
-    // untimed warm-up rep: pays JIT compilation, codegen-cache population
-    // and page-cache fill so the timed window measures steady state; its
-    // cost is still recorded (out-file "warmups") because first-run cost
-    // is its own signal (e.g. dedup_clusters_dist's 48 s cold rep, r5)
+    // untimed warm-up rep (JIT, codegen cache, page cache); its cost is
+    // still recorded (detail-file "warmups") — first-run cost is a signal
     val warm = if (warmup) rep() else -1.0
     val runs = (1 to reps).iterator.takeWhile(_ => err.isEmpty).map(_ => rep()).toSeq
     val sec = if (err.isEmpty) runs.min else -1.0
@@ -465,33 +324,211 @@ object Bench {
     QRes(name, sec, med, runs, warm, err)
   }
 
+  /** The ONE anomaly predicate (min > 0.2 s floor keeps sub-second GC
+    * noise out), shared by the detector, the recheck trigger AND the
+    * recheck verdict so the three can never desynchronize: median ≫ min
+    * means later reps slowed down (state pollution, eviction).
+    */
+  private[graft] def isAnomalous(r: QRes): Boolean =
+    r.err.isEmpty && r.min > 0.2 && r.med > 1.5 * r.min
+
+  /** Relative spread of a window's (start, end) calibration anchors: its
+    * measured drift error bar (0 when either anchor is missing).
+    */
+  private def winSpread(w: (Double, Double)): Double =
+    if (w._1 > 0 && w._2 > 0) math.abs(w._1 - w._2) / math.min(w._1, w._2) else 0.0
+
+  /** The probe gate's verdict: move vs the prior, flag ("" = none), rc. */
+  private[graft] final case class Gate(move: Double, flag: String, rc: Int)
+
+  /** In-artifact regression gate (r8 ask #8; r9 asks #2/#8): >25%
+    * movement of the legacy normalized probe raises the flag; inside the
+    * drift envelope (25% + the run's anchor spread) it reads as machine
+    * drift (rc 0), outside as a regression (rc 3). No probe or prior: no flag.
+    */
+  private[graft] def probeGate(probeNorm: Double, priorNorm: Double,
+      driftSpread: Double): Gate = {
+    val move =
+      if (probeNorm > 0 && priorNorm > 0) probeNorm / priorNorm - 1 else 0.0
+    val outsideEnvelope = math.abs(move) > 0.25 + driftSpread
+    val flag =
+      if (math.abs(move) > 0.25)
+        fmt("%+.0f", move * 100) + "% vs prior; anchor spread " +
+          fmt("%.0f", driftSpread * 100) + "%; outside drift envelope: " +
+          (if (outsideEnvelope) "yes" else "no")
+      else ""
+    Gate(move, flag, if (outsideEnvelope && flag.nonEmpty) 3 else 0)
+  }
+
+  /** Everything one bench run measured; the stdout line and the detail
+    * file are pure functions of it ([[stdoutLine]], [[detailJson]]).
+    */
+  private[graft] final case class Outcome(
+      sfDir: String, reps: Int, warmup: Boolean,
+      results: Seq[QRes], recheck: Map[String, QRes],
+      probe: Seq[QRes], probeWindows: Seq[Double],
+      calibFull: (Double, Double), calibProbe: (Double, Double),
+      wallFullS: Double, wallProbeS: Double, benchWallS: Double,
+      shed: Seq[(String, String)], prior: PriorSnapshot,
+      annRecall: Map[String, Double], championCoverage: Map[String, Double]) {
+    // continuity: the number compared against r8's 26.7 is computed over
+    // the LEGACY pinned subset only
+    val probeLegacyTotal: Double = probe
+      .filter(r => r.err.isEmpty && probeSubset.contains(r.name)).map(_.min).sum
+    // probe seconds per calibration second, over the MEAN of the window's
+    // start/end anchors
+    val calibProbeMean: Double =
+      if (calibProbe._1 > 0 && calibProbe._2 > 0) (calibProbe._1 + calibProbe._2) / 2
+      else calibProbe._1
+    val driftSpread: Double = math.max(winSpread(calibFull), winSpread(calibProbe))
+    val probeNorm: Double =
+      if (calibProbeMean > 0) probeLegacyTotal / calibProbeMean else -1.0
+    val gate: Gate = probeGate(probeNorm, prior.normalized, driftSpread)
+    /** Session-normalized delta of a probe row vs the prior,
+      * `(v/pv)·(prior_calib/calib)`: 1.00 = the row moved exactly with
+      * the machine; -1 = no prior row or no calibration.
+      */
+    def delta(r: QRes): Double = prior.perQuery.get(r.name) match {
+      case Some(pv) if r.min > 0 && pv > 0 && calibProbeMean > 0 && prior.calibProbe > 0 =>
+        (r.min / pv) * (prior.calibProbe / calibProbeMean)
+      case _ => -1.0
+    }
+    // ann_recall trend gate (r14 ask #5): a serving family whose measured
+    // recall dropped more than 0.15 vs the prior artifact's map — a
+    // retrieval-QUALITY regression must be artifact-visible
+    val annDrops: Seq[(String, String)] = annRecall.toSeq.sorted.flatMap { case (f, v) =>
+      prior.annRecall.get(f).filter(pv => pv - v > 0.15)
+        .map(pv => f -> (fmt("%.2f", pv) + "->" + fmt("%.2f", v)))
+    }
+  }
+
+  /** The wrapper keeps the last 2000 stdout chars; the line is last. */
+  private[graft] val lineBudget = 1950
+  /** Stdout caps, sized so the worst case (every query failing, 20+
+    * persisting anomalies, every recall drop, both sheds, the flag) fits
+    * [[lineBudget]] in the fallback form — pinned by BenchLineSpec.
+    */
+  private val (capErrors, capMsg, capAnomalies, capRecheck, capAnnDrops, capTop) =
+    (4, 40, 6, 4, 3, 5)
+
+  /** `msg` cut to at most `n` chars of escaped JSON text, never inside an
+    * escape sequence.
+    */
+  private def clip(msg: String, n: Int): String = {
+    val widths = msg.iterator.map(c => Json.quote(c.toString).length - 2)
+    msg.take(widths.scanLeft(0)(_ + _).drop(1).takeWhile(_ <= n).length)
+  }
+
+  /** The artifact fields shared by the stdout line (`capped`: name-keyed
+    * maps capped with `"_more"`, error messages clipped) and the detail
+    * file (uncapped).
+    */
+  private def fields(o: Outcome, capped: Boolean): Seq[(String, String)] = {
+    import Json.{obj, quote => q}
+    def limit(kvs: Seq[(String, String)], cap: Int) =
+      if (!capped || kvs.size <= cap) kvs
+      else kvs.take(cap) :+ ("_more" -> (kvs.size - cap).toString)
+    val ok = o.results.filter(_.err.isEmpty)
+    val errors = o.results.collect { case QRes(n, _, _, _, _, Some(e)) =>
+      n -> q(if (capped) clip(e, capMsg) else e) }.sortBy(_._1)
+    val anomalies = o.results.filter(isAnomalous).map(r => r.name -> fmt("%.1f", r.med / r.min))
+    // per flagged query: does the anomaly survive its recheck? On the line,
+    // transient verdicts — the all-clear case — fold into one count;
+    // persists/error entries, the ones a reader must see, stay verbatim
+    val verdicts = o.recheck.toSeq.sortBy(_._1).map { case (n, r) =>
+      n -> (if (r.err.nonEmpty) "error" else if (isAnomalous(r)) "persists" else "transient") }
+    val nTransient = verdicts.count(_._2 == "transient")
+    // top full-run rows by cost that have no `rows` entry (a probe row
+    // ships its comparable probe-session number there)
+    val probeNames = o.probe.map(_.name).toSet
+    val top = ok.filterNot(r => probeNames(r.name)).sortBy(-_.min).map(r => r.name -> jnum(r.min))
+    def pair(p: (Double, Double)) = s"[${jnum(p._1)},${jnum(p._2)}]"
+    Seq("metric" -> q("total"), "value" -> jnum(ok.map(_.min).sum), "unit" -> q("sec"),
+      "queries_top" -> obj(limit(top, capTop)),
+      "errors" -> obj(limit(errors, capErrors)),
+      "reps" -> o.reps.toString, "warmup" -> (if (o.warmup) "1" else "0"),
+      "n_errors" -> errors.size.toString, "bench_wall_s" -> fmt("%.0f", o.benchWallS),
+      "probe_legacy_total" -> jnum(o.probeLegacyTotal),
+      "calib_full" -> pair(o.calibFull), "calib_probe" -> pair(o.calibProbe),
+      "drift_spread" -> fmt("%.2f", o.driftSpread),
+      "probe_windows" -> o.probeWindows.map(fmt("%.2f", _)).mkString("[", ",", "]"),
+      "probe_window_used" -> (if (o.probeWindows.isEmpty) -1 else o.probeWindows.length).toString,
+      "probe_normalized" -> jnum(o.probeNorm), "probe_norm_prior" -> jnum(o.prior.normalized),
+      "prior_source" -> q(o.prior.source),
+      "wall_phases" -> obj(Seq("full" -> fmt("%.0f", o.wallFullS),
+        "probe" -> fmt("%.0f", o.wallProbeS))),
+      "budget_s" -> fmt("%.0f", budgetS),
+      "shed" -> obj(o.shed.map { case (k, v) => k -> q(v) })) ++
+    (if (o.annDrops.isEmpty) Nil else Seq("ann_recall_drop" ->
+      obj(limit(o.annDrops.map { case (f, d) => f -> q(d) }, capAnnDrops)))) ++
+    (if (o.gate.flag.isEmpty) Nil else Seq("probe_regression" -> q(o.gate.flag))) ++
+    Seq("rep_anomalies" -> obj(limit(anomalies, capAnomalies)),
+      "anomaly_recheck" -> obj(if (!capped) verdicts.map { case (n, v) => n -> q(v) } else
+        limit(verdicts.filter(_._2 != "transient").map { case (n, v) => n -> q(v) }, capRecheck) ++
+          (if (nTransient > 0) Seq("_transient" -> nTransient.toString) else Nil)),
+      "rows_fmt" -> q("probe,delta"),
+      "rows" -> obj(o.probe.map { r =>
+        val d = o.delta(r)
+        r.name -> s"[${jnum(r.min)},${if (d > 0) fmt("%.2f", d) else "-1"}]" }),
+      "sf" -> q(o.sfDir))
+  }
+
+  /** The ONE stdout line. Every field at its cap; if that still overflows
+    * [[lineBudget]], the one fallback form drops `rows` and `queries_top`
+    * (both in the detail file).
+    */
+  private[graft] def stdoutLine(o: Outcome): String = {
+    val all = fields(o, capped = true)
+    val line = Json.obj(all)
+    if (line.length <= lineBudget) line
+    else Json.obj(all.filterNot { case (k, _) => k == "rows" || k == "queries_top" })
+  }
+
+  /** Full-detail twin of the line (exact seconds, raw runs, medians,
+    * warm-ups, uncapped maps, round telemetry) for the detail file.
+    */
+  private[graft] def detailJson(o: Outcome): String = {
+    import Json.{obj, quote => q}
+    def per(rs: Seq[QRes])(f: QRes => String) = obj(rs.map(r => r.name -> f(r)))
+    def runs(r: QRes) = r.runs.mkString("[", ",", "]")
+    def ratios(m: Map[String, Double]) = obj(m.toSeq.sorted.map { case (n, f) => n -> fmt("%.2f", f) })
+    obj(fields(o, capped = false).filterNot(_._1 == "queries_top") ++ Seq(
+      // population-bias caveat travels WITH the artifact: full-run mins
+      // run 1.3-8.5x above isolated reruns of the same build
+      "note" -> q("full-run query mins are population-biased; compare probe_normalized and rows deltas across rounds"),
+      "queries" -> per(o.results)(_.min.toString), "medians" -> per(o.results)(_.med.toString),
+      "runs" -> per(o.results)(runs), "warmups" -> per(o.results)(_.warm.toString),
+      "probe" -> per(o.probe)(_.min.toString), "probe_runs" -> per(o.probe)(runs),
+      "recheck_runs" -> per(o.recheck.values.toSeq)(runs),
+      "champion_coverage" -> ratios(o.championCoverage), "ann_recall" -> ratios(o.annRecall),
+      // auto-demotion ledger: exact rows whose serving twin carries their
+      // bench number; verifier-only rows the bench skips
+      "demoted" -> obj(SparkEntry.servingTwin.toSeq.sorted.map { case (ex, tw) => ex -> q(tw) }),
+      "skipped" -> SparkEntry.verifierOnly.toSeq.sorted.map(q).mkString("[", ",", "]")))
+  }
+
+  /** One fresh-session probe window: the pinned rows between a start and
+    * an end calibration anchor (the window's own drift bracket).
+    */
+  private def probeWindow(cpus: String, sfDir: String, reps: Int, warmup: Boolean,
+      byName: Map[String, Query]): (Seq[QRes], (Double, Double)) = {
+    val ps = newSession(cpus)
+    try {
+      val start = calibrate(ps)
+      val rows = (probeSubset ++ probeAdditions).distinct.flatMap { n =>
+        byName.get(n).map(f => runOne(ps, sfDir, reps, warmup)(n, f))
+      }
+      (rows, (start, calibrate(ps)))
+    } finally stopSession(ps)
+  }
+
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
-    // wall-budget governor (r14 ask #1: BENCH_r14 was rc=124 — the
-    // driver kills the bench at exactly 60 minutes, and r14's 4,097 s
-    // local wall left nothing parsed). Optional phases are shed in
-    // priority order — sf10 first (also on a cadence now), then sf1
-    // rows — with every shed recorded in the artifact's `shed` ledger
-    // (the sampled_out discipline: a skipped measurement must be
-    // visible, never silently absent). Default 3,000 s keeps ~10 min of
-    // headroom under the driver's kill even if one in-flight row runs
-    // long (the governor only refuses to START work; it never kills a
-    // running row). 0 disables.
-    val budgetS = math.max(0.0, scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "3000").trim.toDouble)
-      .getOrElse(3000.0))
     def elapsedS: Double = (System.nanoTime() - wallStart) / 1e9
-    def overBudget(reserveS: Double): Boolean =
-      budgetS > 0 && elapsedS > budgetS - reserveS
-    val shed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // N repetitions per query, reporting the MIN: a loaded machine can
-    // only make a run slower, never faster, so min-of-N is the estimator
-    // that is robust to external load (a 3× outlier on one run cannot
-    // manufacture a phantom regression). clamp to >= 1 and fall back on
-    // unparsable input: a misconfigured wrapper (reps=0, reps="three")
-    // must degrade to a sane rep count, not kill the whole bench
+    // min-of-N reps: load only slows a run, so one outlier can't fake a
+    // regression. A bad value (0, "three") degrades to a sane count
     val reps = math.max(1,
       scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").trim.toInt).getOrElse(3))
     val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
@@ -500,646 +537,63 @@ object Bench {
     // skips the probe phase (you're already running an isolated subset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // sampled-cadence ledger (r13 stretch #8): composition rows run
-    // every k-th round (SparkEntry.sampledCadence); skipped rounds list
-    // them in `sampled_out` with their cadence. An unknown live round
-    // (no VERDICT.md — library users, ad-hoc runs) runs everything, as
-    // does an explicit BENCH_ONLY selection or SPARK_GRAFT_BENCH_SAMPLED=all.
-    val liveRound = currentRound()
-    val sampledOut: Map[String, Int] =
-      if (only.nonEmpty || sys.env.get("SPARK_GRAFT_BENCH_SAMPLED").contains("all"))
-        Map.empty
-      else SparkEntry.sampledCadence.filter { case (_, k) =>
-        liveRound.exists(_ % k != 0) }
     val entries = SparkEntry.queries.toSeq
       .filterNot { case (name, _) => SparkEntry.verifierOnly(name) }
-      .filterNot { case (name, _) => sampledOut.contains(name) }
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val byName = entries.toMap
 
     val spark = newSession(cpus)
-    // TWO calibration anchors per timed window (r9 ask #2): one anchor
-    // cannot separate machine drift from engine regression — r9 measured
-    // 28% drift WITHIN one session (calib_full 0.675 vs calib_probe
-    // 0.529) and the regression flag became unadjudicable. Start+end
-    // anchors give every window its own drift error bar, and the flag
-    // compares against that envelope instead of a bare 25%.
+    // start+end calibration anchors give every window its own drift
+    // error bar (r9 ask #2: 28% drift measured within one session)
     val calibFullStart = calibrate(spark)
     val results = entries.map { case (n, f) => runOne(spark, sfDir, reps, warmup)(n, f) }
 
-    // certificate-coverage telemetry (r12 judge stretch #8): the fraction
-    // of panel queries the champion certificate marks guaranteed, per
-    // certified-serve index — a coverage regression on a future corpus
-    // must be visible in the artifact, not only in a spec run. Cheap in
-    // a FULL run: both postings indexes are already cached by the suite
-    // pass (one ≤queries-row aggregate each). Skipped under BENCH_ONLY —
-    // a targeted single-query loop must not pay two index builds for a
-    // telemetry field it doesn't need. Never fatal to the bench.
-    val championCoverage: String =
-      if (only.nonEmpty) "{}"
-      else scala.util.Try {
-        SparkEntry.championCoverage(spark, sfDir).toSeq.sorted
-          .map { case (n, f) => jstr(n) + ":" + fmt("%.2f", f) }
-          .mkString("{", ",", "}")
-      }.getOrElse("{}")
-    // ANN recall telemetry (r13 judge ask #2): recall@k of every
-    // approximate similarity family vs the exact brute-force top-k on
-    // the standard panel, at the bench SF — the ExtSpec floors hold only
-    // at toy scale; this makes a retrieval-quality regression on a
-    // future corpus artifact-visible. Same skip/never-fatal contract as
-    // champion_coverage.
-    val annRecallMap: Map[String, Double] =
-      if (only.nonEmpty) Map.empty
-      else scala.util.Try(SparkEntry.annRecall(spark, sfDir)).getOrElse(Map.empty)
-    val annRecall: String = annRecallMap.toSeq.sorted
-      .map { case (n, f) => jstr(n) + ":" + fmt("%.2f", f) }
-      .mkString("{", ",", "}")
+    // certificate-coverage and ANN-recall telemetry at the bench SF (r12,
+    // r13): cheap in a full run (indexes cached), never fatal
+    def telemetry(f: => Map[String, Double]) =
+      if (only.nonEmpty) Map.empty[String, Double] else scala.util.Try(f).getOrElse(Map.empty)
+    val championCoverage = telemetry(SparkEntry.championCoverage(spark, sfDir))
+    val annRecall = telemetry(SparkEntry.annRecall(spark, sfDir))
 
-    // anomaly auto-recheck: the median>1.5×min detector cannot tell real
-    // rep-over-rep degradation from one-off machine interference (r6's
-    // sim_topk_agg fired at 7.2× and four later reproduction attempts
-    // were all flat). Re-running each flagged query once more at the END
-    // of the same session answers that in-artifact: a recheck that is
-    // ALSO anomalous means persistent state pollution; a flat recheck
-    // means transient noise. Runs in the same session so genuine
-    // session-age effects still show.
-    // the ONE anomaly predicate (min > 0.2 s floor keeps sub-second GC
-    // noise out) — shared by the detector, the recheck trigger AND the
-    // recheck verdict so the three can never desynchronize
-    def isAnomalous(r: QRes): Boolean =
-      r.err.isEmpty && r.min > 0.2 && r.med > 1.5 * r.min
-    val recheck: Map[String, QRes] = {
-      val flagged = results.filter(isAnomalous).map(_.name)
-      val byName = entries.toMap
-      flagged.flatMap(n => byName.get(n).map(f =>
-        n -> runOne(spark, sfDir, reps, warmup)(n, f))).toMap
-    }
-    // full-window closing anchor (drift bracket for the full run)
+    // anomaly auto-recheck (r6's 7.2× sim_topk_agg was flat on every
+    // rerun): each flagged query runs again at the END of the session —
+    // still anomalous = state pollution, flat = transient noise
+    val recheck: Map[String, QRes] = results.filter(isAnomalous).map(_.name)
+      .flatMap(n => byName.get(n).map(f => n -> runOne(spark, sfDir, reps, warmup)(n, f)))
+      .toMap
     val calibFullEnd = calibrate(spark)
-    // per-phase wall marks (r12 judge ask #6 follow-through): bench_wall_s
-    // alone can't say WHICH phase grew when the suite trend moves
-    val markFull = System.nanoTime()
-    val wallFullS = (markFull - wallStart) / 1e9
-    var wallProbeS = -1.0
-    var wallSf1S = -1.0
+    // per-phase wall marks (r12 judge ask #6): bench_wall_s alone can't
+    // say WHICH phase grew when the suite trend moves
+    val wallFullS = elapsedS
+    stopSession(spark)
 
-    // probe phase: pinned subset, fresh session, same protocol — the
-    // low-population number that makes cross-round comparison honest
-    val doProbe = only.isEmpty && sys.env.getOrElse("SPARK_GRAFT_BENCH_PROBE", "1") != "0"
-    // scale-up smoke (r7 ask #5): after the sf-probe, generate (or reuse)
-    // a 10× replica of the bench scale factor and re-run the probe subset
-    // against it, so the artifact carries MEASURED per-query scaling
-    // exponents instead of plan-shape arguments. warmup stays ON for the
-    // sf1 pass — the first run at the new scale pays index-cache builds
-    // and page-cache fill that must not masquerade as scaling cost.
-    val doSf1 = doProbe && sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1") != "0"
-    val sf1Reps = math.max(1,
-      scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_REPS", "1").trim.toInt).getOrElse(1))
-    var sf1Gen = -1.0
-    var sf1Err = ""
-    // certified-fraction at the 10× scale (set inside the sf1 sweep):
-    // the spread derivation's coverage claim is SF-invariance (block
-    // size fixed, block count scales) — measure it, don't argue it
-    var champCovSf1 = "{}"
-    // sf10 decade probe (r13 ask #3) + calm-window gate (r13 ask #6)
-    // state, surfaced in the artifact
-    var probeWindowSpreads: Seq[Double] = Seq.empty
-    var sf10Gen = -1.0
-    var sf10Err = ""
-    var wallSf10S = -1.0
-    var sf10Results: Seq[QRes] = Seq.empty
-    val (probeResults, scaleBaseResults, sf1Results, calibProbeStart, calibProbeEnd,
-        anchorPairs):
-        (Seq[QRes], Seq[QRes], Seq[QRes], Double, Double, Map[String, (Double, Double)]) =
-        if (doProbe) {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      System.gc()
-      val byName = entries.toMap
-      def winSpread(a: Double, b: Double): Double =
-        if (a > 0 && b > 0) math.abs(a - b) / math.min(a, b) else 0.0
-      // ONE fresh-session probe window: pinned rows + heavy base times
-      // with interleaved per-row anchors (r11 ask #3): ONE calibration
-      // pass after every probe-session row gives each row a (prev, next)
-      // anchor pair, so its cross-round delta can be drift-normalized
-      // in-artifact — r11 burned a 20+-run manual A/B to adjudicate a
-      // single probe delta because only the WINDOW total had an anchor.
-      // ~0.6 s × rows, outside every timed query window.
-      // The SEED anchor must be the same single-pass estimator as every
-      // other anchor (r12 reviewer catch: seeding with the min-of-2
-      // calibPStart sat ~12% below the session's single-pass mean and
-      // built a phantom regression into row 1's delta every round).
-      def probeWindow(): (SparkSession, Seq[QRes], Seq[QRes], Double, Double,
-          Map[String, (Double, Double)]) = {
-        val ps = newSession(cpus)
-        val calibPStart = calibrate(ps)
-        var prevAnchor = calibPass(ps)
-        val anchorBuf = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-        def runAnchored(rr: Int, wu: Boolean)(
-            n: String, f: (SparkSession, String) => org.apache.spark.sql.DataFrame): QRes = {
-          val r = runOne(ps, sfDir, rr, wu)(n, f)
-          val a = calibPass(ps)
-          anchorBuf(n) = (prevAnchor, a)
-          prevAnchor = a
-          r
-        }
-        val prs = (probeSubset ++ probeAdditions).distinct.flatMap { n =>
-          byName.get(n).map(f => runAnchored(reps, warmup)(n, f))
-        }
-        // single-rep fresh-session base times for the heavy queries not
-        // in the probe — the sf-exponent denominator must come from the
-        // same low-population session as the sf1 numerator, never the
-        // biased full-run mins
-        val probeNames = prs.map(_.name).toSet
-        val base = heavySubset.filterNot(probeNames).flatMap { n =>
-          byName.get(n).map(f => runAnchored(sf1Reps, wu = true)(n, f))
-        }
-        // probe-window closing anchor: brackets every sf-probe timing
-        // (before the sf1 generation perturbs the page cache)
-        val calibPEnd = calibrate(ps)
-        (ps, prs, base, calibPStart, calibPEnd, anchorBuf.toMap)
-      }
-      // calm-window gate (r13 judge ask #6): a window whose bracketing
-      // anchors spread beyond SPARK_GRAFT_CALM_SPREAD (default 1.5 —
-      // r13 committed samples at drift_spread 2.60/0.91 and burned two
-      // full local reruns + a solo A/B adjudicating them as machine
-      // noise) re-runs ONCE in a fresh session. The artifact records
-      // every window's spread (`probe_windows`) and which one carried
-      // the round's numbers (`probe_window_used`), so a noisy committed
-      // sample is self-qualifying instead of a manual protocol.
-      val calmSpread = math.max(0.0, scala.util.Try(
-        sys.env.getOrElse("SPARK_GRAFT_CALM_SPREAD", "1.5").trim.toDouble)
-        .getOrElse(1.5))
-      var windows = Seq(probeWindow())
-      if (winSpread(windows.head._4, windows.head._5) > calmSpread) {
-        windows.head._1.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        System.gc()
-        windows = windows :+ probeWindow()
-      }
-      probeWindowSpreads = windows.map(x => winSpread(x._4, x._5))
-      // the LAST window carries the round's numbers AND runs the scale
-      // sweeps in its own session — the sf-exponent denominator must
-      // come from the same session as the sf1 numerator (the invariant
-      // documented at the base-times pass above; review finding: picking
-      // the calmer of two windows would pair window 1's denominators
-      // with window 2's sweep session). The retry exists to give a
-      // noisy first window one fresh chance; if the retry is noisy too,
-      // the machine is noisy, both spreads ship in `probe_windows`, and
-      // the drift envelope widens with the reported spread
-      val w = windows.last
-      val ps = w._1
-      val prs = w._2
-      val base = w._3
-      val calibPStart = w._4
-      val calibPEnd = w._5
-      val markProbe = System.nanoTime()
-      wallProbeS = (markProbe - markFull) / 1e9
-      val s1 = if (doSf1 && overBudget(300)) {
-        // not even generation + one heavy row fits — shed the phase
-        shed("sf1") = "budget: phase unstarted"
-        Seq.empty
-      } else if (doSf1) {
-        val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "sf1_cache")
-        try {
-          sf1Gen = ScaleUp.ensure(ps, sfDir, sf1Dir, factor = 10)
-          sweep(ps)
-          val sf1Names = (probeSubset ++ probeAdditions ++ heavySubset)
-            .distinct.filterNot(sf1Exclude)
-          val rows = sf1Names.iterator.flatMap { n =>
-            // budget governor (r14 ask #1): a row is only STARTED while
-            // the wall budget has close-out headroom; the shed tail is
-            // recorded, never silent
-            if (overBudget(60)) {
-              val left = sf1Names.drop(sf1Names.indexOf(n))
-              shed.getOrElseUpdate("sf1_rows",
-                s"budget: ${left.length} of ${sf1Names.length} unstarted")
-              None
-            } else byName.get(n).map { f =>
-              val r1 = runOne(ps, sf1Dir, sf1Reps, warmup = true)(n, f)
-              // heavy single-rep sf1 rows can land anywhere on the
-              // warm-in curve (proven twice: dedup_containment r9,
-              // sim_pca_project r10's 89 s outlier hypothesis) — give any
-              // row whose first rep exceeds 10 s ONE more rep and report
-              // min over both, with both runs in the detail file's
-              // sf1_runs, so a warm-in outlier can't masquerade as a
-              // scaling exponent
-              if (r1.err.isEmpty && r1.min > 10.0) {
-                val r2 = runOne(ps, sf1Dir, 1, warmup = false)(n, f)
-                if (r2.err.isEmpty) {
-                  val runs = r1.runs ++ r2.runs
-                  val s = runs.sorted
-                  val med = if (s.size % 2 == 1) s(s.size / 2)
-                            else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-                  QRes(n, runs.min, med, runs, r1.warm, None)
-                } else r1
-              } else r1
-            }
-          }.toSeq
-          // the sweep's spread row already built the sf1 indexes (cache
-          // keyed on the sf1 corpus fingerprint), so this is one bounded
-          // certificate aggregate per index — never fatal to the sweep
-          champCovSf1 = scala.util.Try {
-            SparkEntry.championCoverage(ps, sf1Dir).toSeq.sorted
-              .map { case (n, f) => jstr(n) + ":" + fmt("%.2f", f) }
-              .mkString("{", ",", "}")
-          }.getOrElse("{}")
-          rows
-        } catch { case e: Throwable =>
-          // a broken scale-up must read as broken, never as silently absent
-          sf1Err = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(120)}"
-          Seq.empty
-        } finally wallSf1S = (System.nanoTime() - markProbe) / 1e9
-      } else Seq.empty
-      // sf10 decade probe (r13 ask #3): replicate the sf1 cache one more
-      // 10× hop and single-rep the flagship serving rows, so the
-      // artifact's scale exponents span sf0.1→sf1→sf10 (two decades) —
-      // a driver-side constant the 10× hop hides shows up here. Warmup
-      // stays ON (the first sf10 run pays each row's index-cache build
-      // at the new corpus fingerprint — that is build cost, not scaling
-      // cost). Disk: sf10_cache ≈ 10× sf1_cache (~1.6 GB), one rep only.
-      val sf10Env = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF10", "1")
-      // decade-probe cadence (r14 ask #1b): two-decade exponents don't
-      // change round-to-round, so the phase runs every 3rd round —
-      // anchored at r14, the first decade probe (rounds ≡ 2 mod 3 →
-      // r17, r20, …) — instead of spending its ~7-14 min of the
-      // driver's fixed 60-min window every round. Unknown live round
-      // (ad-hoc/library runs) counts as due, like sampledCadence.
-      // SPARK_GRAFT_BENCH_SF10: "0" disables, "all" forces every round.
-      val sf10Due = liveRound.forall(_ % 3 == 2)
-      val doSf10 =
-        if (!(doSf1 && s1.nonEmpty && sf10Env != "0")) false
-        else if (sf10Env != "all" && !sf10Due) {
-          shed("sf10") = "cadence(3): next r" +
-            liveRound.map(r => r + ((2 - r % 3) + 3) % 3).getOrElse(-1)
-          false
-        } else if (overBudget(430)) {
-          // ~430 s is the phase's own post-trim r14 measurement — refuse
-          // to start the decade hop without at least that much headroom
-          shed("sf10") = "budget: phase unstarted"
-          false
-        } else true
-      if (doSf10) {
-        val markSf10 = System.nanoTime()
-        val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR", "sf10_cache")
-        try {
-          val sf1DirPath = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "sf1_cache")
-          // staleness propagates down the cache chain (review finding):
-          // the sf1 marker's content+mtime ride the sf10 signature, so
-          // an sf1_cache regenerated in place (different base SF,
-          // regenerated testdata) forces the sf10 replica to rebuild
-          // instead of silently pairing two different corpora in the
-          // published exponents
-          val sf1Marker = java.nio.file.Paths.get(sf1DirPath, "_SCALED_OK")
-          val srcSig =
-            if (java.nio.file.Files.exists(sf1Marker))
-              new String(java.nio.file.Files.readAllBytes(sf1Marker), "UTF-8") +
-                "@" + java.nio.file.Files.getLastModifiedTime(sf1Marker).toMillis
-            else ""
-          sf10Gen = ScaleUp.ensure(ps, sf1DirPath, sf10Dir, factor = 10,
-            srcSig = srcSig)
-          sweep(ps)
-          sf10Results = sf10Subset.iterator.flatMap { n =>
-            // same row-level governor as the sf1 sweep: only START a
-            // row with close-out headroom left; record the shed tail
-            if (overBudget(60)) {
-              val left = sf10Subset.drop(sf10Subset.indexOf(n))
-              shed.getOrElseUpdate("sf10_rows",
-                s"budget: ${left.length} of ${sf10Subset.length} unstarted")
-              None
-            } else
-              byName.get(n).map(f => runOne(ps, sf10Dir, 1, warmup = true)(n, f))
-          }.toSeq
-        } catch { case e: Throwable =>
-          // a broken decade probe must read as broken, never as absent
-          sf10Err = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(120)}"
-        } finally wallSf10S = (System.nanoTime() - markSf10) / 1e9
-      }
-      ps.stop()
-      (prs, base, s1, calibPStart, calibPEnd, w._6)
-    } else { spark.stop(); (Seq.empty, Seq.empty, Seq.empty, -1.0, -1.0,
-      Map.empty[String, (Double, Double)]) }
+    // probe phase: pinned subset, fresh session, same protocol; a window
+    // whose anchors spread past calmSpread gets one fresh retry
+    val shed = Seq.newBuilder[(String, String)]
+    var windows = Seq.empty[(Seq[QRes], (Double, Double))]
+    def startWindow(key: String): Unit =
+      if (elapsedS > budgetS - probeReserveS) shed += key -> "budget: window unstarted"
+      else windows :+= probeWindow(cpus, sfDir, reps, warmup, byName)
+    if (only.isEmpty) {
+      startWindow("probe")
+      if (windows.exists(w => winSpread(w._2) > calmSpread)) startWindow("probe_retry")
+    }
+    val wallProbeS = if (windows.isEmpty) -1.0 else elapsedS - wallFullS
+    val (probe, calibProbe) = windows.lastOption.getOrElse((Seq.empty, (-1.0, -1.0)))
 
-    val mins = results.map(r => jstr(r.name) + ":" + jnum(r.min))
-      .mkString("{", ",", "}")
-    val errs = results.collect { case r if r.err.nonEmpty => jstr(r.name) + ":" + jstr(r.err.get) }
-      .mkString("{", ",", "}")
-    val total = results.collect { case r if r.err.isEmpty => r.min }.sum
-    val totalMed = results.collect { case r if r.err.isEmpty => r.med }.sum
-    // order-dependent degradation detector: a healthy query's median sits
-    // within noise of its min; median >> min means later reps slowed down
-    // (state pollution, eviction) and the min alone would hide it. With
-    // the warm-up rep outside the window this no longer fires on JIT.
-    def anomaliesOf(rs: Seq[QRes], cap: Int): String = {
-      val all = rs.collect {
-        case r if isAnomalous(r) =>
-          jstr(r.name) + ":" + fmt("%.1f", r.med / r.min)
-      }
-      // cap protects the stdout budget while never reporting "{}" when
-      // anomalies exist — overflow appends a count marker instead
-      val body = if (all.size <= cap) all
-                 else all.take(cap) :+ (jstr("_more") + ":" + (all.size - cap))
-      body.mkString("{", ",", "}")
-    }
-    val anomalies = anomaliesOf(results, Int.MaxValue)
-    val anomaliesCompact = anomaliesOf(results, 8)
-    // verdict per flagged query: does the anomaly survive its recheck?
-    val recheckVerdicts = recheck.toSeq.sortBy(_._1).map { case (n, r) =>
-      n -> (if (r.err.nonEmpty) "error"
-            else if (isAnomalous(r)) "persists" else "transient")
-    }
-    val recheckJson = recheckVerdicts
-      .map { case (n, v) => jstr(n) + ":" + jstr(v) }
-      .mkString("{", ",", "}")
-    // compact form for tight rungs (r12: six flagged anomalies pushed
-    // the uncapped verdict map to 218 chars and overflowed the tail):
-    // transient verdicts — the all-clear case — fold into one count;
-    // persists/error entries, the ones a reader must see, stay verbatim
-    val recheckCompact = {
-      val hot = recheckVerdicts.filter(_._2 != "transient")
-        .map { case (n, v) => jstr(n) + ":" + jstr(v) }
-      val nTransient = recheckVerdicts.count(_._2 == "transient")
-      (hot ++ (if (nTransient > 0) Seq(jstr("_transient") + ":" + nTransient) else Nil))
-        .mkString("{", ",", "}")
-    }
-    val nErr = results.count(_.err.nonEmpty)
-    val probeTotal = probeResults.collect { case r if r.err.isEmpty => r.min }.sum
-    // continuity: the number compared against r8's 26.7 is computed over
-    // the LEGACY pinned subset only; the expanded set ships separately
-    val legacySet = probeSubset.toSet
-    val probeLegacyTotal = probeResults
-      .collect { case r if r.err.isEmpty && legacySet(r.name) => r.min }.sum
-    val skipped = SparkEntry.verifierOnly.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    // the number to compare across rounds: probe seconds per calibration
-    // second — machine drift moves numerator and denominator together.
-    // The denominator is the MEAN of the window's start/end anchors; the
-    // anchors' spread is the window's measured drift error bar.
-    val calibProbe =
-      if (calibProbeStart > 0 && calibProbeEnd > 0)
-        (calibProbeStart + calibProbeEnd) / 2
-      else calibProbeStart
-    def anchorSpread(a: Double, b: Double): Double =
-      if (a > 0 && b > 0) math.abs(a - b) / math.min(a, b) else 0.0
-    val driftSpread = math.max(anchorSpread(calibFullStart, calibFullEnd),
-      anchorSpread(calibProbeStart, calibProbeEnd))
-    val probeNorm = if (calibProbe > 0) probeLegacyTotal / calibProbe else -1.0
-    val probeNormFull = if (calibProbe > 0) probeTotal / calibProbe else -1.0
-    // in-artifact regression gate (r8 ask #8; r9 ask #2): >25% movement
-    // of the legacy normalized probe raises the flag, but the VERDICT is
-    // rendered against the measured drift envelope (25% + the session's
-    // own anchor spread) — a flag inside the envelope reads as drift,
-    // outside it as a real regression (and exits nonzero, r9 ask #8)
-    val prior = loadPrior()
-    // ann_recall trend gate (r14 ask #5): a serving family whose
-    // measured recall dropped more than 0.15 vs the prior artifact's
-    // ann_recall map flags here — a retrieval-QUALITY regression on a
-    // future corpus must be artifact-visible, not only spec-visible.
-    // Empty when no prior carries the map or nothing dropped.
-    val annDropJson = annRecallMap.toSeq.sorted.flatMap { case (f, v) =>
-      prior.annRecall.get(f).filter(pv => pv - v > 0.15)
-        .map(pv => jstr(f) + ":" + jstr(fmt("%.2f", pv) + "->" + fmt("%.2f", v)))
-    }.mkString("{", ",", "}")
-    val probeMove =
-      if (probeNorm > 0 && prior.normalized > 0)
-        probeNorm / prior.normalized - 1
-      else 0.0
-    val driftEnvelope = 0.25 + driftSpread
-    val outsideEnvelope = math.abs(probeMove) > driftEnvelope
-    val probeRegression =
-      if (math.abs(probeMove) > 0.25)
-        fmt("%+.0f", probeMove * 100) + "% vs prior; anchor spread " +
-          fmt("%.0f", driftSpread * 100) + "%; outside drift envelope: " +
-          (if (outsideEnvelope) "yes" else "no")
-      else ""
-    // per-row drift-normalized delta vs the loaded prior (r11 ask #3):
-    //   delta = (v/pv) · (prior_calib/calib) · (anchor_mean/row_anchor)
-    // 1.00 = the row moved exactly with the machine. Two matched-
-    // semantics factors: the SESSION-level correction compares this
-    // window's min-of-2 calibrate() against the prior's (same
-    // estimator), and the PER-ROW correction compares the row's
-    // bracketing single-pass anchors against the session's own mean
-    // single-pass anchor — interleaved passes run on a post-query
-    // polluted cache and sit systematically above min-of-2, so dividing
-    // a single-pass anchor by a min-of-2 prior (the first r12 cut of
-    // this) biased every delta low by ~25%.
-    val anchorMean = {
-      val all = anchorPairs.values.flatMap { case (a, b) => Seq(a, b) }
-      if (all.isEmpty) -1.0 else all.sum / all.size
-    }
-    def rowAnchor(n: String): Double = anchorPairs.get(n)
-      .map { case (a, b) => (a + b) / 2 }.getOrElse(anchorMean)
-    def deltaOf(n: String, v: Double): Double = prior.perQuery.get(n) match {
-      case Some(pv) if v > 0 && pv > 0 && rowAnchor(n) > 0 && anchorMean > 0 &&
-          calibProbe > 0 && prior.calibProbe > 0 =>
-        (v / pv) * (prior.calibProbe / calibProbe) * (anchorMean / rowAnchor(n))
-      case _ => -1.0
-    }
-    // when the flag fires, localize it: top-5 per-query NORMALIZED ratios
-    // (now per-row-anchored — the manual interleaved-A/B protocol is
-    // reserved for rows this list flags)
-    val probeDeltas = if (probeRegression.nonEmpty) {
-      probeResults.flatMap { r =>
-        val d = deltaOf(r.name, r.min)
-        if (d > 0) Some((r.name, d)) else None
-      }.sortBy { case (_, ratio) => -math.abs(math.log(ratio)) }.take(5)
-        .map { case (n, ratio) => jstr(n) + ":" + fmt("%.2f", ratio) }
-        .mkString("{", ",", "}")
-    } else "{}"
-    val sf1Total = sf1Results.collect { case r if r.err.isEmpty => r.min }.sum
-    // measured scaling exponent per probe query: log10(t_sf1 / t_sf0.1)
-    // for a 10× scale-up — 1.00 is perfectly linear, >1.11 is worse than
-    // 1.3× linear (the audit threshold: 10^1.11 ≈ 13 ≈ 1.3 × 10).
-    // heavy-set base times come from the fresh-session scale_base pass.
-    val probeMin = (probeResults ++ scaleBaseResults).map(r => r.name -> r.min).toMap
-    val scaleBaseMap = scaleBaseResults.map(r => jstr(r.name) + ":" + jnum(r.min))
-      .mkString("{", ",", "}")
-    val sf1Min = sf1Results.map(r => r.name -> r.min).toMap
-    // decade-probe rows: [sf10 seconds, sf1→sf10 exponent] per flagship.
-    // A row that ERRORED at sf10 must read as broken, not as skipped
-    // (review finding): its exception ships in sf10_errors
-    val sf10Json = sf10Results.map { r =>
-      val s1v = sf1Min.getOrElse(r.name, -1.0)
-      val e = if (r.min > 0 && s1v > 0) fmt("%.2f", math.log10(r.min / s1v))
-              else "-1"
-      jstr(r.name) + ":[" + jnum2(r.min) + "," + e + "]"
-    }.mkString("{", ",", "}")
-    val sf10Errs = sf10Results
-      .collect { case r if r.err.nonEmpty => jstr(r.name) + ":" + jstr(r.err.get) }
-      .mkString("{", ",", "}")
-    // calm-window gate verdict: every probe window's anchor spread and
-    // which one carried the round's numbers (1-based; -1 = no probe).
-    // Always the LAST window — its session also runs the scale sweeps
-    val probeWindowsJson = probeWindowSpreads.map(s => fmt("%.2f", s))
-      .mkString("[", ",", "]")
-    val probeWindowUsed =
-      if (probeWindowSpreads.isEmpty) -1 else probeWindowSpreads.length
-    val sampledOutJson = sampledOut.toSeq.sorted
-      .map { case (n, k) => jstr(n) + ":" + k }.mkString("{", ",", "}")
-    // the governor/cadence ledger: what was NOT measured this round and
-    // why — invariant-tier (a shed measurement silently absent is the
-    // failure mode the ledger exists to prevent)
-    val shedJson = shed.toSeq
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
-    // THE UNIFIED PER-ROW MAP (r11 asks #3/#5/#6): one entry per
-    // probe-session row carrying its whole cross-round story —
-    // [probe_min_s, delta_norm, sf1_s, sf1_exp] (-1 = not measured /
-    // no prior). Replaces the separate probe / sf1_probe /
-    // sf1_exponents stdout maps: the wrapper's 2 KB tail cannot carry
-    // three name-keyed maps plus inline full-run rows, and one map per
-    // name ships strictly MORE data per byte (names were 60% of the
-    // old maps). parseArtifact reads element 0 (the probe min) of each
-    // rows array as the prior probe min.
-    val fullMin = results.map(r => r.name -> r.min).toMap
-    val rowNames = (probeResults ++ scaleBaseResults).map(_.name)
-    val rowsJson = rowNames.map { n =>
-      val p = probeMin.getOrElse(n, -1.0)
-      val d = deltaOf(n, p)
-      val s1v = sf1Min.getOrElse(n, -1.0)
-      val expStr =
-        if (p > 0 && s1v > 0) fmt("%.2f", math.log10(s1v / p)) else "-1"
-      jstr(n) + ":[" + jnum2(p) + "," +
-        (if (d > 0) fmt("%.2f", d) else "-1") + "," +
-        jnum2(s1v) + "," + expStr + "]"
-    }.mkString("{", ",", "}")
-    // adaptive-second-rep rows: both raw sf1 runs, driver-visible
-    val sf1RunsJson = sf1Results.filter(_.runs.length > 1)
-      .map(r => jstr(r.name) + ":" + r.runs.map(jnum).mkString("[", ",", "]"))
-      .mkString("{", ",", "}")
-    // top full-run rows by cost (r11 ask #6), DYNAMICALLY sized to what
-    // the tail budget allows after the invariant fields; "_more" marks
-    // the shed tail (full detail always in bench_out.json). COMPLEMENT
-    // of the rows map: a heavy row already in `rows` ships its
-    // probe-session numbers there (the comparable ones per the bias
-    // note), so queries_top spends its bytes only on rows with no other
-    // inline presence.
-    val rowNameSet = rowNames.toSet
-    val topFull = results
-      .filter(r => r.err.isEmpty && !rowNameSet(r.name)).sortBy(-_.min)
-    def queriesTopJson(n: Int): String = {
-      val take = topFull.take(n)
-      val more = topFull.length - take.length
-      (take.map(r => jstr(r.name) + ":" + jnum(r.min)) ++
-        (if (more > 0) Seq(jstr("_more") + ":" + more) else Nil))
-        .mkString("{", ",", "}")
-    }
-
-    // bench wall-clock budget line (r12 judge ask #6): suite growth is
-    // linear in registered rows; total wall time plus per-family rep
-    // cost make the trend adjudicable round-over-round. Families are the
-    // COVERAGE.md groupings (tpch/ref for the reference surface, first
-    // name segment otherwise).
-    val benchWallS = (System.nanoTime() - wallStart) / 1e9
-    def familyOf(n: String): String = n.split("_")(0) match {
-      case s if s.matches("q\\d+") => "tpch"
-      case s if s.matches("[abd]\\d*") => "ref"
-      case "ml" => "ml_eval"
-      case s => s
-    }
-    val familyJson = results.filter(_.err.isEmpty)
-      .groupBy(r => familyOf(r.name)).toSeq
-      .map { case (fam, rs) => (fam, rs.map(_.min).sum) }
-      .sortBy(-_._2)
-      .map { case (fam, s) => jstr(fam) + ":" + fmt("%.1f", s) }
-      .mkString("{", ",", "}")
-    // auto-demotion ledger (r12 judge asks #2/#6): exact rows whose
-    // serving twin carries their bench number this round
-    val demotedJson = SparkEntry.servingTwin.toSeq.sorted
-      .map { case (ex, tw) => jstr(ex) + ":" + jstr(tw) }
-      .mkString("{", ",", "}")
-    // core splits into three tiers: INVARIANT adjudication fields
-    // (coreLean — every rung), round-telemetry fields the judge reads
-    // (coreExtra — shed only by last-resort rungs), and fields fully
-    // redundant with other artifact data (coreAux — shed first; all
-    // still in bench_out)
-    val coreLean =
-      s""""reps":$reps,"warmup":${if (warmup) "1" else "0"},"n_errors":$nErr,"bench_wall_s":${fmt("%.0f", benchWallS)},"probe_legacy_total":${jnum(probeLegacyTotal)},"calib_full":[${jnum(calibFullStart)},${jnum(calibFullEnd)}],"calib_probe":[${jnum(calibProbeStart)},${jnum(calibProbeEnd)}],"drift_spread":${fmt("%.2f", driftSpread)},"probe_windows":$probeWindowsJson,"probe_window_used":$probeWindowUsed,"probe_normalized":${jnum(probeNorm)},"probe_norm_prior":${jnum(prior.normalized)},"prior_source":${jstr(prior.source)},"sf1_total":${jnum(sf1Total)},"wall_phases":{"full":${fmt("%.0f", wallFullS)},"probe":${fmt("%.0f", wallProbeS)},"sf1":${fmt("%.0f", wallSf1S)},"sf10":${fmt("%.0f", wallSf10S)}},"budget_s":${fmt("%.0f", budgetS)},"shed":$shedJson""" +
-      (if (annDropJson != "{}") s""","ann_recall_drop":$annDropJson""" else "") +
-      (if (probeRegression.nonEmpty) s""","probe_regression":${jstr(probeRegression)}""" else "") +
-      (if (sf1Err.nonEmpty) s""","sf1_error":${jstr(sf1Err)}""" else "") +
-      (if (sf10Err.nonEmpty) s""","sf10_error":${jstr(sf10Err)}""" else "")
-    val coreExtra =
-      s""","sf1_gen_s":${jnum(sf1Gen)},"sf10_gen_s":${jnum(sf10Gen)},"sf10_rows":$sf10Json,"family_s":$familyJson,"demoted":$demotedJson,"sampled_out":$sampledOutJson,"champion_coverage":$championCoverage,"champion_coverage_sf1":$champCovSf1,"ann_recall":$annRecall""" +
-      (if (sf10Results.exists(_.err.nonEmpty)) s""","sf10_errors":$sf10Errs""" else "")
-    // probe_deltas (the flag's top-5 localization) is fully redundant
-    // with the rows map's per-row deltas — aux-rung/file-only
-    val coreAux =
-      s""","value_median":${jnum(totalMed)},"probe_total":${jnum(probeTotal)},"probe_normalized_full":${jnum(probeNormFull)}""" +
-      (if (probeRegression.nonEmpty) s""","probe_deltas":$probeDeltas""" else "")
-    val core = coreLean + coreExtra + coreAux
-    // population-bias caveat travels WITH the artifact: full-run per-query
-    // mins run 1.3-8.5x above isolated reruns of the same build (shared-
-    // session JVM state), so cross-round comparison must use the probe
-    // elements of `rows`
-    val biasNote = "full-run query mins are population-biased; compare probe_normalized and rows deltas across rounds"
-    // rows format legend (element order of every `rows` value; -1 = not
-    // measured / no prior). Compact on purpose — tail bytes buy top-N rows.
-    val rowsFmt = """"rows_fmt":"probe,delta,sf1,exp""""
-    def line(withQueries: Boolean, withSkipped: Boolean, anomalyJson: String,
-        recheckStr: String, topN: Int, lean: Boolean = false,
-        withSf1Runs: Boolean = true, aux: Boolean = true): String =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
-        (if (withQueries) s""""queries":$mins,"errors":$errs,"note":"$biasNote","""
-         else s""""queries_top":${queriesTopJson(topN)},"errors":{},""") +
-        (if (lean) coreLean
-         else if (aux) core
-         else coreLean + coreExtra) +
-        s""","rep_anomalies":$anomalyJson,"anomaly_recheck":$recheckStr,""" +
-        s"""$rowsFmt,"rows":$rowsJson""" +
-        (if (withSf1Runs) s""","sf1_runs":$sf1RunsJson""" else "") +
-        (if (withSkipped) s""","skipped":$skipped""" else "") +
-        s""","sf":"$sfDir"}"""
-    // the wrapper's tail window is 2000 chars (measured: the driver's
-    // artifact "tail" field is exactly 2000) and this line is the LAST
-    // thing on stdout, so anything under ~1950 keeps the whole line
-    // inside the window. Degrade ladder sheds detail only: full queries
-    // map → top-20 full-run rows → drop skipped → lean core + compact
-    // anomaly/recheck forms → fewer top rows → drop sf1 raw runs. EVERY
-    // rung keeps the unified `rows` map (per-row probe seconds,
-    // drift-normalized deltas, sf1 seconds AND exponents — r9's ladder
-    // shed exponents and left sf1 rows unpaired; r11's shed the sf1
-    // seconds), non-transient recheck verdicts, n_errors, calib
-    // anchors, probe_normalized.
-    val candidates = Seq(
-      line(withQueries = true,  withSkipped = true,  anomalies, recheckJson, 20),
-      line(withQueries = false, withSkipped = true,  anomalies, recheckJson, 20),
-      line(withQueries = false, withSkipped = false, anomalies, recheckJson, 20),
-      // aux-shedding rungs: keep the round-telemetry maps (sf10_rows,
-      // wall_phases, sampled_out, champion_coverage, ann_recall) while
-      // dropping the redundant aux fields and shrinking top-N — the
-      // telemetry must reach the driver artifact before raw full-run
-      // rows do
-      line(withQueries = false, withSkipped = false, anomaliesCompact, recheckCompact, 12, aux = false),
-      line(withQueries = false, withSkipped = false, anomaliesCompact, recheckCompact, 5,  aux = false, withSf1Runs = false),
-      line(withQueries = false, withSkipped = false, anomaliesCompact, recheckCompact, 0,  aux = false, withSf1Runs = false),
-      // last-resort rungs: invariant adjudication fields only
-      line(withQueries = false, withSkipped = false, anomaliesCompact, recheckCompact, 5,  lean = true, withSf1Runs = false),
-      line(withQueries = false, withSkipped = false, anomaliesCompact, recheckCompact, 0,  lean = true, withSf1Runs = false))
-    val stdoutLine = candidates.find(_.length <= 1950).getOrElse(candidates.last)
-    // full-detail twin (exact seconds, raw runs, medians, warm-ups) → out file
-    def fullMap(f: QRes => String)(rs: Seq[QRes]): String =
-      rs.map(r => jstr(r.name) + ":" + f(r)).mkString("{", ",", "}")
-    val anchorsJson = anchorPairs.toSeq.map { case (n, (a, b)) =>
-      jstr(n) + s":[$a,$b]" }.mkString("{", ",", "}")
-    val deltasJson = rowNames.flatMap { n =>
-      val d = deltaOf(n, probeMin.getOrElse(n, -1.0))
-      if (d > 0) Some(jstr(n) + ":" + fmt("%.3f", d)) else None
-    }.mkString("{", ",", "}")
-    val fileJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","note":"$biasNote","queries":${fullMap(_.min.toString)(results)},"medians":${fullMap(_.med.toString)(results)},"runs":${fullMap(_.runs.mkString("[", ",", "]"))(results)},"warmups":${fullMap(_.warm.toString)(results)},"probe":${fullMap(_.min.toString)(probeResults)},"probe_runs":${fullMap(_.runs.mkString("[", ",", "]"))(probeResults)},"probe_anchors":$anchorsJson,"probe_deltas_normalized":$deltasJson,"scale_base":$scaleBaseMap,"sf1_probe":${fullMap(_.min.toString)(sf1Results)},"sf1_runs":${fullMap(_.runs.mkString("[", ",", "]"))(sf1Results)},"sf1_warmups":${fullMap(_.warm.toString)(sf1Results)},"sf10_probe":${fullMap(_.min.toString)(sf10Results)},"sf10_warmups":${fullMap(_.warm.toString)(sf10Results)},$rowsFmt,"rows":$rowsJson,$core,"rep_anomalies":$anomalies,"anomaly_recheck":$recheckJson,"recheck_runs":${fullMap(_.runs.mkString("[", ",", "]"))(recheck.values.toSeq)},"errors":$errs,"skipped":$skipped,"sf":"$sfDir"}"""
-    println(stdoutLine)
+    val o = Outcome(sfDir, reps, warmup, results, recheck, probe,
+      windows.map(w => winSpread(w._2)), (calibFullStart, calibFullEnd), calibProbe,
+      wallFullS, wallProbeS, elapsedS, shed.result(), loadPrior(), annRecall, championCoverage)
+    println(stdoutLine(o))
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (fileJson + "\n").getBytes("UTF-8"))
+    try Files.write(Paths.get(out), (detailJson(o) + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"bench_out write failed: $e") }
-    // r9 ask #8 (stretch): a regression OUTSIDE the measured drift
-    // envelope is a build verdict, not a judgement call — exit nonzero so
-    // the wrapper records it (rc=3; the per-query normalized deltas are
-    // already in-artifact under "probe_deltas"). In-envelope flags stay
-    // rc=0: they read as machine drift, adjudicated by the anchors.
-    if (outsideEnvelope && probeRegression.nonEmpty) {
-      System.err.println(s"probe regression outside drift envelope: $probeRegression")
-      System.exit(3)
+    // a regression OUTSIDE the measured drift envelope exits nonzero so
+    // the wrapper records it (the per-row normalized deltas are already
+    // in-artifact under "rows"); in-envelope flags stay rc=0
+    if (o.gate.rc != 0) {
+      System.err.println(s"probe regression outside drift envelope: ${o.gate.flag}")
+      System.exit(o.gate.rc)
     }
   }
 }

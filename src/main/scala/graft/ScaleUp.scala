@@ -4,11 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up: replicate an existing testdata scale factor N×
-  * with CONSISTENT key remapping, so the bench can measure how every
-  * probe query's runtime actually scales with data volume instead of
-  * arguing from plan shape alone (r7 ask #5 — a super-linear outlier
-  * from bucket skew or driver accumulation is exactly what plan reading
-  * misses).
+  * with CONSISTENT key remapping, so a caller (RetrievalSpec, a hand-run
+  * scale check) can measure how a query's runtime actually scales with
+  * data volume instead of arguing from plan shape alone (r7 ask #5 — a
+  * super-linear outlier from bucket skew or driver accumulation is
+  * exactly what plan reading misses).
   *
   * Remap discipline: in copy `c` (0 ≤ c < factor), every primary AND
   * foreign key `k` becomes `k * factor + c` — the SAME affine map on
@@ -91,22 +91,14 @@ object ScaleUp {
 
   /** Generate (or reuse) a `factor`× scale-up of `srcDir` under `outDir`.
     * Returns the generation wall-clock in seconds, 0.0 when the cached
-    * output was reused. The marker records source + factor (+ an
-    * optional caller-supplied upstream signature); a mismatch on any of
-    * them forces a regeneration rather than serving a mismatched corpus.
-    *
-    * `srcSig` matters when `srcDir` is ITSELF a scale-up cache (the
-    * sf10 chain): the path alone can't see that the upstream cache was
-    * regenerated in place from a different base, which would silently
-    * pair this cache's old corpus with the upstream's new one — pass
-    * the upstream marker's content+mtime so staleness propagates down
-    * the chain (r14 review finding).
+    * output was reused. The marker records source + factor; a mismatch
+    * on either forces a regeneration rather than serving a mismatched
+    * corpus.
     */
   def ensure(spark: SparkSession, srcDir: String, outDir: String,
-      factor: Int = 10, srcSig: String = ""): Double = {
+      factor: Int = 10): Double = {
     require(factor >= 2, s"scale-up factor must be >= 2, got $factor")
-    val sig = s"src=$srcDir;factor=$factor" +
-      (if (srcSig.isEmpty) "" else s";srcsig=$srcSig")
+    val sig = s"src=$srcDir;factor=$factor"
     val m = marker(outDir)
     if (java.nio.file.Files.exists(m) &&
         new String(java.nio.file.Files.readAllBytes(m), "UTF-8") == sig)

@@ -1176,32 +1176,6 @@ object SparkEntry {
   val verifierOnly: Set[String] =
     Set("dedup_ngram_jaccard", "dedup_embedding") ++ servingTwin.keySet
 
-  /** Sampled-cadence bench rows (r13 judge stretch #8) — the demotion
-    * policy beyond [[servingTwin]]: `bench_wall_s` grows linearly with
-    * registered rows, so rows that are pure COMPOSITIONS of primitives
-    * the bench already times every round (a regression in the shared
-    * stage surfaces in the always-on row; the composition adds only its
-    * own thin tail) run every `k`-th round instead of every round. They
-    * stay Verify-gated EVERY round — this demotes perf cadence, never
-    * correctness. The bench ledger (`sampled_out`) lists the rows it
-    * skipped this round with their cadence; rounds where `round % k ==
-    * 0` re-measure them. Composition → always-on twin:
-    *   - retrieval_ndcg → the same bm25TopK hits as retrieval_eval
-    *     (probed via its certified twin); only the metric fold differs
-    *   - text_roundtrip_unigram → text_unigram_em + the segmenter
-    *   - text_cut_dup_spans → text_dup_spans (adds the cut fold)
-    *   - text_bpe_fertility → text_bpe_merges (adds the apply pass)
-    *   - sim_triangles → the sim_communities kNN-graph build
-    *   - dedup_bitext_pairs → the dedup_minhash banding core
-    */
-  val sampledCadence: Map[String, Int] = Map(
-    "retrieval_ndcg" -> 3,
-    "text_roundtrip_unigram" -> 3,
-    "text_cut_dup_spans" -> 3,
-    "text_bpe_fertility" -> 3,
-    "sim_triangles" -> 3,
-    "dedup_bitext_pairs" -> 3)
-
   private def emb(s: SparkSession, dir: String) =
     Queries.table(s, dir, "embeddings")
 
