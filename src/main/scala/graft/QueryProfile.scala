@@ -126,7 +126,7 @@ object QueryProfile {
     * materialized query stages, and the initial plan prints a shared
     * subplan once per consumer.
     */
-  private def exchanges(plan: SparkPlan): (Int, Int, Int) = {
+  private[graft] def exchanges(plan: SparkPlan): (Int, Int, Int) = {
     var shuffles, broadcasts, reused = 0
     def walk(n: SparkPlan): Unit = {
       n match {

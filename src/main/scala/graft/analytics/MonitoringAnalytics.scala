@@ -8,8 +8,10 @@ import graft.model.Status
   * (SURVEY §2 B1–B4, `README.md:447-501`). Each query is a pure DataFrame
   * transform over `job_monitoring` / `report_monitoring`.
   *
-  * Scale notes: all four are single-shuffle aggregations (or shuffle-free
-  * filter+sort for B3). Conditional counts use `sum(when(...))` — one pass,
+  * Scale notes: over a multi-partition input all four are single-shuffle
+  * aggregations (or a filter+sort for B3); over the one-partition read of
+  * `Monitoring.reportMonitoring` they plan no exchange and run one Spark
+  * job each. Conditional counts use `sum(when(...))` — one pass,
   * map-side partial aggregation, no self-joins. `asOf` replaces the
   * reference's `date('now')` so results are deterministic and testable.
   */

@@ -1,7 +1,6 @@
 package graft.config
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{EndpointConfig, ReportConfig}
 
 /** Config relational layer — SURVEY §2 A1–A5.
@@ -10,15 +9,35 @@ import graft.model.{EndpointConfig, ReportConfig}
   * runs `enabled AND env` filter scans plus one inner equi-join on
   * `endpoint_type` (`databricks/talkdesk_databricks_etl_distributed.py:42-53`,
   * `databricks/talkdesk_databricks_etl.py:191-200`). Both relations are
-  * bounded (tens of rows), so broadcast-joining them is always correct at any
-  * data scale: the *reports* fan out, the config never does.
+  * literal seed rows of bounded size (tens of rows), so the rebuild resolves
+  * the filters and the join in Scala and hands Spark the result as one
+  * local relation ([[resolvedReportSpecs]]): collecting it runs no Spark
+  * job. A join of two local relations is not folded by the optimizer, so
+  * the same join in Catalyst cost a broadcast job and a collect job per
+  * `Orchestrator.tasksFor`. The filter-scan and join shapes themselves stay
+  * oracle-gated over TPC-H tables (`Queries.a1FilterScan`…`a4LookupJoin`).
   */
 object ConfigTables {
 
+  /** One resolved report: its config row joined with its endpoint's, in the
+    * column order of the reference's join (key first, then the report's
+    * columns, then the endpoint's).
+    */
+  final case class ReportSpec(
+      endpoint_type: String,
+      report_name: String,
+      enabled: Boolean,
+      retries: Int,
+      timeout_sec: Int,
+      env: String,
+      base_url: String,
+      auth_endpoint: String,
+      post_endpoint: String,
+      get_endpoint: String)
+
   /** Seed rows mirroring the reference's seeded workload
     * (`ddl/ddl_talkdesk_config.py:37-89`): 8 reports × 2 envs, standard
-    * endpoint per env. A literal relation — the reference's multi-row INSERT
-    * VALUES — becomes `Seq(...).toDS`.
+    * endpoint per env — the reference's multi-row INSERT VALUES.
     */
   val seedReports: Seq[ReportConfig] = {
     val names = Seq(
@@ -47,38 +66,22 @@ object ConfigTables {
         env = env)
     }
 
-  def reportConfigDs(spark: SparkSession): Dataset[ReportConfig] = {
-    import spark.implicits._
-    seedReports.toDS()
-  }
-
-  def endpointConfigDs(spark: SparkSession): Dataset[EndpointConfig] = {
-    import spark.implicits._
-    seedEndpoints.toDS()
-  }
-
-  /** A1: conjunctive filter scan — `enabled = true AND env = <env>`. The
-    * predicate stays in Catalyst expression form so it pushes into a
-    * columnar scan when config lives in parquet/Delta.
-    */
-  def enabledReportsDf(reports: DataFrame, env: String): DataFrame =
-    reports.filter(col("enabled") === true && col("env") === env)
-
-  /** A2: equality filter scan on endpoint config. */
-  def endpointsForEnv(endpoints: DataFrame, env: String): DataFrame =
-    endpoints.filter(col("env") === env)
-
-  /** A3/A4: inner equi-join on `endpoint_type`, with the reference's
+  /** A1–A4 over the seed rows: the `enabled = true AND env = <env>` filter
+    * scan on reports (A1), the `env = <env>` filter on endpoints (A2) and
+    * the inner equi-join on `endpoint_type` (A3) with the reference's
     * "first matching endpoint" lookup semantics
-    * (`databricks/talkdesk_databricks_etl.py:536-543`) made explicit via
-    * `dropDuplicates` before the join. Endpoint side is broadcast — it is a
-    * bounded dimension by construction.
+    * (`databricks/talkdesk_databricks_etl.py:536-543`, A4), returned as
+    * one local relation.
     */
   def resolvedReportSpecs(spark: SparkSession, env: String): DataFrame = {
-    val reports = enabledReportsDf(reportConfigDs(spark).toDF(), env)
-    val endpoints = endpointsForEnv(endpointConfigDs(spark).toDF(), env)
-      .dropDuplicates("endpoint_type")
-      .drop("env")
-    reports.join(broadcast(endpoints), Seq("endpoint_type"), "inner")
+    import spark.implicits._
+    val endpoints = seedEndpoints.filter(_.env == env).distinctBy(_.endpoint_type)
+      .map(e => e.endpoint_type -> e).toMap
+    val specs = for {
+      r <- seedReports if r.enabled && r.env == env
+      e <- endpoints.get(r.endpoint_type)
+    } yield ReportSpec(r.endpoint_type, r.report_name, r.enabled, r.retries, r.timeout_sec, r.env,
+      e.base_url, e.auth_endpoint, e.post_endpoint, e.get_endpoint)
+    specs.toDF()
   }
 }

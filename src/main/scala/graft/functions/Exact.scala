@@ -130,10 +130,6 @@ object Exact {
   def sumQOver(c: Column, s: Int, w: WindowSpec): Column =
     sum(c.cast(DecimalType(38, s))).over(w).cast("double")
 
-  /** Order-free mean: exact decimal sum, one double division. */
-  def avgQ(c: Column, s: Int): Column =
-    sumQ(c, s) / count(lit(1))
-
   /** `round(Σ x, r)` with BOTH the sum and the final rounding in the
     * decimal domain. `round(sumQ(c, s).cast(double), r)` with `r < s` is
     * still boundary-unsafe: a 4-dp exact sum ending in `...50` (expected

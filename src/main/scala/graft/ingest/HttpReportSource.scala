@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URLEncoder
 import java.nio.charset.StandardCharsets
 import java.time.Duration
+import java.util.concurrent.ConcurrentHashMap
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** HTTP implementation of [[ReportSource]] — the wire protocol of the
@@ -22,8 +23,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * raise [[Retry.TerminalFailure]]. JSON decode uses jackson-databind (on
   * the Spark classpath).
   *
-  * Serializable: one `HttpClient` per deserialized instance (executor), as
-  * the reference builds one session per partition.
+  * Serializable, and every instance in a JVM — built there or deserialized
+  * there — sends through that JVM's one shared `HttpClient`
+  * ([[HttpReportSource.sharedClient]]), so connections are pooled per
+  * executor, not per partition.
   */
 final class HttpReportSource(
     baseUrl: String,
@@ -31,8 +34,7 @@ final class HttpReportSource(
     getEndpoint: String = "/reports/download",
     timeoutSec: Int = 30) extends ReportSource {
 
-  @transient private lazy val client: HttpClient =
-    HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(timeoutSec.toLong)).build()
+  @transient private lazy val client: HttpClient = HttpReportSource.sharedClient(timeoutSec)
   @transient private lazy val mapper = new ObjectMapper()
 
   private def classify(status: Int, body: String, context: String): Nothing =
@@ -71,6 +73,27 @@ final class HttpReportSource(
     if (resp.statusCode() / 100 != 2) classify(resp.statusCode(), resp.body(), s"download $reportId")
     resp.body()
   }
+
+  /** visible for tests */
+  private[ingest] def httpClient: HttpClient = client
+}
+
+object HttpReportSource {
+  private val clients = new ConcurrentHashMap[Int, HttpClient]()
+
+  /** The JVM's one `HttpClient` per connect timeout, shared by every
+    * [[HttpReportSource]] and by [[HttpTokenFetcher.fetch]]. With a client
+    * per source (one per partition, never released), fault-free runs of
+    * the 1,000-report `fleet` bench workload retried calls that failed
+    * with "header parser received no bytes", each paying a 1 s backoff —
+    * most likely the finished partitions' idle keep-alive connections
+    * filling the server's idle-connection cap, so that it closed
+    * connections the live clients then reused. With one shared client
+    * those runs retried no call.
+    */
+  def sharedClient(connectTimeoutSec: Int): HttpClient =
+    clients.computeIfAbsent(connectTimeoutSec, t =>
+      HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(t.toLong)).build())
 }
 
 /** OAuth2 client-credentials fetch (`databricks/talkdesk_databricks_etl.py:92-115`):
@@ -83,7 +106,7 @@ object HttpTokenFetcher {
     val mapper = new ObjectMapper()
     def enc(s: String) = URLEncoder.encode(s, StandardCharsets.UTF_8)
     val form = s"grant_type=client_credentials&client_id=${enc(clientId)}&client_secret=${enc(clientSecret)}"
-    val client = HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(timeoutSec.toLong)).build()
+    val client = HttpReportSource.sharedClient(timeoutSec)
     val req = HttpRequest.newBuilder(URI.create(tokenUrl))
       .timeout(Duration.ofSeconds(timeoutSec.toLong))
       .header("Content-Type", "application/x-www-form-urlencoded")

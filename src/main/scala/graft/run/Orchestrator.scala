@@ -6,7 +6,7 @@ import java.util.UUID
 import scala.concurrent.duration._
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.{Failure, Success => TrySuccess, Try}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.config.ConfigTables
 import graft.ingest.{CsvIO, ReportSource, Retry, TokenManager}
 import graft.model.{JobRun, ReportRun, Status}
@@ -25,7 +25,7 @@ import graft.model.{JobRun, ReportRun, Status}
   *
   *  - [[runDistributed]] ≈ the `foreachPartition` variant
   *    (`databricks/talkdesk_databricks_etl_distributed.py:192-256`):
-  *    `repartition(⌈n/100⌉)` spreads reports across executors
+  *    `⌈n/100⌉` slices of the task list spread reports across executors
   *    (`PARTITION_TARGET_SIZE = 100`, `:39`), each partition builds its own
   *    token manager (`:70-76`) and gathers its reports concurrently, as the
   *    reference's per-partition asyncio loop does (`:78-95`) — at most
@@ -114,6 +114,22 @@ object Orchestrator {
     RunResult(job, reports)
   }
 
+  /** The run's tasks from the config layer (A5): one per enabled report of
+    * `env`, sorted by report name. [[ConfigTables.resolvedReportSpecs]] is
+    * a local relation, so this collect runs no Spark job.
+    *
+    * Measured with etlbench on a 4-core host:
+    *  - A variant with no Dataset at all (tasks built from the seed rows in
+    *    Scala) cut the `config.tasks` span from 1,927 to 10 ms on
+    *    `envelope` (traced, seed 1), but grew `append_running` from 2,231 to 3,755 ms, and
+    *    `job_s` was unchanged (10.15 vs 10.16 s): the first Spark action's
+    *    JVM warm-up only moves to the next action. Rejected; the config
+    *    stays a relation that callers can query.
+    *  - The local relation's gain is landing time, not `job_s`: `envelope`
+    *    report landing p50 went 5.61 → 4.67 s over 3 interleaved pairs
+    *    against the broadcast join, while `job_s` stayed at 10.18 vs
+    *    10.18 s.
+    */
   def tasksFor(spark: SparkSession, env: String, runId: String,
       fromDate: String, toDate: String): Seq[ReportTask] = {
     import spark.implicits._
@@ -155,6 +171,12 @@ object Orchestrator {
     * workload (4-core host, traced) the job took 15.4 s against 12.5 s on
     * `global`, with 962 threads at peak, a 113 ms median client-side excess
     * per HTTP call against 14 ms, and 4 generate calls retried.
+    *
+    * Measured and rejected: marking each HTTP call `blocking`, so that
+    * `global` adds threads while calls wait. On `fleet` it raised the mean
+    * number of reports in flight from 21 to 66 and the median client-side
+    * excess per call from 15 to 90 ms, yet left the fan-out at 4.8 s. On 4
+    * cores `fleet`'s fan-out is CPU-bound, not concurrency-bound.
     */
   private def fanOut(
       source: ReportSource,
@@ -173,10 +195,15 @@ object Orchestrator {
   val PartitionTargetSize = 100
 
   /** Distributed mode (A11/A12/A13): fan tasks over executors, return
-    * ReportRun rows to the driver as a Dataset. `sourceFactory`/`tokenFactory`
-    * are called once per partition on the executor (fresh session + token
-    * manager per partition, as the reference does per
-    * `databricks/talkdesk_databricks_etl_distributed.py:70-76`). Each
+    * ReportRun rows to the driver. The task list is sliced with
+    * `parallelize` into ⌈n/[[PartitionTargetSize]]⌉ partitions whose sizes
+    * differ by at most one — the even spread the reference's round-robin
+    * `repartition` gives, without its shuffle or an encoder round trip for
+    * tasks and results. `sourceFactory`/`tokenFactory` are called once per
+    * partition on the executor: a fresh source and token manager per
+    * partition, as the reference builds a session and token manager per
+    * partition (`databricks/talkdesk_databricks_etl_distributed.py:70-76`);
+    * an `HttpReportSource` sends through its JVM's one `HttpClient`. Each
     * partition then gathers its reports concurrently through [[fanOut]] on
     * `ExecutionContext.global`, like the reference's per-partition
     * `asyncio.gather` (`:78-95`): at most [[PartitionTargetSize]] reports
@@ -191,13 +218,11 @@ object Orchestrator {
       fromDate: String,
       toDate: String,
       backoffBase: FiniteDuration = 1.second): RunResult = {
-    import spark.implicits._
     val runId = tasks.headOption.map(_.run_id).getOrElse(UUID.randomUUID().toString)
     val jobStart = Timestamp.from(Instant.now())
     val nPartitions = math.max(1, math.ceil(tasks.size.toDouble / PartitionTargetSize).toInt)
-    val taskDs: Dataset[ReportTask] = spark.createDataset(tasks)
-    val runs = taskDs
-      .repartition(nPartitions) // round-robin: even task spread, A11
+    val runs = spark.sparkContext
+      .parallelize(tasks, nPartitions) // even slices, A11
       .mapPartitions { it =>
         val source = sourceFactory()
         val tokens = tokenFactory()
