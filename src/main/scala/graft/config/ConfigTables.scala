@@ -10,11 +10,11 @@ import graft.model.{EndpointConfig, ReportConfig}
   * `endpoint_type` (`databricks/talkdesk_databricks_etl_distributed.py:42-53`,
   * `databricks/talkdesk_databricks_etl.py:191-200`). Both relations are
   * literal seed rows of bounded size (tens of rows), so the rebuild resolves
-  * the filters and the join in Scala and hands Spark the result as one
-  * local relation ([[resolvedReportSpecs]]): collecting it runs no Spark
-  * job. A join of two local relations is not folded by the optimizer, so
-  * the same join in Catalyst cost a broadcast job and a collect job per
-  * `Orchestrator.tasksFor`. The filter-scan and join shapes themselves stay
+  * the filters and the join in Scala ([[reportSpecs]]) and hands Spark
+  * the result as one local relation ([[resolvedReportSpecs]]): collecting
+  * it runs no Spark job. A join of two local relations is not folded by
+  * the optimizer, so the same join in Catalyst cost a broadcast job and a
+  * collect job per `Orchestrator.tasksFor`. The filter-scan and join shapes themselves stay
   * oracle-gated over TPC-H tables (`Queries.a1FilterScan`…`a4LookupJoin`).
   */
 object ConfigTables {
@@ -70,18 +70,22 @@ object ConfigTables {
     * scan on reports (A1), the `env = <env>` filter on endpoints (A2) and
     * the inner equi-join on `endpoint_type` (A3) with the reference's
     * "first matching endpoint" lookup semantics
-    * (`databricks/talkdesk_databricks_etl.py:536-543`, A4), returned as
-    * one local relation.
+    * (`databricks/talkdesk_databricks_etl.py:536-543`, A4), in seed order.
+    * The DSv2 `ReportScan` plans one partition per spec.
     */
-  def resolvedReportSpecs(spark: SparkSession, env: String): DataFrame = {
-    import spark.implicits._
+  def reportSpecs(env: String): Seq[ReportSpec] = {
     val endpoints = seedEndpoints.filter(_.env == env).distinctBy(_.endpoint_type)
       .map(e => e.endpoint_type -> e).toMap
-    val specs = for {
+    for {
       r <- seedReports if r.enabled && r.env == env
       e <- endpoints.get(r.endpoint_type)
     } yield ReportSpec(r.endpoint_type, r.report_name, r.enabled, r.retries, r.timeout_sec, r.env,
       e.base_url, e.auth_endpoint, e.post_endpoint, e.get_endpoint)
-    specs.toDF()
+  }
+
+  /** [[reportSpecs]] as one local relation. */
+  def resolvedReportSpecs(spark: SparkSession, env: String): DataFrame = {
+    import spark.implicits._
+    reportSpecs(env).toDF()
   }
 }

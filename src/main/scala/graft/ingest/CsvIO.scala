@@ -15,12 +15,17 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   */
 object CsvIO {
 
+  /** The data lines of a raw CSV payload: split on `\r?\n` (HTTP
+    * payloads may be CRLF), empty lines and the header dropped.
+    */
+  def dataLines(text: String): Iterator[String] =
+    text.split("\r?\n").iterator.filter(_.nonEmpty).drop(1)
+
   /** Count data rows of a raw CSV payload without a Spark job — the
     * reference's `len(df)` (`databricks/talkdesk_databricks_etl.py:438`)
     * only ever feeds `rows_written`, so a full parse is wasted work.
     */
-  def countCsvRows(text: String): Int =
-    math.max(0, text.split("\r?\n", -1).count(_.nonEmpty) - 1)
+  def countCsvRows(text: String): Int = dataLines(text).size
 
   def outputPath(baseDir: String, reportName: String, fromDate: String, toDate: String): String =
     s"$baseDir/$reportName/${fromDate}_to_$toDate.csv"

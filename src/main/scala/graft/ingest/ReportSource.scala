@@ -10,11 +10,11 @@ package graft.ingest
   * distributed orchestrator can ship them to executors.
   *
   * Two implementations ship: [[HttpReportSource]], the wire client on
-  * `java.net.http` (the orchestrator wraps its calls in [[Retry.retry]]
-  * with per-report `retries`/`timeout_sec`), and [[FakeReportSource]], a
-  * deterministic in-process issuer that preserves every observable
-  * behavior (report-id indirection, CSV payload with header, empty-payload
-  * and failure paths) for runs without a Talkdesk endpoint.
+  * `java.net.http`, and [[FakeReportSource]], a deterministic in-process
+  * issuer that preserves every observable behavior (report-id
+  * indirection, CSV payload with header, empty-payload and failure paths)
+  * for runs without a Talkdesk endpoint. Each call is one attempt;
+  * `Orchestrator.fetchReport` retries and times out every caller's calls.
   */
 trait ReportSource extends Serializable {
   /** POST /reports/generate — returns an opaque report id. */
@@ -22,39 +22,6 @@ trait ReportSource extends Serializable {
 
   /** GET /reports/download — returns raw CSV text (header + data rows). */
   def downloadReport(token: String, reportId: String): String
-}
-
-/** Factory used by the DSv2 [[graft.sources.ReportDataSource]] to build the
-  * wire client on executors from the scan options — the source
-  * implementation is chosen by the `source_provider` option (fully
-  * qualified class name with a no-arg constructor), not hardcoded.
-  */
-trait ReportSourceProvider extends Serializable {
-  def create(options: Map[String, String]): ReportSource
-}
-
-object ReportSourceProvider {
-  def instantiate(options: Map[String, String]): ReportSource = {
-    val cls = options.getOrElse("source_provider",
-      classOf[FakeReportSourceProvider].getName)
-    Class.forName(cls).getDeclaredConstructor().newInstance()
-      .asInstanceOf[ReportSourceProvider].create(options)
-  }
-}
-
-final class FakeReportSourceProvider extends ReportSourceProvider {
-  override def create(options: Map[String, String]): ReportSource =
-    new FakeReportSource(options.getOrElse("rows_per_report", "100").toInt)
-}
-
-final class HttpReportSourceProvider extends ReportSourceProvider {
-  override def create(options: Map[String, String]): ReportSource =
-    new HttpReportSource(
-      options.getOrElse("base_url",
-        sys.error("HttpReportSourceProvider requires the base_url option")),
-      options.getOrElse("post_endpoint", "/reports/generate"),
-      options.getOrElse("get_endpoint", "/reports/download"),
-      options.getOrElse("timeout_sec", "30").toInt)
 }
 
 /** Deterministic fake: payload is a pure function of (report, from, to).

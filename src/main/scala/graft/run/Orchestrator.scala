@@ -56,13 +56,34 @@ object Orchestrator {
   def defaultDates(today: java.time.LocalDate = java.time.LocalDate.now(java.time.ZoneOffset.UTC)): (String, String) =
     (today.minusDays(1).toString, today.toString)
 
-  /** Process one report: token → generate → download → count → write → row.
-    * The retry shell wraps each remote call with the task's own budget
-    * (`retries`, base 1 s ×2) and per-call total timeout (`timeout_sec` —
+  /** Fetch one report's raw CSV: token → generate → download. The retry
+    * shell wraps each remote call with the task's own budget (`retries`,
+    * base `backoffBase` ×2) and per-call total timeout (`timeout_sec` —
     * the reference's per-report setting, 60 s for call_details), per
     * `databricks/talkdesk_databricks_etl.py:390-471`. A timed-out call
     * counts as retriable, like the reference's `TimeoutError` arm
-    * (`local/async_utils.py:44-47`).
+    * (`local/async_utils.py:44-47`). The one per-report core: both
+    * orchestrator modes and the DSv2 `ReportPartitionReader` call it.
+    */
+  def fetchReport(
+      source: ReportSource,
+      tokens: TokenManager,
+      task: ReportTask,
+      backoffBase: FiniteDuration = 1.second): String = {
+    def timed[T](op: => T): T =
+      try Await.result(Future(op)(ExecutionContext.global), task.timeout_sec.seconds)
+      catch {
+        case _: concurrent.TimeoutException =>
+          throw Retry.RetriableFailure(s"call timed out after ${task.timeout_sec}s")
+      }
+    val token = tokens.token
+    val reportId = Retry.retry(task.retries, backoffBase)(_ =>
+      timed(source.generateReport(token, task.report_name, task.from_date, task.to_date)))
+    Retry.retry(task.retries, backoffBase)(_ => timed(source.downloadReport(token, reportId)))
+  }
+
+  /** Process one report: [[fetchReport]] → count → write → row. An empty
+    * payload or any failure becomes a FAILED row, never an exception.
     */
   def processReport(
       source: ReportSource,
@@ -72,18 +93,8 @@ object Orchestrator {
       backoffBase: FiniteDuration = 1.second,
       now: () => Instant = () => Instant.now()): ReportRun = {
     val start = Timestamp.from(now())
-    def timed[T](op: => T): T =
-      try Await.result(Future(op)(ExecutionContext.global), task.timeout_sec.seconds)
-      catch {
-        case _: concurrent.TimeoutException =>
-          throw Retry.RetriableFailure(s"call timed out after ${task.timeout_sec}s")
-      }
     val attempt = Try {
-      val token = tokens.token
-      val reportId = Retry.retry(task.retries, backoffBase)(_ =>
-        timed(source.generateReport(token, task.report_name, task.from_date, task.to_date)))
-      val csv = Retry.retry(task.retries, backoffBase)(_ =>
-        timed(source.downloadReport(token, reportId)))
+      val csv = fetchReport(source, tokens, task, backoffBase)
       val rows = CsvIO.countCsvRows(csv)
       if (rows == 0)
         throw Retry.TerminalFailure(s"no data returned for ${task.report_name}")

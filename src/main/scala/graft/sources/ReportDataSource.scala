@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import graft.config.ConfigTables
-import graft.ingest.{ReportSource, ReportSourceProvider, TokenManager}
+import graft.ingest.{CsvIO, FakeReportSource, HttpReportSource, ReportSource, TokenManager}
+import graft.run.Orchestrator
 
 /** DataSource V2 surface for the report-extraction dataflow — the
   * "full-Spark" form of SURVEY §2 C2/C3: instead of orchestrating fetches
@@ -24,14 +25,18 @@ import graft.ingest.{ReportSource, ReportSourceProvider, TokenManager}
   *   .load()
   * }}}
   *
-  * One `InputPartition` per report → Spark schedules each report's
-  * fetch+parse on an executor, retries ride the task scheduler, and every
-  * downstream operator (filter/agg/join/sink) composes as a plain
+  * One `InputPartition` per report of `env` in the config
+  * ([[ConfigTables.reportSpecs]]), carrying its `retries` and
+  * `timeout_sec`. Each partition fetches through `Orchestrator.fetchReport`,
+  * the per-report core of both orchestrator modes, so a transient 5xx is
+  * retried inside the task; a report with no data rows is zero table rows.
+  * Every downstream operator (filter/agg/join/sink) composes as a plain
   * DataFrame. `report_name` equality/IN filters are pushed down and prune
   * whole partitions — an unfetched report costs nothing.
   *
-  * The wire client is [[FakeReportSource]] (zero-egress container); an HTTP
-  * implementation slots in through the same [[ReportSource]] trait.
+  * The wire client is [[HttpReportSource]] on the `base_url` option (with
+  * `post_endpoint`, `get_endpoint`, `timeout_sec`) when it is set, and the
+  * deterministic [[FakeReportSource]] (`rows_per_report` rows) otherwise.
   */
 class ReportDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -55,6 +60,16 @@ object ReportDataSource {
     StructField("calls", IntegerType, nullable = false),
     StructField("answered", IntegerType, nullable = false),
     StructField("abandoned", IntegerType, nullable = false)))
+
+  /** The wire client for the scan options (see the class header). */
+  def source(options: Map[String, String]): ReportSource = options.get("base_url") match {
+    case Some(baseUrl) =>
+      new HttpReportSource(baseUrl,
+        options.getOrElse("post_endpoint", "/reports/generate"),
+        options.getOrElse("get_endpoint", "/reports/download"),
+        options.getOrElse("timeout_sec", "30").toInt)
+    case None => new FakeReportSource(options.getOrElse("rows_per_report", "100").toInt)
+  }
 }
 
 final class ReportTable(properties: Map[String, String]) extends Table with SupportsRead {
@@ -102,9 +117,7 @@ final class ReportScanBuilder(options: Map[String, String])
   override def build(): Scan = new ReportScan(options, pushedReportNames)
 }
 
-final case class ReportPartition(
-    reportName: String, fromDate: String, toDate: String, rows: Int)
-  extends InputPartition
+final case class ReportPartition(task: Orchestrator.ReportTask) extends InputPartition
 
 final class ReportScan(options: Map[String, String], nameFilter: Option[Set[String]])
     extends Scan with Batch {
@@ -113,15 +126,12 @@ final class ReportScan(options: Map[String, String], nameFilter: Option[Set[Stri
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val env = options.getOrElse("env", "prod")
     val from = options.getOrElse("from_date", "2024-02-29")
     val to = options.getOrElse("to_date", "2024-03-01")
-    val rows = options.getOrElse("rows_per_report", "100").toInt
-    // bounded config relation (seeded, ≤ tens of rows) — same contract as A5
-    ConfigTables.seedReports
-      .filter(r => r.enabled && r.env == env)
-      .filter(r => nameFilter.forall(_.contains(r.report_name)))
-      .map(r => ReportPartition(r.report_name, from, to, rows))
+    ConfigTables.reportSpecs(options.getOrElse("env", "prod"))
+      .filter(s => nameFilter.forall(_.contains(s.report_name)))
+      .map(s => ReportPartition(
+        Orchestrator.ReportTask("dsv2", s.report_name, s.retries, s.timeout_sec, from, to)))
       .toArray
   }
 
@@ -136,26 +146,25 @@ final class ReportReaderFactory(options: Map[String, String]) extends PartitionR
   }
 }
 
-/** Executes on the executor: token → generate → download → parse, exactly
-  * the per-report pipeline, surfaced as a row iterator. The wire client
-  * comes from [[ReportSourceProvider]] (`source_provider` option; defaults
-  * to the deterministic fake), so an HTTP source slots in without touching
-  * this class.
+/** Executes on the executor: `Orchestrator.fetchReport` for the
+  * partition's task, then its CSV data lines as rows.
   */
 final class ReportPartitionReader(p: ReportPartition, options: Map[String, String])
     extends PartitionReader[InternalRow] {
 
-  private val source: ReportSource = ReportSourceProvider.instantiate(options)
-  private val tokens = new TokenManager(() =>
-    TokenManager.Token(options.getOrElse("token", "dsv2-token"), 3600))
-
   private val lines: Iterator[Array[String]] = {
-    val token = tokens.token
-    val id = source.generateReport(token, p.reportName, p.fromDate, p.toDate)
-    val csv = source.downloadReport(token, id)
-    // \r?\n: an HTTP source may hand back CRLF payloads (same hardening as
-    // CsvIO) — bare \n splitting would leave \r in the last column
-    csv.split("\r?\n").iterator.filter(_.nonEmpty).drop(1).map(_.split(","))
+    val tokens = new TokenManager(() =>
+      TokenManager.Token(options.getOrElse("token", "dsv2-token"), 3600))
+    // fetchReport submits to ExecutionContext.global, whose new workers
+    // inherit this thread's context loader: a scan task's is its session's,
+    // and fails their codegen (RemoteClassLoaderError) once it stops.
+    val thread = Thread.currentThread()
+    val sessionLoader = thread.getContextClassLoader
+    thread.setContextClassLoader(getClass.getClassLoader)
+    val csv =
+      try Orchestrator.fetchReport(ReportDataSource.source(options), tokens, p.task)
+      finally thread.setContextClassLoader(sessionLoader)
+    CsvIO.dataLines(csv).map(_.split(","))
   }
 
   private var current: Array[String] = _
@@ -166,7 +175,7 @@ final class ReportPartitionReader(p: ReportPartition, options: Map[String, Strin
 
   override def get(): InternalRow =
     InternalRow(
-      UTF8String.fromString(p.reportName),
+      UTF8String.fromString(p.task.report_name),
       UTF8String.fromString(current(0)),
       UTF8String.fromString(current(1)),
       current(2).toInt,
