@@ -1581,34 +1581,6 @@ object Similarity {
 
   // ------------------------------------------------- product quantization
 
-  /** Product-quantization codebooks: the embedding is split into `m`
-    * contiguous subvectors and each subspace gets its own `ks`-codeword
-    * k-means codebook ([[kmeansFit]] on the sliced column — same
-    * deterministic Lloyd, same driver-boundary rounding). Returns one
-    * (codebook, assignment) pair per subspace; the assignments ARE the
-    * codes (the vector's code in subspace s is the cell whose centroid is
-    * its nearest), so encoding costs nothing beyond the fit.
-    *
-    * Delegates to [[pqFitJoint]] (r15): all m subspaces are fitted in ONE
-    * joint Lloyd loop over exploded (vec_id, s, subvector) rows — one
-    * corpus-sized cache and iters assign jobs total, not m of each — and
-    * this wrapper just slices the joint result back into per-subspace
-    * (codebook, assignment) pairs for callers that want the old shape.
-    *
-    * Compression: m codes/vector (one small int each) replace dim floats —
-    * at (m=8, dim=64) the index is 8 bytes/vector vs 64 for int8, 256 for
-    * float32; the codebooks themselves are m × ks × dim/m doubles, driver-
-    * bounded.
-    */
-  def pqFit(emb: DataFrame, m: Int = 8, ks: Int = 16, iters: Int = 2,
-      dim: Int = 64): Seq[(Seq[(Int, Array[Double])], DataFrame)] = {
-    val (books, assigned) = pqFitJoint(emb, m, ks, iters, dim)
-    (0 until m).map { s =>
-      (books(s), assigned.filter(col("s") === s)
-        .select(col("vec_id"), col("cell")))
-    }
-  }
-
   /** The m per-subspace Lloyd fits as ONE joint loop over exploded
     * (vec_id, s, subvector) rows (r15, guide §1.2/§2.4): the previous
     * shape ran m concurrently-submitted [[kmeansFit]]s — m corpus caches,

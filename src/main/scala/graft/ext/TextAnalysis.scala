@@ -2649,14 +2649,13 @@ object TextAnalysis {
 
   /** Append `docs`' distinct window hashes under `hashes/batch=<id>` —
     * the "these k-grams have now been seen" record a crawl loop writes
-    * after accepting a batch. Overwrites its own batch dir, so replays
-    * with a stable id (a streaming epoch) are idempotent.
+    * after accepting a batch. Lands through [[graft.streaming.Landing]],
+    * so replays with a stable id (a streaming epoch) are idempotent.
     */
   def appendToWindowStore(spark: org.apache.spark.sql.SparkSession,
       dir: String, docs: DataFrame, batchId: Long): Unit =
-    tokenWindows(posTokens(docs), windowStoreK(spark, dir))
-      .select(col("h")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/hashes/batch=$batchId")
+    graft.streaming.Landing.write(tokenWindows(posTokens(docs), windowStoreK(spark, dir))
+      .select(col("h")).distinct(), s"$dir/hashes", batchId)
 
   /** Cut duplicated k-token runs from an incoming batch against
     * EVERYTHING seen so far: a window is cut-worthy if its hash is in the
@@ -2820,7 +2819,8 @@ object TextAnalysis {
     // docN's groupBy, the xf/dl joins, every GD round's margin groupBy
     // and residual/gradient joins all reuse HashPartitioning(doc_id) and
     // run exchange-free (measured at sf0.1: text_lr_model plan dropped
-    // from 14 Exchanges to 6; see plans/r15/). The only shuffles left in
+    // from 14 Exchanges to 6: plans/r15/ in commit bb31d4f, or
+    // `runMain graft.Prof explain text_lr_model`). The only shuffles left in
     // a GD round are the ≤buckets-row gradient aggregates.
     val docB = hashedNgramFeatures(docs, buckets)
       .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
@@ -3771,15 +3771,9 @@ object TextAnalysis {
     * rank-2 results cost far less than MRR's halving, which is why
     * retrieval papers report both. Same fixed-`maxQueries` panel (the r8
     * scale lesson), same postings-sized joins; the summary mean sums the
-    * round-4 grid values in exact decimal (quantized class).
+    * round-4 grid values in exact decimal (quantized class). Served from
+    * the persisted postings index.
     */
-  def retrievalNdcg(docs: DataFrame, queryEvery: Int = 100,
-      queryTerms: Int = 16, topK: Int = 10,
-      maxQueries: Int = 200): DataFrame =
-    retrievalNdcgFromHits(bm25TopK(docs, queryEvery, queryTerms, topK,
-      maxQueries = maxQueries))
-
-  /** [[retrievalNdcg]] served from the persisted postings index. */
   def retrievalNdcgFromIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queryEvery: Int = 100, queryTerms: Int = 16,
       topK: Int = 10, maxQueries: Int = 200): DataFrame =

@@ -57,8 +57,9 @@ object Orchestrator {
     (today.minusDays(1).toString, today.toString)
 
   /** Fetch one report's raw CSV: token → generate → download. The retry
-    * shell wraps each remote call with the task's own budget (`retries`,
-    * base `backoffBase` ×2) and per-call total timeout (`timeout_sec` —
+    * shell wraps each remote call, the token fetch included, with the
+    * task's own budget (`retries`, base `backoffBase` ×2); generate and
+    * download also run under the per-call total timeout (`timeout_sec` —
     * the reference's per-report setting, 60 s for call_details), per
     * `databricks/talkdesk_databricks_etl.py:390-471`. A timed-out call
     * counts as retriable, like the reference's `TimeoutError` arm
@@ -76,7 +77,7 @@ object Orchestrator {
         case _: concurrent.TimeoutException =>
           throw Retry.RetriableFailure(s"call timed out after ${task.timeout_sec}s")
       }
-    val token = tokens.token
+    val token = Retry.retry(task.retries, backoffBase)(_ => tokens.token)
     val reportId = Retry.retry(task.retries, backoffBase)(_ =>
       timed(source.generateReport(token, task.report_name, task.from_date, task.to_date)))
     Retry.retry(task.retries, backoffBase)(_ => timed(source.downloadReport(token, reportId)))

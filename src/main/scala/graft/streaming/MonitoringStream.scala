@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.model.{ReportRun, Status}
 
 /** Streaming view of the monitoring feed — the stretch surface SURVEY §2.F
@@ -15,6 +15,12 @@ import graft.model.{ReportRun, Status}
   * tests drive them with `MemoryStream`. Watermarking bounds state, so a
   * 1000-executor deployment holds only the open windows per key, never
   * history.
+  *
+  * The sinks ([[sinkViaForeachBatch]] and the `*Ingest` twins) run through
+  * [[Landing.eachBatch]] and land through [[Landing.write]]: a micro-batch
+  * overwrites only its own `<zone>/batch=<id>` directory, so a batch that
+  * `foreachBatch` replays after a restart rewrites its output instead of
+  * landing it twice.
   */
 object MonitoringStream {
 
@@ -180,18 +186,14 @@ object MonitoringStream {
   }
 
   /** Continuous-ingestion sink (SURVEY A12's `foreachBatch` form): land
-    * each micro-batch of report results through ONE batched append —
-    * the streaming analog of the batch orchestrator's one-append-per-run
+    * each micro-batch of report results through ONE batched write — the
+    * streaming analog of the batch orchestrator's one-append-per-run
     * discipline. Returns the started query; caller owns its lifecycle.
     */
   def sinkViaForeachBatch(reports: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    reports.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").parquet(dir)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    Landing.eachBatch(reports, checkpoint)((batch, batchId, _) =>
+      Landing.write(batch, dir, batchId))
 
   /** Bind the windowed analytics to a parquet monitoring directory as a
     * real file stream (the production wiring).
@@ -221,24 +223,16 @@ object MonitoringStream {
     * never accumulates anywhere.
     */
   def anomalyIngest(events: DataFrame, outDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("event_type"), to_date(col("ts")).as("day"))
-            .groupBy(col("event_type"), col("day"))
-            .agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").parquet(s"$outDir/counts/batch=$batchId")
-          anomalyView(spark, outDir)
-            .agg(count(when(col("is_anomaly"), 1)).as("n_anomalies"),
-              coalesce(max(abs(col("z"))), lit(0.0)).as("max_abs_z"))
-            .write.mode("overwrite").parquet(s"$outDir/alert_history/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    Landing.eachBatch(events, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("event_type"), to_date(col("ts")).as("day"))
+        .groupBy(col("event_type"), col("day"))
+        .agg(count(lit(1)).as("n")), s"$outDir/counts", batchId)
+      Landing.write(anomalyView(batch.sparkSession, outDir)
+        .agg(count(when(col("is_anomaly"), 1)).as("n_anomalies"),
+          coalesce(max(abs(col("z"))), lit(0.0)).as("max_abs_z")),
+        s"$outDir/alert_history", batchId)
+    }
 
   /** Read-time anomaly scores over [[anomalyIngest]]'s landed zone: sum
     * the partial daily counts, then run the batch scoring core — at full
@@ -288,18 +282,11 @@ object MonitoringStream {
     * scoring core).
     */
   def cooccurrenceIngest(events: DataFrame, outDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.select(col("user_id"), to_date(col("ts")).as("day"),
-              col("event_type")).distinct()
-            .write.mode("overwrite").parquet(s"$outDir/members/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    Landing.eachBatch(events, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("user_id"), to_date(col("ts")).as("day"),
+        col("event_type")).distinct(), s"$outDir/members", batchId)
+    }
 
   /** Read-time PMI over [[cooccurrenceIngest]]'s landed memberships —
     * re-distinct (a membership may arrive in several batches), then the

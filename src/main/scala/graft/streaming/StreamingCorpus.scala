@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -20,10 +20,15 @@ import graft.ext.{Dedup, Similarity, TextAnalysis}
   *      so micro-batch boundaries cannot change any verdict — running
   *      them batch-by-batch is exactly equal to running them once over
   *      the union (the convergence spec pins this down).
-  *   3. the surviving train split lands in a batch-id-keyed parquet
-  *      partition (`batch=<id>` + overwrite), so a replayed micro-batch
-  *      rewrites its own directory instead of appending duplicates —
-  *      effectively exactly-once on top of foreachBatch's at-least-once.
+  *   3. the surviving train split lands through [[Landing]].
+  *
+  * Every sink here runs through [[Landing.eachBatch]] and lands through
+  * [[Landing.write]]: each micro-batch overwrites only its own
+  * `<zone>/batch=<id>` directories, so a replayed batch rewrites its own
+  * output instead of appending duplicates, which makes every landing zone
+  * exactly-once on top of foreachBatch's at-least-once. Sinks that append
+  * to a persisted `ext` store pass the batch id to the store's own
+  * `appendTo*`, which keys its delta the same way.
   *
   * Near-dup (LSH) removal is deliberately NOT in the streaming tier: its
   * banding joins need corpus-wide signatures. Production runs
@@ -35,7 +40,8 @@ object StreamingCorpus {
 
   /** Start the ingestion flow on a streaming `docs` frame with columns
     * (doc_id, text, lang, source, event_time). Returns the running query;
-    * the train split lands at `outDir` as appended parquet.
+    * the train split lands at `outDir`, one `batch=<id>` directory per
+    * micro-batch.
     */
   def trainIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       watermark: String = "1 hour",
@@ -47,45 +53,26 @@ object StreamingCorpus {
       .withWatermark("event_time", watermark)
       .dropDuplicatesWithinWatermark("fp")
       .drop("fp")
-    deduped.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        // every cache created in this batch is registered here and dropped
-        // BY PLAN in the finally once the write action has materialized —
-        // never a session-wide clearCache, which would nuke co-resident
-        // workloads' caches in a shared session
-        val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val b = batch.drop("event_time").cache()
-        caches += b
-        try {
-          val gated = b.join(
-            TextAnalysis.gopherFilter(b, minTokens, minStopwordRatio, maxRepRatio)
-              .select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          // optional WITHIN-BATCH near-dup removal (LSH candidates + exact
-          // verify over just this micro-batch; smaller doc_id survives) —
-          // cross-batch near-dup detection needs corpus-wide signatures and
-          // stays the batch compaction pass
-          val clean = nearDupThreshold.fold(gated) { th =>
-            val g = gated.cache()
-            caches += g
-            val dropped = graft.ext.Dedup.nearDupPipeline(g, th,
-                cacheRegistry = Some(caches))
-              .select(col("b").as("doc_id")).distinct()
-            g.join(dropped, Seq("doc_id"), "left_anti")
-          }
-          // batch-id-keyed partition + overwrite = idempotent under
-          // foreachBatch's at-least-once replays: a re-delivered batch
-          // rewrites its own directory instead of appending duplicates,
-          // so the landing zone is effectively exactly-once. Readers see
-          // one extra partition column (`batch`) via discovery.
-          TextAnalysis.deterministicSplit(clean, trainPct = trainPct, valPct = valPct)
-            .filter(col("split") === "train")
-            .drop("split")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        } finally { caches.foreach(_.unpersist()); () }
+    Landing.eachBatch(deduped, checkpointDir) { (batch, batchId, scope) =>
+      val b = batch.drop("event_time")
+      val gated = b.join(
+        TextAnalysis.gopherFilter(b, minTokens, minStopwordRatio, maxRepRatio)
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
+      // optional WITHIN-BATCH near-dup removal (LSH candidates + exact
+      // verify over just this micro-batch; smaller doc_id survives) —
+      // cross-batch near-dup detection needs corpus-wide signatures and
+      // stays the batch compaction pass
+      val clean = nearDupThreshold.fold(gated) { th =>
+        val g = scope.cache(gated)
+        val dropped = graft.ext.Dedup.nearDupPipeline(g, th,
+            cacheRegistry = scope.registry)
+          .select(col("b").as("doc_id")).distinct()
+        g.join(dropped, Seq("doc_id"), "left_anti")
       }
-      .start()
+      Landing.write(TextAnalysis.deterministicSplit(clean, trainPct = trainPct, valPct = valPct)
+        .filter(col("split") === "train").drop("split"), outDir, batchId)
+    }
   }
 
   /** The CCNet scoring topology proper (r12 judge stretch #7): a FROZEN
@@ -110,16 +97,10 @@ object StreamingCorpus {
     */
   def knScoredIngest(docs: DataFrame, lmDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        TextAnalysis.knPerplexityFromLm(spark, lmDir,
-            batch.select(col("doc_id"), col("text")))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.knPerplexityFromLm(batch.sparkSession, lmDir,
+        batch.select(col("doc_id"), col("text"))), outDir, batchId)
+    }
 
   /** Streaming CERTIFIED-BM25 serve (r13 judge stretch #7): a continuous
     * query stream scores against a FROZEN persisted champion index —
@@ -151,43 +132,37 @@ object StreamingCorpus {
   def certifiedServeIngest(queries: DataFrame, indexDir: String,
       outDir: String, checkpointDir: String, queryTerms: Int = 4,
       topK: Int = 5): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val panel = TextAnalysis.bm25QueryPanelFromText(
-          batch.select(col("doc_id"), col("text")), queryTerms)
-          .localCheckpoint(true) // consumed by the serve AND the gate
-        // ONE certificate per batch: the serve returns the ≤queries-row
-        // cert frame it computed internally (r14 review finding — the
-        // first cut re-ran the whole certificate for the coverage row)
-        val (hits, cert) = TextAnalysis.bm25TopKCertifiedForQueriesWithCert(
-          spark, indexDir, panel, queryTerms, topK)
-        hits.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        // n_queries counts the PANEL, not the certificate: a query whose
-        // every token is absent from the frozen index (corpus drift —
-        // exactly what the gate watches for) gets NO certificate row,
-        // and counting cert rows would report a drifted batch as 100%
-        // certified (r14 review finding). Both driver actions are
-        // bounded: cert is checkpointed ≤queries rows, the panel count
-        // is batch-sized.
-        val nQueries = panel.select(col("query_id")).distinct().count()
-        val nCertified = cert.filter(col("guaranteed")).count()
-        // n_docs is the RAW batch doc count (r14 advisor): a query doc
-        // whose text tokenizes to zero tokens produces no panel rows and
-        // vanishes from BOTH n_queries and n_certified — a batch
-        // dominated by token-free docs would read as healthy without the
-        // raw denominator alongside
-        val nDocs = batch.select(col("doc_id")).distinct().count()
-        spark.range(1)
-          .select(lit(nDocs).as("n_docs"),
-            lit(nQueries).as("n_queries"),
-            lit(nCertified).as("n_certified"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$outDir/_coverage/batch=$batchId")
-        ()
-      }
-      .start()
+    Landing.eachBatch(queries, checkpointDir) { (batch, batchId, _) =>
+      val spark = batch.sparkSession
+      val panel = TextAnalysis.bm25QueryPanelFromText(
+        batch.select(col("doc_id"), col("text")), queryTerms)
+        .localCheckpoint(true) // consumed by the serve AND the gate
+      // ONE certificate per batch: the serve returns the ≤queries-row
+      // cert frame it computed internally (r14 review finding — the
+      // first cut re-ran the whole certificate for the coverage row)
+      val (hits, cert) = TextAnalysis.bm25TopKCertifiedForQueriesWithCert(
+        spark, indexDir, panel, queryTerms, topK)
+      Landing.write(hits, outDir, batchId)
+      // n_queries counts the PANEL, not the certificate: a query whose
+      // every token is absent from the frozen index (corpus drift —
+      // exactly what the gate watches for) gets NO certificate row,
+      // and counting cert rows would report a drifted batch as 100%
+      // certified (r14 review finding). Both driver actions are
+      // bounded: cert is checkpointed ≤queries rows, the panel count
+      // is batch-sized.
+      val nQueries = panel.select(col("query_id")).distinct().count()
+      val nCertified = cert.filter(col("guaranteed")).count()
+      // n_docs is the RAW batch doc count (r14 advisor): a query doc
+      // whose text tokenizes to zero tokens produces no panel rows and
+      // vanishes from BOTH n_queries and n_certified — a batch
+      // dominated by token-free docs would read as healthy without the
+      // raw denominator alongside
+      val nDocs = batch.select(col("doc_id")).distinct().count()
+      Landing.write(spark.range(1)
+        .select(lit(nDocs).as("n_docs"), lit(nQueries).as("n_queries"),
+          lit(nCertified).as("n_certified"))
+        .coalesce(1), s"$outDir/_coverage", batchId)
+    }
 
   /** Streaming postings ingestion into a persisted BM25 index
     * ([[graft.ext.TextAnalysis.buildBm25Index]]) — the write half that
@@ -209,28 +184,11 @@ object StreamingCorpus {
     */
   def bm25IndexIngest(docs: DataFrame, indexDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        TextAnalysis.appendToBm25Index(batch.sparkSession, indexDir,
-          batch.select(col("doc_id"), col("text")), batchId = Some(batchId))
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      TextAnalysis.appendToBm25Index(batch.sparkSession, indexDir,
+        batch.select(col("doc_id"), col("text")), batchId = Some(batchId))
+    }
 
-  /** Streaming embedding ingestion into a PERSISTED IVF index: each
-    * micro-batch of (vec_id, embedding) rows is assigned to the index's
-    * frozen centroids and appended into its cell partitions
-    * ([[graft.ext.Similarity.appendToIvfIndex]]) — queries via
-    * `ivfTopKFromIndex` see new vectors as soon as their batch lands,
-    * still through the same partition-pruned probing. Centroid drift is a
-    * periodic-rebuild concern, exactly as in the batch append path. The
-    * exactly-once story matches the corpus sink: each micro-batch lands in
-    * a `batch=<epoch id>` partition of the index with OVERWRITE, so an
-    * at-least-once replay rewrites its own directory instead of
-    * re-appending duplicate vec_ids — the same idempotence discipline as
-    * [[trainIngest]]'s landing zone.
-    */
   /** Cross-batch NEAR-dup dedup against a persisted MinHash signature
     * store — the missing streaming tier between exact streaming dedup
     * (`dropDuplicatesWithinWatermark` on a fingerprint, bounded horizon)
@@ -267,88 +225,72 @@ object StreamingCorpus {
   def nearDupIngest(docs: DataFrame, outDir: String, storeDir: String,
       checkpointDir: String, threshold: Double = 0.8,
       numHashes: Int = 32, bands: Int = 8, rowsPerBand: Int = 4): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        try {
-          val b = batch.cache()
-          caches += b
-          if (!b.isEmpty) {
-            val sig = Dedup.minhashSignatures(b, numHashes).cache()
-            caches += sig
-            val bandDf = Dedup.minhashBands(sig, bands, rowsPerBand)
-            val agree = (0 until numHashes)
-              .map(i => when(col(s"n_mh_$i") === col(s"o_mh_$i"), 1).otherwise(0))
-              .reduce(_ + _).cast("double") / numHashes
-            val nSig = sig.select(col("doc_id").as("new_id") +:
-              (0 until numHashes).map(i => col(s"mh_$i").as(s"n_mh_$i")): _*)
-            // within-batch: band collision + agreement, larger id drops
-            val within = bandDf.select(col("doc_id").as("new_id"), col("band"), col("key"))
-              .join(bandDf.select(col("doc_id").as("old_id"), col("band"), col("key")),
-                Seq("band", "key"))
-              .filter(col("old_id") < col("new_id"))
-              .select(col("new_id"), col("old_id")).distinct()
-            // cross-batch: probe the persisted store, excluding rows a
-            // replay of THIS batch may have written before failing
-            val fs = new org.apache.hadoop.fs.Path(storeDir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val cross =
-              if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/bands"))) None
-              else {
-                val sBands = spark.read.parquet(s"$storeDir/bands")
-                  .filter(col("batch") =!= batchId)
-                  .select(col("doc_id").as("old_id"), col("band"), col("key"))
-                val candPairs = bandDf
-                  .select(col("doc_id").as("new_id"), col("band"), col("key"))
-                  .join(sBands, Seq("band", "key"))
-                  .select(col("new_id"), col("old_id")).distinct()
-                  .cache()
-                caches += candPairs
-                // the common batch collides with NOTHING in the store —
-                // skip the sigs read, the old_id collect, and the scoring
-                // join outright (isEmpty is cheap on the cached pairs)
-                if (candPairs.isEmpty) None
-                else Some {
-                  val sSigs = spark.read.parquet(s"$storeDir/sigs")
-                    .filter(col("batch") =!= batchId)
-                  // the band probe is narrow (3 columns); the SIGS table is
-                  // the wide one (numHashes columns × every stored doc), so
-                  // never scan it whole per batch: the matched old_id set is
-                  // batch-bounded — collect it and push the filter into the
-                  // sigs scan. Fall back to the join only if a pathological
-                  // batch matches more ids than the pushdown cap.
-                  val oldIds = candPairs.select(col("old_id")).distinct()
-                    .limit(10001).collect().map(_.getLong(0)).toSeq
-                  val sigsNeeded =
-                    if (oldIds.length <= 10000)
-                      sSigs.filter(col("doc_id").isInCollection(oldIds))
-                    else sSigs
-                  candPairs.join(sigsNeeded.select(col("doc_id").as("old_id") +:
-                    (0 until numHashes).map(i => col(s"mh_$i").as(s"o_mh_$i")): _*),
-                    Seq("old_id"))
-                }
-              }
-            val oSig = sig.select(col("doc_id").as("old_id") +:
-              (0 until numHashes).map(i => col(s"mh_$i").as(s"o_mh_$i")): _*)
-            val withinScored = within.join(oSig, Seq("old_id"))
-            val dropped = cross.fold(withinScored)(withinScored.unionByName(_))
-              .join(nSig, Seq("new_id"))
-              .filter(round(agree, 4) >= threshold)
-              .select(col("new_id").as("doc_id")).distinct()
-            val survivors = b.join(dropped, Seq("doc_id"), "left_anti").cache()
-            caches += survivors
-            survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-            val keep = survivors.select(col("doc_id"))
-            sig.join(keep, Seq("doc_id"), "left_semi")
-              .write.mode("overwrite").parquet(s"$storeDir/sigs/batch=$batchId")
-            bandDf.join(keep, Seq("doc_id"), "left_semi")
-              .write.mode("overwrite").parquet(s"$storeDir/bands/batch=$batchId")
+    Landing.eachBatch(docs, checkpointDir) { (b, batchId, scope) =>
+      val spark = b.sparkSession
+      val sig = scope.cache(Dedup.minhashSignatures(b, numHashes))
+      val bandDf = Dedup.minhashBands(sig, bands, rowsPerBand)
+      val agree = (0 until numHashes)
+        .map(i => when(col(s"n_mh_$i") === col(s"o_mh_$i"), 1).otherwise(0))
+        .reduce(_ + _).cast("double") / numHashes
+      val nSig = sig.select(col("doc_id").as("new_id") +:
+        (0 until numHashes).map(i => col(s"mh_$i").as(s"n_mh_$i")): _*)
+      // within-batch: band collision + agreement, larger id drops
+      val within = bandDf.select(col("doc_id").as("new_id"), col("band"), col("key"))
+        .join(bandDf.select(col("doc_id").as("old_id"), col("band"), col("key")),
+          Seq("band", "key"))
+        .filter(col("old_id") < col("new_id"))
+        .select(col("new_id"), col("old_id")).distinct()
+      // cross-batch: probe the persisted store, excluding rows a
+      // replay of THIS batch may have written before failing
+      val fs = new org.apache.hadoop.fs.Path(storeDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val cross =
+        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/bands"))) None
+        else {
+          val sBands = spark.read.parquet(s"$storeDir/bands")
+            .filter(col("batch") =!= batchId)
+            .select(col("doc_id").as("old_id"), col("band"), col("key"))
+          val candPairs = scope.cache(bandDf
+            .select(col("doc_id").as("new_id"), col("band"), col("key"))
+            .join(sBands, Seq("band", "key"))
+            .select(col("new_id"), col("old_id")).distinct())
+          // the common batch collides with NOTHING in the store —
+          // skip the sigs read, the old_id collect, and the scoring
+          // join outright (isEmpty is cheap on the cached pairs)
+          if (candPairs.isEmpty) None
+          else Some {
+            val sSigs = spark.read.parquet(s"$storeDir/sigs")
+              .filter(col("batch") =!= batchId)
+            // the band probe is narrow (3 columns); the SIGS table is
+            // the wide one (numHashes columns × every stored doc), so
+            // never scan it whole per batch: the matched old_id set is
+            // batch-bounded — collect it and push the filter into the
+            // sigs scan. Fall back to the join only if a pathological
+            // batch matches more ids than the pushdown cap.
+            val oldIds = candPairs.select(col("old_id")).distinct()
+              .limit(10001).collect().map(_.getLong(0)).toSeq
+            val sigsNeeded =
+              if (oldIds.length <= 10000)
+                sSigs.filter(col("doc_id").isInCollection(oldIds))
+              else sSigs
+            candPairs.join(sigsNeeded.select(col("doc_id").as("old_id") +:
+              (0 until numHashes).map(i => col(s"mh_$i").as(s"o_mh_$i")): _*),
+              Seq("old_id"))
           }
-        } finally { caches.foreach(_.unpersist()); () }
-      }
-      .start()
+        }
+      val oSig = sig.select(col("doc_id").as("old_id") +:
+        (0 until numHashes).map(i => col(s"mh_$i").as(s"o_mh_$i")): _*)
+      val withinScored = within.join(oSig, Seq("old_id"))
+      val dropped = cross.fold(withinScored)(withinScored.unionByName(_))
+        .join(nSig, Seq("new_id"))
+        .filter(round(agree, 4) >= threshold)
+        .select(col("new_id").as("doc_id")).distinct()
+      val survivors = scope.cache(b.join(dropped, Seq("doc_id"), "left_anti"))
+      Landing.write(survivors, outDir, batchId)
+      val keep = survivors.select(col("doc_id"))
+      Landing.write(sig.join(keep, Seq("doc_id"), "left_semi"), s"$storeDir/sigs", batchId)
+      Landing.write(bandDf.join(keep, Seq("doc_id"), "left_semi"), s"$storeDir/bands", batchId)
+    }
 
   /** Streaming crawl loop over the persisted MinHash fingerprint index
     * ([[Dedup.buildMinhashIndex]]): each micro-batch is deduped against the
@@ -363,45 +305,31 @@ object StreamingCorpus {
   def minhashIndexIngest(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, estThreshold: Double = 0.5,
       compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.cache()
-        try {
-          if (!b.isEmpty) {
-            // auto-compaction, START of the batch: folds only the
-            // checkpoint-COMMITTED batches (< batchId), so a partial
-            // append left by a failed delivery of THIS batch never melts
-            // into the base (it would defeat excludeBatch and make the
-            // replay screen against itself); re-running the compaction
-            // on replay folds the same committed set — idempotent
-            if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-              Dedup.compactMinhashIndex(spark, indexDir,
-                keepBelow = Some(batchId))
-            val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
-            val (numHashes, _, bands, rowsPerBand) =
-              Dedup.readMinhashParams(spark, root)
-            // within-batch first: larger id drops (the candidate generator
-            // is the same banded LSH the index probe uses)
-            val withinDups = Dedup.minhashCandidatePairs(b, numHashes, bands,
-                rowsPerBand, estThreshold)
-              .select(col("b").as("doc_id")).distinct()
-            val crossDups = Dedup.dedupAgainstMinhashIndex(spark, indexDir, b,
-                estThreshold, excludeBatch = Some(batchId))
-              .select(col("new_id").as("doc_id")).distinct()
-            val survivors = b
-              .join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti")
-              .cache()
-            try {
-              survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-              Dedup.appendToMinhashIndex(spark, indexDir, survivors,
-                batchId = Some(batchId))
-            } finally { survivors.unpersist(); () }
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (b, batchId, scope) =>
+      val spark = b.sparkSession
+      // auto-compaction, START of the batch: folds only the
+      // checkpoint-COMMITTED batches (< batchId), so a partial
+      // append left by a failed delivery of THIS batch never melts
+      // into the base (it would defeat excludeBatch and make the
+      // replay screen against itself); re-running the compaction
+      // on replay folds the same committed set — idempotent
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        Dedup.compactMinhashIndex(spark, indexDir, keepBelow = Some(batchId))
+      val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+      val (numHashes, _, bands, rowsPerBand) = Dedup.readMinhashParams(spark, root)
+      // within-batch first: larger id drops (the candidate generator
+      // is the same banded LSH the index probe uses)
+      val withinDups = Dedup.minhashCandidatePairs(b, numHashes, bands,
+          rowsPerBand, estThreshold)
+        .select(col("b").as("doc_id")).distinct()
+      val crossDups = Dedup.dedupAgainstMinhashIndex(spark, indexDir, b,
+          estThreshold, excludeBatch = Some(batchId))
+        .select(col("new_id").as("doc_id")).distinct()
+      val survivors = scope.cache(
+        b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
+      Landing.write(survivors, outDir, batchId)
+      Dedup.appendToMinhashIndex(spark, indexDir, survivors, batchId = Some(batchId))
+    }
 
   /** Streaming crawl dedup over the persisted winnowing store — the
     * CONTAINMENT twin of [[minhashIndexIngest]] (catches the
@@ -417,38 +345,24 @@ object StreamingCorpus {
   def containmentIndexIngest(docs: DataFrame, indexDir: String,
       outDir: String, checkpointDir: String,
       threshold: Double = 0.8, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.cache()
-        try {
-          if (!b.isEmpty) {
-            // auto-compaction at the START of the batch: folds only the
-            // checkpoint-committed batches (< batchId) — see
-            // [[Dedup.compactWinnowingIndex]]'s keepBelow contract
-            if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-              Dedup.compactWinnowingIndex(spark, indexDir,
-                keepBelow = Some(batchId))
-            val withinDups = Dedup.containmentPairs(b.drop("event_time"),
-                threshold)
-              .select(col("b").as("doc_id")).distinct()
-            val crossDups = Dedup.containmentAgainstIndex(spark, indexDir,
-                b.drop("event_time"), threshold,
-                excludeBatch = Some(batchId))
-              .select(col("a").as("doc_id")).distinct()
-            val survivors = b
-              .join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti")
-              .cache()
-            try {
-              survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-              Dedup.appendToWinnowingIndex(spark, indexDir,
-                survivors.drop("event_time"), batchId = Some(batchId))
-            } finally { survivors.unpersist(); () }
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (b, batchId, scope) =>
+      val spark = b.sparkSession
+      // auto-compaction at the START of the batch: folds only the
+      // checkpoint-committed batches (< batchId) — see
+      // [[Dedup.compactWinnowingIndex]]'s keepBelow contract
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        Dedup.compactWinnowingIndex(spark, indexDir, keepBelow = Some(batchId))
+      val withinDups = Dedup.containmentPairs(b.drop("event_time"), threshold)
+        .select(col("b").as("doc_id")).distinct()
+      val crossDups = Dedup.containmentAgainstIndex(spark, indexDir,
+          b.drop("event_time"), threshold, excludeBatch = Some(batchId))
+        .select(col("a").as("doc_id")).distinct()
+      val survivors = scope.cache(
+        b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
+      Landing.write(survivors, outDir, batchId)
+      Dedup.appendToWinnowingIndex(spark, indexDir,
+        survivors.drop("event_time"), batchId = Some(batchId))
+    }
 
   /** Streaming image-crawl dedup over the persisted perceptual-hash
     * store ([[graft.ext.Multimodal.buildImageHashStore]]) — the
@@ -496,42 +410,25 @@ object StreamingCorpus {
     val root = Similarity.resolveIndexRoot(media.sparkSession, storeDir)
     val minOverlap = graft.ext.Multimodal
       .readStoreOverlap(media.sparkSession, root)
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.cache()
-        try {
-          if (!b.isEmpty) {
-            // decode ONCE: within-batch pairing, the store probe, and
-            // the survivor append all share this frame table
-            val fh = graft.ext.Multimodal.videoFrameHashes(spark, b.toDF())
-              .toDF().select(col("doc_id"), col("fhash")).distinct().cache()
-            try {
-              val withinDups = graft.ext.Multimodal
-                .videoNearDupsFromFrames(fh, minOverlap)
-                .select(col("b").as("doc_id")).distinct()
-              val crossDups = graft.ext.Multimodal
-                .probeVideoStoreWithFrames(spark, root, minOverlap, fh,
-                  excludeBatch = Some(batchId))
-                .select(col("new_id").as("doc_id")).distinct()
-              val survivors = b
-                .join(withinDups.unionByName(crossDups), Seq("doc_id"),
-                  "left_anti")
-                .cache()
-              try {
-                survivors.write.mode("overwrite")
-                  .parquet(s"$outDir/batch=$batchId")
-                graft.ext.Multimodal.appendFramesToStore(spark, root,
-                  fh.join(survivors.select(col("doc_id")), Seq("doc_id"),
-                    "left_semi"),
-                  batchId = Some(batchId))
-              } finally { survivors.unpersist(); () }
-            } finally { fh.unpersist(); () }
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
+      val spark = b.sparkSession
+      // decode ONCE: within-batch pairing, the store probe, and
+      // the survivor append all share this frame table
+      val fh = scope.cache(graft.ext.Multimodal.videoFrameHashes(spark, b)
+        .toDF().select(col("doc_id"), col("fhash")).distinct())
+      val withinDups = graft.ext.Multimodal.videoNearDupsFromFrames(fh, minOverlap)
+        .select(col("b").as("doc_id")).distinct()
+      val crossDups = graft.ext.Multimodal
+        .probeVideoStoreWithFrames(spark, root, minOverlap, fh,
+          excludeBatch = Some(batchId))
+        .select(col("new_id").as("doc_id")).distinct()
+      val survivors = scope.cache(
+        b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
+      Landing.write(survivors, outDir, batchId)
+      graft.ext.Multimodal.appendFramesToStore(spark, root,
+        fh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+        batchId = Some(batchId))
+    }
   }
 
   /** Shared crawl-dedup micro-batch loop: `hasher` is the only modality-
@@ -547,42 +444,24 @@ object StreamingCorpus {
     val root = Similarity.resolveIndexRoot(media.sparkSession, storeDir)
     val radius = graft.ext.Multimodal
       .readStoreRadius(media.sparkSession, root)
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.cache()
-        try {
-          if (!b.isEmpty) {
-            // decode ONCE: within-batch pairing, the store probe, and the
-            // survivor append all work off this hash frame (codec decode
-            // dominates batch cost — never pay it three times)
-            val h = hasher(spark, b.toDF()).cache()
-            try {
-              val withinDups = graft.ext.Multimodal
-                .bandedNearDupsFromHashes(h, maxHamming = radius)
-                .select(col("b").as("doc_id")).distinct()
-              val crossDups = graft.ext.Multimodal
-                .probeStoreWithHashes(spark, root, radius, h,
-                  excludeBatch = Some(batchId))
-                .select(col("new_id").as("doc_id")).distinct()
-              val survivors = b
-                .join(withinDups.unionByName(crossDups), Seq("doc_id"),
-                  "left_anti")
-                .cache()
-              try {
-                survivors.write.mode("overwrite")
-                  .parquet(s"$outDir/batch=$batchId")
-                graft.ext.Multimodal.appendHashesToStore(spark, root,
-                  h.join(survivors.select(col("doc_id")), Seq("doc_id"),
-                    "left_semi"),
-                  batchId = Some(batchId))
-              } finally { survivors.unpersist(); () }
-            } finally { h.unpersist(); () }
-          }
-        } finally { b.unpersist(); () }
-      }
-      .start()
+    Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
+      val spark = b.sparkSession
+      // decode ONCE: within-batch pairing, the store probe, and the
+      // survivor append all work off this hash frame (codec decode
+      // dominates batch cost — never pay it three times)
+      val h = scope.cache(hasher(spark, b))
+      val withinDups = graft.ext.Multimodal.bandedNearDupsFromHashes(h, maxHamming = radius)
+        .select(col("b").as("doc_id")).distinct()
+      val crossDups = graft.ext.Multimodal
+        .probeStoreWithHashes(spark, root, radius, h, excludeBatch = Some(batchId))
+        .select(col("new_id").as("doc_id")).distinct()
+      val survivors = scope.cache(
+        b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
+      Landing.write(survivors, outDir, batchId)
+      graft.ext.Multimodal.appendHashesToStore(spark, root,
+        h.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+        batchId = Some(batchId))
+    }
   }
 
   /** Streaming exact-substring dedup over the persisted window-hash
@@ -599,44 +478,38 @@ object StreamingCorpus {
     */
   def dupSpanIngest(docs: DataFrame, storeDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.cache()
-        val reg = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-        try {
-          if (!b.isEmpty) {
-            graft.ext.TextAnalysis
-              .cutDupSpansAgainstStore(spark, storeDir, b,
-                excludeBatch = Some(batchId), cacheRegistry = Some(reg))
-              .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-            // append the PRE-cut hashes: the kept first copy contributed
-            // them, and recut rebuilt text would synthesize windows across
-            // cut boundaries that never existed in any document
-            graft.ext.TextAnalysis.appendToWindowStore(spark, storeDir, b, batchId)
-          }
-        } finally { reg.foreach(_.unpersist()); b.unpersist(); () }
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (b, batchId, scope) =>
+      val spark = b.sparkSession
+      Landing.write(TextAnalysis.cutDupSpansAgainstStore(spark, storeDir, b,
+        excludeBatch = Some(batchId), cacheRegistry = scope.registry), outDir, batchId)
+      // append the PRE-cut hashes: the kept first copy contributed
+      // them, and recut rebuilt text would synthesize windows across
+      // cut boundaries that never existed in any document
+      TextAnalysis.appendToWindowStore(spark, storeDir, b, batchId)
+    }
 
+  /** Streaming embedding ingestion into a PERSISTED IVF index: each
+    * micro-batch of (vec_id, embedding) rows is assigned to the index's
+    * frozen centroids and appended into its cell partitions
+    * ([[graft.ext.Similarity.appendToIvfIndex]]) — queries via
+    * `ivfTopKFromIndex` see new vectors as soon as their batch lands,
+    * still through the same partition-pruned probing. Centroid drift is a
+    * periodic-rebuild concern, exactly as in the batch append path. The
+    * exactly-once story matches the corpus sink: each micro-batch lands in
+    * a `batch=<epoch id>` partition of the index with OVERWRITE, so an
+    * at-least-once replay rewrites its own directory instead of
+    * re-appending duplicate vec_ids — the same idempotence discipline as
+    * [[trainIngest]]'s landing zone.
+    */
   def indexIngest(vectors: DataFrame, indexDir: String,
       checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          // auto-compaction at the START of the batch (committed batches
-          // only — the containmentIndexIngest keepBelow contract)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            Similarity.compactIvfIndex(batch.sparkSession, indexDir,
-              keepBelow = Some(batchId))
-          Similarity.appendToIvfIndex(batch.sparkSession, indexDir, batch,
-            batchId = Some(batchId))
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(vectors, checkpointDir) { (batch, batchId, _) =>
+      // auto-compaction at the START of the batch (committed batches
+      // only — the containmentIndexIngest keepBelow contract)
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        Similarity.compactIvfIndex(batch.sparkSession, indexDir, keepBelow = Some(batchId))
+      Similarity.appendToIvfIndex(batch.sparkSession, indexDir, batch, batchId = Some(batchId))
+    }
 
   /** Streaming maintain path for a persisted PQ index — the PQ twin of
     * [[indexIngest]]: each micro-batch is encoded against the FROZEN
@@ -647,19 +520,11 @@ object StreamingCorpus {
     */
   def pqIndexIngest(vectors: DataFrame, indexDir: String,
       checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            Similarity.compactPqIndex(batch.sparkSession, indexDir,
-              keepBelow = Some(batchId))
-          Similarity.appendToPqIndex(batch.sparkSession, indexDir, batch,
-            batchId = Some(batchId))
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(vectors, checkpointDir) { (batch, batchId, _) =>
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        Similarity.compactPqIndex(batch.sparkSession, indexDir, keepBelow = Some(batchId))
+      Similarity.appendToPqIndex(batch.sparkSession, indexDir, batch, batchId = Some(batchId))
+    }
 
   /** Streaming maintain path for a persisted int8 index — the int8 twin
     * of [[indexIngest]]/[[pqIndexIngest]]: nothing to encode against (the
@@ -670,19 +535,11 @@ object StreamingCorpus {
     */
   def int8Ingest(vectors: DataFrame, indexDir: String,
       checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            Similarity.compactInt8Index(batch.sparkSession, indexDir,
-              keepBelow = Some(batchId))
-          Similarity.appendToInt8Index(batch.sparkSession, indexDir, batch,
-            batchId = Some(batchId))
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(vectors, checkpointDir) { (batch, batchId, _) =>
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+        Similarity.compactInt8Index(batch.sparkSession, indexDir, keepBelow = Some(batchId))
+      Similarity.appendToInt8Index(batch.sparkSession, indexDir, batch, batchId = Some(batchId))
+    }
 
   /** Streaming twin of the CORPUS-RELATIVE quality gate
     * ([[graft.ext.TextAnalysis.qualityFilter]]): keep documents scoring
@@ -717,23 +574,16 @@ object StreamingCorpus {
     */
   def qualityGateIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       quantile: Double = 0.3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id"), TextAnalysis.qualityScore.as("score"))
-            .write.mode("overwrite").parquet(s"$outDir/scores/batch=$batchId")
-          // threshold over everything landed so far; a replayed batch
-          // rewrites its own threshold row but the view reads only the
-          // NEWEST batch's row, so replays cannot regress the gate
-          spark.read.parquet(s"$outDir/scores")
-            .agg(expr(s"percentile(score, CAST($quantile AS DOUBLE))").as("thr"))
-            .write.mode("overwrite").parquet(s"$outDir/threshold/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("doc_id"), TextAnalysis.qualityScore.as("score")),
+        s"$outDir/scores", batchId)
+      // threshold over everything landed so far; a replayed batch
+      // rewrites its own threshold row but the view reads only the
+      // NEWEST batch's row, so replays cannot regress the gate
+      Landing.write(batch.sparkSession.read.parquet(s"$outDir/scores")
+        .agg(expr(s"percentile(score, CAST($quantile AS DOUBLE))").as("thr")),
+        s"$outDir/threshold", batchId)
+    }
 
   /** Streaming decontamination against a FROZEN benchmark set — the
     * screening tier that keeps eval material out of a continuously
@@ -761,24 +611,17 @@ object StreamingCorpus {
     val bloom = probeSh.select(xxhash64(col("sh")).as("h"))
       .stat.bloomFilter("h", nProbe, fpp)
     val bloomBytes = graft.functions.BloomFunctions.serialize(bloom)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.drop("event_time")
-          val contaminated = Dedup.shingles(b, n)
-            .filter(graft.functions.BloomFunctions.mightContainLong(
-              xxhash64(col("sh")), lit(bloomBytes)))
-            .join(probeSh, Seq("sh"), "left_semi")
-            .groupBy(col("doc_id")).agg(count(lit(1)).as("shared"))
-            .filter(col("shared") >= minShared)
-            .select(col("doc_id"))
-          b.join(contaminated, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      val b = batch.drop("event_time")
+      val contaminated = Dedup.shingles(b, n)
+        .filter(graft.functions.BloomFunctions.mightContainLong(
+          xxhash64(col("sh")), lit(bloomBytes)))
+        .join(probeSh, Seq("sh"), "left_semi")
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("shared"))
+        .filter(col("shared") >= minShared)
+        .select(col("doc_id"))
+      Landing.write(b.join(contaminated, Seq("doc_id"), "left_anti"), outDir, batchId)
+    }
   }
 
   /** Streaming perplexity scoring against a FROZEN persisted bigram LM
@@ -799,17 +642,10 @@ object StreamingCorpus {
     // CURRENT pointer inside it, so per-batch resolution is a no-op on
     // the pinned path and a concurrent rebuild cannot flip it mid-stream
     val root = graft.ext.Similarity.resolveIndexRoot(docs.sparkSession, lmDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          TextAnalysis.perplexityFromLm(batch.sparkSession, root,
-              batch.drop("event_time"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.perplexityFromLm(batch.sparkSession, root,
+        batch.drop("event_time")), outDir, batchId)
+    }
   }
 
   /** Streaming PII-redaction gate (r9 ask #7) — the scrub pass a
@@ -824,16 +660,9 @@ object StreamingCorpus {
     */
   def redactIngest(docs: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          TextAnalysis.redactPii(batch.drop("event_time"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.redactPii(batch.drop("event_time")), outDir, batchId)
+    }
 
   /** Streaming DSIR scoring against a FROZEN persisted log-ratio model
     * ([[graft.ext.TextAnalysis.buildDsirModel]]) — the serving shape of
@@ -849,17 +678,10 @@ object StreamingCorpus {
   def dsirScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
     val root = graft.ext.Similarity.resolveIndexRoot(docs.sparkSession, modelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          TextAnalysis.dsirWeightsFromModel(batch.sparkSession, root,
-              batch.drop("event_time"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.dsirWeightsFromModel(batch.sparkSession, root,
+        batch.drop("event_time")), outDir, batchId)
+    }
   }
 
   /** Streaming twin of [[graft.ext.TextAnalysis.shardBalanced]]: shard
@@ -873,16 +695,10 @@ object StreamingCorpus {
     */
   def shardIngest(docs: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF().select(col("doc_id"),
-              TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-            .write.mode("overwrite").parquet(s"$outDir/lens/batch=$batchId")
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("doc_id"),
+        TextAnalysis.tokenCount(col("text")).as("n_tokens")), s"$outDir/lens", batchId)
+    }
 
   /** The batch serpentine assignment over [[shardIngest]]'s landed
     * length zone (shared [[graft.ext.TextAnalysis.shardAssign]] core).
@@ -907,16 +723,10 @@ object StreamingCorpus {
     */
   def scd2Ingest(changes: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-            .write.mode("overwrite").parquet(s"$outDir/changes/batch=$batchId")
-        ()
-      }
-      .start()
+    Landing.eachBatch(changes, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("user_id"), col("event_type"), col("ts"),
+        col("event_id")), s"$outDir/changes", batchId)
+    }
 
   /** The dimension over [[scd2Ingest]]'s landed change log — the batch
     * operator verbatim.
@@ -937,17 +747,10 @@ object StreamingCorpus {
     */
   def attributionIngest(events: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.toDF()
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              col("ts"), col("value"))
-            .write.mode("overwrite").parquet(s"$outDir/events/batch=$batchId")
-        ()
-      }
-      .start()
+    Landing.eachBatch(events, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("event_id"), col("user_id"), col("event_type"),
+        col("ts"), col("value")), s"$outDir/events", batchId)
+    }
 
   /** The credit report over [[attributionIngest]]'s landed log — the
     * batch operator verbatim.
@@ -976,39 +779,29 @@ object StreamingCorpus {
     */
   def domainCapsIngest(docs: DataFrame, outDir: String, storeDir: String,
       checkpointDir: String, cap: Long = 5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!batch.isEmpty) {
-          val b = batch.toDF()
-          val fs = new org.apache.hadoop.fs.Path(storeDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val prior =
-            if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/counts")))
-              None
-            else Some(spark.read.parquet(s"$storeDir/counts")
-              .filter(col("batch") =!= batchId)
-              .groupBy(col("domain"))
-              .agg(sum(col("n_accepted")).as("prior_n")))
-          val ranked = b.withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("domain")).orderBy(col("doc_id"))))
-          val withPrior = prior.fold(ranked.withColumn("prior_n", lit(0L)))(p =>
-            ranked.join(p, Seq("domain"), "left")
-              .withColumn("prior_n", coalesce(col("prior_n"), lit(0L))))
-          val survivors = withPrior
-            .filter(col("prior_n") + col("rn") <= cap)
-            .drop("rn", "prior_n")
-          survivors.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-          survivors.groupBy(col("domain"))
-            .agg(count(lit(1)).as("n_accepted"))
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/counts/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (b, batchId, _) =>
+      val spark = b.sparkSession
+      val fs = new org.apache.hadoop.fs.Path(storeDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val prior =
+        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/counts"))) None
+        else Some(spark.read.parquet(s"$storeDir/counts")
+          .filter(col("batch") =!= batchId)
+          .groupBy(col("domain"))
+          .agg(sum(col("n_accepted")).as("prior_n")))
+      val ranked = b.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("domain")).orderBy(col("doc_id"))))
+      val withPrior = prior.fold(ranked.withColumn("prior_n", lit(0L)))(p =>
+        ranked.join(p, Seq("domain"), "left")
+          .withColumn("prior_n", coalesce(col("prior_n"), lit(0L))))
+      val survivors = withPrior
+        .filter(col("prior_n") + col("rn") <= cap)
+        .drop("rn", "prior_n")
+      Landing.write(survivors, outDir, batchId)
+      Landing.write(survivors.groupBy(col("domain")).agg(count(lit(1)).as("n_accepted")),
+        s"$storeDir/counts", batchId)
+    }
 
   /** Everything the domain-cap gate has accepted so far — the landed
     * union a convergence check compares against
@@ -1034,19 +827,11 @@ object StreamingCorpus {
     */
   def boilerplateIngest(docs: DataFrame, outDir: String, storeDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = batch.toDF().select(col("doc_id"), col("domain"), col("text"))
-          b.write.mode("overwrite").parquet(s"$outDir/docs/batch=$batchId")
-          graft.ext.Boilerplate.lineDocFrequency(b)
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/linedf/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      val b = batch.select(col("doc_id"), col("domain"), col("text"))
+      Landing.write(b, s"$outDir/docs", batchId)
+      Landing.write(graft.ext.Boilerplate.lineDocFrequency(b), s"$storeDir/linedf", batchId)
+    }
 
   /** The boilerplate report from the COUNT STORE only (no text rescan):
     * per-batch dfs sum to the global df because each doc lands once.
@@ -1082,17 +867,10 @@ object StreamingCorpus {
       outDir: String, checkpointDir: String,
       threshold: Double = 0.3): StreamingQuery = {
     val root = graft.ext.Similarity.resolveIndexRoot(emb.sparkSession, storeDir)
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.ext.Dedup.semanticContaminationFromStore(batch.sparkSession,
-              root, batch.toDF(), threshold)
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(emb, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(Dedup.semanticContaminationFromStore(batch.sparkSession,
+        root, batch, threshold), outDir, batchId)
+    }
   }
 
   /** Everything [[semanticDecontaminateIngest]] has flagged so far
@@ -1116,17 +894,10 @@ object StreamingCorpus {
   def lrScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
     val root = graft.ext.Similarity.resolveIndexRoot(docs.sparkSession, modelDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          TextAnalysis.lrPredictFromModel(batch.sparkSession, root,
-              batch.drop("event_time"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.lrPredictFromModel(batch.sparkSession, root,
+        batch.drop("event_time")), outDir, batchId)
+    }
   }
 
   /** Streaming tokenizer serving — the fourth frozen-model family next
@@ -1140,17 +911,10 @@ object StreamingCorpus {
     */
   def unigramEncodeIngest(docs: DataFrame, vocabDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          TextAnalysis.unigramEncodeFromVocab(batch.sparkSession, vocabDir,
-              batch.drop("event_time"))
-            .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.unigramEncodeFromVocab(batch.sparkSession, vocabDir,
+        batch.drop("event_time")), outDir, batchId)
+    }
 
   /** Streaming token-budget best-first selection — the streaming twin of
     * [[graft.ext.TextAnalysis.selectByTokenBudget]]. A document's
@@ -1179,32 +943,20 @@ object StreamingCorpus {
     */
   def budgetSelectIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       maxTokens: Long, buckets: Int = 32): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id"), TextAnalysis.qualityScore.as("score"),
-              TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-            .write.mode("overwrite").parquet(s"$outDir/scored/batch=$batchId")
-          // running budget cut over everything landed so far; a replayed
-          // batch rewrites its own row, so replays cannot corrupt history.
-          // cacheRegistry: the cut's internal cache is released per batch
-          // so a long-running stream cannot accumulate stale entries
-          val reg = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-          try {
-            TextAnalysis.selectScoredByTokenBudget(
-                spark.read.parquet(s"$outDir/scored"), maxTokens, buckets,
-                cacheRegistry = Some(reg))
-              .agg(count(lit(1)).as("n_selected"),
-                coalesce(max(col("cum_tokens")), lit(0L)).as("used_tokens"),
-                coalesce(min(col("score")), lit(-1.0)).as("cut_score"))
-              .write.mode("overwrite").parquet(s"$outDir/cut/batch=$batchId")
-          } finally { reg.foreach(_.unpersist()); () }
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, scope) =>
+      Landing.write(batch.select(col("doc_id"), TextAnalysis.qualityScore.as("score"),
+        TextAnalysis.tokenCount(col("text")).as("n_tokens")), s"$outDir/scored", batchId)
+      // running budget cut over everything landed so far; a replayed
+      // batch rewrites its own row, so replays cannot corrupt history.
+      // The cut's internal cache is released with the batch's scope
+      // so a long-running stream cannot accumulate stale entries
+      Landing.write(TextAnalysis.selectScoredByTokenBudget(
+          batch.sparkSession.read.parquet(s"$outDir/scored"), maxTokens, buckets,
+          cacheRegistry = scope.registry)
+        .agg(count(lit(1)).as("n_selected"),
+          coalesce(max(col("cum_tokens")), lit(0L)).as("used_tokens"),
+          coalesce(min(col("score")), lit(-1.0)).as("cut_score")), s"$outDir/cut", batchId)
+    }
 
   /** Read-time selection over [[budgetSelectIngest]]'s scored zone: the
     * batch [[graft.ext.TextAnalysis.selectScoredByTokenBudget]] applied
@@ -1242,20 +994,11 @@ object StreamingCorpus {
   def upsampleIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       targets: Map[String, Double], budget: Long,
       domainCol: String = "lang"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id"), col(domainCol))
-            .write.mode("overwrite").parquet(s"$outDir/docs/batch=$batchId")
-          TextAnalysis.upsamplePlan(spark.read.parquet(s"$outDir/docs"),
-              targets, budget, domainCol, requireAll = false)
-            .write.mode("overwrite").parquet(s"$outDir/plan/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("doc_id"), col(domainCol)), s"$outDir/docs", batchId)
+      Landing.write(TextAnalysis.upsamplePlan(batch.sparkSession.read.parquet(s"$outDir/docs"),
+        targets, budget, domainCol, requireAll = false), s"$outDir/plan", batchId)
+    }
 
   /** Read-time epoch assignment over [[upsampleIngest]]'s landed doc
     * zone: the batch [[graft.ext.TextAnalysis.upsampleToBudget]] itself
@@ -1287,22 +1030,13 @@ object StreamingCorpus {
     */
   def domainCapIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       cap: Long, domainCol: String = "domain"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id"), col(domainCol))
-            .write.mode("overwrite").parquet(s"$outDir/docs/batch=$batchId")
-          spark.read.parquet(s"$outDir/docs")
-            .groupBy(col(domainCol)).agg(count(lit(1)).as("n_domain"))
-            .withColumn("thr", least(lit(10000L),
-              round(lit(10000.0) * cap / col("n_domain")).cast("long")))
-            .write.mode("overwrite").parquet(s"$outDir/thr/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("doc_id"), col(domainCol)), s"$outDir/docs", batchId)
+      Landing.write(batch.sparkSession.read.parquet(s"$outDir/docs")
+        .groupBy(col(domainCol)).agg(count(lit(1)).as("n_domain"))
+        .withColumn("thr", least(lit(10000L),
+          round(lit(10000.0) * cap / col("n_domain")).cast("long"))), s"$outDir/thr", batchId)
+    }
 
   /** Read-time cap over [[domainCapIngest]]'s landed zone — the batch
     * [[graft.ext.UrlCuration.domainCaps]] itself. Converges at full
@@ -1333,25 +1067,16 @@ object StreamingCorpus {
     */
   def kanonIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       bucketWidth: Int = 200, k: Int = 5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.groupBy(col("lang"), col("source"),
-              floor(col("n_chars") / bucketWidth).cast("long").as("len_bucket"))
-            .agg(count(lit(1)).as("n_docs"))
-            .write.mode("overwrite").parquet(s"$outDir/counts/batch=$batchId")
-          kanonView(spark, outDir, k)
-            .agg(count(lit(1)).as("n_classes"),
-              sum(when(col("at_risk"), 1L).otherwise(0L)).as("n_at_risk"),
-              sum(when(col("at_risk"), col("n_docs")).otherwise(0L))
-                .as("docs_at_risk"))
-            .write.mode("overwrite").parquet(s"$outDir/audit/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.groupBy(col("lang"), col("source"),
+          floor(col("n_chars") / bucketWidth).cast("long").as("len_bucket"))
+        .agg(count(lit(1)).as("n_docs")), s"$outDir/counts", batchId)
+      Landing.write(kanonView(batch.sparkSession, outDir, k)
+        .agg(count(lit(1)).as("n_classes"),
+          sum(when(col("at_risk"), 1L).otherwise(0L)).as("n_at_risk"),
+          sum(when(col("at_risk"), col("n_docs")).otherwise(0L)).as("docs_at_risk")),
+        s"$outDir/audit", batchId)
+    }
 
   /** Read-time k-anonymity audit over [[kanonIngest]]'s landed partial
     * counts — column-identical to the batch operator and exactly equal
@@ -1381,16 +1106,10 @@ object StreamingCorpus {
     */
   def diffIngest(newDocs: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    newDocs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch.select(col("doc_id"), md5(col("text")).as("new_fp"))
-            .write.mode("overwrite").parquet(s"$outDir/fp/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(newDocs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("doc_id"), md5(col("text")).as("new_fp")),
+        s"$outDir/fp", batchId)
+    }
 
   /** Read-time diff of [[diffIngest]]'s landed fingerprints against the
     * frozen OLD snapshot — the shared
@@ -1427,23 +1146,14 @@ object StreamingCorpus {
   def temperatureIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       langCol: String = "lang", alpha: Double = 0.5,
       salt: String = "tsample"): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id"), col(langCol),
-              TextAnalysis.sampleBucket(salt).as("bucket"))
-            .write.mode("overwrite").parquet(s"$outDir/meta/batch=$batchId")
-          TextAnalysis.temperatureThresholds(
-              spark.read.parquet(s"$outDir/meta")
-                .groupBy(col(langCol)).agg(count(lit(1)).as("n")),
-              langCol, alpha)
-            .write.mode("overwrite").parquet(s"$outDir/thresholds/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(batch.select(col("doc_id"), col(langCol),
+        TextAnalysis.sampleBucket(salt).as("bucket")), s"$outDir/meta", batchId)
+      Landing.write(TextAnalysis.temperatureThresholds(
+        batch.sparkSession.read.parquet(s"$outDir/meta")
+          .groupBy(col(langCol)).agg(count(lit(1)).as("n")),
+        langCol, alpha), s"$outDir/thresholds", batchId)
+    }
 
   /** Read-time selection over [[temperatureIngest]]'s landing zones: all
     * landed docs, judged against the newest per-language thresholds.
@@ -1496,29 +1206,18 @@ object StreamingCorpus {
     */
   def otsuGateIngest(docs: DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          batch.select(col("doc_id"), TextAnalysis.qualityScore.as("score"))
-            .write.mode("overwrite").parquet(s"$outDir/scores/batch=$batchId")
-          // cacheRegistry: release the threshold refresh's internal cache
-          // per batch (stale entries would otherwise accumulate for the
-          // stream's lifetime)
-          val reg = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-          try {
-            TextAnalysis.otsuFromScores(
-                spark.read.parquet(s"$outDir/scores").select(col("score").as("s")),
-                cacheRegistry = Some(reg))
-              .filter(col("is_best"))
-              .select(col("cut"), col("thr"), col("sigma_b"))
-              .write.mode("overwrite").parquet(s"$outDir/threshold/batch=$batchId")
-          } finally { reg.foreach(_.unpersist()); () }
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, scope) =>
+      Landing.write(batch.select(col("doc_id"), TextAnalysis.qualityScore.as("score")),
+        s"$outDir/scores", batchId)
+      // the threshold refresh's internal cache is released with the
+      // batch's scope (stale entries would otherwise accumulate for the
+      // stream's lifetime)
+      Landing.write(TextAnalysis.otsuFromScores(
+          batch.sparkSession.read.parquet(s"$outDir/scores").select(col("score").as("s")),
+          cacheRegistry = scope.registry)
+        .filter(col("is_best"))
+        .select(col("cut"), col("thr"), col("sigma_b")), s"$outDir/threshold", batchId)
+    }
 
   /** Read-time Otsu gate over [[otsuGateIngest]]'s landed zone: all
     * scored docs, gated by the NEWEST threshold row (docs at or above
@@ -1558,21 +1257,13 @@ object StreamingCorpus {
     */
   def vocabDriftIngest(docs: DataFrame, refDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          TextAnalysis.tokenCounts(batch.toDF())
-            .write.mode("overwrite").parquet(s"$outDir/counts/batch=$batchId")
-          vocabDriftView(spark, refDir, outDir)
-            .agg(coalesce(sum(col("yb")), lit(0L)).as("n_tokens"),
-              coalesce(max(abs(col("z"))), lit(0.0)).as("max_abs_z"))
-            .write.mode("overwrite").parquet(s"$outDir/drift_history/batch=$batchId")
-        }
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.tokenCounts(batch), s"$outDir/counts", batchId)
+      Landing.write(vocabDriftView(batch.sparkSession, refDir, outDir)
+        .agg(coalesce(sum(col("yb")), lit(0L)).as("n_tokens"),
+          coalesce(max(abs(col("z"))), lit(0.0)).as("max_abs_z")),
+        s"$outDir/drift_history", batchId)
+    }
 
   /** Read-time drift report over [[vocabDriftIngest]]'s landed zone vs
     * the frozen reference: full-outer-merge the two vocabularies (a
@@ -1601,15 +1292,9 @@ object StreamingCorpus {
     */
   def cmsIngest(docs: DataFrame, outDir: String, checkpointDir: String,
       n: Int = 3, d: Int = 4, w: Int = 1024): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          TextAnalysis.cmsPartialSketch(batch.toDF(), n, d, w)
-            .write.mode("overwrite").parquet(s"$outDir/sketch/batch=$batchId")
-        ()
-      }
-      .start()
+    Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
+      Landing.write(TextAnalysis.cmsPartialSketch(batch, n, d, w), s"$outDir/sketch", batchId)
+    }
 
   /** Point-query estimates against [[cmsIngest]]'s landed counters:
     * merge by addition, then the SAME
@@ -1637,15 +1322,10 @@ object StreamingCorpus {
     */
   def manifestIngest(events: DataFrame, outDir: String,
       checkpointDir: String, tsCol: String = "ts"): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.ScaleOps.writeDateStoreWithManifest(
-            batch.toDF(), s"$outDir/data/batch=$batchId", tsCol)
-        ()
-      }
-      .start()
+    Landing.eachBatch(events, checkpointDir) { (batch, batchId, _) =>
+      graft.operators.ScaleOps.writeDateStoreWithManifest(
+        batch, Landing.dir(s"$outDir/data", batchId), tsCol)
+    }
 
   /** The live partition-grain manifest over everything landed so far —
     * the same rollup [[graft.operators.ScaleOps.manifestSummary]] serves

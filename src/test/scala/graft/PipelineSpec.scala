@@ -151,6 +151,37 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(elapsed < 4.5, s"timeout not enforced: ${elapsed}s")
   }
 
+  /** A token issuer that fails its first fetch with `first`, then issues. */
+  private def flakyTokens(first: Throwable) = {
+    val fetches = new java.util.concurrent.atomic.AtomicInteger
+    val tokens = new TokenManager(() =>
+      if (fetches.incrementAndGet() == 1) throw first
+      else TokenManager.Token("test-token", 3600))
+    (tokens, fetches)
+  }
+
+  private val tokenTask =
+    Orchestrator.ReportTask("run-tok", "call_volume", 3, 30, "2024-02-29", "2024-03-01")
+
+  test("a transient token failure is retried under the task's budget") {
+    val (tokens, fetches) = flakyTokens(Retry.RetriableFailure("HTTP 503 on token"))
+    val run = Orchestrator.processReport(new FakeReportSource(10), tokens,
+      Files.createTempDirectory("graft-token").toString, tokenTask,
+      backoffBase = 1.milli, now = fixedNow)
+    assert(run.status == Status.Success, run.error_message)
+    assert(fetches.get == 2)
+  }
+
+  test("a terminal token failure fails the report after one fetch") {
+    val (tokens, fetches) = flakyTokens(Retry.TerminalFailure("HTTP 401 on token"))
+    val run = Orchestrator.processReport(new FakeReportSource(10), tokens,
+      Files.createTempDirectory("graft-token").toString, tokenTask,
+      backoffBase = 1.milli, now = fixedNow)
+    assert(run.status == Status.Failed)
+    assert(run.error_message.exists(_.contains("401")), run.error_message)
+    assert(fetches.get == 1)
+  }
+
   test("distributed run produces the same monitoring output as driver mode") {
     val outA = Files.createTempDirectory("graft-a").toString
     val outB = Files.createTempDirectory("graft-b").toString

@@ -237,6 +237,34 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("foreachBatch sink: a batch replayed after a lost commit lands its rows once") {
+    import spark.implicits._
+    val srcDir = java.nio.file.Files.createTempDirectory("graft-replay-src").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft-replay-out").toString + "/out"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-replay-ckpt").toString
+    def start() = MonitoringStream.sinkViaForeachBatch(
+      MonitoringStream.fromParquetDir(spark, srcDir), dir, ckpt)
+    val fed = Seq(
+      Seq(rr("r1", "a", Status.Success, 10, "2024-03-01 10:00:00"),
+        rr("r1", "b", Status.Success, 20, "2024-03-01 10:00:01")),
+      Seq(rr("r1", "c", Status.Failed, 0, "2024-03-01 10:00:02")))
+    val q1 = start()
+    try fed.foreach { rows =>
+      graft.run.Monitoring.appendReportRuns(rows.toDS(), srcDir)
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // the query dies after batch 1's sink ran but before its commit
+    // landed: the restart must replay batch 1 through the sink
+    val commits = new java.io.File(ckpt, "commits")
+    Seq("1", ".1.crc").foreach(f => new java.io.File(commits, f).delete())
+    assert(!new java.io.File(commits, "1").exists())
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(q2.lastProgress != null && q2.lastProgress.batchId == 1L,
+      s"the restart should have replayed batch 1: ${q2.lastProgress}")
+    assert(spark.read.parquet(dir).count() == fed.map(_.size).sum)
+  }
+
   test("restart from checkpoint resumes exactly-once (no re-processed, no lost rows)") {
     import spark.implicits._
     val srcDir = java.nio.file.Files.createTempDirectory("graft-ckpt-src").toString
