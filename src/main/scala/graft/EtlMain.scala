@@ -8,7 +8,7 @@ import scala.concurrent.ExecutionContext
 import org.apache.spark.sql.SparkSession
 
 import graft.config.ConfigTables
-import graft.ingest.{FakeReportSource, HttpReportSource, HttpTokenFetcher, TokenManager}
+import graft.ingest.{FakeReportSource, HttpReportSource, HttpTokenFetcher, ReportSource, TokenManager}
 import graft.model.{JobRun, Status}
 import graft.run.{Monitoring, Orchestrator, Secrets}
 import graft.analytics.MonitoringAnalytics
@@ -96,20 +96,8 @@ object EtlMain {
     println(s"Running from ${args.fromDate} to ${args.toDate} " +
       s"(env=${args.env}, mode=${args.mode}, source=${args.source}, out=${args.outDir})")
 
-    // --- wire client + token supply (C1/C10)
-    val (sourceFactory, tokenFactory): (() => graft.ingest.ReportSource, () => TokenManager) =
-      args.source match {
-        case "http" =>
-          val secrets = secretsProvider() // fail-fast on missing keys
-          val endpoint = ConfigTables.seedEndpoints.find(_.env == args.env)
-            .getOrElse(sys.error(s"no endpoint config for env ${args.env}"))
-          val base = args.baseUrl.getOrElse(endpoint.base_url)
-          (() => new HttpReportSource(base, endpoint.post_endpoint, endpoint.get_endpoint),
-            () => new TokenManager(() => HttpTokenFetcher.fetch(
-              secrets(Secrets.TokenUrlKey), secrets("client_id"), secrets("client_secret"))))
-        case _ =>
-          (() => new FakeReportSource(), () => new TokenManager(() => TokenManager.Token("etl-token", 3600)))
-      }
+    // --- secrets first: an http run fails fast on a missing key (C10)
+    val secrets = if (args.source == "http") secretsProvider() else Map.empty[String, String]
 
     val runId = UUID.randomUUID().toString
     val csvDir = s"${args.outDir}/csv"
@@ -119,24 +107,36 @@ object EtlMain {
     // --- config → tasks (A1–A5)
     val tasks = Orchestrator.tasksFor(spark, args.env, runId, args.fromDate, args.toDate)
     println(s"${tasks.size} reports to process")
+    val (sourceFactory, tokenFactory) = wiring(args, secrets, tasks)
 
     // --- RUNNING event (A9 append; A8 latest-wins collapses it later)
     val startEvent = JobRun(runId, args.fromDate, args.toDate,
       Timestamp.from(Instant.now()), None, Status.Running, tasks.size, 0, 0, None)
     Monitoring.appendJobEvents(Seq(startEvent).toDS(), jobDir)
 
-    // --- fan-out (E1/E3; A11–A13 in distributed mode)
-    val result = args.mode match {
-      case "distributed" =>
-        Orchestrator.runDistributed(spark, sourceFactory, tokenFactory,
-          tasks, csvDir, args.fromDate, args.toDate)
-      case _ =>
-        Orchestrator.runDriverParallel(sourceFactory(), tokenFactory(),
-          tasks, csvDir, args.fromDate, args.toDate)(ExecutionContext.global)
+    // --- fan-out (E1/E3; A11–A13 in distributed mode) and the report rows
+    // (C6/A9, one batched append). A failure here still closes the job: a
+    // terminal FAILED row carrying the error lands before it is rethrown,
+    // so no job stays RUNNING.
+    val result = try {
+      val r = args.mode match {
+        case "distributed" =>
+          Orchestrator.runDistributed(spark, sourceFactory, tokenFactory,
+            tasks, csvDir, args.fromDate, args.toDate)
+        case _ =>
+          Orchestrator.runDriverParallel(sourceFactory(), tokenFactory(),
+            tasks, csvDir, args.fromDate, args.toDate)(ExecutionContext.global)
+      }
+      Monitoring.appendReportRuns(r.reports.toDS(), reportDir)
+      r
+    } catch {
+      case e: Throwable =>
+        val failed = startEvent.copy(end_time = Some(Timestamp.from(Instant.now())),
+          status = Status.Failed, error_message = Some(String.valueOf(e.getMessage)))
+        try Monitoring.appendJobEvents(Seq(failed).toDS(), jobDir)
+        catch { case s: Throwable => e.addSuppressed(s) }
+        throw e
     }
-
-    // --- monitoring sinks (C6/A9): one batched append each
-    Monitoring.appendReportRuns(result.reports.toDS(), reportDir)
     Monitoring.appendJobEvents(Seq(result.job).toDS(), jobDir)
 
     // --- analytics (A8 + B1–B4) over what was just written
@@ -158,4 +158,25 @@ object EtlMain {
       s"(${result.job.success_count}/${result.job.total_reports} ok)")
     if (result.job.status == Status.Failed) 1 else 0
   }
+
+  /** The run's wire client and token supply (C1/C10). An http source's
+    * request timeout is the largest `timeout_sec` among `tasks`, so no
+    * call times out on the wire while its task still waits for it
+    * (`call_details` waits 60 s).
+    */
+  private[graft] def wiring(args: Args, secrets: Map[String, String],
+      tasks: Seq[Orchestrator.ReportTask]): (() => ReportSource, () => TokenManager) =
+    args.source match {
+      case "http" =>
+        val endpoint = ConfigTables.seedEndpoints.find(_.env == args.env)
+          .getOrElse(sys.error(s"no endpoint config for env ${args.env}"))
+        val base = args.baseUrl.getOrElse(endpoint.base_url)
+        // a run without tasks never calls the source
+        val timeoutSec = tasks.map(_.timeout_sec).maxOption.getOrElse(30)
+        (() => new HttpReportSource(base, endpoint.post_endpoint, endpoint.get_endpoint, timeoutSec),
+          () => new TokenManager(() => HttpTokenFetcher.fetch(
+            secrets(Secrets.TokenUrlKey), secrets("client_id"), secrets("client_secret"))))
+      case _ =>
+        (() => new FakeReportSource(), () => new TokenManager(() => TokenManager.Token("etl-token", 3600)))
+    }
 }

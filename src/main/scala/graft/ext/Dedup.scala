@@ -604,9 +604,11 @@ object Dedup {
       .orderBy(col("vec_id"))
   }
 
+  /** The persisted benchmark store ([[IndexStore]] layout). */
+  private val semContamStore = new IndexStore("buckets", "vectors", "meta")
+
   /** Persist the benchmark's decontamination index (build once, probe
-    * every crawl): versioned `v_<n>` root with the atomic CURRENT flip
-    * ([[buildMinhashIndex]] lifecycle), holding the pre-bucketed
+    * every crawl) as one [[IndexStore]] version holding the pre-bucketed
     * `(t, bench_id, bucket)` table, the benchmark `vectors` for the
     * verify stage, and a 1-row `meta`. Benchmarks are eval-set-sized, so
     * both tables stay broadcastable forever; the expensive thing a store
@@ -617,21 +619,15 @@ object Dedup {
   def buildSemContamStore(benchmark: DataFrame, dir: String,
       numPlanes: Int = 4, dim: Int = 64, numTables: Int = 4): Unit = {
     val spark = benchmark.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = Similarity.nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$n"
-    (0 until numTables).map { t =>
-      Similarity.lshBuckets(benchmark, numPlanes, dim, 42L + t)
-        .select(lit(t).as("t"), col("vec_id").as("bench_id"), col("bucket"))
-    }.reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$root/buckets")
-    benchmark.select(col("vec_id").as("bench_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$root/vectors")
-    spark.range(1).select(lit(numPlanes).cast("int").as("num_planes"),
-      lit(dim).cast("int").as("dim"), lit(numTables).cast("int").as("num_tables"))
-      .write.mode("overwrite").parquet(s"$root/meta")
-    Similarity.publishIndexVersion(fs, dir, n, Seq("buckets", "vectors", "meta"))
+    semContamStore.publish(spark, dir) { v =>
+      v.write("buckets", (0 until numTables).map { t =>
+        Similarity.lshBuckets(benchmark, numPlanes, dim, 42L + t)
+          .select(lit(t).as("t"), col("vec_id").as("bench_id"), col("bucket"))
+      }.reduce(_ unionByName _))
+      v.write("vectors", benchmark.select(col("vec_id").as("bench_id"), col("embedding")))
+      v.write("meta", spark.range(1).select(lit(numPlanes).cast("int").as("num_planes"),
+        lit(dim).cast("int").as("dim"), lit(numTables).cast("int").as("num_tables")))
+    }
   }
 
   /** Probe a corpus against the PERSISTED benchmark store — identical
@@ -642,7 +638,7 @@ object Dedup {
   def semanticContaminationFromStore(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       corpus: DataFrame, threshold: Double = 0.3): DataFrame = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     // bounded driver action: meta is one row by construction
     val meta = spark.read.parquet(s"$root/meta").first()
     semContamProbe(corpus, spark.read.parquet(s"$root/buckets"),
@@ -784,10 +780,14 @@ object Dedup {
     out
   }
 
+  /** The persisted winnowing store ([[IndexStore]] layout): `fps` and its
+    * `df` partials by batch, and the (k, w) `params`.
+    */
+  private val winnowingStore = new IndexStore("fps", "df", "params")
+
   /** Persist the winnowing fingerprint store — the containment family's
-    * fit half (the [[buildMinhashIndex]] versioned-index discipline):
-    * `(doc_id, fp)` under a `v_<n>`/CURRENT root with the (k, w)
-    * parameters travelling WITH the index, so the serve path can never
+    * fit half: `(doc_id, fp)` with the (k, w) parameters travelling WITH
+    * the index, so the serve path can never
     * fingerprint an incoming batch under different winnowing settings
     * than the store was built with.
     */
@@ -798,31 +798,24 @@ object Dedup {
     // base is one-logical-doc-per-doc_id (r11 advisor; see
     // Similarity.requireUniqueKeys for why the serve split needs this)
     Similarity.requireUniqueKeys(docs, "doc_id", "buildWinnowingIndex")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$v"
-    TextAnalysis.winnowingFingerprints(docs, k, w)
-      .write.mode("overwrite").parquet(s"$root/fps/batch=-1")
-    // the maintained (fp, df) side table (r10's self-documented gap: the
-    // serve-time rare-fp gate re-aggregated the WHOLE store per incoming
-    // batch, the one crawl-store serve that wasn't O(batch)). Computed by
-    // reading BACK the just-written fps (a cheap columnar re-read — never
-    // a corpus-sized in-memory materialization) so build stays one
-    // fingerprint pass at 100 TB.
-    writeDfPartial(spark.read.parquet(s"$root/fps/batch=-1"),
-      s"$root/df/batch=-1")
-    Seq((k, w)).toDF("k", "w")
-      .write.mode("overwrite").parquet(s"$root/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
+    winnowingStore.publish(spark, dir) { v =>
+      v.base("fps", TextAnalysis.winnowingFingerprints(docs, k, w))
+      // the maintained (fp, df) side table (r10's self-documented gap: the
+      // serve-time rare-fp gate re-aggregated the WHOLE store per incoming
+      // batch, the one crawl-store serve that wasn't O(batch)). Computed by
+      // reading BACK the just-written fps (a cheap columnar re-read — never
+      // a corpus-sized in-memory materialization) so build stays one
+      // fingerprint pass at 100 TB.
+      v.base("df", dfPartial(v.batch("fps", -1L)))
+      v.write("params", Seq((k, w)).toDF("k", "w"))
+    }
   }
 
   /** Per-fp doc counts of one batch's fingerprint rows (winnowing fps are
     * distinct per doc, so count(*) IS the doc frequency).
     */
-  private def writeDfPartial(fps: DataFrame, path: String): Unit =
+  private def dfPartial(fps: DataFrame): DataFrame =
     fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(path)
 
   /** Cross-set containment of an INCOMING batch against the persisted
     * winnowing store ([[buildWinnowingIndex]]) — the continuous-crawl
@@ -842,10 +835,9 @@ object Dedup {
     * re-aggregation of the fps tree (the r10 shape this replaced).
     */
   /** Fingerprint `newDocs` with the store's own stored (k, w) and append
-    * them as a `batch=<id>` directory — batch-owned overwrite, so an
-    * at-least-once replay with a stable caller `batchId` is idempotent
-    * (the [[appendToMinhashIndex]] contract; the df partial below lives
-    * in the same batch partition, so both writes replay together).
+    * them as one batch ([[IndexStore.append]]), replay-idempotent under a
+    * stable caller `batchId`; the df partial below lives in the same
+    * batch, so both writes replay together.
     *
     * df maintenance: the batch's partial is its own per-fp doc counts
     * MINUS the rows it displaces from the latest-wins view (docs
@@ -860,28 +852,24 @@ object Dedup {
     * cost, never a serve-time one.
     */
   def appendToWinnowingIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, newDocs: DataFrame, batchId: Option[Long] = None): Unit = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
-    val p = spark.read.parquet(s"$root/params").collect()(0)
-    val id = batchId.getOrElse(Similarity.nextBatchId(spark, s"$root/fps"))
-    TextAnalysis.winnowingFingerprints(newDocs,
-        p.getAs[Int]("k"), p.getAs[Int]("w"))
-      .write.mode("overwrite").parquet(s"$root/fps/batch=$id")
-    val fps = spark.read.parquet(s"$root/fps/batch=$id")
-    val batchDf = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-    val docIds = fps.select(col("doc_id")).distinct()
-    val prior = spark.read.parquet(s"$root/fps").filter(col("batch") < id)
-    // latest-wins of the filtered frame == filtered latest-wins (the max
-    // batch is a per-doc property), so the groupBy-max runs over the
-    // overlap set only
-    val displaced = latestFpsPerDoc(
-        prior.join(docIds, Seq("doc_id"), "left_semi"))
-      .groupBy(col("fp")).agg((count(lit(1)) * -1L).as("df"))
-    batchDf.unionByName(displaced)
-      .groupBy(col("fp")).agg(sum(col("df")).as("df"))
-      .filter(col("df") =!= 0L)
-      .write.mode("overwrite").parquet(s"$root/df/batch=$id")
-  }
+      dir: String, newDocs: DataFrame, batchId: Option[Long] = None): Unit =
+    winnowingStore.append(spark, dir, batchId) { (root, id) =>
+      val p = root.read("params").collect()(0)
+      root.land("fps", TextAnalysis.winnowingFingerprints(newDocs,
+        p.getAs[Int]("k"), p.getAs[Int]("w")), id)
+      val fps = root.batch("fps", id)
+      val docIds = fps.select(col("doc_id")).distinct()
+      val prior = root.read("fps").filter(col("batch") < id)
+      // latest-wins of the filtered frame == filtered latest-wins (the max
+      // batch is a per-doc property), so the groupBy-max runs over the
+      // overlap set only
+      val displaced = latestFpsPerDoc(
+          prior.join(docIds, Seq("doc_id"), "left_semi"))
+        .groupBy(col("fp")).agg((count(lit(1)) * -1L).as("df"))
+      root.land("df", dfPartial(fps).unionByName(displaced)
+        .groupBy(col("fp")).agg(sum(col("df")).as("df"))
+        .filter(col("df") =!= 0L), id)
+    }
 
   /** A doc's fingerprint SET spans many rows, so last-writer-wins is
     * per-doc-per-batch: keep exactly the rows of each doc's newest batch
@@ -915,7 +903,7 @@ object Dedup {
   def winnowingIndexFps(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     liveFps(spark.read.parquet(
-      s"${Similarity.resolveIndexRoot(spark, dir)}/fps"))
+      s"${IndexStore.resolve(spark, dir)}/fps"))
 
   /** The maintained store-side doc frequency per fingerprint: Σ of the
     * per-batch df partials over visible batches (see
@@ -924,7 +912,7 @@ object Dedup {
     */
   private[graft] def winnowingIndexDf(spark: org.apache.spark.sql.SparkSession,
       dir: String, excludeBatch: Option[Long] = None): DataFrame =
-    winnowingDfFromRoot(spark, Similarity.resolveIndexRoot(spark, dir),
+    winnowingDfFromRoot(spark, IndexStore.resolve(spark, dir),
       excludeBatch)
 
   private def winnowingDfFromRoot(spark: org.apache.spark.sql.SparkSession,
@@ -935,45 +923,29 @@ object Dedup {
       .filter(col("df") =!= 0L)
   }
 
-  /** Fold the append tail into a fresh single-batch version — fps
-    * last-writer-wins into `batch=-1`, the df table recomputed from the
-    * folded fps (self-healing: any drift in the additive partials is
-    * reset by construction), params carried over. Same versioned-publish
-    * protocol as [[compactMinhashIndex]]; serving before/after is
-    * byte-identical.
-    *
-    * `keepBelow`: fold ONLY batches `< keepBelow` and do NOT carry later
-    * partitions into the new version — the streaming auto-compaction
-    * contract ([[graft.streaming.StreamingCorpus.containmentIndexIngest]]
-    * compacts at the START of batch N with `keepBelow = N`): batches
-    * < N are checkpoint-committed and safe to fold, while a partial
-    * `batch=N` left by a failed delivery must NOT melt into the base
-    * (excludeBatch could no longer hide it and the replay would screen
-    * against itself); the replay simply re-appends batch N to the fresh
-    * root under the batch-owned-overwrite contract.
+  /** Fold the append tail into a fresh version ([[IndexStore.compact]]) —
+    * fps last-writer-wins into the base batch, the df table recomputed
+    * from the folded fps (self-healing: any drift in the additive
+    * partials is reset by construction), params carried over; serving
+    * before/after is byte-identical. `keepBelow` leaves the batch a
+    * failed delivery half-appended out of the fold
+    * ([[graft.streaming.StreamingCorpus.containmentIndexIngest]]
+    * compacts at the START of batch N with `keepBelow = N`): melted into
+    * the base, excludeBatch could no longer hide it and the replay would
+    * screen against itself.
     */
   def compactWinnowingIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keepBelow: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = Similarity.resolveIndexRoot(spark, dir)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$v"
-    val raw = spark.read.parquet(s"$root/fps")
-    val visible = keepBelow.fold(raw)(k => raw.filter(col("batch").cast("long") < k))
-    liveFps(visible)
-      .write.mode("overwrite").parquet(s"$newRoot/fps/batch=-1")
-    writeDfPartial(spark.read.parquet(s"$newRoot/fps/batch=-1"),
-      s"$newRoot/df/batch=-1")
-    spark.read.parquet(s"$root/params")
-      .write.mode("overwrite").parquet(s"$newRoot/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
-  }
+      dir: String, keepBelow: Option[Long] = None): Unit =
+    winnowingStore.compact(spark, dir, keepBelow) { (old, v) =>
+      v.base("fps", liveFps(old.batches("fps")))
+      v.base("df", dfPartial(v.batch("fps", -1L)))
+      v.write("params", old.read("params"))
+    }
 
   def containmentAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, incoming: DataFrame, threshold: Double = 0.8,
       maxDf: Int = 32, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val p = spark.read.parquet(s"$root/params").collect()(0)
     val (k, w) = (p.getAs[Int]("k"), p.getAs[Int]("w"))
     // excludeBatch drops a replayed append of THIS batch before the
@@ -1446,11 +1418,14 @@ object Dedup {
   // Persisted MinHash fingerprint index — incremental dedup
   // ======================================================================
 
-  /** Build a persisted MinHash fingerprint index over `docs`: the 32-column
-    * signature table lands under a fresh `v_<n>/signatures/batch=-1` and the
-    * build hyperparameters under `v_<n>/params`, then the CURRENT pointer
-    * flips — same crash-safe versioned lifecycle as the ANN indexes
-    * ([[Similarity.buildIvfIndex]]). This is the production shape of
+  /** The persisted MinHash index ([[IndexStore]] layout): `signatures` by
+    * batch and the build `params`.
+    */
+  private val minhashStore = new IndexStore("signatures", "params")
+
+  /** Build a persisted MinHash fingerprint index over `docs`: one
+    * [[IndexStore]] version holding the 32-column signature table as its
+    * base batch and the build hyperparameters. This is the production shape of
     * continuous crawl dedup: fingerprint the accepted corpus ONCE, then
     * dedup every incoming batch against the persisted fingerprints instead
     * of re-shingling 100 TB per batch.
@@ -1466,19 +1441,14 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     Similarity.requireUniqueKeys(docs, "doc_id", "buildMinhashIndex")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$v"
-    minhashSignatures(docs, numHashes, n)
-      .write.mode("overwrite").parquet(s"$root/signatures/batch=-1")
-    // params travel WITH the index: serve paths read them back instead of
-    // trusting caller arguments, so a registration edit can never band a
-    // signature table fitted with different k/n
-    Seq((numHashes, n, bands, rowsPerBand))
-      .toDF("num_hashes", "shingle_n", "bands", "rows_per_band")
-      .write.mode("overwrite").parquet(s"$root/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
+    minhashStore.publish(spark, dir) { v =>
+      v.base("signatures", minhashSignatures(docs, numHashes, n))
+      // params travel WITH the index: serve paths read them back instead of
+      // trusting caller arguments, so a registration edit can never band a
+      // signature table fitted with different k/n
+      v.write("params", Seq((numHashes, n, bands, rowsPerBand))
+        .toDF("num_hashes", "shingle_n", "bands", "rows_per_band"))
+    }
   }
 
   private[graft] def readMinhashParams(spark: org.apache.spark.sql.SparkSession,
@@ -1512,19 +1482,15 @@ object Dedup {
   }
 
   /** Fingerprint `newDocs` with the index's own stored params and append
-    * them as a `batch=<id>` directory. Each append OWNS its directory and
-    * overwrites it, so an at-least-once replay with a stable caller
-    * `batchId` (e.g. a streaming epoch) is idempotent — the same contract
-    * as [[Similarity.appendToIvfIndex]].
+    * them as one batch ([[IndexStore.append]]): a replay under a stable
+    * caller `batchId` (e.g. a streaming epoch) is idempotent.
     */
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newDocs: DataFrame, batchId: Option[Long] = None): Unit = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
-    val (numHashes, n, _, _) = readMinhashParams(spark, root)
-    val id = batchId.getOrElse(Similarity.nextBatchId(spark, s"$root/signatures"))
-    minhashSignatures(newDocs, numHashes, n)
-      .write.mode("overwrite").parquet(s"$root/signatures/batch=$id")
-  }
+      newDocs: DataFrame, batchId: Option[Long] = None): Unit =
+    minhashStore.append(spark, dir, batchId) { (root, id) =>
+      val (numHashes, n, _, _) = readMinhashParams(spark, root.path)
+      root.land("signatures", minhashSignatures(newDocs, numHashes, n), id)
+    }
 
   /** Live signature view of a persisted MinHash index (all batches,
     * last-writer-wins per doc).
@@ -1532,7 +1498,7 @@ object Dedup {
   def minhashIndexSignatures(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     latestPerDoc(spark.read.parquet(
-      s"${Similarity.resolveIndexRoot(spark, dir)}/signatures"))
+      s"${IndexStore.resolve(spark, dir)}/signatures"))
 
   /** Dedup an incoming batch against the persisted index WITHOUT touching
     * the indexed corpus text: fingerprint `newDocs` in flight, band both
@@ -1548,7 +1514,7 @@ object Dedup {
   def dedupAgainstMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDocs: DataFrame, estThreshold: Double = 0.5,
       excludeBatch: Option[Long] = None): DataFrame = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val (numHashes, n, bands, rowsPerBand) = readMinhashParams(spark, root)
     // excludeBatch: a streaming replay must not match the batch against the
     // partial signatures its own failed delivery appended (discovered
@@ -1581,27 +1547,17 @@ object Dedup {
       .orderBy(col("new_id"), col("dup_of"))
   }
 
-  /** Fold all signature batches into a fresh version's base batch (CURRENT
-    * flips atomically; readers never see a half-compacted index). Run after
-    * enough appends that small-batch file counts dominate scan setup.
-    * `keepBelow` folds only batches `< keepBelow` (the streaming
-    * auto-compaction contract — see [[compactWinnowingIndex]]).
+  /** Fold all signature batches into a fresh version's base batch
+    * ([[IndexStore.compact]]; `keepBelow` as in [[compactWinnowingIndex]]).
+    * Run after enough appends that small-batch file counts dominate scan
+    * setup.
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, keepBelow: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = Similarity.resolveIndexRoot(spark, dir)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$v"
-    val raw = spark.read.parquet(s"$root/signatures")
-    val visible = keepBelow.fold(raw)(k => raw.filter(col("batch").cast("long") < k))
-    latestPerDoc(visible)
-      .write.mode("overwrite").parquet(s"$newRoot/signatures/batch=-1")
-    spark.read.parquet(s"$root/params")
-      .write.mode("overwrite").parquet(s"$newRoot/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
-  }
+      dir: String, keepBelow: Option[Long] = None): Unit =
+    minhashStore.compact(spark, dir, keepBelow) { (old, v) =>
+      v.base("signatures", latestPerDoc(old.batches("signatures")))
+      v.write("params", old.read("params"))
+    }
 
   def semanticDedupPairs(emb: DataFrame, n: Int = 20,
       nCells: Int = 8, iters: Int = 3): DataFrame = {

@@ -1,0 +1,169 @@
+package graft.ext
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.streaming.Landing
+
+/** The one on-disk layout of the persisted indexes and models, and the
+  * only code that spells it. A store at `dir` holds:
+  *
+  *   - `dir/CURRENT`, naming the live version `v_<n>`. [[publish]] writes
+  *     a complete `v_<n>` first and flips `CURRENT` last (temp file +
+  *     rename, the closest to atomic the Hadoop FS API offers), so a crash
+  *     leaves the previous version live and a reader never pairs tables of
+  *     two versions. Without `CURRENT`, `dir` itself is the root: a store
+  *     written by the pre-versioning flat layout stays readable.
+  *   - per appendable table, one `batch=<id>` directory per writer: the
+  *     build and every compaction land the base as `batch=-1`, each append
+  *     lands `batch=<id>` through [[graft.streaming.Landing.write]]
+  *     (OVERWRITE), so an at-least-once replay under the same id rewrites
+  *     its own directory instead of appending twice. Readers see the
+  *     discovered `batch` column.
+  *
+  * A store declares its tables once, and the first one is its commit
+  * table: an append without an id takes the commit table's next free id,
+  * and an append into a commit table that holds anything but `batch=<id>`
+  * directories (a legacy pre-batch layout, which partition discovery could
+  * not read next to a batch) fails loud. A publish deletes every
+  * superseded `v_*` and every top-level table of the store's own names
+  * (the flat layout it replaces), at once: single writer, and compaction
+  * runs between serving reads, never under an in-flight scan.
+  */
+final class IndexStore(tables: String*) {
+  import IndexStore._
+
+  /** Write a complete new version with `write`, then flip `CURRENT` to it
+    * and sweep what it supersedes. Returns the new version's root.
+    */
+  def publish(spark: SparkSession, dir: String)(write: Root => Unit): String = {
+    val fs = fileSystem(spark, dir)
+    val dirPath = new Path(dir)
+    val versions = if (!fs.exists(dirPath)) Nil else fs.listStatus(dirPath).toSeq
+      .flatMap(st => idOf(st.getPath.getName, "v_"))
+    val name = s"v_${versions.foldLeft(-1L)(math.max) + 1}"
+    val root = new Root(spark, s"$dir/$name")
+    write(root)
+    val cur = new Path(dir, Current)
+    val tmp = new Path(dir, s"$Current.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(name.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(cur)) fs.delete(cur, false)
+    require(fs.rename(tmp, cur), s"failed to publish $cur -> $name")
+    fs.listStatus(dirPath).map(_.getPath).foreach { p =>
+      val n = p.getName
+      if ((n.startsWith("v_") && n != name) || tables.contains(n)) fs.delete(p, true)
+    }
+    root.path
+  }
+
+  /** Run one append against the live root as batch `batchId`, or, without
+    * one, as the commit table's next free id.
+    */
+  def append(spark: SparkSession, dir: String, batchId: Option[Long])(
+      write: (Root, Long) => Unit): Unit = {
+    val root = new Root(spark, resolve(spark, dir))
+    val ids = root.batchIds(tables.head)
+    write(root, batchId.getOrElse(ids.foldLeft(-1L)(math.max) + 1))
+  }
+
+  /** Fold the live version into a newly published one: `write(old, next)`,
+    * where `old.batches` holds only the batches below `keepBelow`. The
+    * streaming ingests compact at the start of batch N with
+    * `keepBelow = N`: batches below N are checkpoint-committed, while a
+    * partial `batch=N` left by a failed delivery stays out of the fold and
+    * its replay re-appends to the new root.
+    */
+  def compact(spark: SparkSession, dir: String, keepBelow: Option[Long] = None)(
+      write: (Root, Root) => Unit): Unit = {
+    val old = new Root(spark, resolve(spark, dir), keepBelow)
+    publish(spark, dir)(write(old, _))
+  }
+}
+
+object IndexStore {
+
+  private val Current = "CURRENT"
+
+  /** The live root of the store at `dir`: the version `CURRENT` names,
+    * else `dir` itself (a flat pre-versioning store, or a root that is
+    * already resolved).
+    */
+  def resolve(spark: SparkSession, dir: String): String =
+    published(spark, dir).getOrElse(dir)
+
+  /** The root `dir/CURRENT` names, if a version was ever published there. */
+  def published(spark: SparkSession, dir: String): Option[String] = {
+    val cur = new Path(dir, Current)
+    val fs = fileSystem(spark, dir)
+    if (!fs.exists(cur)) None
+    else {
+      val in = fs.open(cur)
+      try Some(s"$dir/${scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim}")
+      finally in.close()
+    }
+  }
+
+  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def idOf(name: String, prefix: String): Option[Long] =
+    if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption else None
+
+  /** One version root (or a flat legacy root) of a store, with its tables
+    * addressed by name.
+    */
+  final class Root private[IndexStore] (spark: SparkSession, val path: String,
+      keepBelow: Option[Long] = None) {
+
+    def apply(table: String): String = s"$path/$table"
+
+    def read(table: String): DataFrame = spark.read.parquet(this(table))
+
+    /** Batch `id` of `table`, without the `batch` column. */
+    def batch(table: String, id: Long): DataFrame =
+      spark.read.parquet(Landing.dir(this(table), id))
+
+    /** The batches of `table` a compaction folds: all of them, or those
+      * below its `keepBelow`.
+      */
+    def batches(table: String): DataFrame =
+      keepBelow.fold(read(table))(k => read(table).filter(col("batch").cast("long") < k))
+
+    /** [[batches]], or `None` when nothing was ever landed in `table`. */
+    def batchesIfAny(table: String): Option[DataFrame] =
+      if (fileSystem(spark, path).exists(new Path(this(table)))) Some(batches(table))
+      else None
+
+    /** The ids of `table`'s batch directories; fails loud on a legacy
+      * pre-batch layout.
+      */
+    def batchIds(table: String): Seq[Long] = {
+      val p = new Path(this(table))
+      val fs = fileSystem(spark, path)
+      val names = if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      val ids = names.flatMap(idOf(_, "batch="))
+      require(ids.size == names.size, s"${this(table)} uses a legacy pre-batch " +
+        "layout; rebuild the index before appending")
+      ids
+    }
+
+    /** A table without batches, replaced whole. */
+    def write(table: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(this(table))
+
+    /** Land `df` as batch `id` of `table`, replacing an earlier delivery of
+      * the same batch.
+      */
+    def land(table: String, df: DataFrame, id: Long, partitionBy: String*): Unit =
+      if (partitionBy.isEmpty) Landing.write(df, this(table), id)
+      else df.write.mode("overwrite").partitionBy(partitionBy: _*)
+        .parquet(Landing.dir(this(table), id))
+
+    /** Land `df` as the base batch of `table`. */
+    def base(table: String, df: DataFrame, partitionBy: String*): Unit =
+      land(table, df, -1L, partitionBy: _*)
+  }
+}

@@ -620,13 +620,15 @@ object Multimodal {
       .unionByName(recentLatest)
   }
 
+  /** The persisted image and audio hash stores ([[IndexStore]] layout):
+    * `hashes` by batch and the radius in `params`.
+    */
+  private val hashStore = new IndexStore("hashes", "params")
+
   /** Build a persisted perceptual-hash store over `media`: hash every
     * payload ONCE ([[imageHashes]] — real decode for images, md5 fallback
-    * for opaque bytes), land the 8-byte fingerprints under a fresh
-    * `v_<n>/hashes/batch=-1` with the radius in `v_<n>/params`, and flip
-    * the CURRENT pointer — the same crash-safe versioned lifecycle as the
-    * ANN and MinHash indexes ([[Similarity.buildIvfIndex]],
-    * [[Dedup.buildMinhashIndex]]). This is continuous image-crawl dedup:
+    * for opaque bytes), and publish the 8-byte fingerprints with the
+    * radius as one [[IndexStore]] version. This is continuous image-crawl dedup:
     * decode the accepted corpus once, then screen every incoming batch
     * against 8 B/doc fingerprints instead of re-decoding 100 TB of pixels.
     */
@@ -635,9 +637,8 @@ object Multimodal {
     writeHashStore(imageHashes(media.sparkSession, media).toDF(), dir, maxHamming)
 
   /** Shared store-build core ([[buildImageHashStore]] /
-    * [[buildAudioHashStore]]): land a (doc_id, ahash) frame under a fresh
-    * `v_<n>/hashes/batch=-1` with the radius in `v_<n>/params`, flip
-    * CURRENT.
+    * [[buildAudioHashStore]]): publish a (doc_id, ahash) frame as the base
+    * batch of `hashes`, with the radius in `params`.
     */
   private def writeHashStore(hashes: DataFrame, dir: String,
       maxHamming: Int): Unit = {
@@ -651,48 +652,40 @@ object Multimodal {
       s"4x16-bit banding is exact only for 0 <= maxHamming <= 3, got $maxHamming")
     val spark = hashes.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$v"
-    hashes.write.mode("overwrite").parquet(s"$root/hashes/batch=-1")
-    // params travel WITH the store: serve paths read the radius back
-    // instead of trusting caller arguments
-    Seq(maxHamming).toDF("max_hamming")
-      .write.mode("overwrite").parquet(s"$root/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
+    hashStore.publish(spark, dir) { v =>
+      v.base("hashes", hashes)
+      // params travel WITH the store: serve paths read the radius back
+      // instead of trusting caller arguments
+      v.write("params", Seq(maxHamming).toDF("max_hamming"))
+    }
   }
 
   private[graft] def readStoreRadius(spark: SparkSession,
       root: String): Int =
     spark.read.parquet(s"$root/params").head().getAs[Int]("max_hamming")
 
-  /** Hash `media` and append under a `batch=<id>` directory the append
-    * OWNS (overwrite) — an at-least-once replay with a stable caller
-    * `batchId` is idempotent, the shared contract of every persisted
-    * index in this library.
+  /** Hash `media` and append it as one batch ([[IndexStore.append]]) — an
+    * at-least-once replay with a stable caller `batchId` is idempotent.
     */
   def appendToImageHashStore(spark: SparkSession, dir: String,
       media: DataFrame, batchId: Option[Long] = None): Unit =
-    appendHashesToStore(spark, Similarity.resolveIndexRoot(spark, dir),
-      imageHashes(spark, media).toDF(), batchId)
+    appendHashesToStore(spark, dir, imageHashes(spark, media).toDF(), batchId)
 
-  /** Append a precomputed hash frame to an already-resolved store root —
-    * the no-re-decode half of [[appendToImageHashStore]], for callers
-    * that pinned the version and paid the decode once (streaming).
+  /** Append a precomputed hash frame to a store, by its `dir` or by an
+    * already-resolved root (which resolves to itself) — the no-re-decode
+    * half of [[appendToImageHashStore]], for callers that pinned the
+    * version and paid the decode once (streaming).
     */
   private[graft] def appendHashesToStore(spark: SparkSession, root: String,
-      hashes: DataFrame, batchId: Option[Long] = None): Unit = {
-    val id = batchId.getOrElse(Similarity.nextBatchId(spark, s"$root/hashes"))
-    hashes.write.mode("overwrite").parquet(s"$root/hashes/batch=$id")
-  }
+      hashes: DataFrame, batchId: Option[Long] = None): Unit =
+    hashStore.append(spark, root, batchId)((r, id) => r.land("hashes", hashes, id))
 
   /** Live fingerprint view of a persisted store (all batches,
     * last-writer-wins per doc).
     */
   def imageStoreHashes(spark: SparkSession, dir: String): DataFrame =
     latestHashPerDoc(spark.read.parquet(
-      s"${Similarity.resolveIndexRoot(spark, dir)}/hashes"))
+      s"${IndexStore.resolve(spark, dir)}/hashes"))
 
   /** Screen an incoming batch against the persisted store WITHOUT
     * re-decoding the accepted corpus: hash the batch in flight, band both
@@ -706,7 +699,7 @@ object Multimodal {
     */
   def dedupAgainstImageStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     probeStoreWithHashes(spark, root, readStoreRadius(spark, root),
       imageHashes(spark, media).toDF(), excludeBatch)
   }
@@ -740,8 +733,8 @@ object Multimodal {
       .orderBy(col("new_id"), col("dup_of"))
   }
 
-  /** Fold all hash batches into a fresh version's base batch (CURRENT
-    * flips atomically; readers never see a half-compacted store).
+  /** Fold all hash batches into a fresh version's base batch
+    * ([[IndexStore.compact]]).
     */
   def compactImageHashStore(spark: SparkSession, dir: String): Unit =
     compactHashStore(spark, dir)
@@ -749,18 +742,11 @@ object Multimodal {
   /** Hash-agnostic compaction core — the stored fingerprints are opaque
     * 8-byte values, so image and audio stores compact identically.
     */
-  private def compactHashStore(spark: SparkSession, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = Similarity.resolveIndexRoot(spark, dir)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$v"
-    latestHashPerDoc(spark.read.parquet(s"$root/hashes"))
-      .write.mode("overwrite").parquet(s"$newRoot/hashes/batch=-1")
-    spark.read.parquet(s"$root/params")
-      .write.mode("overwrite").parquet(s"$newRoot/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
-  }
+  private def compactHashStore(spark: SparkSession, dir: String): Unit =
+    hashStore.compact(spark, dir) { (old, v) =>
+      v.base("hashes", latestHashPerDoc(old.batches("hashes")))
+      v.write("params", old.read("params"))
+    }
 
   // ----------------------------------------------------- audio near-dup
 
@@ -843,8 +829,8 @@ object Multimodal {
 
   /** Persisted acoustic-fingerprint store: decode the accepted audio
     * corpus ONCE, screen every incoming crawl batch against 8 B/doc
-    * fingerprints — the audio twin of [[buildImageHashStore]], same
-    * versioned `v_<n>`/CURRENT lifecycle, same crash-safe publish.
+    * fingerprints — the audio twin of [[buildImageHashStore]], in the
+    * same store layout.
     */
   def buildAudioHashStore(media: DataFrame, dir: String,
       maxHamming: Int = 3): Unit =
@@ -855,13 +841,12 @@ object Multimodal {
     */
   def appendToAudioHashStore(spark: SparkSession, dir: String,
       media: DataFrame, batchId: Option[Long] = None): Unit =
-    appendHashesToStore(spark, Similarity.resolveIndexRoot(spark, dir),
-      audioHashes(spark, media).toDF(), batchId)
+    appendHashesToStore(spark, dir, audioHashes(spark, media).toDF(), batchId)
 
   /** Live fingerprint view of a persisted audio store. */
   def audioStoreHashes(spark: SparkSession, dir: String): DataFrame =
     latestHashPerDoc(spark.read.parquet(
-      s"${Similarity.resolveIndexRoot(spark, dir)}/hashes"))
+      s"${IndexStore.resolve(spark, dir)}/hashes"))
 
   /** Screen an incoming batch against the persisted audio store WITHOUT
     * re-decoding the accepted corpus — O(batch) decode plus a band-keyed
@@ -869,7 +854,7 @@ object Multimodal {
     */
   def dedupAgainstAudioStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     probeStoreWithHashes(spark, root, readStoreRadius(spark, root),
       audioHashes(spark, media).toDF(), excludeBatch)
   }
@@ -1098,11 +1083,16 @@ object Multimodal {
 
   // ------------------------------------- persisted video frame store
 
+  /** The persisted video frame store ([[IndexStore]] layout): `frames` by
+    * batch and `min_overlap` in `params`.
+    */
+  private val frameStore = new IndexStore("frames", "params")
+
   /** Build a persisted frame-hash store over `media`: decode every
-    * payload ONCE to its distinct per-frame fingerprints (8 B/frame)
-    * under `v_<n>/frames/batch=-1` with `min_overlap` in params — the
+    * payload ONCE to its distinct per-frame fingerprints (8 B/frame),
+    * published with `min_overlap` as one [[IndexStore]] version — the
     * video member of the crawl-store family (MinHash text, banded
-    * image/audio), same versioned `v_<n>`/CURRENT lifecycle. A frame
+    * image/audio). A frame
     * SET per doc (not one hash) is what makes trim/supercut containment
     * detectable at serve time.
     */
@@ -1112,39 +1102,31 @@ object Multimodal {
       s"minOverlap must be in (0, 1], got $minOverlap")
     val spark = media.sparkSession
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$v"
     // one media row per doc_id: a duplicated doc with DIFFERENT payloads
     // would union two frame sets into one base doc (r11 advisor class)
     Similarity.requireUniqueKeys(media, "doc_id", "buildVideoFrameStore")
-    videoFrameHashes(spark, media).toDF()
-      .select(col("doc_id"), col("fhash")).distinct()
-      .write.mode("overwrite").parquet(s"$root/frames/batch=-1")
-    Seq(minOverlap).toDF("min_overlap")
-      .write.mode("overwrite").parquet(s"$root/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
+    frameStore.publish(spark, dir) { v =>
+      v.base("frames", videoFrameHashes(spark, media).toDF()
+        .select(col("doc_id"), col("fhash")).distinct())
+      v.write("params", Seq(minOverlap).toDF("min_overlap"))
+    }
   }
 
   private[graft] def readStoreOverlap(spark: SparkSession, root: String): Double =
     spark.read.parquet(s"$root/params").head().getAs[Double]("min_overlap")
 
-  /** Decode `media` once and append its distinct frame hashes under a
-    * batch dir the append OWNS — idempotent under at-least-once replay
-    * with a stable `batchId`.
+  /** Decode `media` once and append its distinct frame hashes as one
+    * batch — idempotent under at-least-once replay with a stable `batchId`.
     */
   def appendToVideoFrameStore(spark: SparkSession, dir: String,
       media: DataFrame, batchId: Option[Long] = None): Unit =
-    appendFramesToStore(spark, Similarity.resolveIndexRoot(spark, dir),
+    appendFramesToStore(spark, dir,
       videoFrameHashes(spark, media).toDF()
         .select(col("doc_id"), col("fhash")).distinct(), batchId)
 
   private[graft] def appendFramesToStore(spark: SparkSession, root: String,
-      frames: DataFrame, batchId: Option[Long] = None): Unit = {
-    val id = batchId.getOrElse(Similarity.nextBatchId(spark, s"$root/frames"))
-    frames.write.mode("overwrite").parquet(s"$root/frames/batch=$id")
-  }
+      frames: DataFrame, batchId: Option[Long] = None): Unit =
+    frameStore.append(spark, root, batchId)((r, id) => r.land("frames", frames, id))
 
   /** Last-writer-wins frame SETS: a re-crawled doc's newest batch
     * replaces its whole set (frame-level merge of two crawls of one doc
@@ -1168,7 +1150,7 @@ object Multimodal {
   /** Live frame-hash view of a persisted video store. */
   def videoStoreFrames(spark: SparkSession, dir: String): DataFrame =
     latestFramesPerDoc(spark.read.parquet(
-      s"${Similarity.resolveIndexRoot(spark, dir)}/frames"))
+      s"${IndexStore.resolve(spark, dir)}/frames"))
 
   /** Screen an incoming batch against the persisted store WITHOUT
     * re-decoding the accepted corpus: decode the batch once, equi-join
@@ -1180,7 +1162,7 @@ object Multimodal {
     */
   def dedupAgainstVideoStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     probeVideoStoreWithFrames(spark, root, readStoreOverlap(spark, root),
       videoFrameHashes(spark, media).toDF()
         .select(col("doc_id"), col("fhash")).distinct(), excludeBatch)
@@ -1209,19 +1191,12 @@ object Multimodal {
       .orderBy(col("new_id"), col("dup_of"))
   }
 
-  /** Fold all frame batches into a fresh version's base (atomic CURRENT
-    * flip; readers never see a half-compacted store).
+  /** Fold all frame batches into a fresh version's base
+    * ([[IndexStore.compact]]).
     */
-  def compactVideoFrameStore(spark: SparkSession, dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = Similarity.resolveIndexRoot(spark, dir)
-    val v = Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$v"
-    latestFramesPerDoc(spark.read.parquet(s"$root/frames"))
-      .write.mode("overwrite").parquet(s"$newRoot/frames/batch=-1")
-    spark.read.parquet(s"$root/params")
-      .write.mode("overwrite").parquet(s"$newRoot/params")
-    Similarity.publishIndexVersion(fs, dir, v, legacyDirs = Seq.empty)
-  }
+  def compactVideoFrameStore(spark: SparkSession, dir: String): Unit =
+    frameStore.compact(spark, dir) { (old, v) =>
+      v.base("frames", latestFramesPerDoc(old.batches("frames")))
+      v.write("params", old.read("params"))
+    }
 }

@@ -1116,8 +1116,8 @@ object Similarity {
     emb.select(col("vec_id"), array(ys: _*).as("embedding"))
   }
 
-  /** Persist the JL-reduced corpus as a versioned serving index (the
-    * `v_<n>`/CURRENT lifecycle every index here shares): the 16-component
+  /** Persist the JL-reduced corpus as a versioned serving index
+    * ([[IndexStore]] layout): the 16-component
     * round-6 reduced vectors (128 B/vector — the thing a store actually
     * keeps) plus the full vectors for query lookup and shortlist re-rank.
     * Like int8 (and unlike IVF/PQ) there is NO frozen fit — the sign
@@ -1147,28 +1147,26 @@ object Similarity {
         " to appends, never the base build")
   }
 
+  /** The persisted JL index ([[IndexStore]] layout): the 16-d `reduced`
+    * projection the shortlist scans and the full `vectors`.
+    */
+  private val jlStore = new IndexStore("reduced", "vectors")
+
   def buildJlIndex(emb: DataFrame, dir: String): Unit = {
-    val spark = emb.sparkSession
     requireUniqueKeys(emb, "vec_id", "buildJlIndex")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$n"
-    jlReduced(emb).write.mode("overwrite").parquet(s"$root/reduced/batch=-1")
-    emb.write.mode("overwrite").parquet(s"$root/vectors/batch=-1")
-    publishIndexVersion(fs, dir, n, Seq("reduced", "vectors"))
+    jlStore.publish(emb.sparkSession, dir) { v =>
+      v.base("reduced", jlReduced(emb))
+      v.base("vectors", emb)
+    }
   }
 
-  /** Append vectors to a persisted JL index — batch=<id> + OVERWRITE
-    * (replay-idempotent, the [[appendToInt8Index]] protocol).
-    */
+  /** Append vectors to a persisted JL index as one batch ([[IndexStore]]). */
   def appendToJlIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newEmb: DataFrame, batchId: Option[Long] = None): Unit = {
-    val root = resolveIndexRoot(spark, dir)
-    val id = batchId.getOrElse(nextBatchId(spark, s"$root/reduced"))
-    jlReduced(newEmb).write.mode("overwrite").parquet(s"$root/reduced/batch=$id")
-    newEmb.write.mode("overwrite").parquet(s"$root/vectors/batch=$id")
-  }
+      newEmb: DataFrame, batchId: Option[Long] = None): Unit =
+    jlStore.append(spark, dir, batchId) { (root, id) =>
+      root.land("reduced", jlReduced(newEmb), id)
+      root.land("vectors", newEmb, id)
+    }
 
   /** [[jlShortlistTopK]] SERVED from the persisted index: the corpus-wide
     * shortlist scan reads the 128 B/vector REDUCED parquet only; full
@@ -1179,7 +1177,7 @@ object Similarity {
     */
   def jlTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 200): DataFrame = {
-    val root = resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val reduced = spark.read.parquet(s"$root/reduced")
     val vectors = spark.read.parquet(s"$root/vectors")
     val cand = bruteForceTopK(
@@ -1292,6 +1290,11 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
+  /** The persisted IVF index ([[IndexStore]] layout): `vectors`
+    * partitioned by cell under each batch, and the `centroids` side table.
+    */
+  private val ivfStore = new IndexStore("vectors", "centroids")
+
   /** Persist a k-means IVF index: the corpus PARTITIONED BY cell (so a
     * probe reads only its cells' directories — partition pruning makes
     * "touch nProbe/cells of the data" literal at the file-system level)
@@ -1301,107 +1304,15 @@ object Similarity {
     import emb.sparkSession.implicits._
     requireUniqueKeys(emb, "vec_id", "buildIvfIndex")
     val (cents, cells) = kmeansFit(emb, nCells, iters)
-    val spark = emb.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // A rebuild writes a COMPLETE new v_<n> directory and flips the
-    // CURRENT pointer to it only after both halves exist: a crash at any
-    // earlier point leaves the previous version intact and still live, and
-    // readers can never pair fresh cell assignments with stale centroids.
-    // Appended batch=N partitions of the old version are abandoned with it
-    // (their assignments were computed against the OLD centroids) — this
-    // is the compaction step the append path's scaladoc defers to.
-    val n = nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$n"
-    // the base build lands under batch=-1: every writer (base build,
-    // batch append, streaming ingest) owns exactly one batch=<id>
-    // directory, so an at-least-once replay of any one of them can
-    // OVERWRITE its own directory instead of appending duplicates.
+    // a rebuild publishes a complete new version, so readers never pair
+    // fresh cell assignments with stale centroids; the old version's
+    // appends (assigned against the OLD centroids) are retired with it.
     // Readers discover (batch, cell) as partition columns; cell pruning
     // is unaffected by the extra level.
-    emb.join(cells, Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/vectors/batch=-1")
-    cents.toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$root/centroids")
-    publishIndexVersion(fs, dir, n)
-  }
-
-  /** Resolve the live root of a versioned index: `$dir/CURRENT` names the
-    * published `v_<n>` subdirectory; absent a pointer, `dir` itself is the
-    * root (indexes written by the pre-versioning layout keep working).
-    */
-  def resolveIndexRoot(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/CURRENT")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cur)) dir
-    else {
-      val in = fs.open(cur)
-      val name = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-      s"$dir/$name"
+    ivfStore.publish(emb.sparkSession, dir) { v =>
+      v.base("vectors", emb.join(cells, Seq("vec_id")), "cell")
+      v.write("centroids", cents.toDF("cell", "centroid"))
     }
-  }
-
-  private[graft] def nextIndexVersion(fs: org.apache.hadoop.fs.FileSystem, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(path)) 0L
-    else fs.listStatus(path).iterator.map(_.getPath.getName)
-      .collect { case s if s.startsWith("v_") =>
-        scala.util.Try(s.stripPrefix("v_").toLong).toOption }
-      .flatten.foldLeft(-1L)(math.max) + 1
-  }
-
-  /** Flip `$dir/CURRENT` to `v_<n>` (write-temp + rename — the closest to
-    * atomic the Hadoop FS API offers; a reader hitting the sub-millisecond
-    * delete/rename window fails loud rather than reading a torn index),
-    * then best-effort delete superseded versions and the legacy in-place
-    * layout. Single-writer path, like [[appendToIvfIndex]].
-    */
-  private[graft] def publishIndexVersion(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, n: Long,
-      legacyDirs: Seq[String] = Seq("vectors", "centroids")): Unit = {
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/CURRENT")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/CURRENT.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"v_$n".getBytes("UTF-8")) finally out.close()
-    if (fs.exists(cur)) fs.delete(cur, false)
-    require(fs.rename(tmp, cur), s"failed to publish $dir/CURRENT -> v_$n")
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).foreach { st =>
-      val name = st.getPath.getName
-      val stale = (name.startsWith("v_") && name != s"v_$n") ||
-        legacyDirs.contains(name) // pre-versioning layout
-      if (stale) { fs.delete(st.getPath, true); () }
-    }
-  }
-
-  /** Next unused batch id under `vectorsDir` (max existing + 1; the base
-    * build is batch=-1). Single-writer maintain path — concurrent
-    * appenders need externally supplied ids.
-    */
-  private[ext] def nextBatchId(spark: org.apache.spark.sql.SparkSession,
-      vectorsDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(vectorsDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) 0L
-    else fs.listStatus(path).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") =>
-        scala.util.Try(n.stripPrefix("batch=").toLong).toOption }
-      .flatten.foldLeft(-1L)(math.max) + 1
-  }
-
-  /** An index written by the pre-batch layout has cell=K at the top
-    * level; appending batch=N next to it would give Spark's partition
-    * discovery conflicting depths and brick every read of the index —
-    * fail loud and point at the fix instead.
-    */
-  private def requireBatchLayout(spark: org.apache.spark.sql.SparkSession,
-      vectorsDir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(vectorsDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      require(!fs.listStatus(path).exists(_.getPath.getName.startsWith("cell=")),
-        s"$vectorsDir uses the legacy cell-only layout; rebuild the index " +
-          "(buildIvfIndex) before appending")
   }
 
   /** Incrementally add vectors to a persisted IVF index WITHOUT refitting:
@@ -1409,26 +1320,20 @@ object Similarity {
     * in their cells' partitions — the standard maintain path for a serving
     * index (centroid drift is handled by periodic rebuilds, not per-batch
     * refits). Probing reads the union of all batches through the same
-    * cell-partition pruning.
-    *
-    * Each append owns a `batch=<id>` directory and OVERWRITES it: with a
-    * stable caller-supplied `batchId` (e.g. the foreachBatch epoch in
-    * [[graft.streaming.StreamingCorpus.indexIngest]]) a replayed delivery
-    * rewrites its own directory instead of re-appending — idempotent under
-    * at-least-once. Without one, the next unused id is allocated (plain
-    * append semantics).
+    * cell-partition pruning. The append is one batch of the
+    * [[IndexStore]] layout: with a stable `batchId` (the foreachBatch
+    * epoch in [[graft.streaming.StreamingCorpus.indexIngest]]) a replay
+    * rewrites its own directory.
     */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       newEmb: DataFrame, batchId: Option[Long] = None): Unit = {
     import spark.implicits._
-    val root = resolveIndexRoot(spark, dir)
-    requireBatchLayout(spark, s"$root/vectors")
-    val cents = spark.read.parquet(s"$root/centroids")
-      .as[(Int, Array[Double])].collect().toSeq.sortBy(_._1)
-    val cells = kmeansAssign(newEmb, cents).select(col("vec_id"), col("cell"))
-    val id = batchId.getOrElse(nextBatchId(spark, s"$root/vectors"))
-    newEmb.join(cells, Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/vectors/batch=$id")
+    ivfStore.append(spark, dir, batchId) { (root, id) =>
+      val cents = root.read("centroids")
+        .as[(Int, Array[Double])].collect().toSeq.sortBy(_._1)
+      val cells = kmeansAssign(newEmb, cents).select(col("vec_id"), col("cell"))
+      root.land("vectors", newEmb.join(cells, Seq("vec_id")), id, "cell")
+    }
   }
 
   /** Query a persisted IVF index: rank cells by query-centroid cosine,
@@ -1437,7 +1342,7 @@ object Similarity {
     */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, nProbe: Int = 2): DataFrame = {
-    val root = resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val vectors = spark.read.parquet(s"$root/vectors")
     val centDf = spark.read.parquet(s"$root/centroids")
     val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
@@ -1479,7 +1384,7 @@ object Similarity {
     */
   def ivfDensePool(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryEvery: Int, poolK: Int = 20, nProbe: Int = 2): DataFrame = {
-    val root = resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val vectors = spark.read.parquet(s"$root/vectors")
     val centDf = spark.read.parquet(s"$root/centroids")
     val queries = vectors.filter(col("vec_id") % queryEvery === 0)
@@ -1804,6 +1709,11 @@ object Similarity {
     }
   }
 
+  /** The persisted PQ index ([[IndexStore]] layout): `codes` and `vectors`
+    * by batch, and the frozen `codebooks`.
+    */
+  private val pqStore = new IndexStore("codes", "codebooks", "vectors")
+
   /** Persist a PQ index: the codes table (vec_id + m small-int codes — the
     * m-byte index row at scale), the codebooks (m × ks × subDim doubles, a
     * tiny side table), and the raw vectors (read ONLY for per-query
@@ -1814,25 +1724,16 @@ object Similarity {
       iters: Int = 2, dim: Int = 64): Unit = {
     import emb.sparkSession.implicits._
     requireUniqueKeys(emb, "vec_id", "buildPqIndex")
-    val spark = emb.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same atomic-rebuild protocol as [[buildIvfIndex]]: a COMPLETE v_<n>
-    // directory first, CURRENT flipped last — a crash mid-rebuild leaves
-    // the previous version live, and codes can never pair with codebooks
-    // from a different fit. The base build owns batch=-1 so appends and
-    // streaming ingest OVERWRITE their own batch=<id> (replay-idempotent).
-    val n = nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$n"
-    val (books, assigned) = pqFitJoint(emb, m, ks, iters, dim)
-    pqCodesWide(assigned, m)
-      .write.mode("overwrite").parquet(s"$root/codes/batch=-1")
-    books.zipWithIndex.flatMap { case (cents, s) =>
-      cents.map { case (code, arr) => (s, code, arr) } }
-      .toDF("sub", "code", "centroid")
-      .write.mode("overwrite").parquet(s"$root/codebooks")
-    emb.write.mode("overwrite").parquet(s"$root/vectors/batch=-1")
-    publishIndexVersion(fs, dir, n, Seq("codes", "codebooks", "vectors"))
+    // one version holds codes, codebooks and vectors: codes can never pair
+    // with codebooks from a different fit
+    pqStore.publish(emb.sparkSession, dir) { v =>
+      val (books, assigned) = pqFitJoint(emb, m, ks, iters, dim)
+      v.base("codes", pqCodesWide(assigned, m))
+      v.write("codebooks", books.zipWithIndex.flatMap { case (cents, s) =>
+        cents.map { case (code, arr) => (s, code, arr) } }
+        .toDF("sub", "code", "centroid"))
+      v.base("vectors", emb)
+    }
   }
 
   /** Incrementally add vectors to a persisted PQ index WITHOUT refitting:
@@ -1844,31 +1745,25 @@ object Similarity {
     * periodic rebuilds refresh the codebooks.
     */
   def appendToPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newEmb: DataFrame, dim: Int = 64, batchId: Option[Long] = None): Unit = {
-    val root = resolveIndexRoot(spark, dir)
-    requirePqBatchLayout(spark, s"$root/codes")
-    val cb = spark.read.parquet(s"$root/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = cb.map(_._1).max + 1
-    val subDim = dim / m
-    val codes = (0 until m).map { s =>
-      val cents = cb.filter(_._1 == s)
-        .map { case (_, code, arr) => (code, arr) }.toSeq.sortBy(_._1)
-      val sub = newEmb.select(col("vec_id"),
-        slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
-      kmeansAssign(sub, cents).select(col("vec_id"), col("cell").as(s"code_$s"))
-    }.reduce(_.join(_, Seq("vec_id")))
-    // each writer owns ONE batch=<id> directory with OVERWRITE, so an
-    // at-least-once replay (foreachBatch, retried job) rewrites its own
-    // partition instead of appending duplicates — same protocol as
-    // [[appendToIvfIndex]]
-    val id = batchId.getOrElse(nextBatchId(spark, s"$root/codes"))
-    codes.write.mode("overwrite").parquet(s"$root/codes/batch=$id")
-    newEmb.write.mode("overwrite").parquet(s"$root/vectors/batch=$id")
-  }
+      newEmb: DataFrame, dim: Int = 64, batchId: Option[Long] = None): Unit =
+    pqStore.append(spark, dir, batchId) { (root, id) =>
+      val cb = root.read("codebooks").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      val m = cb.map(_._1).max + 1
+      val subDim = dim / m
+      val codes = (0 until m).map { s =>
+        val cents = cb.filter(_._1 == s)
+          .map { case (_, code, arr) => (code, arr) }.toSeq.sortBy(_._1)
+        val sub = newEmb.select(col("vec_id"),
+          slice(col("embedding"), s * subDim + 1, subDim).as("embedding"))
+        kmeansAssign(sub, cents).select(col("vec_id"), col("cell").as(s"code_$s"))
+      }.reduce(_.join(_, Seq("vec_id")))
+      root.land("codes", codes, id)
+      root.land("vectors", newEmb, id)
+    }
 
-  /** Compact a persisted IVF index: fold every `batch=<id>` partition of
-    * the live version into a single base batch of a NEW version root,
+  /** Compact a persisted IVF index: fold every batch of the live version
+    * into the base batch of a NEW version ([[IndexStore.compact]]),
     * keeping the FROZEN centroids (no refit — compaction is file
     * maintenance, not model maintenance). Two things get repaired:
     *
@@ -1879,25 +1774,16 @@ object Similarity {
     *     LAST-WRITER-WINS by batch id — until compaction both versions of
     *     an updated vector are served, after it only the newest survives.
     *
-    * The rewrite lands as a complete `v_<n>` and the CURRENT pointer
-    * flips last ([[publishIndexVersion]]) — readers never see a torn
-    * index, and a crash leaves the old version live. One shuffle on
-    * vec_id (the dedup window) + the cell-partitioned write.
+    * One shuffle on vec_id (the dedup window) + the cell-partitioned
+    * write.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepBelow: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = resolveIndexRoot(spark, dir)
-    val n = nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    latestPerVector(batchesBelow(spark.read.parquet(s"$root/vectors"), keepBelow))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$newRoot/vectors/batch=-1")
-    spark.read.parquet(s"$root/centroids")
-      .write.mode("overwrite").parquet(s"$newRoot/centroids")
-    publishIndexVersion(fs, dir, n)
-  }
+      keepBelow: Option[Long] = None): Unit =
+    ivfStore.compact(spark, dir, keepBelow) { (old, v) =>
+      v.base("vectors", latestPerVector(old.batches("vectors")).repartition(col("cell")),
+        "cell")
+      v.write("centroids", old.read("centroids"))
+    }
 
   /** PQ twin of [[compactIvfIndex]]: codes and vectors fold to one base
     * batch under a new version root; the codebooks are copied verbatim
@@ -1905,23 +1791,12 @@ object Similarity {
     * mutually consistent through the compaction).
     */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepBelow: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = resolveIndexRoot(spark, dir)
-    val n = nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    latestPerVector(batchesBelow(spark.read.parquet(s"$root/codes"), keepBelow))
-      .write.mode("overwrite").parquet(s"$newRoot/codes/batch=-1")
-    latestPerVector(batchesBelow(spark.read.parquet(s"$root/vectors"), keepBelow))
-      .write.mode("overwrite").parquet(s"$newRoot/vectors/batch=-1")
-    spark.read.parquet(s"$root/codebooks")
-      .write.mode("overwrite").parquet(s"$newRoot/codebooks")
-    // PQ legacy-dir list (matches buildPqIndex): the IVF default would
-    // leave stale top-level codes/ and codebooks/ from a pre-versioning
-    // PQ layout in place forever
-    publishIndexVersion(fs, dir, n, Seq("codes", "codebooks", "vectors"))
-  }
+      keepBelow: Option[Long] = None): Unit =
+    pqStore.compact(spark, dir, keepBelow) { (old, v) =>
+      v.base("codes", latestPerVector(old.batches("codes")))
+      v.base("vectors", latestPerVector(old.batches("vectors")))
+      v.write("codebooks", old.read("codebooks"))
+    }
 
   /** Last-writer-wins per vec_id over the discovered `batch` partition
     * column (base build = -1, appends ascend), then drop the column so
@@ -1944,22 +1819,6 @@ object Similarity {
       .unionByName(recentLatest)
   }
 
-  /** A PQ index written by the pre-batch layout has bare parquet files
-    * under codes/; appending batch=N beside them would give partition
-    * discovery a mixed layout and brick every read — fail loud instead.
-    */
-  private def requirePqBatchLayout(spark: org.apache.spark.sql.SparkSession,
-      codesDir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(codesDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      require(fs.listStatus(path).forall { st =>
-        val n = st.getPath.getName
-        n.startsWith("batch=") || n.startsWith("_") || n.startsWith(".")
-      }, s"$codesDir uses the legacy flat layout; rebuild the index " +
-        "(buildPqIndex) before appending")
-  }
-
   /** Query a persisted PQ index: the corpus-wide scan reads the CODES
     * parquet only; codebooks (driver-bounded) come back as plan literals;
     * the vectors table is touched just for the query rows and the
@@ -1971,8 +1830,8 @@ object Similarity {
     * as d bytes + one scale. Cosine against the int8 codes needs NO
     * dequantization — the per-vector scale cancels in the cosine ratio —
     * so serving scans an array<int> column and the raw vectors are read
-    * only for the shortlist re-rank. Same atomic versioned layout as the
-    * IVF/PQ builders (complete `v_<n>`, CURRENT flip, stale sweep).
+    * only for the shortlist re-rank. Stored in the [[IndexStore]] layout
+    * like the IVF/PQ indexes.
     *
     * The quantize pass is posexplode + per-vector window + ordered
     * re-collect (ONE vec_id shuffle): computing the row max inside a
@@ -1997,32 +1856,29 @@ object Similarity {
         max(col("scale")).as("scale"))
   }
 
+  /** The persisted int8 index ([[IndexStore]] layout): `codes` and
+    * `vectors`, both by batch.
+    */
+  private val int8Store = new IndexStore("codes", "vectors")
+
   def buildInt8Index(emb: DataFrame, dir: String): Unit = {
-    val spark = emb.sparkSession
     requireUniqueKeys(emb, "vec_id", "buildInt8Index")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = nextIndexVersion(fs, dir)
-    val root = s"$dir/v_$n"
-    // base build owns batch=-1, appends own batch=<id> with OVERWRITE —
-    // the replay-idempotence protocol every index here follows
-    int8Codes(emb).write.mode("overwrite").parquet(s"$root/codes/batch=-1")
-    emb.write.mode("overwrite").parquet(s"$root/vectors/batch=-1")
-    publishIndexVersion(fs, dir, n, Seq("codes", "vectors"))
+    int8Store.publish(emb.sparkSession, dir) { v =>
+      v.base("codes", int8Codes(emb))
+      v.base("vectors", emb)
+    }
   }
 
-  /** Append vectors to a persisted int8 index. Unlike IVF/PQ there is no
-    * frozen model to encode against — the scale is PER-VECTOR — so
-    * appends never drift from a stale fit; batch=<id> + OVERWRITE makes
-    * replays rewrite their own partition ([[appendToIvfIndex]] protocol).
+  /** Append vectors to a persisted int8 index as one batch. Unlike IVF/PQ
+    * there is no frozen model to encode against — the scale is PER-VECTOR —
+    * so appends never drift from a stale fit.
     */
   def appendToInt8Index(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newEmb: DataFrame, batchId: Option[Long] = None): Unit = {
-    val root = resolveIndexRoot(spark, dir)
-    val id = batchId.getOrElse(nextBatchId(spark, s"$root/codes"))
-    int8Codes(newEmb).write.mode("overwrite").parquet(s"$root/codes/batch=$id")
-    newEmb.write.mode("overwrite").parquet(s"$root/vectors/batch=$id")
-  }
+      newEmb: DataFrame, batchId: Option[Long] = None): Unit =
+    int8Store.append(spark, dir, batchId) { (root, id) =>
+      root.land("codes", int8Codes(newEmb), id)
+      root.land("vectors", newEmb, id)
+    }
 
   /** Compact a persisted int8 index: fold every batch into one base batch
     * under a NEW version root, duplicate vec_ids resolving last-writer-
@@ -2030,28 +1886,11 @@ object Similarity {
     * [[compactIvfIndex]]/[[compactPqIndex]], no model to preserve.
     */
   def compactInt8Index(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepBelow: Option[Long] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = resolveIndexRoot(spark, dir)
-    val n = nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    latestPerVector(batchesBelow(spark.read.parquet(s"$root/codes"), keepBelow))
-      .write.mode("overwrite").parquet(s"$newRoot/codes/batch=-1")
-    latestPerVector(batchesBelow(spark.read.parquet(s"$root/vectors"), keepBelow))
-      .write.mode("overwrite").parquet(s"$newRoot/vectors/batch=-1")
-    publishIndexVersion(fs, dir, n, Seq("codes", "vectors"))
-  }
-
-  /** `keepBelow` filter for streaming auto-compaction (the
-    * [[graft.ext.Dedup.compactWinnowingIndex]] contract): fold only
-    * checkpoint-committed batches `< keepBelow`, leaving a partial
-    * append by a failed delivery of the current batch out of the fold —
-    * its replay re-appends to the fresh root under the batch-owned
-    * overwrite contract.
-    */
-  private def batchesBelow(df: DataFrame, keepBelow: Option[Long]): DataFrame =
-    keepBelow.fold(df)(k => df.filter(col("batch").cast("long") < k))
+      keepBelow: Option[Long] = None): Unit =
+    int8Store.compact(spark, dir, keepBelow) { (old, v) =>
+      v.base("codes", latestPerVector(old.batches("codes")))
+      v.base("vectors", latestPerVector(old.batches("vectors")))
+    }
 
   /** Serve top-k off the persisted int8 index: approximate cosine on the
     * codes column (cast to double — the shared codegen'd [[CosineSim]]
@@ -2062,7 +1901,7 @@ object Similarity {
     */
   def int8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 50): DataFrame = {
-    val root = resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val codes = spark.read.parquet(s"$root/codes")
     val vectors = spark.read.parquet(s"$root/vectors")
     val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
@@ -2080,7 +1919,7 @@ object Similarity {
     */
   private def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, Seq[Column], Int) = {
-    val root = resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val codes = spark.read.parquet(s"$root/codes")
     val vectors = spark.read.parquet(s"$root/vectors")
     val cb = spark.read.parquet(s"$root/codebooks").collect()

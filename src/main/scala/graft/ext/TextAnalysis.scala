@@ -1737,9 +1737,7 @@ object TextAnalysis {
     * build-once/score-many lifecycle (KenLM-style): production scores a
     * continuous stream of candidate documents against a FROZEN
     * reference-corpus LM, it does not refit the LM per batch. The
-    * artifact is three parquet tables under an atomically versioned root
-    * (the [[Similarity]] index discipline — complete `v_<n>` directory,
-    * CURRENT pointer flipped last, stale versions swept):
+    * artifact is three parquet tables in one [[IndexStore]] version:
     *   - `c2`   — (sh "w1 w2", n2) distinct-bigram counts,
     *   - `ctx`  — (w1, n1) context totals,
     *   - `meta` — one row, the vocabulary size V.
@@ -1747,24 +1745,20 @@ object TextAnalysis {
     */
   def buildBigramLm(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    val c2 = graft.ext.Dedup.shinglesMultiset(docs, 2)
-      .groupBy(col("sh")).agg(count(lit(1)).as("n2"))
-    c2.write.mode("overwrite").parquet(s"$newRoot/c2")
-    spark.read.parquet(s"$newRoot/c2")
-      .select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
-      .groupBy(col("w1")).agg(sum(col("n2")).as("n1"))
-      .write.mode("overwrite").parquet(s"$newRoot/ctx")
-    docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "")
-      .agg(countDistinct(col("token")).as("v"))
-      .write.mode("overwrite").parquet(s"$newRoot/meta")
-    graft.ext.Similarity.publishIndexVersion(fs, dir, n,
-      Seq("c2", "ctx", "meta"))
+    bigramLmStore.publish(spark, dir) { v =>
+      v.write("c2", graft.ext.Dedup.shinglesMultiset(docs, 2)
+        .groupBy(col("sh")).agg(count(lit(1)).as("n2")))
+      v.write("ctx", v.read("c2")
+        .select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
+        .groupBy(col("w1")).agg(sum(col("n2")).as("n1")))
+      v.write("meta", docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
+        .filter(col("token") =!= "")
+        .agg(countDistinct(col("token")).as("v")))
+    }
   }
+
+  /** The persisted bigram LM ([[IndexStore]] layout). */
+  private val bigramLmStore = new IndexStore("c2", "ctx", "meta")
 
   /** Score documents against a PERSISTED bigram LM — identical add-0.5
     * arithmetic to [[bigramPerplexity]], so scoring a corpus against its
@@ -1781,7 +1775,7 @@ object TextAnalysis {
     */
   def perplexityFromLm(spark: org.apache.spark.sql.SparkSession, dir: String,
       docs: DataFrame): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val c2 = spark.read.parquet(s"$root/c2")
     val ctx = spark.read.parquet(s"$root/ctx")
     val vocab = spark.read.parquet(s"$root/meta")
@@ -1876,26 +1870,27 @@ object TextAnalysis {
     */
   def buildKnLm(docs: DataFrame, dir: String): Unit = {
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    graft.ext.Dedup.shinglesMultiset(docs, 2)
-      .groupBy(col("sh")).agg(count(lit(1)).as("n2"))
-      .write.mode("overwrite").parquet(s"$newRoot/c2")
-    // vocab persisted as a table (r12 judge ask #3): `v` used to be an
-    // inline countDistinct over the build corpus, which made the LM the
-    // one store that could only ever be refit from scratch — the
-    // incremental append/compact lifecycle needs the token SET to union
-    // (a one-token document grows v without contributing a bigram, so v
-    // is NOT derivable from c2)
-    docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "").distinct()
-      .write.mode("overwrite").parquet(s"$newRoot/vocab")
-    writeKnDerived(spark, newRoot)
-    graft.ext.Similarity.publishIndexVersion(fs, dir, n,
-      Seq("c2", "ctx", "cont", "vocab", "meta"))
+    knLmStore.publish(spark, dir) { v =>
+      v.write("c2", graft.ext.Dedup.shinglesMultiset(docs, 2)
+        .groupBy(col("sh")).agg(count(lit(1)).as("n2")))
+      // vocab persisted as a table (r12 judge ask #3): `v` used to be an
+      // inline countDistinct over the build corpus, which made the LM the
+      // one store that could only ever be refit from scratch — the
+      // incremental append/compact lifecycle needs the token SET to union
+      // (a one-token document grows v without contributing a bigram, so v
+      // is NOT derivable from c2)
+      v.write("vocab", docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
+        .filter(col("token") =!= "").distinct())
+      writeKnDerived(spark, v.path)
+    }
   }
+
+  /** The persisted KN LM ([[IndexStore]] layout): the frozen `c2`, `ctx`,
+    * `cont`, `vocab` and `meta`, plus the appends' `c2_delta` (the commit
+    * table) and `vocab_delta` batches.
+    */
+  private val knLmStore = new IndexStore(
+    "c2_delta", "vocab_delta", "c2", "ctx", "cont", "vocab", "meta")
 
   /** The c2-derived KN tables (ctx, cont, meta) — shared by the scratch
     * build and the compaction fold: everything but the additive bigram
@@ -1921,10 +1916,9 @@ object TextAnalysis {
   /** Incremental KN-LM maintenance (r12 judge ask #3 — the last
     * non-incremental persisted store): bigram counts are ADDITIVE, so an
     * append is one pass over the NEW documents only — partial (sh, n2)
-    * counts and the batch's distinct tokens land as `batch=<id>` delta
-    * partitions under the live root (the batch-owned-OVERWRITE protocol
-    * every other store uses: a foreachBatch replay rewrites its own
-    * partition, idempotent). The SERVE keeps reading the frozen
+    * counts and the batch's distinct tokens land as one delta batch
+    * ([[IndexStore.append]]: a foreachBatch replay rewrites its own
+    * batch, idempotent). The SERVE keeps reading the frozen
     * c2/ctx/cont/meta until a compaction folds the deltas — exactly the
     * CCNet topology: a frozen reference LM, refreshed once per crawl
     * snapshot, never mutated under readers. At 100 TB the append costs
@@ -1933,84 +1927,53 @@ object TextAnalysis {
     * was the only corpus-proportional maintenance job left.
     */
   def appendToKnLm(spark: org.apache.spark.sql.SparkSession, dir: String,
-      newDocs: DataFrame, batchId: Option[Long] = None): Unit = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
-    // auto ids derive from c2_delta and the c2_delta write goes LAST, so
-    // it is the append's COMMIT point: a crash between the two writes
-    // leaves only an orphan vocab_delta, and the retry re-allocates the
-    // SAME id (c2_delta never saw it) and overwrites the orphan — never
-    // a double-counted bigram batch. Vocab deltas are harmless to
-    // overwrite either way (the fold is a distinct union).
-    val id = batchId.getOrElse(
-      graft.ext.Similarity.nextBatchId(spark, s"$root/c2_delta"))
-    newDocs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "").distinct()
-      .write.mode("overwrite").parquet(s"$root/vocab_delta/batch=$id")
-    graft.ext.Dedup.shinglesMultiset(newDocs, 2)
-      .groupBy(col("sh")).agg(count(lit(1)).as("n2"))
-      .write.mode("overwrite").parquet(s"$root/c2_delta/batch=$id")
-  }
+      newDocs: DataFrame, batchId: Option[Long] = None): Unit =
+    // auto ids come from c2_delta (the store's commit table) and the
+    // c2_delta write goes LAST, so it is the append's COMMIT point: a
+    // crash between the two writes leaves only an orphan vocab_delta, and
+    // the retry re-allocates the SAME id (c2_delta never saw it) and
+    // overwrites the orphan — never a double-counted bigram batch. Vocab
+    // deltas are harmless to overwrite either way (the fold is a distinct
+    // union).
+    knLmStore.append(spark, dir, batchId) { (root, id) =>
+      root.land("vocab_delta", newDocs.select(explode(split(lower(col("text")), "\\s+"))
+        .as("token")).filter(col("token") =!= "").distinct(), id)
+      root.land("c2_delta", graft.ext.Dedup.shinglesMultiset(newDocs, 2)
+        .groupBy(col("sh")).agg(count(lit(1)).as("n2")), id)
+    }
 
   /** Fold the KN-LM delta tail into a fresh version: c2 = Σ(base +
     * deltas) per bigram, vocab = distinct union, ctx/cont/meta re-derive
     * from the folded c2 ([[writeKnDerived]] — self-healing by
     * construction). Counts are exact integers, so the folded store is
     * BIT-identical to a from-scratch [[buildKnLm]] over the union corpus
-    * (spec-pinned). Serving flips via the versioned CURRENT pointer,
-    * and [[graft.ext.Similarity.publishIndexVersion]] DELETES the
-    * superseded version immediately — so compaction is a maintenance
+    * (spec-pinned). [[IndexStore.publish]] DELETES the superseded
+    * version immediately — so compaction is a maintenance
     * job to run between serving reads (stop-compact-restart for a
     * stream, the multimodal lifecycle discipline), NOT concurrently
     * under an in-flight scan of the old root.
     */
   def compactKnLm(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
-    val v = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$v"
-    def withDeltas(base: DataFrame, deltaDir: String): DataFrame =
-      if (fs.exists(new org.apache.hadoop.fs.Path(deltaDir)))
-        base.unionByName(
-          spark.read.parquet(deltaDir).drop("batch"))
-      else base
-    // COMMITTED batches only (r13 advisor): c2_delta is the append's
-    // commit point, so a vocab_delta batch with no c2_delta sibling is
-    // an orphan from a crash between the two writes that was never
-    // retried — folding its tokens would grow v while c2 lacks its
-    // bigrams, breaking the rebuild-bit-identity invariant and shifting
-    // every perplexity. The fold therefore admits only vocab batches
-    // whose id exists under c2_delta (a bounded driver listing of the
-    // batch directories, never a data scan).
-    val committed: Set[Long] = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/c2_delta")
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).iterator.map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch=") =>
-          scala.util.Try(n.stripPrefix("batch=").toLong).toOption }
-        .flatten.toSet
+      dir: String): Unit =
+    knLmStore.compact(spark, dir) { (old, v) =>
+      def withDeltas(base: DataFrame, deltas: Option[DataFrame]): DataFrame =
+        deltas.fold(base)(d => base.unionByName(d.drop("batch")))
+      // COMMITTED batches only (r13 advisor): c2_delta is the append's
+      // commit point, so a vocab_delta batch with no c2_delta sibling is
+      // an orphan from a crash between the two writes that was never
+      // retried — folding its tokens would grow v while c2 lacks its
+      // bigrams, breaking the rebuild-bit-identity invariant and shifting
+      // every perplexity. The fold therefore admits only vocab batches
+      // whose id exists under c2_delta (a bounded driver listing of the
+      // batch directories, never a data scan).
+      val committed = old.batchIds("c2_delta")
+      v.write("c2", withDeltas(old.read("c2"), old.batchesIfAny("c2_delta"))
+        .groupBy(col("sh")).agg(sum(col("n2")).as("n2")))
+      val vocabDeltas = old.batchesIfAny("vocab_delta").filter(_ => committed.nonEmpty)
+        .map(_.filter(col("batch").isin(committed: _*)))
+      v.write("vocab", withDeltas(old.read("vocab"), vocabDeltas).distinct())
+      writeKnDerived(spark, v.path)
     }
-    def withCommittedDeltas(base: DataFrame, deltaDir: String): DataFrame =
-      if (committed.nonEmpty &&
-          fs.exists(new org.apache.hadoop.fs.Path(deltaDir)))
-        base.unionByName(spark.read.parquet(deltaDir)
-          .filter(col("batch").isin(committed.toSeq: _*)).drop("batch"))
-      else base
-    withDeltas(spark.read.parquet(s"$root/c2"), s"$root/c2_delta")
-      .groupBy(col("sh")).agg(sum(col("n2")).as("n2"))
-      .write.mode("overwrite").parquet(s"$newRoot/c2")
-    withCommittedDeltas(spark.read.parquet(s"$root/vocab"), s"$root/vocab_delta")
-      .distinct()
-      .write.mode("overwrite").parquet(s"$newRoot/vocab")
-    writeKnDerived(spark, newRoot)
-    // legacyDirs mirrors buildKnLm's list plus the (now folded) delta
-    // dirs: compacting a pre-versioning store (root == dir, no CURRENT)
-    // must clean the in-place tables and deltas it just superseded, or
-    // they strand at $dir as a half-migrated layout
-    graft.ext.Similarity.publishIndexVersion(fs, dir, v, legacyDirs =
-      Seq("c2", "ctx", "cont", "vocab", "meta", "c2_delta", "vocab_delta"))
-  }
 
   /** Score documents against a PERSISTED KN LM — identical arithmetic to
     * [[knPerplexity]] on in-corpus text (so the registered twin reuses
@@ -2023,7 +1986,7 @@ object TextAnalysis {
     */
   def knPerplexityFromLm(spark: org.apache.spark.sql.SparkSession,
       dir: String, docs: DataFrame, d: Double = 0.75): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val c2 = spark.read.parquet(s"$root/c2")
     val ctx = spark.read.parquet(s"$root/ctx")
     val cont = spark.read.parquet(s"$root/cont")
@@ -2218,9 +2181,8 @@ object TextAnalysis {
         round(sum(col("c") * col("lr")), 4).as("logw"))
       .orderBy(col("doc_id"))
 
-  /** Persist the DSIR log-ratio model (fit-once-score-many, the
-    * [[buildBigramLm]] lifecycle): versioned `v_<n>` root with an atomic
-    * CURRENT flip, holding the ≤`buckets`-row `lmodel` table and a 1-row
+  /** Persist the DSIR log-ratio model (fit-once-score-many) as one
+    * [[IndexStore]] version holding the ≤`buckets`-row `lmodel` table and a 1-row
     * `meta` (bucket count). The expensive corpus passes happen HERE, at
     * build time; every subsequent scoring job pays only its own feature
     * scan plus a broadcast of the tiny model.
@@ -2228,20 +2190,18 @@ object TextAnalysis {
   def buildDsirModel(raw: DataFrame, target: DataFrame, dir: String,
       buckets: Int = 64, lambda: Double = 1.0): Unit = {
     val spark = raw.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
     val rawM = hashedNgramFeatures(raw, buckets)
       .groupBy(col("b")).agg(count(lit(1)).as("cr"))
     val tgtM = hashedNgramFeatures(target, buckets)
       .groupBy(col("b")).agg(count(lit(1)).as("ct"))
-    dsirLrFromCounts(rawM, tgtM, buckets, lambda)
-      .write.mode("overwrite").parquet(s"$newRoot/lmodel")
-    spark.range(1).select(lit(buckets).cast("int").as("buckets"))
-      .write.mode("overwrite").parquet(s"$newRoot/meta")
-    graft.ext.Similarity.publishIndexVersion(fs, dir, n, Seq("lmodel", "meta"))
+    dsirStore.publish(spark, dir) { v =>
+      v.write("lmodel", dsirLrFromCounts(rawM, tgtM, buckets, lambda))
+      v.write("meta", spark.range(1).select(lit(buckets).cast("int").as("buckets")))
+    }
   }
+
+  /** The persisted DSIR model ([[IndexStore]] layout). */
+  private val dsirStore = new IndexStore("lmodel", "meta")
 
   /** Score documents against a PERSISTED DSIR model — identical
     * arithmetic to [[dsirWeights]] (shared [[dsirScore]] and a
@@ -2252,7 +2212,7 @@ object TextAnalysis {
     */
   def dsirWeightsFromModel(spark: org.apache.spark.sql.SparkSession,
       dir: String, docs: DataFrame): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val lmodel = spark.read.parquet(s"$root/lmodel")
     // bounded driver action: meta is one row by construction
     val buckets = spark.read.parquet(s"$root/meta").first().getInt(0)
@@ -2628,7 +2588,7 @@ object TextAnalysis {
   // ======================================================================
 
   /** Seed a persisted window-hash store: the distinct lowercased k-token
-    * window hashes of `docs` land under `hashes/batch=-1`, and k travels
+    * window hashes of `docs` land as the base batch of `hashes`, and k travels
     * with the store in `params` so every later probe/append uses the k
     * the store was built with (a caller-side k mismatch can never band a
     * foreign window width). Plain append-only layout — the store is a
@@ -2638,8 +2598,8 @@ object TextAnalysis {
   def buildWindowStore(docs: DataFrame, dir: String, k: Int = 10): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    tokenWindows(posTokens(docs), k).select(col("h")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/hashes/batch=-1")
+    graft.streaming.Landing.write(tokenWindows(posTokens(docs), k).select(col("h")).distinct(),
+      s"$dir/hashes", -1L)
     Seq(k).toDF("k").write.mode("overwrite").parquet(s"$dir/params")
   }
 
@@ -2647,7 +2607,7 @@ object TextAnalysis {
       dir: String): Int =
     spark.read.parquet(s"$dir/params").head().getAs[Int]("k")
 
-  /** Append `docs`' distinct window hashes under `hashes/batch=<id>` —
+  /** Append `docs`' distinct window hashes as batch `batchId` of `hashes` —
     * the "these k-grams have now been seen" record a crawl loop writes
     * after accepting a batch. Lands through [[graft.streaming.Landing]],
     * so replays with a stable id (a streaming epoch) are idempotent.
@@ -2983,26 +2943,23 @@ object TextAnalysis {
     } finally { xf.unpersist(); dl.unpersist() }
   }
 
-  /** Persist the fitted LR weight vector (fit-once-score-many, the
-    * [[buildDsirModel]] lifecycle): versioned `v_<n>` root with an
-    * atomic CURRENT flip holding the ≤`buckets`+1-row `weights` table
+  /** Persist the fitted LR weight vector (fit-once-score-many) as one
+    * [[IndexStore]] version holding the ≤`buckets`+1-row `weights` table
     * and a 1-row `meta`. The GD rounds happen HERE, at build time; every
     * scoring job pays one feature scan plus a 65-row weight read.
     */
   def buildLrModel(docs: DataFrame, dir: String, buckets: Int = 64,
       iters: Int = 3): Unit = {
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    lrModel(docs, buckets, iters)
-      .write.mode("overwrite").parquet(s"$newRoot/weights")
-    spark.range(1).select(lit(buckets).cast("int").as("buckets"),
-      lit(iters).cast("int").as("iters"))
-      .write.mode("overwrite").parquet(s"$newRoot/meta")
-    graft.ext.Similarity.publishIndexVersion(fs, dir, n, Seq("weights", "meta"))
+    lrStore.publish(spark, dir) { v =>
+      v.write("weights", lrModel(docs, buckets, iters))
+      v.write("meta", spark.range(1).select(lit(buckets).cast("int").as("buckets"),
+        lit(iters).cast("int").as("iters")))
+    }
   }
+
+  /** The persisted LR model ([[IndexStore]] layout). */
+  private val lrStore = new IndexStore("weights", "meta")
 
   /** Score documents against a PERSISTED LR model: the weights collect
     * to a ≤`buckets`+1 driver map (bounded by construction) and re-enter
@@ -3014,7 +2971,7 @@ object TextAnalysis {
     */
   def lrPredictFromModel(spark: org.apache.spark.sql.SparkSession,
       dir: String, docs: DataFrame): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = IndexStore.resolve(spark, dir)
     val w = spark.read.parquet(s"$root/weights").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // bounded driver action: meta is one row by construction
@@ -3082,36 +3039,29 @@ object TextAnalysis {
     (tf, dfreq, stats)
   }
 
-  /** The six index tables a complete BM25 version directory holds. */
-  private val bm25Tables =
-    Seq("tf", "df", "stats", "tf_top", "champ_bounds", "champ_params")
+  /** The persisted BM25 index ([[IndexStore]] layout): the appends'
+    * `tf_delta` batches (the commit table) and the six tables a complete
+    * version holds.
+    */
+  private val bm25Store = new IndexStore(
+    "tf_delta", "tf", "df", "stats", "tf_top", "champ_bounds", "champ_params")
 
   /** Persist the postings index (the offline fit half of the retrieval
     * lifecycle — at 100 TB this job runs once per corpus version and
     * every query serves against the artifact). Since r14 the index lives
-    * under the atomically versioned `v_<n>`/CURRENT layout every other
-    * persisted family uses ([[buildKnLm]] / [[graft.ext.Similarity]]),
+    * in the [[IndexStore]] layout every other persisted family uses,
     * which is what gives it an append→compact maintenance path
     * ([[appendToBm25Index]] / [[compactBm25Index]]) instead of the
-    * full-corpus refit it used to require; [[graft.ext.Similarity.resolveIndexRoot]]
-    * keeps pre-versioning flat index directories readable.
+    * full-corpus refit it used to require; [[IndexStore.resolve]] keeps
+    * pre-versioning flat index directories readable.
     */
   def buildBm25Index(docs: DataFrame, dir: String, mChampions: Int = 128,
       k1: Double = 1.2, b: Double = 0.75): Unit = {
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$n"
-    val (tf, _, _) = bm25Postings(docs)
-    tf.write.mode("overwrite").parquet(s"$newRoot/tf")
-    writeBm25Derived(spark, newRoot, mChampions, k1, b)
-    // legacyDirs includes tf_delta (r14 advisor): rebuilding over a
-    // pre-versioning flat index that has pending appendToBm25Index
-    // deltas must clean the orphaned top-level tf_delta too — the same
-    // list the compaction path passes
-    graft.ext.Similarity.publishIndexVersion(fs, dir, n,
-      legacyDirs = bm25Tables :+ "tf_delta")
+    bm25Store.publish(spark, dir) { v =>
+      v.write("tf", bm25Postings(docs)._1)
+      writeBm25Derived(spark, v.path, mChampions, k1, b)
+    }
   }
 
   /** The tf-derived index tables (df, stats, champion prefix + bounds,
@@ -3179,10 +3129,9 @@ object TextAnalysis {
   /** Incremental BM25-index maintenance (r13 judge ask #1 — the last
     * build-once persisted store): per-(doc, token) counts are ADDITIVE,
     * so an append is ONE postings pass over the NEW documents only,
-    * landing as a `batch=<id>` delta partition under the live root (the
-    * batch-owned-OVERWRITE protocol every other store uses: a replayed
-    * delivery rewrites its own partition — idempotent under
-    * at-least-once; the single delta write IS the commit point). The
+    * landing as one `tf_delta` batch ([[IndexStore.append]]: a replayed
+    * delivery rewrites its own batch — idempotent under at-least-once;
+    * the single delta write IS the commit point). The
     * SERVE keeps reading the frozen tf/df/stats/tf_top until a
     * compaction folds the tail — the crawl-snapshot topology: documents
     * arrive whole (a doc_id's text never spans batches; a re-appended
@@ -3190,13 +3139,9 @@ object TextAnalysis {
     * one shuffle over the snapshot's tokens; nothing corpus-proportional.
     */
   def appendToBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, newDocs: DataFrame, batchId: Option[Long] = None): Unit = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
-    val id = batchId.getOrElse(
-      graft.ext.Similarity.nextBatchId(spark, s"$root/tf_delta"))
-    val (tf, _, _) = bm25Postings(newDocs)
-    tf.write.mode("overwrite").parquet(s"$root/tf_delta/batch=$id")
-  }
+      dir: String, newDocs: DataFrame, batchId: Option[Long] = None): Unit =
+    bm25Store.append(spark, dir, batchId)((root, id) =>
+      root.land("tf_delta", bm25Postings(newDocs)._1, id))
 
   /** Fold the BM25 delta tail into a fresh version: tf = Σ(base +
     * deltas) per (doc, token) with first_pos = min and dl re-derived
@@ -3218,33 +3163,21 @@ object TextAnalysis {
     * reads, never under an in-flight scan of the old root.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
-    val v = graft.ext.Similarity.nextIndexVersion(fs, dir)
-    val newRoot = s"$dir/v_$v"
-    // bounded driver action: champ_params is one row by construction
-    val cp = spark.read.parquet(s"$root/champ_params").collect()(0)
-    val raw = Seq(col("doc_id"), col("token"), col("tf"), col("first_pos"))
-    val base = spark.read.parquet(s"$root/tf").select(raw: _*)
-    val deltaDir = s"$root/tf_delta"
-    val folded =
-      if (fs.exists(new org.apache.hadoop.fs.Path(deltaDir)))
-        base.unionByName(spark.read.parquet(deltaDir).select(raw: _*))
-      else base
-    val tfRaw = folded.groupBy(col("doc_id"), col("token"))
-      .agg(sum(col("tf")).as("tf"), min(col("first_pos")).as("first_pos"))
-    val dl = tfRaw.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    tfRaw.join(dl, Seq("doc_id"))
-      .write.mode("overwrite").parquet(s"$newRoot/tf")
-    writeBm25Derived(spark, newRoot, cp.getAs[Int]("m"),
-      cp.getAs[Double]("k1"), cp.getAs[Double]("b"))
-    // legacyDirs mirrors the table list plus the folded delta dir, so
-    // compacting a pre-versioning flat index cleans the in-place layout
-    graft.ext.Similarity.publishIndexVersion(fs, dir, v,
-      legacyDirs = bm25Tables :+ "tf_delta")
-  }
+      dir: String): Unit =
+    bm25Store.compact(spark, dir) { (old, v) =>
+      // bounded driver action: champ_params is one row by construction
+      val cp = old.read("champ_params").collect()(0)
+      val raw = Seq(col("doc_id"), col("token"), col("tf"), col("first_pos"))
+      val base = old.read("tf").select(raw: _*)
+      val folded = old.batchesIfAny("tf_delta")
+        .fold(base)(d => base.unionByName(d.select(raw: _*)))
+      val tfRaw = folded.groupBy(col("doc_id"), col("token"))
+        .agg(sum(col("tf")).as("tf"), min(col("first_pos")).as("first_pos"))
+      val dl = tfRaw.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+      v.write("tf", tfRaw.join(dl, Seq("doc_id")))
+      writeBm25Derived(spark, v.path, cp.getAs[Int]("m"),
+        cp.getAs[Double]("k1"), cp.getAs[Double]("b"))
+    }
 
   /** [[bm25TopKFromIndex]] against the CHAMPION prefix (`tf_top`) instead
     * of the full postings — the impact-ordered pruning twin. Semantics
@@ -3266,7 +3199,7 @@ object TextAnalysis {
       indexDir: String, queryEvery: Int = 100, queryTerms: Int = 4,
       topK: Int = 5, k1: Double = 1.2, b: Double = 0.75,
       maxQueries: Int = Int.MaxValue): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+    val root = IndexStore.resolve(spark, indexDir)
     // bounded driver action: champ_params is one row by construction
     val cp = spark.read.parquet(s"$root/champ_params").collect()(0)
     require(cp.getAs[Double]("k1") == k1 && cp.getAs[Double]("b") == b,
@@ -3316,7 +3249,7 @@ object TextAnalysis {
       indexDir: String, queryEvery: Int = 100, queryTerms: Int = 4,
       topK: Int = 5, k1: Double = 1.2, b: Double = 0.75,
       maxQueries: Int = Int.MaxValue): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+    val root = IndexStore.resolve(spark, indexDir)
     val tf = spark.read.parquet(s"$root/tf")
     val qtokens = bm25Panel(tf, queryEvery, queryTerms, maxQueries)
     val qidf = bm25Qidf(spark.read.parquet(s"$root/df"),
@@ -3401,7 +3334,7 @@ object TextAnalysis {
       indexDir: String, queryEvery: Int = 100, queryTerms: Int = 4,
       topK: Int = 5, k1: Double = 1.2, b: Double = 0.75,
       maxQueries: Int = Int.MaxValue): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+    val root = IndexStore.resolve(spark, indexDir)
     // bounded driver action: champ_params is one row by construction
     val cp = spark.read.parquet(s"$root/champ_params").collect()(0)
     require(cp.getAs[Double]("k1") == k1 && cp.getAs[Double]("b") == b,
@@ -3445,7 +3378,7 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession, indexDir: String,
       queryTokens: DataFrame, queryTerms: Int = 4, topK: Int = 5,
       k1: Double = 1.2, b: Double = 0.75): (DataFrame, DataFrame) = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+    val root = IndexStore.resolve(spark, indexDir)
     // bounded driver action: champ_params is one row by construction
     val cp = spark.read.parquet(s"$root/champ_params").collect()(0)
     require(cp.getAs[Double]("k1") == k1 && cp.getAs[Double]("b") == b,
@@ -3545,7 +3478,7 @@ object TextAnalysis {
       indexDir: String, queryEvery: Int = 100, queryTerms: Int = 4,
       topK: Int = 5, k1: Double = 1.2, b: Double = 0.75,
       maxQueries: Int = Int.MaxValue): DataFrame = {
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+    val root = IndexStore.resolve(spark, indexDir)
     bm25HitsFrom(spark.read.parquet(s"$root/tf"),
       spark.read.parquet(s"$root/df"),
       spark.read.parquet(s"$root/stats"),

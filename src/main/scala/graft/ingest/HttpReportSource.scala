@@ -32,7 +32,7 @@ final class HttpReportSource(
     baseUrl: String,
     postEndpoint: String = "/reports/generate",
     getEndpoint: String = "/reports/download",
-    timeoutSec: Int = 30) extends ReportSource {
+    private[graft] val timeoutSec: Int = 30) extends ReportSource {
 
   @transient private lazy val client: HttpClient = HttpReportSource.sharedClient(timeoutSec)
   @transient private lazy val mapper = new ObjectMapper()

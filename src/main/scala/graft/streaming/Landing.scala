@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `<zone>/batch=<id>`, written with OVERWRITE ([[write]]), so a replay
   * rewrites its own output instead of appending it a second time: the
   * landing zone is exactly-once. Readers read the zone root and see one
-  * extra discovered partition column, `batch`.
+  * extra discovered partition column, `batch`. The persisted indexes land
+  * their batches the same way ([[graft.ext.IndexStore]]).
   */
 object Landing {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ext.{Dedup, Similarity, TextAnalysis}
+import graft.ext.{Dedup, IndexStore, Similarity, TextAnalysis}
 
 /** Streaming twin of the batch training-data pipeline
   * ([[graft.ext.TrainingPipeline]]) — continuous corpus ingestion:
@@ -28,7 +28,7 @@ import graft.ext.{Dedup, Similarity, TextAnalysis}
   * output instead of appending duplicates, which makes every landing zone
   * exactly-once on top of foreachBatch's at-least-once. Sinks that append
   * to a persisted `ext` store pass the batch id to the store's own
-  * `appendTo*`, which keys its delta the same way.
+  * `appendTo*`, which lands it the same way ([[graft.ext.IndexStore]]).
   *
   * Near-dup (LSH) removal is deliberately NOT in the streaming tier: its
   * banding joins need corpus-wide signatures. Production runs
@@ -89,7 +89,7 @@ object StreamingCorpus {
     * CURRENT pointer, so a [[graft.ext.TextAnalysis.compactKnLm]]
     * refresh taken while the stream is STOPPED is picked up cleanly on
     * restart (the multimodal stop-compact-restart lifecycle discipline;
-    * publishIndexVersion deletes the superseded version immediately, so
+    * [[graft.ext.IndexStore.publish]] deletes the superseded version at once, so
     * a compaction truly concurrent with an in-flight batch's scan would
     * pull files out from under it — don't). Per-batch cost: three left
     * joins against distinct-bigram-sized tables + one broadcast meta
@@ -315,7 +315,7 @@ object StreamingCorpus {
       // on replay folds the same committed set — idempotent
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         Dedup.compactMinhashIndex(spark, indexDir, keepBelow = Some(batchId))
-      val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+      val root = IndexStore.resolve(spark, indexDir)
       val (numHashes, _, bands, rowsPerBand) = Dedup.readMinhashParams(spark, root)
       // within-batch first: larger id drops (the candidate generator
       // is the same banded LSH the index probe uses)
@@ -407,7 +407,7 @@ object StreamingCorpus {
     */
   def videoDedupIngest(media: DataFrame, storeDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = Similarity.resolveIndexRoot(media.sparkSession, storeDir)
+    val root = IndexStore.resolve(media.sparkSession, storeDir)
     val minOverlap = graft.ext.Multimodal
       .readStoreOverlap(media.sparkSession, root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
@@ -441,7 +441,7 @@ object StreamingCorpus {
     // pin the store version at stream start (the lmScoreIngest
     // discipline): a concurrent rebuild flips CURRENT for the NEXT
     // stream, never mid-stream — within-batch and probe radii can't split
-    val root = Similarity.resolveIndexRoot(media.sparkSession, storeDir)
+    val root = IndexStore.resolve(media.sparkSession, storeDir)
     val radius = graft.ext.Multimodal
       .readStoreRadius(media.sparkSession, root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
@@ -641,7 +641,7 @@ object StreamingCorpus {
     // pin the version at stream start: a versioned root carries no
     // CURRENT pointer inside it, so per-batch resolution is a no-op on
     // the pinned path and a concurrent rebuild cannot flip it mid-stream
-    val root = graft.ext.Similarity.resolveIndexRoot(docs.sparkSession, lmDir)
+    val root = IndexStore.resolve(docs.sparkSession, lmDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.perplexityFromLm(batch.sparkSession, root,
         batch.drop("event_time")), outDir, batchId)
@@ -677,7 +677,7 @@ object StreamingCorpus {
     */
   def dsirScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = graft.ext.Similarity.resolveIndexRoot(docs.sparkSession, modelDir)
+    val root = IndexStore.resolve(docs.sparkSession, modelDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.dsirWeightsFromModel(batch.sparkSession, root,
         batch.drop("event_time")), outDir, batchId)
@@ -866,7 +866,7 @@ object StreamingCorpus {
   def semanticDecontaminateIngest(emb: DataFrame, storeDir: String,
       outDir: String, checkpointDir: String,
       threshold: Double = 0.3): StreamingQuery = {
-    val root = graft.ext.Similarity.resolveIndexRoot(emb.sparkSession, storeDir)
+    val root = IndexStore.resolve(emb.sparkSession, storeDir)
     Landing.eachBatch(emb, checkpointDir) { (batch, batchId, _) =>
       Landing.write(Dedup.semanticContaminationFromStore(batch.sparkSession,
         root, batch, threshold), outDir, batchId)
@@ -893,7 +893,7 @@ object StreamingCorpus {
     */
   def lrScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = graft.ext.Similarity.resolveIndexRoot(docs.sparkSession, modelDir)
+    val root = IndexStore.resolve(docs.sparkSession, modelDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.lrPredictFromModel(batch.sparkSession, root,
         batch.drop("event_time")), outDir, batchId)
@@ -1350,39 +1350,28 @@ object StreamingCorpus {
   /** Periodic compaction of [[manifestIngest]]'s landing zone — the
     * maintenance pass the live view's `n_files` counts are the signal
     * for: fold EVERY landed batch into one canonical date store (one
-    * file per day, fresh manifest) under a versioned root with an atomic
-    * `CURRENT` flip — the same `v_<n>`/CURRENT lifecycle every persisted
-    * ANN index in this engine uses, so a reader mid-compaction serves
+    * file per day, fresh manifest) published as a new version of
+    * `outDir/compact` ([[graft.ext.IndexStore.publish]], the layout of every
+    * persisted index in this engine), so a reader mid-compaction serves
     * either the complete old version or the complete new one, never a
     * mix. The landing zone itself is untouched (it remains the replay
     * authority); batches landing AFTER a compaction are visible in the
     * live [[manifestView]] and get folded by the next compaction pass.
     */
-  def manifestCompact(spark: SparkSession, outDir: String): String = {
-    val croot = s"$outDir/compact"
-    val fs = new org.apache.hadoop.fs.Path(croot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = Similarity.nextIndexVersion(fs, croot)
-    val newRoot = s"$croot/v_$n"
-    graft.operators.ScaleOps.writeDateStoreWithManifest(
-      spark.read.option("basePath", s"$outDir/data")
-        .parquet(s"$outDir/data").drop("batch", "p_date"), newRoot)
-    Similarity.publishIndexVersion(fs, croot, n, legacyDirs = Seq.empty)
-    newRoot
-  }
+  def manifestCompact(spark: SparkSession, outDir: String): String =
+    new IndexStore().publish(spark, s"$outDir/compact") { v =>
+      graft.operators.ScaleOps.writeDateStoreWithManifest(
+        spark.read.option("basePath", s"$outDir/data")
+          .parquet(s"$outDir/data").drop("batch", "p_date"), v.path)
+    }
 
   /** The published compacted store, if any — a plain date store a reader
     * serves through the batch operators directly
     * ([[graft.operators.ScaleOps.manifestSummary]] /
     * [[graft.operators.ScaleOps.manifestPrunedRead]]).
     */
-  def manifestCompacted(spark: SparkSession, outDir: String): Option[String] = {
-    val croot = s"$outDir/compact"
-    val fs = new org.apache.hadoop.fs.Path(croot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$croot/CURRENT"))) None
-    else Some(Similarity.resolveIndexRoot(spark, croot))
-  }
+  def manifestCompacted(spark: SparkSession, outDir: String): Option[String] =
+    IndexStore.published(spark, s"$outDir/compact")
 
   /** Manifest-pruned read over the STREAMED store: survivors are found in
     * the landed stats rows (each resolves to its absolute file via the

@@ -137,6 +137,28 @@ class EtlMainSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop(0)
   }
 
+  test("an http run's wire timeout is its tasks' largest timeout_sec") {
+    val tasks = graft.run.Orchestrator.tasksFor(spark, "prod", "run-t", "2024-03-01", "2024-03-02")
+    assert(tasks.exists(t => t.report_name == "call_details" && t.timeout_sec == 60))
+    val (source, _) = EtlMain.wiring(EtlMain.Args("2024-03-01", "2024-03-02", "prod",
+      "unused", "driver", "http", Some("http://127.0.0.1:1")), Map.empty, tasks)
+    assert(source().asInstanceOf[graft.ingest.HttpReportSource].timeoutSec == 60)
+  }
+
+  test("a failure after the RUNNING event still lands a terminal FAILED job row") {
+    val out = java.nio.file.Files.createTempDirectory("graft-etl-fail").toString
+    // a regular file where the report store's directory goes: the report
+    // append throws after the fan-out
+    assert(new java.io.File(s"$out/report_monitoring").createNewFile())
+    val e = intercept[Exception](EtlMain.run(spark, EtlMain.Args(
+      "2024-03-01", "2024-03-02", "prod", out, "driver", "fake")))
+    val job = graft.run.Monitoring.latestJobState(
+      spark.read.parquet(s"$out/job_monitoring")).collect()
+    assert(job.length == 1)
+    assert(job.head.getAs[String]("status") == "FAILED")
+    assert(job.head.getAs[String]("error_message") == String.valueOf(e.getMessage))
+  }
+
   test("end-to-end distributed run matches driver-mode outcomes") {
     val out = java.nio.file.Files.createTempDirectory("graft-etl-spec-d").toString
     val rc = EtlMain.run(spark, EtlMain.Args(

@@ -903,7 +903,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // appended vector keeps serving
     Similarity.compactInt8Index(spark, dir)
     spark.catalog.clearCache()
-    val root2 = Similarity.resolveIndexRoot(spark, dir)
+    val root2 = graft.ext.IndexStore.resolve(spark, dir)
     val batches = new java.io.File(s"$root2/codes").listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).toSet
     assert(batches == Set("batch=-1"), s"compaction should fold to one base: $batches")
@@ -911,9 +911,9 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("rank") === 1).collect()(0).getLong(1)
     assert(afterCompact == 700001L)
     // rebuild lands as a new version, stale root swept
-    val root1 = Similarity.resolveIndexRoot(spark, dir)
+    val root1 = graft.ext.IndexStore.resolve(spark, dir)
     Similarity.buildInt8Index(emb, dir)
-    val root3 = Similarity.resolveIndexRoot(spark, dir)
+    val root3 = graft.ext.IndexStore.resolve(spark, dir)
     def ver(r: String) = r.split("/v_").last.toLong
     assert(ver(root3) == ver(root1) + 1 && !new java.io.File(root1).exists())
     spark.catalog.clearCache()
@@ -1264,7 +1264,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an unseen context, so each smoothed logp is -ln(0.5/(0.5·V)) =
     // ln(V): finite, and exactly computable from the persisted V
     val v = spark.read.parquet(
-      s"${graft.ext.Similarity.resolveIndexRoot(spark, dir)}/meta")
+      s"${graft.ext.IndexStore.resolve(spark, dir)}/meta")
       .collect()(0).getLong(0)
     val held = Seq((900001L, "zzqx1 zzqx2 zzqx3 zzqx4")).toDF("doc_id", "text")
     val scored = graft.ext.TextAnalysis.perplexityFromLm(spark, dir, held).collect()(0)
@@ -1273,9 +1273,9 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(scored.getDouble(2) - expected) < 2e-4,
       s"unseen-token surprisal ${scored.getDouble(2)} should be ~ln(V)=$expected")
     // a rebuild lands as a NEW version, the old one is swept
-    val root1 = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root1 = graft.ext.IndexStore.resolve(spark, dir)
     graft.ext.TextAnalysis.buildBigramLm(docs, dir)
-    val root2 = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root2 = graft.ext.IndexStore.resolve(spark, dir)
     def ver(r: String) = r.split("/v_").last.toLong
     assert(ver(root2) == ver(root1) + 1, s"$root1 -> $root2")
     assert(!new java.io.File(root1).exists(), s"stale $root1 not swept")
@@ -1815,11 +1815,11 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     val preTop = Similarity.ivfTopKFromIndex(spark, dir, Seq(0L), 10, nProbe = 8)
       .filter(col("rank") === 1).collect()(0).getAs[Long]("vec_id")
     assert(preTop == plantedId, "stale version still served before compaction")
-    val centsPre = spark.read.parquet(s"${Similarity.resolveIndexRoot(spark, dir)}/centroids")
+    val centsPre = spark.read.parquet(s"${graft.ext.IndexStore.resolve(spark, dir)}/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSet
     spark.catalog.clearCache()
     Similarity.compactIvfIndex(spark, dir)
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batches = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/vectors"))
@@ -1853,7 +1853,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.appendToPqIndex(spark, dir, planted, batchId = Some(3L))
     spark.catalog.clearCache()
     Similarity.compactPqIndex(spark, dir)
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("codes", "vectors").foreach { sub =>
@@ -1882,7 +1882,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // write must overwrite the first, not duplicate the vector
     Similarity.appendToPqIndex(spark, dir, planted, batchId = Some(7L))
     Similarity.appendToPqIndex(spark, dir, planted, batchId = Some(7L))
-    val root0 = Similarity.resolveIndexRoot(spark, dir)
+    val root0 = graft.ext.IndexStore.resolve(spark, dir)
     val dup = spark.read.parquet(s"$root0/vectors")
       .filter(col("vec_id") === plantedId).count()
     assert(dup == 1L, s"replayed append duplicated the vector: $dup copies")
@@ -1892,7 +1892,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a rebuild publishes a NEW version and retires the old one (with its
     // appended batches — their codes came from the superseded codebooks)
     Similarity.buildPqIndex(emb, dir, m = 8, ks = 16, iters = 1)
-    val root1 = Similarity.resolveIndexRoot(spark, dir)
+    val root1 = graft.ext.IndexStore.resolve(spark, dir)
     assert(root1 != root0, "rebuild must publish a fresh version root")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2738,7 +2738,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     val preCompact = Dedup.dedupAgainstMinhashIndex(spark, dir, probe)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
     Dedup.compactMinhashIndex(spark, dir)
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     val batches = new java.io.File(s"$root/signatures").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
     assert(batches == Set("batch=-1"), s"compaction should fold to one base: $batches")
@@ -3481,7 +3481,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // writes (vocab landed, c2 — the commit point — did not) by deleting
     // the c2 side; the auto-id retry must re-allocate the SAME id (ids
     // derive from c2_delta) and overwrite the orphan, never double-count
-    val incRoot0 = Similarity.resolveIndexRoot(spark, inc)
+    val incRoot0 = graft.ext.IndexStore.resolve(spark, inc)
     val fs0 = new org.apache.hadoop.fs.Path(inc).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs0.delete(new org.apache.hadoop.fs.Path(s"$incRoot0/c2_delta/batch=0"), true)
@@ -3495,8 +3495,8 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // by table (counts are exact integers; order-free comparison)
     val scratch = java.nio.file.Files.createTempDirectory("graft-kn-scr").toString
     TextAnalysis.buildKnLm(snapA.unionByName(snapB), scratch)
-    val incRoot = Similarity.resolveIndexRoot(spark, inc)
-    val scrRoot = Similarity.resolveIndexRoot(spark, scratch)
+    val incRoot = graft.ext.IndexStore.resolve(spark, inc)
+    val scrRoot = graft.ext.IndexStore.resolve(spark, scratch)
     assert(incRoot.endsWith("v_1"), incRoot) // compaction advanced the version
     for (t <- Seq("c2", "ctx", "cont", "vocab", "meta")) {
       def rows(r: String) = spark.read.parquet(s"$r/$t")
@@ -3507,7 +3507,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(serve(inc) == serve(scratch))
     // a delta-free compaction is a pure version fold: identical tables
     TextAnalysis.compactKnLm(spark, inc)
-    val r2 = Similarity.resolveIndexRoot(spark, inc)
+    val r2 = graft.ext.IndexStore.resolve(spark, inc)
     assert(r2.endsWith("v_2"), r2)
     assert(serve(inc) == serve(scratch))
   }
@@ -3526,7 +3526,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // crash between batch 1's two writes: vocab_delta landed, c2_delta
     // (the commit point) did not — and NO retry happens before the
     // compaction. The orphan's tokens must not inflate v.
-    val root0 = Similarity.resolveIndexRoot(spark, inc)
+    val root0 = graft.ext.IndexStore.resolve(spark, inc)
     val fs = new org.apache.hadoop.fs.Path(inc).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$root0/c2_delta/batch=1"), true)
@@ -3534,8 +3534,8 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // folded store == rebuild over the COMMITTED corpus only (A ∪ B)
     val scratch = java.nio.file.Files.createTempDirectory("graft-kn-orph-scr").toString
     TextAnalysis.buildKnLm(snapA.unionByName(snapB), scratch)
-    val incRoot = Similarity.resolveIndexRoot(spark, inc)
-    val scrRoot = Similarity.resolveIndexRoot(spark, scratch)
+    val incRoot = graft.ext.IndexStore.resolve(spark, inc)
+    val scrRoot = graft.ext.IndexStore.resolve(spark, scratch)
     for (t <- Seq("c2", "ctx", "cont", "vocab", "meta")) {
       def rows(r: String) = spark.read.parquet(s"$r/$t")
         .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
@@ -3570,8 +3570,8 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     // bit-identical inputs)
     val scratch = java.nio.file.Files.createTempDirectory("graft-bm25-scr").toString
     TextAnalysis.buildBm25Index(snapA.unionByName(snapB), scratch, mChampions = 8)
-    val incRoot = Similarity.resolveIndexRoot(spark, dir)
-    val scrRoot = Similarity.resolveIndexRoot(spark, scratch)
+    val incRoot = graft.ext.IndexStore.resolve(spark, dir)
+    val scrRoot = graft.ext.IndexStore.resolve(spark, scratch)
     assert(incRoot.endsWith("v_1"), incRoot) // compaction advanced the version
     for (t <- Seq("tf", "df", "stats", "tf_top", "champ_bounds", "champ_params")) {
       def rows(r: String) = spark.read.parquet(s"$r/$t")
@@ -3585,7 +3585,7 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(champServe(dir) == champServe(scratch))
     // a delta-free compaction is a pure version fold: identical serve
     TextAnalysis.compactBm25Index(spark, dir)
-    assert(Similarity.resolveIndexRoot(spark, dir).endsWith("v_2"))
+    assert(graft.ext.IndexStore.resolve(spark, dir).endsWith("v_2"))
     assert(serve(dir) == serve(scratch))
   }
 

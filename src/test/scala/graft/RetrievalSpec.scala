@@ -115,7 +115,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Queries.table(spark, sf, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft-bm25-champ").toString
     TextAnalysis.buildBm25Index(docs, dir, mChampions = 64)
-    val root = Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     // the prefix must actually engage: common tokens carry more postings
     // than the champion budget at this corpus size
     val fullN = spark.read.parquet(s"$root/tf").count()
@@ -169,7 +169,7 @@ class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
     TextAnalysis.buildBm25Index(docs, dir, mChampions = 16)
     // fillers pruned (df 300 > 16), group/uniq tokens intact (df <= 16)
     val champCounts = spark.read.parquet(
-        s"${Similarity.resolveIndexRoot(spark, dir)}/tf_top")
+        s"${graft.ext.IndexStore.resolve(spark, dir)}/tf_top")
       .groupBy("token").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(champCounts("f0") == 16L && champCounts("g0") == 10L)

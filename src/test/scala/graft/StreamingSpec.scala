@@ -454,7 +454,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // re-resolution discipline); content is identical (pure version
       // fold), so batch-boundary invariance still pins the rows
       graft.ext.TextAnalysis.compactBm25Index(spark, idxDir)
-      assert(graft.ext.Similarity.resolveIndexRoot(spark, idxDir).endsWith("v_1"))
+      assert(graft.ext.IndexStore.resolve(spark, idxDir).endsWith("v_1"))
       mem.addData(c3.toSeq: _*); q.processAllAvailable()
     } finally q.stop()
     def key(r: org.apache.spark.sql.Row) =
@@ -515,8 +515,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       mkDocs(0 until 40).toDF("doc_id", "text"), scratch, mChampions = 8)
     def rows(root: String, t: String) = spark.read.parquet(s"$root/$t")
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
-    val incRoot = graft.ext.Similarity.resolveIndexRoot(spark, idxDir)
-    val scrRoot = graft.ext.Similarity.resolveIndexRoot(spark, scratch)
+    val incRoot = graft.ext.IndexStore.resolve(spark, idxDir)
+    val scrRoot = graft.ext.IndexStore.resolve(spark, scratch)
     for (t <- Seq("tf", "df", "stats", "tf_top", "champ_bounds", "champ_params"))
       assert(rows(incRoot, t) == rows(scrRoot, t), s"table $t diverged")
   }
@@ -565,7 +565,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // v_0 is deleted; the fold is content-identical, so the serve's
       // next batch must re-resolve CURRENT and return the SAME hits
       graft.ext.TextAnalysis.compactBm25Index(spark, idxDir)
-      assert(graft.ext.Similarity.resolveIndexRoot(spark, idxDir).endsWith("v_1"))
+      assert(graft.ext.IndexStore.resolve(spark, idxDir).endsWith("v_1"))
       memS.addData(queryDocs: _*); serve.processAllAvailable()
       assert(hitsOfBatch(1) == r0,
         "hit identity broke across the delta-free CURRENT flip")
@@ -578,7 +578,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       // second compaction folds the delta (v_2 = union corpus), still
       // with both streams up; the next serve batch scores the union
       graft.ext.TextAnalysis.compactBm25Index(spark, idxDir)
-      assert(graft.ext.Similarity.resolveIndexRoot(spark, idxDir).endsWith("v_2"))
+      assert(graft.ext.IndexStore.resolve(spark, idxDir).endsWith("v_2"))
       memS.addData(queryDocs: _*); serve.processAllAvailable()
       val r3 = hitsOfBatch(3)
       // batch twin: the certified serve for the same query panel over a
@@ -685,7 +685,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       mem.addData((220002L, q0.map(x => x + 2e-6f)))
       q.processAllAvailable()
     } finally q.stop()
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     assert(root.endsWith("/v_1"), s"expected the compacted v_1, got $root")
     val batches = spark.read.parquet(s"$root/vectors")
       .select("batch").distinct().collect()
@@ -751,7 +751,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq((500001L, q0.map(_ + 1e-6f))).toDF("vec_id", "embedding")
       .write.mode("append").parquet(srcDir)
     val q2 = start(); q2.processAllAvailable(); q2.stop()
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     val streamed = spark.read.parquet(s"$root/vectors")
       .filter(col("vec_id") >= 500000L)
       .groupBy(col("vec_id")).count().collect()
@@ -1143,7 +1143,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the store folded: current version carries ONLY the compacted base
     // plus batch 1's append
     // versions start at v_0 (the build); the batch-1 compaction flips to v_1
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, dir)
+    val root = graft.ext.IndexStore.resolve(spark, dir)
     assert(root.endsWith("/v_1"), s"expected the compacted v_1, got $root")
     val batches = spark.read.parquet(s"$root/fps")
       .select("batch").distinct().collect()
@@ -1756,7 +1756,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("batch").cast("long"), col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((0L, 1000003L), (1L, 1000013L)), s"survivor set wrong: $out")
-    val root = graft.ext.Similarity.resolveIndexRoot(spark, indexDir)
+    val root = graft.ext.IndexStore.resolve(spark, indexDir)
     assert(root.endsWith("/v_1"), s"expected the compacted v_1, got $root")
     val batches = spark.read.parquet(s"$root/signatures")
       .select("batch").distinct().collect()
@@ -2057,7 +2057,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val f6 = frame((_, y) => if (y % 2 == 0) 0 else 255)
     def hashProbe(dir: String, media: org.apache.spark.sql.DataFrame,
         audio: Boolean): Set[Long] = {
-      val root = Similarity.resolveIndexRoot(spark, dir)
+      val root = graft.ext.IndexStore.resolve(spark, dir)
       val radius = Multimodal.readStoreRadius(spark, root)
       val h = if (audio) Multimodal.audioHashes(spark, media).toDF()
               else Multimodal.imageHashes(spark, media).toDF()
@@ -2065,7 +2065,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select("new_id").collect().map(_.getLong(0)).toSet
     }
     def videoProbe(dir: String, media: org.apache.spark.sql.DataFrame): Set[Long] = {
-      val root = Similarity.resolveIndexRoot(spark, dir)
+      val root = graft.ext.IndexStore.resolve(spark, dir)
       val ov = Multimodal.readStoreOverlap(spark, root)
       val fh = Multimodal.videoFrameHashes(spark, media).toDF()
         .select(col("doc_id"), col("fhash")).distinct()
@@ -2125,7 +2125,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         new org.apache.hadoop.fs.Path(twinDir),
         false, true, hconf)
       fam.compact(storeDir)
-      val newRoot = Similarity.resolveIndexRoot(spark, storeDir)
+      val newRoot = graft.ext.IndexStore.resolve(spark, storeDir)
       assert(newRoot.endsWith("v_1"), s"${fam.name}: $newRoot")
       // base re-bounded: every data dir of the fresh version holds ONLY
       // the folded batch=-1
