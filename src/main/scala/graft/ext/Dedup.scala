@@ -638,11 +638,10 @@ object Dedup {
   def semanticContaminationFromStore(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       corpus: DataFrame, threshold: Double = 0.3): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
+    val root = IndexStore.open(spark, dir)
     // bounded driver action: meta is one row by construction
-    val meta = spark.read.parquet(s"$root/meta").first()
-    semContamProbe(corpus, spark.read.parquet(s"$root/buckets"),
-      spark.read.parquet(s"$root/vectors"), threshold,
+    val meta = root.read("meta").first()
+    semContamProbe(corpus, root.read("buckets"), root.read("vectors"), threshold,
       meta.getInt(0), meta.getInt(1), meta.getInt(2))
   }
 
@@ -806,7 +805,7 @@ object Dedup {
       // reading BACK the just-written fps (a cheap columnar re-read — never
       // a corpus-sized in-memory materialization) so build stays one
       // fingerprint pass at 100 TB.
-      v.base("df", dfPartial(v.batch("fps", -1L)))
+      v.base("df", dfPartial(v.batches("fps")))
       v.write("params", Seq((k, w)).toDF("k", "w"))
     }
   }
@@ -858,52 +857,22 @@ object Dedup {
       root.land("fps", TextAnalysis.winnowingFingerprints(newDocs,
         p.getAs[Int]("k"), p.getAs[Int]("w")), id)
       val fps = root.batch("fps", id)
-      val docIds = fps.select(col("doc_id")).distinct()
-      val prior = root.read("fps").filter(col("batch") < id)
-      // latest-wins of the filtered frame == filtered latest-wins (the max
-      // batch is a per-doc property), so the groupBy-max runs over the
-      // overlap set only
-      val displaced = latestFpsPerDoc(
-          prior.join(docIds, Seq("doc_id"), "left_semi"))
-        .groupBy(col("fp")).agg((count(lit(1)) * -1L).as("df"))
+      val displaced = root.below(Some(id)).live("fps", "doc_id")
+        .join(fps.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+        .groupBy(col("fp")).agg((-count(lit(1))).as("df"))
       root.land("df", dfPartial(fps).unionByName(displaced)
         .groupBy(col("fp")).agg(sum(col("df")).as("df"))
         .filter(col("df") =!= 0L), id)
     }
 
-  /** A doc's fingerprint SET spans many rows, so last-writer-wins is
-    * per-doc-per-batch: keep exactly the rows of each doc's newest batch
-    * (a re-fingerprinted doc must serve its new set, never a union).
-    */
-  private def latestFpsPerDoc(df: DataFrame): DataFrame = {
-    val mx = df.groupBy(col("doc_id")).agg(max(col("batch")).as("batch"))
-    df.join(mx, Seq("doc_id", "batch")).drop("batch")
-  }
-
-  /** Latest-wins over the base/append split: the compacted base
-    * (`batch = -1`) is already one-set-per-doc, so only POST-COMPACTION
-    * appends pay the groupBy-max reconciliation, and the base side joins
-    * against just the recent doc set (an anti-join AQE broadcasts when
-    * the append tail is small — the normal state right after a compact)
-    * instead of a full-store shuffle — serve scans base + recent
-    * reconciliation only.
-    */
-  private def liveFps(raw: DataFrame): DataFrame = {
-    val recent = raw.filter(col("batch") =!= -1L)
-    val base = raw.filter(col("batch") === -1L).drop("batch")
-    val recentLatest = latestFpsPerDoc(recent)
-    base.join(recentLatest.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .unionByName(recentLatest)
-  }
-
-  /** Live fingerprint view of a persisted winnowing store (all batches,
-    * last-writer-wins per doc).
+  /** Live fingerprint view of a persisted winnowing store: a doc's
+    * fingerprint SET spans many rows, so last-writer-wins serves exactly
+    * the rows of each doc's newest batch ([[IndexStore.Root.live]]) — a
+    * re-fingerprinted doc serves its new set, never a union.
     */
   def winnowingIndexFps(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    liveFps(spark.read.parquet(
-      s"${IndexStore.resolve(spark, dir)}/fps"))
+    IndexStore.open(spark, dir).live("fps", "doc_id")
 
   /** The maintained store-side doc frequency per fingerprint: Σ of the
     * per-batch df partials over visible batches (see
@@ -912,16 +881,11 @@ object Dedup {
     */
   private[graft] def winnowingIndexDf(spark: org.apache.spark.sql.SparkSession,
       dir: String, excludeBatch: Option[Long] = None): DataFrame =
-    winnowingDfFromRoot(spark, IndexStore.resolve(spark, dir),
-      excludeBatch)
+    winnowingDf(IndexStore.open(spark, dir, excludeBatch))
 
-  private def winnowingDfFromRoot(spark: org.apache.spark.sql.SparkSession,
-      root: String, excludeBatch: Option[Long]): DataFrame = {
-    val raw = spark.read.parquet(s"$root/df")
-    excludeBatch.fold(raw)(id => raw.filter(col("batch") =!= id))
-      .groupBy(col("fp")).agg(sum(col("df")).as("df"))
+  private def winnowingDf(root: IndexStore.Root): DataFrame =
+    root.batches("df").groupBy(col("fp")).agg(sum(col("df")).as("df"))
       .filter(col("df") =!= 0L)
-  }
 
   /** Fold the append tail into a fresh version ([[IndexStore.compact]]) —
     * fps last-writer-wins into the base batch, the df table recomputed
@@ -937,24 +901,21 @@ object Dedup {
   def compactWinnowingIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, keepBelow: Option[Long] = None): Unit =
     winnowingStore.compact(spark, dir, keepBelow) { (old, v) =>
-      v.base("fps", liveFps(old.batches("fps")))
-      v.base("df", dfPartial(v.batch("fps", -1L)))
+      v.base("fps", old.live("fps", "doc_id"))
+      v.base("df", dfPartial(v.batches("fps")))
       v.write("params", old.read("params"))
     }
 
   def containmentAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, incoming: DataFrame, threshold: Double = 0.8,
       maxDf: Int = 32, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
-    val p = spark.read.parquet(s"$root/params").collect()(0)
-    val (k, w) = (p.getAs[Int]("k"), p.getAs[Int]("w"))
-    // excludeBatch drops a replayed append of THIS batch before the
-    // latest-wins view, so a batch never screens against itself (the fps
-    // AND df partitions of the excluded batch drop together — the df
+    // excludeBatch hides a replayed append of THIS batch from the fps AND
+    // df tables, so a batch never screens against itself (the df
     // accounting stays exact because replays only target the newest id)
-    val raw = spark.read.parquet(s"$root/fps")
-    val visible = excludeBatch.fold(raw)(id => raw.filter(col("batch") =!= id))
-    val idxFps = liveFps(visible)
+    val root = IndexStore.open(spark, dir, excludeBatch)
+    val p = root.read("params").collect()(0)
+    val (k, w) = (p.getAs[Int]("k"), p.getAs[Int]("w"))
+    val idxFps = root.live("fps", "doc_id")
       .select(col("doc_id"), col("fp"), lit(false).as("inc"))
     val incFps = TextAnalysis.winnowingFingerprints(incoming, k, w)
       .select(col("doc_id"), col("fp"), lit(true).as("inc"))
@@ -962,10 +923,7 @@ object Dedup {
     // table) + the batch's own counts — the combined-population doc
     // frequency without re-aggregating the store's fps tree
     val incDf = incFps.groupBy(col("fp")).agg(count(lit(1)).as("df_inc"))
-    // from the SAME resolved root as the fps/params reads above — a
-    // concurrent compaction's CURRENT flip must not split one serve
-    // across two store versions
-    val gate = winnowingDfFromRoot(spark, root, excludeBatch)
+    val gate = winnowingDf(root)
       .withColumnRenamed("df", "df_store")
       .join(incDf, Seq("fp"), "full_outer")
       .filter(coalesce(col("df_store"), lit(0L)) +
@@ -1451,34 +1409,10 @@ object Dedup {
     }
   }
 
-  private[graft] def readMinhashParams(spark: org.apache.spark.sql.SparkSession,
-      root: String): (Int, Int, Int, Int) = {
-    val r = spark.read.parquet(s"$root/params").head()
+  private[graft] def readMinhashParams(root: IndexStore.Root): (Int, Int, Int, Int) = {
+    val r = root.read("params").head()
     (r.getAs[Int]("num_hashes"), r.getAs[Int]("shingle_n"),
       r.getAs[Int]("bands"), r.getAs[Int]("rows_per_band"))
-  }
-
-  /** Last-writer-wins per doc_id over the discovered `batch` partition
-    * column (base build = -1, appends ascend) — a re-fingerprinted doc's
-    * newest signature is the live one.
-    *
-    * Base/recent split (the [[liveFps]] discipline, r11): the base batch
-    * is one-row-per-doc by construction (build writes one signature per
-    * doc; compaction writes this function's own output), so only
-    * POST-COMPACTION appends pay the per-doc window, and the base side
-    * reconciles via an anti-join against the small recent doc set
-    * instead of a full-store window sort.
-    */
-  private def latestPerDoc(df: DataFrame): DataFrame = {
-    val recent = df.filter(col("batch").cast("long") =!= -1L)
-    val base = df.filter(col("batch").cast("long") === -1L).drop("batch")
-    val recentLatest = recent.withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("batch").desc)))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "batch")
-    base.join(recentLatest.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .unionByName(recentLatest)
   }
 
   /** Fingerprint `newDocs` with the index's own stored params and append
@@ -1488,17 +1422,16 @@ object Dedup {
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       newDocs: DataFrame, batchId: Option[Long] = None): Unit =
     minhashStore.append(spark, dir, batchId) { (root, id) =>
-      val (numHashes, n, _, _) = readMinhashParams(spark, root.path)
+      val (numHashes, n, _, _) = readMinhashParams(root)
       root.land("signatures", minhashSignatures(newDocs, numHashes, n), id)
     }
 
-  /** Live signature view of a persisted MinHash index (all batches,
-    * last-writer-wins per doc).
+  /** Live signature view of a persisted MinHash index: a re-fingerprinted
+    * doc's newest signature is the live one ([[IndexStore.Root.live]]).
     */
   def minhashIndexSignatures(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    latestPerDoc(spark.read.parquet(
-      s"${IndexStore.resolve(spark, dir)}/signatures"))
+    IndexStore.open(spark, dir).live("signatures", "doc_id")
 
   /** Dedup an incoming batch against the persisted index WITHOUT touching
     * the indexed corpus text: fingerprint `newDocs` in flight, band both
@@ -1514,16 +1447,11 @@ object Dedup {
   def dedupAgainstMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDocs: DataFrame, estThreshold: Double = 0.5,
       excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
-    val (numHashes, n, bands, rowsPerBand) = readMinhashParams(spark, root)
     // excludeBatch: a streaming replay must not match the batch against the
-    // partial signatures its own failed delivery appended (discovered
-    // `batch` partition columns infer as INT for small ids — compare, don't
-    // getLong)
-    val allSig = spark.read.parquet(s"$root/signatures")
-    val visible = excludeBatch.fold(allSig)(id =>
-      allSig.filter(col("batch").cast("long") =!= id))
-    val idxSig = latestPerDoc(visible)
+    // partial signatures its own failed delivery appended
+    val root = IndexStore.open(spark, dir, excludeBatch)
+    val (numHashes, n, bands, rowsPerBand) = readMinhashParams(root)
+    val idxSig = root.live("signatures", "doc_id")
     // cached: the batch-side signatures feed both the band join and the
     // verification join, and are batch-sized (32 longs/doc), not corpus-sized
     val newSig = minhashSignatures(newDocs, numHashes, n).cache()
@@ -1555,7 +1483,7 @@ object Dedup {
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, keepBelow: Option[Long] = None): Unit =
     minhashStore.compact(spark, dir, keepBelow) { (old, v) =>
-      v.base("signatures", latestPerDoc(old.batches("signatures")))
+      v.base("signatures", old.live("signatures", "doc_id"))
       v.write("params", old.read("params"))
     }
 

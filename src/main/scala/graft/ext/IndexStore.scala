@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, max}
 
 import graft.streaming.Landing
 
@@ -19,8 +20,7 @@ import graft.streaming.Landing
   *     build and every compaction land the base as `batch=-1`, each append
   *     lands `batch=<id>` through [[graft.streaming.Landing.write]]
   *     (OVERWRITE), so an at-least-once replay under the same id rewrites
-  *     its own directory instead of appending twice. Readers see the
-  *     discovered `batch` column.
+  *     its own directory instead of appending twice.
   *
   * A store declares its tables once, and the first one is its commit
   * table: an append without an id takes the commit table's next free id,
@@ -30,6 +30,10 @@ import graft.streaming.Landing
   * superseded `v_*` and every top-level table of the store's own names
   * (the flat layout it replaces), at once: single writer, and compaction
   * runs between serving reads, never under an in-flight scan.
+  *
+  * Reads go through a [[Root]] opened once per serve ([[IndexStore.open]]),
+  * so every table of one serve comes from one version, and a replayed
+  * batch hidden there is hidden from every batched table read through it.
   */
 final class IndexStore(tables: String*) {
   import IndexStore._
@@ -38,7 +42,7 @@ final class IndexStore(tables: String*) {
     * and sweep what it supersedes. Returns the new version's root.
     */
   def publish(spark: SparkSession, dir: String)(write: Root => Unit): String = {
-    val fs = fileSystem(spark, dir)
+    val fs = Landing.fileSystem(spark, dir)
     val dirPath = new Path(dir)
     val versions = if (!fs.exists(dirPath)) Nil else fs.listStatus(dirPath).toSeq
       .flatMap(st => idOf(st.getPath.getName, "v_"))
@@ -63,13 +67,13 @@ final class IndexStore(tables: String*) {
     */
   def append(spark: SparkSession, dir: String, batchId: Option[Long])(
       write: (Root, Long) => Unit): Unit = {
-    val root = new Root(spark, resolve(spark, dir))
+    val root = open(spark, dir)
     val ids = root.batchIds(tables.head)
-    write(root, batchId.getOrElse(ids.foldLeft(-1L)(math.max) + 1))
+    write(root, batchId.getOrElse(ids.foldLeft(Base)(math.max) + 1))
   }
 
   /** Fold the live version into a newly published one: `write(old, next)`,
-    * where `old.batches` holds only the batches below `keepBelow`. The
+    * where `old` reads only the batches below `keepBelow`. The
     * streaming ingests compact at the start of batch N with
     * `keepBelow = N`: batches below N are checkpoint-committed, while a
     * partial `batch=N` left by a failed delivery stays out of the fold and
@@ -77,7 +81,7 @@ final class IndexStore(tables: String*) {
     */
   def compact(spark: SparkSession, dir: String, keepBelow: Option[Long] = None)(
       write: (Root, Root) => Unit): Unit = {
-    val old = new Root(spark, resolve(spark, dir), keepBelow)
+    val old = open(spark, dir).below(keepBelow)
     publish(spark, dir)(write(old, _))
   }
 }
@@ -85,6 +89,9 @@ final class IndexStore(tables: String*) {
 object IndexStore {
 
   private val Current = "CURRENT"
+
+  /** The batch id of the base that a build or a compaction lands. */
+  private val Base = -1L
 
   /** The live root of the store at `dir`: the version `CURRENT` names,
     * else `dir` itself (a flat pre-versioning store, or a root that is
@@ -96,7 +103,7 @@ object IndexStore {
   /** The root `dir/CURRENT` names, if a version was ever published there. */
   def published(spark: SparkSession, dir: String): Option[String] = {
     val cur = new Path(dir, Current)
-    val fs = fileSystem(spark, dir)
+    val fs = Landing.fileSystem(spark, dir)
     if (!fs.exists(cur)) None
     else {
       val in = fs.open(cur)
@@ -105,47 +112,72 @@ object IndexStore {
     }
   }
 
-  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Open the live root of the store at `dir` ([[resolve]]), hiding batch
+    * `hide` (a replay's own earlier delivery) from every batched table.
+    */
+  def open(spark: SparkSession, dir: String, hide: Option[Long] = None): Root =
+    new Root(spark, resolve(spark, dir), None, hide)
 
   private def idOf(name: String, prefix: String): Option[Long] =
     if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption else None
 
   /** One version root (or a flat legacy root) of a store, with its tables
-    * addressed by name.
+    * addressed by name. A table without batches is read and written whole
+    * ([[read]], [[write]]); a batched one is read as its [[batches]] or
+    * its [[live]] view, and written a batch at a time ([[land]], [[base]]).
     */
   final class Root private[IndexStore] (spark: SparkSession, val path: String,
-      keepBelow: Option[Long] = None) {
+      keepBelow: Option[Long] = None, hide: Option[Long] = None) {
 
-    def apply(table: String): String = s"$path/$table"
+    private def apply(table: String): String = s"$path/$table"
 
+    /** A table without batches. */
     def read(table: String): DataFrame = spark.read.parquet(this(table))
 
-    /** Batch `id` of `table`, without the `batch` column. */
-    def batch(table: String, id: Long): DataFrame =
-      spark.read.parquet(Landing.dir(this(table), id))
+    /** Batches `ids` of `table`, without the `batch` column. */
+    def batch(table: String, ids: Long*): DataFrame =
+      spark.read.parquet(ids.map(Landing.dir(this(table), _)): _*)
 
-    /** The batches of `table` a compaction folds: all of them, or those
-      * below its `keepBelow`.
+    /** Every batch of `table` this root sees (below its `keepBelow`, minus
+      * its hidden batch), without the `batch` column.
       */
-    def batches(table: String): DataFrame =
-      keepBelow.fold(read(table))(k => read(table).filter(col("batch").cast("long") < k))
+    def batches(table: String): DataFrame = visible(table).drop(Landing.Batch)
 
     /** [[batches]], or `None` when nothing was ever landed in `table`. */
     def batchesIfAny(table: String): Option[DataFrame] =
-      if (fileSystem(spark, path).exists(new Path(this(table)))) Some(batches(table))
+      if (Landing.fileSystem(spark, path).exists(new Path(this(table)))) Some(batches(table))
       else None
+
+    /** The live view of `table` by `key`: the rows of each key's newest
+      * batch, so a key re-appended later serves only its new rows (all of
+      * them: a key owning several rows, like a fingerprint set, is
+      * replaced whole). The base is one row set per key by construction,
+      * so only the appended batches pay the per-key window; base rows of
+      * keys no append touched pass through an anti-join against the
+      * appended keys.
+      */
+    def live(table: String, key: String): DataFrame = {
+      val all = visible(table)
+      val recent = all.filter(Landing.batchCol =!= Base)
+      val newest = recent
+        .withColumn("_newest", max(Landing.batchCol).over(Window.partitionBy(col(key))))
+        .filter(Landing.batchCol === col("_newest"))
+        .drop("_newest", Landing.Batch)
+      all.filter(Landing.batchCol === Base).drop(Landing.Batch)
+        .join(newest.select(col(key)).distinct(), Seq(key), "left_anti")
+        .unionByName(newest)
+    }
+
+    /** This root reading only the batches below `id`. */
+    def below(id: Option[Long]): Root = id.fold(this)(i =>
+      new Root(spark, path, Some(keepBelow.fold(i)(math.min(_, i))), hide))
 
     /** The ids of `table`'s batch directories; fails loud on a legacy
       * pre-batch layout.
       */
     def batchIds(table: String): Seq[Long] = {
-      val p = new Path(this(table))
-      val fs = fileSystem(spark, path)
-      val names = if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-      val ids = names.flatMap(idOf(_, "batch="))
-      require(ids.size == names.size, s"${this(table)} uses a legacy pre-batch " +
+      val (ids, other) = Landing.batchIds(spark, this(table))
+      require(!other, s"${this(table)} uses a legacy pre-batch " +
         "layout; rebuild the index before appending")
       ids
     }
@@ -164,6 +196,9 @@ object IndexStore {
 
     /** Land `df` as the base batch of `table`. */
     def base(table: String, df: DataFrame, partitionBy: String*): Unit =
-      land(table, df, -1L, partitionBy: _*)
+      land(table, df, Base, partitionBy: _*)
+
+    private def visible(table: String): DataFrame =
+      Landing.visible(spark.read.parquet(this(table)), keepBelow, hide)
   }
 }

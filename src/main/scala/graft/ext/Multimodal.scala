@@ -597,29 +597,6 @@ object Multimodal {
         col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** Last-writer-wins per doc over the discovered `batch` partition column
-    * (base build = -1, appends ascend) — a re-hashed doc's newest
-    * fingerprint is the live one. Base/recent split (the Dedup liveFps
-    * discipline, r11): the base is one-row-per-doc by construction, so
-    * only post-compaction appends pay the per-doc window and the base
-    * reconciles via an anti-join against the small recent doc set
-    * instead of a full-store window sort.
-    */
-  private def latestHashPerDoc(df: DataFrame): DataFrame = {
-    val recent = df.filter(col("batch").cast("long") =!= -1L)
-    val base = df.filter(col("batch").cast("long") === -1L).drop("batch")
-    val recentLatest = recent
-      .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("doc_id"))
-          .orderBy(col("batch").desc)))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "batch")
-    base.join(recentLatest.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .unionByName(recentLatest)
-  }
-
   /** The persisted image and audio hash stores ([[IndexStore]] layout):
     * `hashes` by batch and the radius in `params`.
     */
@@ -642,9 +619,9 @@ object Multimodal {
     */
   private def writeHashStore(hashes: DataFrame, dir: String,
       maxHamming: Int): Unit = {
-    // base is one-hash-per-doc_id (r11 advisor; the latestHashPerDoc
-    // serve split passes batch=-1 through without a per-key window —
-    // see Similarity.requireUniqueKeys)
+    // base is one-hash-per-doc_id (r11 advisor; the live view passes the
+    // base through without a per-key window — see
+    // Similarity.requireUniqueKeys)
     Similarity.requireUniqueKeys(hashes, "doc_id", "writeHashStore")
     // the persisted radius is authoritative for every later probe, so the
     // banding exactness bound must hold at build time
@@ -662,7 +639,7 @@ object Multimodal {
 
   private[graft] def readStoreRadius(spark: SparkSession,
       root: String): Int =
-    spark.read.parquet(s"$root/params").head().getAs[Int]("max_hamming")
+    IndexStore.open(spark, root).read("params").head().getAs[Int]("max_hamming")
 
   /** Hash `media` and append it as one batch ([[IndexStore.append]]) — an
     * at-least-once replay with a stable caller `batchId` is idempotent.
@@ -671,8 +648,8 @@ object Multimodal {
       media: DataFrame, batchId: Option[Long] = None): Unit =
     appendHashesToStore(spark, dir, imageHashes(spark, media).toDF(), batchId)
 
-  /** Append a precomputed hash frame to a store, by its `dir` or by an
-    * already-resolved root (which resolves to itself) — the no-re-decode
+  /** Append a precomputed hash frame to a store, by its `dir` or by a
+    * pinned version root — the no-re-decode
     * half of [[appendToImageHashStore]], for callers that pinned the
     * version and paid the decode once (streaming).
     */
@@ -680,12 +657,11 @@ object Multimodal {
       hashes: DataFrame, batchId: Option[Long] = None): Unit =
     hashStore.append(spark, root, batchId)((r, id) => r.land("hashes", hashes, id))
 
-  /** Live fingerprint view of a persisted store (all batches,
-    * last-writer-wins per doc).
+  /** Live fingerprint view of a persisted store: a re-hashed doc's
+    * newest fingerprint is the live one ([[IndexStore.Root.live]]).
     */
   def imageStoreHashes(spark: SparkSession, dir: String): DataFrame =
-    latestHashPerDoc(spark.read.parquet(
-      s"${IndexStore.resolve(spark, dir)}/hashes"))
+    IndexStore.open(spark, dir).live("hashes", "doc_id")
 
   /** Screen an incoming batch against the persisted store WITHOUT
     * re-decoding the accepted corpus: hash the batch in flight, band both
@@ -699,13 +675,13 @@ object Multimodal {
     */
   def dedupAgainstImageStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
+    val root = IndexStore.open(spark, dir).path
     probeStoreWithHashes(spark, root, readStoreRadius(spark, root),
       imageHashes(spark, media).toDF(), excludeBatch)
   }
 
-  /** [[dedupAgainstImageStore]] against an already-resolved root, radius,
-    * and precomputed batch hashes — one resolve, one decode, shared with
+  /** [[dedupAgainstImageStore]] against a pinned version root, radius,
+    * and precomputed batch hashes — one decode, shared with
     * the streaming ingest so a concurrent CURRENT flip cannot split the
     * within-batch and probe radii.
     */
@@ -713,12 +689,8 @@ object Multimodal {
       maxHamming: Int, newH: DataFrame,
       excludeBatch: Option[Long] = None): DataFrame = {
     // excludeBatch: a streaming replay must not match the batch against
-    // the partial hashes its own failed delivery appended (discovered
-    // partition columns infer as INT for small ids — compare, don't get)
-    val all = spark.read.parquet(s"$root/hashes")
-    val visible = excludeBatch.fold(all)(id =>
-      all.filter(col("batch").cast("long") =!= id))
-    val storeH = latestHashPerDoc(visible)
+    // the partial hashes its own failed delivery appended
+    val storeH = IndexStore.open(spark, root, excludeBatch).live("hashes", "doc_id")
     val storeBands = hashBands(storeH)
       .select(col("doc_id").as("dup_of"), col("ahash").as("hb"),
         col("band"), col("key"))
@@ -744,7 +716,7 @@ object Multimodal {
     */
   private def compactHashStore(spark: SparkSession, dir: String): Unit =
     hashStore.compact(spark, dir) { (old, v) =>
-      v.base("hashes", latestHashPerDoc(old.batches("hashes")))
+      v.base("hashes", old.live("hashes", "doc_id"))
       v.write("params", old.read("params"))
     }
 
@@ -845,8 +817,7 @@ object Multimodal {
 
   /** Live fingerprint view of a persisted audio store. */
   def audioStoreHashes(spark: SparkSession, dir: String): DataFrame =
-    latestHashPerDoc(spark.read.parquet(
-      s"${IndexStore.resolve(spark, dir)}/hashes"))
+    IndexStore.open(spark, dir).live("hashes", "doc_id")
 
   /** Screen an incoming batch against the persisted audio store WITHOUT
     * re-decoding the accepted corpus — O(batch) decode plus a band-keyed
@@ -854,7 +825,7 @@ object Multimodal {
     */
   def dedupAgainstAudioStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
+    val root = IndexStore.open(spark, dir).path
     probeStoreWithHashes(spark, root, readStoreRadius(spark, root),
       audioHashes(spark, media).toDF(), excludeBatch)
   }
@@ -1113,7 +1084,7 @@ object Multimodal {
   }
 
   private[graft] def readStoreOverlap(spark: SparkSession, root: String): Double =
-    spark.read.parquet(s"$root/params").head().getAs[Double]("min_overlap")
+    IndexStore.open(spark, root).read("params").head().getAs[Double]("min_overlap")
 
   /** Decode `media` once and append its distinct frame hashes as one
     * batch — idempotent under at-least-once replay with a stable `batchId`.
@@ -1128,29 +1099,13 @@ object Multimodal {
       frames: DataFrame, batchId: Option[Long] = None): Unit =
     frameStore.append(spark, root, batchId)((r, id) => r.land("frames", frames, id))
 
-  /** Last-writer-wins frame SETS: a re-crawled doc's newest batch
-    * replaces its whole set (frame-level merge of two crawls of one doc
-    * would conflate versions). Base/recent split (the Dedup liveFps
-    * discipline, r11): the compacted base is already one-set-per-doc, so
-    * only post-compaction appends pay the groupBy-max reconciliation and
-    * the base side anti-joins the small recent doc set.
+  /** Live frame-hash view of a persisted video store: last-writer-wins
+    * frame SETS, a re-crawled doc's newest batch replacing its whole set
+    * ([[IndexStore.Root.live]]; a frame-level merge of two crawls of one
+    * doc would conflate versions).
     */
-  private def latestFramesPerDoc(df: DataFrame): DataFrame = {
-    val recent = df.filter(col("batch").cast("long") =!= -1L)
-    val base = df.filter(col("batch").cast("long") === -1L).drop("batch")
-    val latest = recent.groupBy(col("doc_id"))
-      .agg(org.apache.spark.sql.functions.max(col("batch")).as("batch"))
-    val recentLatest = recent
-      .join(latest, Seq("doc_id", "batch"), "left_semi").drop("batch")
-    base.join(recentLatest.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      .unionByName(recentLatest)
-  }
-
-  /** Live frame-hash view of a persisted video store. */
   def videoStoreFrames(spark: SparkSession, dir: String): DataFrame =
-    latestFramesPerDoc(spark.read.parquet(
-      s"${IndexStore.resolve(spark, dir)}/frames"))
+    IndexStore.open(spark, dir).live("frames", "doc_id")
 
   /** Screen an incoming batch against the persisted store WITHOUT
     * re-decoding the accepted corpus: decode the batch once, equi-join
@@ -1162,7 +1117,7 @@ object Multimodal {
     */
   def dedupAgainstVideoStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
+    val root = IndexStore.open(spark, dir).path
     probeVideoStoreWithFrames(spark, root, readStoreOverlap(spark, root),
       videoFrameHashes(spark, media).toDF()
         .select(col("doc_id"), col("fhash")).distinct(), excludeBatch)
@@ -1171,10 +1126,7 @@ object Multimodal {
   private[graft] def probeVideoStoreWithFrames(spark: SparkSession,
       root: String, minOverlap: Double, newFh: DataFrame,
       excludeBatch: Option[Long] = None): DataFrame = {
-    val all = spark.read.parquet(s"$root/frames")
-    val visible = excludeBatch.fold(all)(id =>
-      all.filter(col("batch").cast("long") =!= id))
-    val store = latestFramesPerDoc(visible)
+    val store = IndexStore.open(spark, root, excludeBatch).live("frames", "doc_id")
       .select(col("doc_id").as("dup_of"), col("fhash"))
     val storeTotals = store.groupBy(col("dup_of")).agg(count(lit(1)).as("ts"))
     val newTotals = newFh.groupBy(col("doc_id")).agg(count(lit(1)).as("tn"))
@@ -1196,7 +1148,7 @@ object Multimodal {
     */
   def compactVideoFrameStore(spark: SparkSession, dir: String): Unit =
     frameStore.compact(spark, dir) { (old, v) =>
-      v.base("frames", latestFramesPerDoc(old.batches("frames")))
+      v.base("frames", old.live("frames", "doc_id"))
       v.write("params", old.read("params"))
     }
 }

@@ -1125,9 +1125,9 @@ object Similarity {
     * drift from a stale model.
     */
   /** Base-build inputs must be ONE ROW PER KEY (r11 advisor catch): the
-    * serve-path base/recent splits ([[latestPerVector]] and its
-    * Dedup/Multimodal twins) pass `batch=-1` rows through WITHOUT a
-    * per-key window — the whole point of the split — so a base built
+    * live view's base/recent split ([[IndexStore.Root.live]]) passes
+    * base rows through WITHOUT a per-key window — the whole point of the
+    * split — so a base built
     * from duplicate-keyed input would keep the duplicates forever, and
     * every later compaction re-inherits them (compactions derive the new
     * base from the latest-wins view, which collapses APPEND duplicates
@@ -1177,9 +1177,9 @@ object Similarity {
     */
   def jlTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 200): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
-    val reduced = spark.read.parquet(s"$root/reduced")
-    val vectors = spark.read.parquet(s"$root/vectors")
+    val root = IndexStore.open(spark, dir)
+    val reduced = root.batches("reduced")
+    val vectors = root.batches("vectors")
     val cand = bruteForceTopK(
         reduced.select(col("vec_id"), col("embedding")), queryIds, shortlist)
       .select(col("query_id"), col("vec_id"))
@@ -1342,9 +1342,9 @@ object Similarity {
     */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, nProbe: Int = 2): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
-    val vectors = spark.read.parquet(s"$root/vectors")
-    val centDf = spark.read.parquet(s"$root/centroids")
+    val root = IndexStore.open(spark, dir)
+    val vectors = root.batches("vectors")
+    val centDf = root.read("centroids")
     val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     // bounded collect: nProbe × queries cell ids drive partition pruning
@@ -1384,9 +1384,9 @@ object Similarity {
     */
   def ivfDensePool(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryEvery: Int, poolK: Int = 20, nProbe: Int = 2): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
-    val vectors = spark.read.parquet(s"$root/vectors")
-    val centDf = spark.read.parquet(s"$root/centroids")
+    val root = IndexStore.open(spark, dir)
+    val vectors = root.batches("vectors")
+    val centDf = root.read("centroids")
     val queries = vectors.filter(col("vec_id") % queryEvery === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val probes = queries.crossJoin(broadcast(centDf))
@@ -1780,8 +1780,7 @@ object Similarity {
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       keepBelow: Option[Long] = None): Unit =
     ivfStore.compact(spark, dir, keepBelow) { (old, v) =>
-      v.base("vectors", latestPerVector(old.batches("vectors")).repartition(col("cell")),
-        "cell")
+      v.base("vectors", old.live("vectors", "vec_id").repartition(col("cell")), "cell")
       v.write("centroids", old.read("centroids"))
     }
 
@@ -1793,31 +1792,10 @@ object Similarity {
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       keepBelow: Option[Long] = None): Unit =
     pqStore.compact(spark, dir, keepBelow) { (old, v) =>
-      v.base("codes", latestPerVector(old.batches("codes")))
-      v.base("vectors", latestPerVector(old.batches("vectors")))
+      v.base("codes", old.live("codes", "vec_id"))
+      v.base("vectors", old.live("vectors", "vec_id"))
       v.write("codebooks", old.read("codebooks"))
     }
-
-  /** Last-writer-wins per vec_id over the discovered `batch` partition
-    * column (base build = -1, appends ascend), then drop the column so
-    * the survivor set can re-land as the new base batch. Base/recent
-    * split (the Dedup liveFps discipline, r11): the base is
-    * one-row-per-vector by construction, so only post-compaction appends
-    * pay the per-vector window and the base reconciles via an anti-join
-    * against the small recent vec set instead of a full-store window
-    * sort.
-    */
-  private def latestPerVector(df: DataFrame): DataFrame = {
-    val recent = df.filter(col("batch").cast("long") =!= -1L)
-    val base = df.filter(col("batch").cast("long") === -1L).drop("batch")
-    val recentLatest = recent.withColumn("_rn", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("batch").desc)))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "batch")
-    base.join(recentLatest.select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti")
-      .unionByName(recentLatest)
-  }
 
   /** Query a persisted PQ index: the corpus-wide scan reads the CODES
     * parquet only; codebooks (driver-bounded) come back as plan literals;
@@ -1888,8 +1866,8 @@ object Similarity {
   def compactInt8Index(spark: org.apache.spark.sql.SparkSession, dir: String,
       keepBelow: Option[Long] = None): Unit =
     int8Store.compact(spark, dir, keepBelow) { (old, v) =>
-      v.base("codes", latestPerVector(old.batches("codes")))
-      v.base("vectors", latestPerVector(old.batches("vectors")))
+      v.base("codes", old.live("codes", "vec_id"))
+      v.base("vectors", old.live("vectors", "vec_id"))
     }
 
   /** Serve top-k off the persisted int8 index: approximate cosine on the
@@ -1901,9 +1879,9 @@ object Similarity {
     */
   def int8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 50): DataFrame = {
-    val root = IndexStore.resolve(spark, dir)
-    val codes = spark.read.parquet(s"$root/codes")
-    val vectors = spark.read.parquet(s"$root/vectors")
+    val root = IndexStore.open(spark, dir)
+    val codes = root.batches("codes")
+    val vectors = root.batches("vectors")
     val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val scored = codes.crossJoin(broadcast(queries))
@@ -1919,10 +1897,10 @@ object Similarity {
     */
   private def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String): (DataFrame, DataFrame, Seq[Column], Int) = {
-    val root = IndexStore.resolve(spark, dir)
-    val codes = spark.read.parquet(s"$root/codes")
-    val vectors = spark.read.parquet(s"$root/vectors")
-    val cb = spark.read.parquet(s"$root/codebooks").collect()
+    val root = IndexStore.open(spark, dir)
+    val codes = root.batches("codes")
+    val vectors = root.batches("vectors")
+    val cb = root.read("codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = cb.map(_._1).max + 1
     val codebooks = (0 until m).map(s =>

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The one landing protocol of the streaming twins. `foreachBatch` is
@@ -10,9 +12,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * sink therefore lands a micro-batch only in directories that batch owns,
   * `<zone>/batch=<id>`, written with OVERWRITE ([[write]]), so a replay
   * rewrites its own output instead of appending it a second time: the
-  * landing zone is exactly-once. Readers read the zone root and see one
-  * extra discovered partition column, `batch`. The persisted indexes land
-  * their batches the same way ([[graft.ext.IndexStore]]).
+  * landing zone is exactly-once. The persisted indexes land their batches
+  * the same way ([[graft.ext.IndexStore]]).
+  *
+  * The read side is here too, so no reader spells the layout: [[read]]
+  * returns a zone's batches (minus a replayed one, a replay's own earlier
+  * delivery) without the `batch` column, and [[newest]] returns its newest
+  * batch, found by listing the batch directories.
   */
 object Landing {
 
@@ -50,12 +56,77 @@ object Landing {
       }
       .start()
 
+  private val Prefix = "batch="
+
   /** The directory micro-batch `batchId` owns in `zone`. */
-  def dir(zone: String, batchId: Long): String = s"$zone/batch=$batchId"
+  def dir(zone: String, batchId: Long): String = s"$zone/$Prefix$batchId"
 
   /** Land `df` as micro-batch `batchId`'s part of `zone`, replacing what an
     * earlier delivery of the same batch left there.
     */
   def write(df: DataFrame, zone: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(dir(zone, batchId))
+
+  /** Every batch landed in `zone`, without the `batch` column; with `hide`,
+    * minus that batch.
+    */
+  def read(spark: SparkSession, zone: String, hide: Option[Long] = None): DataFrame =
+    visible(spark.read.parquet(zone), None, hide).drop(Batch)
+
+  /** [[read]], or `None` when no batch has landed in `zone` yet. */
+  def readIfAny(spark: SparkSession, zone: String,
+      hide: Option[Long] = None): Option[DataFrame] =
+    if (fileSystem(spark, zone).exists(new Path(zone))) Some(read(spark, zone, hide))
+    else None
+
+  /** The newest batch landed in `zone`, without the `batch` column. */
+  def newest(spark: SparkSession, zone: String): DataFrame = {
+    val ids = batchIds(spark, zone)._1
+    require(ids.nonEmpty, s"no batch has landed in $zone")
+    spark.read.parquet(dir(zone, ids.max))
+  }
+
+  /** `sub` read from every batch of `zone` (e.g. a per-batch manifest). */
+  def readEach(spark: SparkSession, zone: String, sub: String): DataFrame =
+    spark.read.parquet(s"$zone/${Prefix}*/$sub")
+
+  /** `files` of `zone` (none: an empty frame of the zone's schema), with
+    * the zone's other partition columns but not `batch`.
+    */
+  def readFiles(spark: SparkSession, zone: String, files: Seq[String]): DataFrame =
+    if (files.isEmpty) read(spark, zone).filter(lit(false))
+    else spark.read.option("basePath", zone).parquet(files: _*).drop(Batch)
+
+  /** The discovered partition column every batch directory adds. */
+  private[graft] val Batch = "batch"
+
+  /** A row's batch id. Partition discovery infers the column as INT while
+    * every id fits one, so it is compared through a cast to long.
+    */
+  private[graft] val batchCol: Column = col(Batch).cast("long")
+
+  /** The rows of `df` (a zone read from its root, `batch` column kept) in
+    * batches below `below`, minus batch `hide`.
+    */
+  private[graft] def visible(df: DataFrame, below: Option[Long],
+      hide: Option[Long]): DataFrame = {
+    val kept = below.fold(df)(b => df.filter(batchCol < b))
+    hide.fold(kept)(h => kept.filter(batchCol =!= h))
+  }
+
+  /** The ids of `zone`'s batch directories, and whether anything else
+    * (other than `_`/`.` files) sits next to them.
+    */
+  private[graft] def batchIds(spark: SparkSession, zone: String): (Seq[Long], Boolean) = {
+    val p = new Path(zone)
+    val fs = fileSystem(spark, zone)
+    val names = if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    val ids = names.flatMap(n =>
+      if (n.startsWith(Prefix)) n.stripPrefix(Prefix).toLongOption else None)
+    (ids, ids.size != names.size)
+  }
+
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -68,7 +68,22 @@ object MonitoringStream {
     * per run is two numbers + a latch — bounded regardless of feed size.
     */
   final case class FailureAlert(run_id: String, failed: Long, total_seen: Long)
-  final case class AlertState(failed: Long, seen: Long, alerted: Boolean)
+  final case class AlertState(failed: Long, seen: Long, alerted: Boolean) {
+
+    /** Count `rows` of run `runId` into this state. The alert fires once:
+      * in the step where the run's failures first reach `threshold`.
+      */
+    def step(runId: String, rows: Iterator[ReportRun],
+        threshold: Long): (AlertState, Iterator[FailureAlert]) = {
+      var f = failed; var n = seen
+      rows.foreach { r => n += 1; if (r.status == Status.Failed) f += 1 }
+      val fire = !alerted && f >= threshold
+      (AlertState(f, n, alerted || fire),
+        if (fire) Iterator(FailureAlert(runId, f, n)) else Iterator.empty)
+    }
+  }
+
+  private val noAlert = AlertState(0L, 0L, alerted = false)
 
   def failureAlerts(spark: SparkSession, reports: Dataset[ReportRun],
       threshold: Long = 3): Dataset[FailureAlert] = {
@@ -78,12 +93,9 @@ object MonitoringStream {
       .flatMapGroupsWithState[AlertState, FailureAlert](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         case (runId, rows, state: GroupState[AlertState]) =>
-          val s0 = state.getOption.getOrElse(AlertState(0L, 0L, alerted = false))
-          var failed = s0.failed; var seen = s0.seen
-          rows.foreach { r => seen += 1; if (r.status == Status.Failed) failed += 1 }
-          val fire = !s0.alerted && failed >= threshold
-          state.update(AlertState(failed, seen, s0.alerted || fire))
-          if (fire) Iterator(FailureAlert(runId, failed, seen)) else Iterator.empty
+          val (next, alerts) = state.getOption.getOrElse(noAlert).step(runId, rows, threshold)
+          state.update(next)
+          alerts
       }
   }
 
@@ -108,12 +120,10 @@ object MonitoringStream {
 
     override def handleInputRows(key: String, rows: Iterator[ReportRun],
         timers: org.apache.spark.sql.streaming.TimerValues): Iterator[FailureAlert] = {
-      val s0 = if (state.exists()) state.get() else AlertState(0L, 0L, alerted = false)
-      var failed = s0.failed; var seen = s0.seen
-      rows.foreach { r => seen += 1; if (r.status == Status.Failed) failed += 1 }
-      val fire = !s0.alerted && failed >= threshold
-      state.update(AlertState(failed, seen, s0.alerted || fire))
-      if (fire) Iterator(FailureAlert(key, failed, seen)) else Iterator.empty
+      val (next, alerts) =
+        (if (state.exists()) state.get() else noAlert).step(key, rows, threshold)
+      state.update(next)
+      alerts
     }
   }
 

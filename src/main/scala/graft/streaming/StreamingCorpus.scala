@@ -242,14 +242,9 @@ object StreamingCorpus {
         .select(col("new_id"), col("old_id")).distinct()
       // cross-batch: probe the persisted store, excluding rows a
       // replay of THIS batch may have written before failing
-      val fs = new org.apache.hadoop.fs.Path(storeDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cross =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/bands"))) None
-        else {
-          val sBands = spark.read.parquet(s"$storeDir/bands")
-            .filter(col("batch") =!= batchId)
-            .select(col("doc_id").as("old_id"), col("band"), col("key"))
+      val cross = Landing.readIfAny(spark, s"$storeDir/bands", Some(batchId))
+        .flatMap { stored =>
+          val sBands = stored.select(col("doc_id").as("old_id"), col("band"), col("key"))
           val candPairs = scope.cache(bandDf
             .select(col("doc_id").as("new_id"), col("band"), col("key"))
             .join(sBands, Seq("band", "key"))
@@ -259,8 +254,7 @@ object StreamingCorpus {
           // join outright (isEmpty is cheap on the cached pairs)
           if (candPairs.isEmpty) None
           else Some {
-            val sSigs = spark.read.parquet(s"$storeDir/sigs")
-              .filter(col("batch") =!= batchId)
+            val sSigs = Landing.read(spark, s"$storeDir/sigs", Some(batchId))
             // the band probe is narrow (3 columns); the SIGS table is
             // the wide one (numHashes columns × every stored doc), so
             // never scan it whole per batch: the matched old_id set is
@@ -315,8 +309,8 @@ object StreamingCorpus {
       // on replay folds the same committed set — idempotent
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         Dedup.compactMinhashIndex(spark, indexDir, keepBelow = Some(batchId))
-      val root = IndexStore.resolve(spark, indexDir)
-      val (numHashes, _, bands, rowsPerBand) = Dedup.readMinhashParams(spark, root)
+      val (numHashes, _, bands, rowsPerBand) =
+        Dedup.readMinhashParams(IndexStore.open(spark, indexDir))
       // within-batch first: larger id drops (the candidate generator
       // is the same banded LSH the index probe uses)
       val withinDups = Dedup.minhashCandidatePairs(b, numHashes, bands,
@@ -407,7 +401,7 @@ object StreamingCorpus {
     */
   def videoDedupIngest(media: DataFrame, storeDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = IndexStore.resolve(media.sparkSession, storeDir)
+    val root = IndexStore.open(media.sparkSession, storeDir).path
     val minOverlap = graft.ext.Multimodal
       .readStoreOverlap(media.sparkSession, root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
@@ -441,7 +435,7 @@ object StreamingCorpus {
     // pin the store version at stream start (the lmScoreIngest
     // discipline): a concurrent rebuild flips CURRENT for the NEXT
     // stream, never mid-stream — within-batch and probe radii can't split
-    val root = IndexStore.resolve(media.sparkSession, storeDir)
+    val root = IndexStore.open(media.sparkSession, storeDir).path
     val radius = graft.ext.Multimodal
       .readStoreRadius(media.sparkSession, root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
@@ -638,10 +632,9 @@ object StreamingCorpus {
     */
   def lmScoreIngest(docs: DataFrame, lmDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    // pin the version at stream start: a versioned root carries no
-    // CURRENT pointer inside it, so per-batch resolution is a no-op on
-    // the pinned path and a concurrent rebuild cannot flip it mid-stream
-    val root = IndexStore.resolve(docs.sparkSession, lmDir)
+    // pin the version at stream start: a concurrent rebuild cannot flip
+    // it mid-stream
+    val root = IndexStore.open(docs.sparkSession, lmDir).path
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.perplexityFromLm(batch.sparkSession, root,
         batch.drop("event_time")), outDir, batchId)
@@ -677,7 +670,7 @@ object StreamingCorpus {
     */
   def dsirScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = IndexStore.resolve(docs.sparkSession, modelDir)
+    val root = IndexStore.open(docs.sparkSession, modelDir).path
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.dsirWeightsFromModel(batch.sparkSession, root,
         batch.drop("event_time")), outDir, batchId)
@@ -781,14 +774,8 @@ object StreamingCorpus {
       checkpointDir: String, cap: Long = 5): StreamingQuery =
     Landing.eachBatch(docs, checkpointDir) { (b, batchId, _) =>
       val spark = b.sparkSession
-      val fs = new org.apache.hadoop.fs.Path(storeDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val prior =
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/counts"))) None
-        else Some(spark.read.parquet(s"$storeDir/counts")
-          .filter(col("batch") =!= batchId)
-          .groupBy(col("domain"))
-          .agg(sum(col("n_accepted")).as("prior_n")))
+      val prior = Landing.readIfAny(spark, s"$storeDir/counts", Some(batchId))
+        .map(_.groupBy(col("domain")).agg(sum(col("n_accepted")).as("prior_n")))
       val ranked = b.withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("domain")).orderBy(col("doc_id"))))
@@ -866,20 +853,17 @@ object StreamingCorpus {
   def semanticDecontaminateIngest(emb: DataFrame, storeDir: String,
       outDir: String, checkpointDir: String,
       threshold: Double = 0.3): StreamingQuery = {
-    val root = IndexStore.resolve(emb.sparkSession, storeDir)
+    val root = IndexStore.open(emb.sparkSession, storeDir).path
     Landing.eachBatch(emb, checkpointDir) { (batch, batchId, _) =>
       Landing.write(Dedup.semanticContaminationFromStore(batch.sparkSession,
         root, batch, threshold), outDir, batchId)
     }
   }
 
-  /** Everything [[semanticDecontaminateIngest]] has flagged so far
-    * (the `batch=` landing partition is an ingest detail, not part of
-    * the verdict schema).
-    */
+  /** Everything [[semanticDecontaminateIngest]] has flagged so far. */
   def semanticDecontaminateView(spark: SparkSession,
       outDir: String): DataFrame =
-    spark.read.parquet(outDir).drop("batch").orderBy(col("vec_id"))
+    Landing.read(spark, outDir).orderBy(col("vec_id"))
 
   /** Streaming LR scoring against the frozen persisted classifier
     * ([[graft.ext.TextAnalysis.buildLrModel]]) — the [[lmScoreIngest]]/
@@ -893,7 +877,7 @@ object StreamingCorpus {
     */
   def lrScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = IndexStore.resolve(docs.sparkSession, modelDir)
+    val root = IndexStore.open(docs.sparkSession, modelDir).path
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.lrPredictFromModel(batch.sparkSession, root,
         batch.drop("event_time")), outDir, batchId)
@@ -1162,12 +1146,8 @@ object StreamingCorpus {
     */
   def temperatureView(spark: org.apache.spark.sql.SparkSession,
       outDir: String, langCol: String = "lang"): DataFrame = {
-    val thrAll = spark.read.parquet(s"$outDir/thresholds")
-    // newest batch's threshold set (≤ |langs| rows; the bounded driver
-    // lookup mirrors qualityGateView's newest-row read). batch is a
-    // DISCOVERED partition column — inferred int for small ids — so cast
-    val latest = thrAll.agg(max(col("batch")).cast("long")).head().getLong(0)
-    val thr = thrAll.filter(col("batch") === latest).drop("batch")
+    // the newest batch's threshold set (≤ |langs| rows)
+    val thr = Landing.newest(spark, s"$outDir/thresholds")
     spark.read.parquet(s"$outDir/meta")
       .join(broadcast(thr), Seq(langCol))
       .filter(col("bucket") < col("thr"))
@@ -1184,8 +1164,7 @@ object StreamingCorpus {
       outDir: String): DataFrame = {
     val scores = spark.read.parquet(s"$outDir/scores")
       .select(col("doc_id"), col("score"))
-    val latest = spark.read.parquet(s"$outDir/threshold")
-      .orderBy(col("batch").desc).limit(1).select(col("thr"))
+    val latest = Landing.newest(spark, s"$outDir/threshold").limit(1).select(col("thr"))
     scores.crossJoin(broadcast(latest))
       .filter(col("score") >= col("thr"))
       .select(col("doc_id"), col("score"))
@@ -1226,8 +1205,7 @@ object StreamingCorpus {
   def otsuGateView(spark: SparkSession, outDir: String): DataFrame = {
     val scores = spark.read.parquet(s"$outDir/scores")
       .select(col("doc_id"), col("score"))
-    val latest = spark.read.parquet(s"$outDir/threshold")
-      .orderBy(col("batch").desc).limit(1).select(col("thr"))
+    val latest = Landing.newest(spark, s"$outDir/threshold").limit(1).select(col("thr"))
     scores.crossJoin(broadcast(latest))
       .filter(col("score") >= col("thr"))
       .select(col("doc_id"), col("score"))
@@ -1341,7 +1319,7 @@ object StreamingCorpus {
     val aggs = count(lit(1)).as("n_files") +: sum(col("n_rows")).as("n_rows") +:
       stats.flatMap(c => Seq(min(col(s"min_$c")).as(s"min_$c"),
         max(col(s"max_$c")).as(s"max_$c")))
-    spark.read.parquet(s"$outDir/data/batch=*/_manifest")
+    Landing.readEach(spark, s"$outDir/data", "_manifest")
       .groupBy(col("p_date"))
       .agg(aggs.head, aggs.tail: _*)
       .orderBy(col("p_date"))
@@ -1361,8 +1339,7 @@ object StreamingCorpus {
   def manifestCompact(spark: SparkSession, outDir: String): String =
     new IndexStore().publish(spark, s"$outDir/compact") { v =>
       graft.operators.ScaleOps.writeDateStoreWithManifest(
-        spark.read.option("basePath", s"$outDir/data")
-          .parquet(s"$outDir/data").drop("batch", "p_date"), v.path)
+        Landing.read(spark, s"$outDir/data").drop("p_date"), v.path)
     }
 
   /** The published compacted store, if any — a plain date store a reader
@@ -1381,7 +1358,7 @@ object StreamingCorpus {
     */
   def manifestPrunedView(spark: SparkSession, outDir: String,
       statCol: String, lo: Long, hi: Long, maxFiles: Int = 10000): DataFrame = {
-    val surviving = spark.read.parquet(s"$outDir/data/batch=*/_manifest")
+    val surviving = Landing.readEach(spark, s"$outDir/data", "_manifest")
       .filter(col(s"max_$statCol") >= lo && col(s"min_$statCol") <= hi)
       .select(concat(
         regexp_replace(col("_metadata.file_path"), "/_manifest/[^/]+$", ""),
@@ -1390,14 +1367,9 @@ object StreamingCorpus {
     require(surviving.length <= maxFiles,
       s"$statCol in [$lo, $hi] survives ${surviving.length} files (> $maxFiles): " +
         "skipping is not selective here - scan the store directly")
-    val base = s"$outDir/data"
-    val full = spark.read.option("basePath", base).parquet(base)
-    val pruned =
-      if (surviving.isEmpty) full.filter(lit(false))
-      else spark.read.option("basePath", base).parquet(surviving: _*)
     val residual =
       if (statCol == "ts_us") unix_micros(col("ts")).between(lo, hi)
       else col(statCol).between(lo, hi)
-    pruned.filter(residual).drop("batch")
+    Landing.readFiles(spark, s"$outDir/data", surviving).filter(residual)
   }
 }

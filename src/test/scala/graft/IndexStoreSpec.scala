@@ -7,11 +7,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ext.{Dedup, IndexStore, Multimodal, Similarity, TextAnalysis}
+import graft.streaming.Landing
 
 /** The persisted-index layout of [[IndexStore]]: the `CURRENT` pointer and
   * its version sweep, replay-idempotent batch appends, and `keepBelow`
   * compactions — on the module itself and on one store per family (IVF,
-  * MinHash, image hash, BM25).
+  * MinHash, image hash, BM25) — and its read side with [[Landing]]'s: the
+  * live view by key, a hidden replayed batch, and a zone's newest batch.
   */
 class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -183,5 +185,92 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docIds = spark.read.parquet(s"$dir/v_2/tf").select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet
     assert(docIds == ((0L until 20L) ++ (100L until 103L)).toSet)
+  }
+
+  private def pairs(df: DataFrame): Set[(Long, String)] =
+    df.collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("v"))).toSet
+
+  test("live view: base rows of untouched keys pass through, an appended key serves its newest batch") {
+    import spark.implicits._
+    val dir = tmp("graft-store-live")
+    val store = new IndexStore("t")
+    store.publish(spark, dir)(_.base("t", rows(0, 4)))
+    store.append(spark, dir, Some(1L))((r, id) =>
+      r.land("t", Seq((1L, "a1"), (2L, "a1")).toDF("id", "v"), id))
+    store.append(spark, dir, Some(2L))((r, id) =>
+      r.land("t", Seq((2L, "a2")).toDF("id", "v"), id))
+    val live = IndexStore.open(spark, dir).live("t", "id")
+    assert(live.columns.toSeq == Seq("id", "v"))
+    assert(pairs(live) == Set((0L, "r0"), (1L, "a1"), (2L, "a2"), (3L, "r3")))
+  }
+
+  test("live view: a key owning several rows (a winnowing set) is replaced whole") {
+    val dir = tmp("graft-store-live-set")
+    Dedup.buildWinnowingIndex(docs(0, 4), dir)
+    val before = Dedup.winnowingIndexFps(spark, dir)
+    assert(before.filter("doc_id = 1").count() > 1, "doc 1 must own a fingerprint set")
+    val rewritten = docs(7, 8).selectExpr("1L AS doc_id", "text")
+    Dedup.appendToWinnowingIndex(spark, dir, rewritten, batchId = Some(1L))
+    val fp = (df: DataFrame, doc: Long) =>
+      df.filter(s"doc_id = $doc").select("fp").collect().map(_.getLong(0)).toSet
+    val after = Dedup.winnowingIndexFps(spark, dir)
+    val expected = TextAnalysis.winnowingFingerprints(rewritten, 12, 8)
+    assert(fp(after, 1L) == fp(expected, 1L), "doc 1 serves exactly its new set")
+    assert(fp(after, 1L) != fp(before, 1L))
+    Seq(0L, 2L, 3L).foreach(d => assert(fp(after, d) == fp(before, d), s"doc $d untouched"))
+  }
+
+  test("live view: an append that carries one key twice keeps both rows") {
+    import spark.implicits._
+    val dir = tmp("graft-store-live-twice")
+    val store = new IndexStore("t")
+    store.publish(spark, dir)(_.base("t", rows(0, 2)))
+    store.append(spark, dir, Some(1L))((r, id) =>
+      r.land("t", Seq((1L, "x"), (1L, "y")).toDF("id", "v"), id))
+    assert(pairs(IndexStore.open(spark, dir).live("t", "id")) ==
+      Set((0L, "r0"), (1L, "x"), (1L, "y")))
+    // the image-hash store, through its public serve view
+    val media = (0L until 3L).map(i => (i, s"opaque payload $i".getBytes("UTF-8"), "text/plain"))
+      .toDF("doc_id", "payload", "media_type")
+    val img = tmp("graft-store-live-twice-image")
+    Multimodal.buildImageHashStore(media, img)
+    Multimodal.appendHashesToStore(spark, img,
+      Seq((1L, 11L, false), (1L, 12L, false)).toDF("doc_id", "ahash", "is_image"), Some(1L))
+    val served = Multimodal.imageStoreHashes(spark, img)
+    assert(served.filter("doc_id = 1").select("ahash").collect().map(_.getLong(0)).toSet ==
+      Set(11L, 12L))
+    assert(served.count() == 4)
+  }
+
+  test("a hidden batch drops from every batched table of a root and from a Landing zone") {
+    import spark.implicits._
+    // 7 keeps the discovered `batch` column INT; 5e9 makes it LONG
+    Seq(7L, 5000000000L).foreach { hidden =>
+      val dir = tmp("graft-store-hide")
+      Dedup.buildWinnowingIndex(docs(0, 6), dir)
+      val fps0 = Dedup.winnowingIndexFps(spark, dir).collect().toSet
+      val df0 = Dedup.winnowingIndexDf(spark, dir).collect().toSet
+      Dedup.appendToWinnowingIndex(spark, dir, docs(2, 4).union(docs(50, 52)),
+        batchId = Some(hidden))
+      val root = IndexStore.open(spark, dir, hide = Some(hidden))
+      assert(root.live("fps", "doc_id").collect().toSet == fps0, s"fps, batch $hidden")
+      assert(Dedup.winnowingIndexDf(spark, dir, excludeBatch = Some(hidden))
+        .collect().toSet == df0, s"df, batch $hidden")
+      assert(Dedup.winnowingIndexFps(spark, dir).collect().toSet != fps0)
+      val zone = s"${tmp("graft-zone-hide")}/z"
+      Landing.write(Seq((1L, "a")).toDF("id", "v"), zone, 3L)
+      Landing.write(Seq((2L, "b")).toDF("id", "v"), zone, hidden)
+      assert(pairs(Landing.read(spark, zone)) == Set((1L, "a"), (2L, "b")))
+      assert(pairs(Landing.read(spark, zone, hide = Some(hidden))) == Set((1L, "a")))
+      assert(Landing.readIfAny(spark, s"${tmp("graft-zone-none")}/z").isEmpty)
+    }
+  }
+
+  test("newest batch of a zone is found by numeric id: batch=10 over batch=9") {
+    import spark.implicits._
+    val zone = s"${tmp("graft-zone-newest")}/z"
+    Landing.write(Seq((9L, "nine")).toDF("id", "v"), zone, 9L)
+    Landing.write(Seq((10L, "ten")).toDF("id", "v"), zone, 10L)
+    assert(pairs(Landing.newest(spark, zone)) == Set((10L, "ten")))
   }
 }
