@@ -637,8 +637,12 @@ object Dedup {
     */
   def semanticContaminationFromStore(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      corpus: DataFrame, threshold: Double = 0.3): DataFrame = {
-    val root = IndexStore.open(spark, dir)
+      corpus: DataFrame, threshold: Double = 0.3): DataFrame =
+    semanticContaminationFromStore(IndexStore.open(spark, dir), corpus, threshold)
+
+  /** [[semanticContaminationFromStore]] against an opened (pinned) root. */
+  private[graft] def semanticContaminationFromStore(root: IndexStore.Root,
+      corpus: DataFrame, threshold: Double): DataFrame = {
     // bounded driver action: meta is one row by construction
     val meta = root.read("meta").first()
     semContamProbe(corpus, root.read("buckets"), root.read("vectors"), threshold,
@@ -1446,10 +1450,14 @@ object Dedup {
     */
   def dedupAgainstMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDocs: DataFrame, estThreshold: Double = 0.5,
-      excludeBatch: Option[Long] = None): DataFrame = {
+      excludeBatch: Option[Long] = None): DataFrame =
     // excludeBatch: a streaming replay must not match the batch against the
     // partial signatures its own failed delivery appended
-    val root = IndexStore.open(spark, dir, excludeBatch)
+    dedupAgainstMinhashIndex(IndexStore.open(spark, dir, excludeBatch), newDocs, estThreshold)
+
+  /** [[dedupAgainstMinhashIndex]] against an opened root. */
+  private[graft] def dedupAgainstMinhashIndex(root: IndexStore.Root,
+      newDocs: DataFrame, estThreshold: Double): DataFrame = {
     val (numHashes, n, bands, rowsPerBand) = readMinhashParams(root)
     val idxSig = root.live("signatures", "doc_id")
     // cached: the batch-side signatures feed both the band join and the

@@ -66,8 +66,11 @@ final class IndexStore(tables: String*) {
     * one, as the commit table's next free id.
     */
   def append(spark: SparkSession, dir: String, batchId: Option[Long])(
-      write: (Root, Long) => Unit): Unit = {
-    val root = open(spark, dir)
+      write: (Root, Long) => Unit): Unit =
+    append(open(spark, dir), batchId)(write)
+
+  /** [[append]] against an already opened root (a stream's pinned one). */
+  def append(root: Root, batchId: Option[Long])(write: (Root, Long) => Unit): Unit = {
     val ids = root.batchIds(tables.head)
     write(root, batchId.getOrElse(ids.foldLeft(Base)(math.max) + 1))
   }
@@ -167,6 +170,9 @@ object IndexStore {
         .join(newest.select(col(key)).distinct(), Seq(key), "left_anti")
         .unionByName(newest)
     }
+
+    /** This root with batch `id` hidden from every batched table. */
+    def hiding(id: Long): Root = new Root(spark, path, keepBelow, Some(id))
 
     /** This root reading only the batches below `id`. */
     def below(id: Option[Long]): Root = id.fold(this)(i =>

@@ -619,9 +619,8 @@ object Multimodal {
     */
   private def writeHashStore(hashes: DataFrame, dir: String,
       maxHamming: Int): Unit = {
-    // base is one-hash-per-doc_id (r11 advisor; the live view passes the
-    // base through without a per-key window — see
-    // Similarity.requireUniqueKeys)
+    // the build input is one-hash-per-doc_id (see
+    // Similarity.requireUniqueKeys; a compaction's base may not be)
     Similarity.requireUniqueKeys(hashes, "doc_id", "writeHashStore")
     // the persisted radius is authoritative for every later probe, so the
     // banding exactness bound must hold at build time
@@ -637,25 +636,26 @@ object Multimodal {
     }
   }
 
-  private[graft] def readStoreRadius(spark: SparkSession,
-      root: String): Int =
-    IndexStore.open(spark, root).read("params").head().getAs[Int]("max_hamming")
+  private[graft] def readStoreRadius(root: IndexStore.Root): Int =
+    root.read("params").head().getAs[Int]("max_hamming")
+
+  private[graft] def readStoreRadius(spark: SparkSession, dir: String): Int =
+    readStoreRadius(IndexStore.open(spark, dir))
 
   /** Hash `media` and append it as one batch ([[IndexStore.append]]) — an
     * at-least-once replay with a stable caller `batchId` is idempotent.
     */
   def appendToImageHashStore(spark: SparkSession, dir: String,
       media: DataFrame, batchId: Option[Long] = None): Unit =
-    appendHashesToStore(spark, dir, imageHashes(spark, media).toDF(), batchId)
+    appendHashesToStore(IndexStore.open(spark, dir), imageHashes(spark, media).toDF(), batchId)
 
-  /** Append a precomputed hash frame to a store, by its `dir` or by a
-    * pinned version root — the no-re-decode
-    * half of [[appendToImageHashStore]], for callers that pinned the
-    * version and paid the decode once (streaming).
+  /** Append a precomputed hash frame to an opened store root — the
+    * no-re-decode half of [[appendToImageHashStore]], for callers that
+    * pinned the version and paid the decode once (streaming).
     */
-  private[graft] def appendHashesToStore(spark: SparkSession, root: String,
-      hashes: DataFrame, batchId: Option[Long] = None): Unit =
-    hashStore.append(spark, root, batchId)((r, id) => r.land("hashes", hashes, id))
+  private[graft] def appendHashesToStore(root: IndexStore.Root,
+      hashes: DataFrame, batchId: Option[Long]): Unit =
+    hashStore.append(root, batchId)((r, id) => r.land("hashes", hashes, id))
 
   /** Live fingerprint view of a persisted store: a re-hashed doc's
     * newest fingerprint is the live one ([[IndexStore.Root.live]]).
@@ -675,22 +675,20 @@ object Multimodal {
     */
   def dedupAgainstImageStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.open(spark, dir).path
-    probeStoreWithHashes(spark, root, readStoreRadius(spark, root),
-      imageHashes(spark, media).toDF(), excludeBatch)
-  }
-
-  /** [[dedupAgainstImageStore]] against a pinned version root, radius,
-    * and precomputed batch hashes — one decode, shared with
-    * the streaming ingest so a concurrent CURRENT flip cannot split the
-    * within-batch and probe radii.
-    */
-  private[graft] def probeStoreWithHashes(spark: SparkSession, root: String,
-      maxHamming: Int, newH: DataFrame,
-      excludeBatch: Option[Long] = None): DataFrame = {
     // excludeBatch: a streaming replay must not match the batch against
     // the partial hashes its own failed delivery appended
-    val storeH = IndexStore.open(spark, root, excludeBatch).live("hashes", "doc_id")
+    val root = IndexStore.open(spark, dir, excludeBatch)
+    probeStoreWithHashes(root, readStoreRadius(root), imageHashes(spark, media).toDF())
+  }
+
+  /** [[dedupAgainstImageStore]] against an opened root, a radius, and
+    * precomputed batch hashes — one decode, shared with the streaming
+    * ingest, which pins the root so a concurrent CURRENT flip cannot
+    * split the within-batch and probe radii.
+    */
+  private[graft] def probeStoreWithHashes(root: IndexStore.Root,
+      maxHamming: Int, newH: DataFrame): DataFrame = {
+    val storeH = root.live("hashes", "doc_id")
     val storeBands = hashBands(storeH)
       .select(col("doc_id").as("dup_of"), col("ahash").as("hb"),
         col("band"), col("key"))
@@ -704,6 +702,10 @@ object Multimodal {
       .select(col("new_id"), col("dup_of"), col("hamming"))
       .orderBy(col("new_id"), col("dup_of"))
   }
+
+  private[graft] def probeStoreWithHashes(spark: SparkSession, dir: String,
+      maxHamming: Int, newH: DataFrame, excludeBatch: Option[Long]): DataFrame =
+    probeStoreWithHashes(IndexStore.open(spark, dir, excludeBatch), maxHamming, newH)
 
   /** Fold all hash batches into a fresh version's base batch
     * ([[IndexStore.compact]]).
@@ -813,7 +815,7 @@ object Multimodal {
     */
   def appendToAudioHashStore(spark: SparkSession, dir: String,
       media: DataFrame, batchId: Option[Long] = None): Unit =
-    appendHashesToStore(spark, dir, audioHashes(spark, media).toDF(), batchId)
+    appendHashesToStore(IndexStore.open(spark, dir), audioHashes(spark, media).toDF(), batchId)
 
   /** Live fingerprint view of a persisted audio store. */
   def audioStoreHashes(spark: SparkSession, dir: String): DataFrame =
@@ -825,9 +827,8 @@ object Multimodal {
     */
   def dedupAgainstAudioStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.open(spark, dir).path
-    probeStoreWithHashes(spark, root, readStoreRadius(spark, root),
-      audioHashes(spark, media).toDF(), excludeBatch)
+    val root = IndexStore.open(spark, dir, excludeBatch)
+    probeStoreWithHashes(root, readStoreRadius(root), audioHashes(spark, media).toDF())
   }
 
   def compactAudioHashStore(spark: SparkSession, dir: String): Unit =
@@ -1083,21 +1084,24 @@ object Multimodal {
     }
   }
 
-  private[graft] def readStoreOverlap(spark: SparkSession, root: String): Double =
-    IndexStore.open(spark, root).read("params").head().getAs[Double]("min_overlap")
+  private[graft] def readStoreOverlap(root: IndexStore.Root): Double =
+    root.read("params").head().getAs[Double]("min_overlap")
+
+  private[graft] def readStoreOverlap(spark: SparkSession, dir: String): Double =
+    readStoreOverlap(IndexStore.open(spark, dir))
 
   /** Decode `media` once and append its distinct frame hashes as one
     * batch — idempotent under at-least-once replay with a stable `batchId`.
     */
   def appendToVideoFrameStore(spark: SparkSession, dir: String,
       media: DataFrame, batchId: Option[Long] = None): Unit =
-    appendFramesToStore(spark, dir,
+    appendFramesToStore(IndexStore.open(spark, dir),
       videoFrameHashes(spark, media).toDF()
         .select(col("doc_id"), col("fhash")).distinct(), batchId)
 
-  private[graft] def appendFramesToStore(spark: SparkSession, root: String,
-      frames: DataFrame, batchId: Option[Long] = None): Unit =
-    frameStore.append(spark, root, batchId)((r, id) => r.land("frames", frames, id))
+  private[graft] def appendFramesToStore(root: IndexStore.Root,
+      frames: DataFrame, batchId: Option[Long]): Unit =
+    frameStore.append(root, batchId)((r, id) => r.land("frames", frames, id))
 
   /** Live frame-hash view of a persisted video store: last-writer-wins
     * frame SETS, a re-crawled doc's newest batch replacing its whole set
@@ -1117,16 +1121,19 @@ object Multimodal {
     */
   def dedupAgainstVideoStore(spark: SparkSession, dir: String,
       media: DataFrame, excludeBatch: Option[Long] = None): DataFrame = {
-    val root = IndexStore.open(spark, dir).path
-    probeVideoStoreWithFrames(spark, root, readStoreOverlap(spark, root),
+    val root = IndexStore.open(spark, dir, excludeBatch)
+    probeVideoStoreWithFrames(root, readStoreOverlap(root),
       videoFrameHashes(spark, media).toDF()
-        .select(col("doc_id"), col("fhash")).distinct(), excludeBatch)
+        .select(col("doc_id"), col("fhash")).distinct())
   }
 
-  private[graft] def probeVideoStoreWithFrames(spark: SparkSession,
-      root: String, minOverlap: Double, newFh: DataFrame,
-      excludeBatch: Option[Long] = None): DataFrame = {
-    val store = IndexStore.open(spark, root, excludeBatch).live("frames", "doc_id")
+  private[graft] def probeVideoStoreWithFrames(spark: SparkSession, dir: String,
+      minOverlap: Double, newFh: DataFrame, excludeBatch: Option[Long]): DataFrame =
+    probeVideoStoreWithFrames(IndexStore.open(spark, dir, excludeBatch), minOverlap, newFh)
+
+  private[graft] def probeVideoStoreWithFrames(root: IndexStore.Root,
+      minOverlap: Double, newFh: DataFrame): DataFrame = {
+    val store = root.live("frames", "doc_id")
       .select(col("doc_id").as("dup_of"), col("fhash"))
     val storeTotals = store.groupBy(col("dup_of")).agg(count(lit(1)).as("ts"))
     val newTotals = newFh.groupBy(col("doc_id")).agg(count(lit(1)).as("tn"))

@@ -1127,15 +1127,16 @@ object Similarity {
   /** Base-build inputs must be ONE ROW PER KEY (r11 advisor catch): the
     * live view's base/recent split ([[IndexStore.Root.live]]) passes
     * base rows through WITHOUT a per-key window — the whole point of the
-    * split — so a base built
-    * from duplicate-keyed input would keep the duplicates forever, and
-    * every later compaction re-inherits them (compactions derive the new
-    * base from the latest-wins view, which collapses APPEND duplicates
-    * only). A duplicate key in a build input is a data bug; fail loud at
-    * build time instead of silently changing serve results. Cost: one
-    * full-input map-side-combined groupBy over the build keys (the
-    * `limit(1)` bounds only the driver collect, not the shuffle) — paid
-    * once per offline base build, never on a serve path.
+    * split — so a base built from duplicate-keyed input would keep the
+    * duplicates forever. Only the build input is checked: an append that
+    * carries a key twice keeps both rows in the live view, and a
+    * compaction lands that view as its base, so after a compaction a
+    * store holds one row per key only if its appends did. A duplicate key
+    * in a build input is a data bug; fail loud at build time instead of
+    * silently changing serve results. Cost: one full-input
+    * map-side-combined groupBy over the build keys (the `limit(1)` bounds
+    * only the driver collect, not the shuffle) — paid once per offline
+    * base build, never on a serve path.
     */
   private[ext] def requireUniqueKeys(df: DataFrame, key: String,
       ctx: String): Unit = {
@@ -1143,8 +1144,8 @@ object Similarity {
       .filter(col("c") > 1).limit(1).collect()
     require(dup.isEmpty,
       s"$ctx: build input has duplicate $key=${dup.headOption.map(_.get(0)).orNull}" +
-        s" — persisted stores are one-row-per-$key; latest-wins applies" +
-        " to appends, never the base build")
+        s" — a build input must be one-row-per-$key; the live view" +
+        " resolves keys across appends, never within the base build")
   }
 
   /** The persisted JL index ([[IndexStore]] layout): the 16-d `reduced`

@@ -1774,8 +1774,11 @@ object TextAnalysis {
     * distinct-bigram-sized LM tables; V is a one-row broadcast.
     */
   def perplexityFromLm(spark: org.apache.spark.sql.SparkSession, dir: String,
-      docs: DataFrame): DataFrame = {
-    val root = IndexStore.open(spark, dir)
+      docs: DataFrame): DataFrame =
+    perplexityFromLm(IndexStore.open(spark, dir), docs)
+
+  /** [[perplexityFromLm]] against an opened (pinned) root. */
+  private[graft] def perplexityFromLm(root: IndexStore.Root, docs: DataFrame): DataFrame = {
     val c2 = root.read("c2")
     val ctx = root.read("ctx")
     val vocab = root.read("meta")
@@ -2206,8 +2209,11 @@ object TextAnalysis {
     * is the 1-row meta read.
     */
   def dsirWeightsFromModel(spark: org.apache.spark.sql.SparkSession,
-      dir: String, docs: DataFrame): DataFrame = {
-    val root = IndexStore.open(spark, dir)
+      dir: String, docs: DataFrame): DataFrame =
+    dsirWeightsFromModel(IndexStore.open(spark, dir), docs)
+
+  /** [[dsirWeightsFromModel]] against an opened (pinned) root. */
+  private[graft] def dsirWeightsFromModel(root: IndexStore.Root, docs: DataFrame): DataFrame = {
     val lmodel = root.read("lmodel")
     // bounded driver action: meta is one row by construction
     val buckets = root.read("meta").first().getInt(0)
@@ -2962,8 +2968,11 @@ object TextAnalysis {
     * on the 1e-6 grid round-trip parquet exactly).
     */
   def lrPredictFromModel(spark: org.apache.spark.sql.SparkSession,
-      dir: String, docs: DataFrame): DataFrame = {
-    val root = IndexStore.open(spark, dir)
+      dir: String, docs: DataFrame): DataFrame =
+    lrPredictFromModel(IndexStore.open(spark, dir), docs)
+
+  /** [[lrPredictFromModel]] against an opened (pinned) root. */
+  private[graft] def lrPredictFromModel(root: IndexStore.Root, docs: DataFrame): DataFrame = {
     val w = root.read("weights").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // bounded driver action: meta is one row by construction

@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * The read side is here too, so no reader spells the layout: [[read]]
   * returns a zone's batches (minus a replayed one, a replay's own earlier
   * delivery) without the `batch` column, and [[newest]] returns its newest
-  * batch, found by listing the batch directories.
+  * committed batch, found by listing the batch directories.
   */
 object Landing {
 
@@ -79,10 +79,17 @@ object Landing {
     if (fileSystem(spark, zone).exists(new Path(zone))) Some(read(spark, zone, hide))
     else None
 
-  /** The newest batch landed in `zone`, without the `batch` column. */
+  /** The newest committed batch of `zone`, without the `batch` column. A
+    * batch directory counts once its write committed (it holds
+    * `_SUCCESS`): one still being written, or left by a failed delivery,
+    * holds only `_temporary`, and [[read]]'s partition discovery skips it
+    * too.
+    */
   def newest(spark: SparkSession, zone: String): DataFrame = {
+    val fs = fileSystem(spark, zone)
     val ids = batchIds(spark, zone)._1
-    require(ids.nonEmpty, s"no batch has landed in $zone")
+      .filter(id => fs.exists(new Path(dir(zone, id), "_SUCCESS")))
+    require(ids.nonEmpty, s"no batch has committed in $zone")
     spark.read.parquet(dir(zone, ids.max))
   }
 

@@ -309,15 +309,15 @@ object StreamingCorpus {
       // on replay folds the same committed set — idempotent
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         Dedup.compactMinhashIndex(spark, indexDir, keepBelow = Some(batchId))
-      val (numHashes, _, bands, rowsPerBand) =
-        Dedup.readMinhashParams(IndexStore.open(spark, indexDir))
+      val root = IndexStore.open(spark, indexDir)
+      val (numHashes, _, bands, rowsPerBand) = Dedup.readMinhashParams(root)
       // within-batch first: larger id drops (the candidate generator
       // is the same banded LSH the index probe uses)
       val withinDups = Dedup.minhashCandidatePairs(b, numHashes, bands,
           rowsPerBand, estThreshold)
         .select(col("b").as("doc_id")).distinct()
-      val crossDups = Dedup.dedupAgainstMinhashIndex(spark, indexDir, b,
-          estThreshold, excludeBatch = Some(batchId))
+      val crossDups = Dedup.dedupAgainstMinhashIndex(root.hiding(batchId), b,
+          estThreshold)
         .select(col("new_id").as("doc_id")).distinct()
       val survivors = scope.cache(
         b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
@@ -401,9 +401,8 @@ object StreamingCorpus {
     */
   def videoDedupIngest(media: DataFrame, storeDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = IndexStore.open(media.sparkSession, storeDir).path
-    val minOverlap = graft.ext.Multimodal
-      .readStoreOverlap(media.sparkSession, root)
+    val root = IndexStore.open(media.sparkSession, storeDir)
+    val minOverlap = graft.ext.Multimodal.readStoreOverlap(root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
       val spark = b.sparkSession
       // decode ONCE: within-batch pairing, the store probe, and
@@ -413,13 +412,12 @@ object StreamingCorpus {
       val withinDups = graft.ext.Multimodal.videoNearDupsFromFrames(fh, minOverlap)
         .select(col("b").as("doc_id")).distinct()
       val crossDups = graft.ext.Multimodal
-        .probeVideoStoreWithFrames(spark, root, minOverlap, fh,
-          excludeBatch = Some(batchId))
+        .probeVideoStoreWithFrames(root.hiding(batchId), minOverlap, fh)
         .select(col("new_id").as("doc_id")).distinct()
       val survivors = scope.cache(
         b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
       Landing.write(survivors, outDir, batchId)
-      graft.ext.Multimodal.appendFramesToStore(spark, root,
+      graft.ext.Multimodal.appendFramesToStore(root,
         fh.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi"),
         batchId = Some(batchId))
     }
@@ -435,9 +433,8 @@ object StreamingCorpus {
     // pin the store version at stream start (the lmScoreIngest
     // discipline): a concurrent rebuild flips CURRENT for the NEXT
     // stream, never mid-stream — within-batch and probe radii can't split
-    val root = IndexStore.open(media.sparkSession, storeDir).path
-    val radius = graft.ext.Multimodal
-      .readStoreRadius(media.sparkSession, root)
+    val root = IndexStore.open(media.sparkSession, storeDir)
+    val radius = graft.ext.Multimodal.readStoreRadius(root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
       val spark = b.sparkSession
       // decode ONCE: within-batch pairing, the store probe, and the
@@ -447,12 +444,12 @@ object StreamingCorpus {
       val withinDups = graft.ext.Multimodal.bandedNearDupsFromHashes(h, maxHamming = radius)
         .select(col("b").as("doc_id")).distinct()
       val crossDups = graft.ext.Multimodal
-        .probeStoreWithHashes(spark, root, radius, h, excludeBatch = Some(batchId))
+        .probeStoreWithHashes(root.hiding(batchId), radius, h)
         .select(col("new_id").as("doc_id")).distinct()
       val survivors = scope.cache(
         b.join(withinDups.unionByName(crossDups), Seq("doc_id"), "left_anti"))
       Landing.write(survivors, outDir, batchId)
-      graft.ext.Multimodal.appendHashesToStore(spark, root,
+      graft.ext.Multimodal.appendHashesToStore(root,
         h.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi"),
         batchId = Some(batchId))
     }
@@ -634,9 +631,9 @@ object StreamingCorpus {
       checkpointDir: String): StreamingQuery = {
     // pin the version at stream start: a concurrent rebuild cannot flip
     // it mid-stream
-    val root = IndexStore.open(docs.sparkSession, lmDir).path
+    val root = IndexStore.open(docs.sparkSession, lmDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
-      Landing.write(TextAnalysis.perplexityFromLm(batch.sparkSession, root,
+      Landing.write(TextAnalysis.perplexityFromLm(root,
         batch.drop("event_time")), outDir, batchId)
     }
   }
@@ -670,9 +667,9 @@ object StreamingCorpus {
     */
   def dsirScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = IndexStore.open(docs.sparkSession, modelDir).path
+    val root = IndexStore.open(docs.sparkSession, modelDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
-      Landing.write(TextAnalysis.dsirWeightsFromModel(batch.sparkSession, root,
+      Landing.write(TextAnalysis.dsirWeightsFromModel(root,
         batch.drop("event_time")), outDir, batchId)
     }
   }
@@ -853,10 +850,10 @@ object StreamingCorpus {
   def semanticDecontaminateIngest(emb: DataFrame, storeDir: String,
       outDir: String, checkpointDir: String,
       threshold: Double = 0.3): StreamingQuery = {
-    val root = IndexStore.open(emb.sparkSession, storeDir).path
+    val root = IndexStore.open(emb.sparkSession, storeDir)
     Landing.eachBatch(emb, checkpointDir) { (batch, batchId, _) =>
-      Landing.write(Dedup.semanticContaminationFromStore(batch.sparkSession,
-        root, batch, threshold), outDir, batchId)
+      Landing.write(Dedup.semanticContaminationFromStore(root, batch, threshold),
+        outDir, batchId)
     }
   }
 
@@ -877,9 +874,9 @@ object StreamingCorpus {
     */
   def lrScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val root = IndexStore.open(docs.sparkSession, modelDir).path
+    val root = IndexStore.open(docs.sparkSession, modelDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
-      Landing.write(TextAnalysis.lrPredictFromModel(batch.sparkSession, root,
+      Landing.write(TextAnalysis.lrPredictFromModel(root,
         batch.drop("event_time")), outDir, batchId)
     }
   }

@@ -234,7 +234,7 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("doc_id", "payload", "media_type")
     val img = tmp("graft-store-live-twice-image")
     Multimodal.buildImageHashStore(media, img)
-    Multimodal.appendHashesToStore(spark, img,
+    Multimodal.appendHashesToStore(IndexStore.open(spark, img),
       Seq((1L, 11L, false), (1L, 12L, false)).toDF("doc_id", "ahash", "is_image"), Some(1L))
     val served = Multimodal.imageStoreHashes(spark, img)
     assert(served.filter("doc_id = 1").select("ahash").collect().map(_.getLong(0)).toSet ==
@@ -272,5 +272,16 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     Landing.write(Seq((9L, "nine")).toDF("id", "v"), zone, 9L)
     Landing.write(Seq((10L, "ten")).toDF("id", "v"), zone, 10L)
     assert(pairs(Landing.newest(spark, zone)) == Set((10L, "ten")))
+  }
+
+  test("newest batch of a zone skips a batch still being written: batch=11/_temporary") {
+    import spark.implicits._
+    val zone = s"${tmp("graft-zone-newest-partial")}/z"
+    Landing.write(Seq((10L, "ten")).toDF("id", "v"), zone, 10L)
+    // what the Hadoop committer leaves before it moves a part file in, or
+    // after a failed delivery
+    Files.createDirectories(Paths.get(Landing.dir(zone, 11L), "_temporary", "0"))
+    assert(pairs(Landing.newest(spark, zone)) == Set((10L, "ten")))
+    assert(pairs(Landing.read(spark, zone)) == Set((10L, "ten")))
   }
 }
