@@ -146,10 +146,9 @@ object IndexStore {
       */
     def batches(table: String): DataFrame = visible(table).drop(Landing.Batch)
 
-    /** [[batches]], or `None` when nothing was ever landed in `table`. */
+    /** [[batches]], or `None` when no batch of `table` has committed. */
     def batchesIfAny(table: String): Option[DataFrame] =
-      if (Landing.fileSystem(spark, path).exists(new Path(this(table)))) Some(batches(table))
-      else None
+      if (Landing.committed(spark, this(table)).nonEmpty) Some(batches(table)) else None
 
     /** The live view of `table` by `key`: the rows of each key's newest
       * batch, so a key re-appended later serves only its new rows (all of

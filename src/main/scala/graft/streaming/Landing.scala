@@ -73,22 +73,14 @@ object Landing {
   def read(spark: SparkSession, zone: String, hide: Option[Long] = None): DataFrame =
     visible(spark.read.parquet(zone), None, hide).drop(Batch)
 
-  /** [[read]], or `None` when no batch has landed in `zone` yet. */
+  /** [[read]], or `None` when no batch has committed in `zone` yet. */
   def readIfAny(spark: SparkSession, zone: String,
       hide: Option[Long] = None): Option[DataFrame] =
-    if (fileSystem(spark, zone).exists(new Path(zone))) Some(read(spark, zone, hide))
-    else None
+    if (committed(spark, zone).nonEmpty) Some(read(spark, zone, hide)) else None
 
-  /** The newest committed batch of `zone`, without the `batch` column. A
-    * batch directory counts once its write committed (it holds
-    * `_SUCCESS`): one still being written, or left by a failed delivery,
-    * holds only `_temporary`, and [[read]]'s partition discovery skips it
-    * too.
-    */
+  /** The newest committed batch of `zone`, without the `batch` column. */
   def newest(spark: SparkSession, zone: String): DataFrame = {
-    val fs = fileSystem(spark, zone)
-    val ids = batchIds(spark, zone)._1
-      .filter(id => fs.exists(new Path(dir(zone, id), "_SUCCESS")))
+    val ids = committed(spark, zone)
     require(ids.nonEmpty, s"no batch has committed in $zone")
     spark.read.parquet(dir(zone, ids.max))
   }
@@ -132,6 +124,16 @@ object Landing {
     val ids = names.flatMap(n =>
       if (n.startsWith(Prefix)) n.stripPrefix(Prefix).toLongOption else None)
     (ids, ids.size != names.size)
+  }
+
+  /** The ids of `zone`'s committed batches: those whose directory holds
+    * `_SUCCESS`. A batch still being written, or left by a failed
+    * delivery, holds only `_temporary`; partition discovery skips it, and
+    * a zone holding nothing else cannot be read at all.
+    */
+  private[graft] def committed(spark: SparkSession, zone: String): Seq[Long] = {
+    val fs = fileSystem(spark, zone)
+    batchIds(spark, zone)._1.filter(id => fs.exists(new Path(dir(zone, id), "_SUCCESS")))
   }
 
   private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =

@@ -274,7 +274,7 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs(Landing.newest(spark, zone)) == Set((10L, "ten")))
   }
 
-  test("newest batch of a zone skips a batch still being written: batch=11/_temporary") {
+  test("a batch still being written (only _temporary) is skipped by newest, read and readIfAny") {
     import spark.implicits._
     val zone = s"${tmp("graft-zone-newest-partial")}/z"
     Landing.write(Seq((10L, "ten")).toDF("id", "v"), zone, 10L)
@@ -283,5 +283,9 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.createDirectories(Paths.get(Landing.dir(zone, 11L), "_temporary", "0"))
     assert(pairs(Landing.newest(spark, zone)) == Set((10L, "ten")))
     assert(pairs(Landing.read(spark, zone)) == Set((10L, "ten")))
+    // a zone whose only batch never committed has nothing to read
+    val first = s"${tmp("graft-zone-first-partial")}/z"
+    Files.createDirectories(Paths.get(Landing.dir(first, 0L), "_temporary", "0"))
+    assert(Landing.readIfAny(spark, first).isEmpty)
   }
 }
