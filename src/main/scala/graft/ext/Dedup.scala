@@ -799,8 +799,8 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     // base is one-logical-doc-per-doc_id (r11 advisor; see
-    // Similarity.requireUniqueKeys for why the serve split needs this)
-    Similarity.requireUniqueKeys(docs, "doc_id", "buildWinnowingIndex")
+    // IndexStore.requireUniqueKeys for why the serve split needs this)
+    IndexStore.requireUniqueKeys(docs, "doc_id", "buildWinnowingIndex")
     winnowingStore.publish(spark, dir) { v =>
       v.base("fps", TextAnalysis.winnowingFingerprints(docs, k, w))
       // the maintained (fp, df) side table (r10's self-documented gap: the
@@ -1402,7 +1402,7 @@ object Dedup {
       n: Int = 3, bands: Int = 8, rowsPerBand: Int = 4): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    Similarity.requireUniqueKeys(docs, "doc_id", "buildMinhashIndex")
+    IndexStore.requireUniqueKeys(docs, "doc_id", "buildMinhashIndex")
     minhashStore.publish(spark, dir) { v =>
       v.base("signatures", minhashSignatures(docs, numHashes, n))
       // params travel WITH the index: serve paths read them back instead of

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.functions.{col, count, lit, max}
 
 import graft.streaming.Landing
 
@@ -120,6 +120,30 @@ object IndexStore {
     */
   def open(spark: SparkSession, dir: String, hide: Option[Long] = None): Root =
     new Root(spark, resolve(spark, dir), None, hide)
+
+  /** Base-build inputs must be ONE ROW PER KEY (r11 advisor catch): the
+    * live view's base/recent split ([[Root.live]]) passes
+    * base rows through WITHOUT a per-key window — the whole point of the
+    * split — so a base built from duplicate-keyed input would keep the
+    * duplicates forever. Only the build input is checked: an append that
+    * carries a key twice keeps both rows in the live view, and a
+    * compaction lands that view as its base, so after a compaction a
+    * store holds one row per key only if its appends did. A duplicate key
+    * in a build input is a data bug; fail loud at build time instead of
+    * silently changing serve results. Cost: one full-input
+    * map-side-combined groupBy over the build keys (the `limit(1)` bounds
+    * only the driver collect, not the shuffle) — paid once per offline
+    * base build, never on a serve path.
+    */
+  private[ext] def requireUniqueKeys(df: DataFrame, key: String,
+      ctx: String): Unit = {
+    val dup = df.groupBy(col(key)).agg(count(lit(1)).as("c"))
+      .filter(col("c") > 1).limit(1).collect()
+    require(dup.isEmpty,
+      s"$ctx: build input has duplicate $key=${dup.headOption.map(_.get(0)).orNull}" +
+        s" — a build input must be one-row-per-$key; the live view" +
+        " resolves keys across appends, never within the base build")
+  }
 
   private def idOf(name: String, prefix: String): Option[Long] =
     if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption else None

@@ -620,8 +620,8 @@ object Multimodal {
   private def writeHashStore(hashes: DataFrame, dir: String,
       maxHamming: Int): Unit = {
     // the build input is one-hash-per-doc_id (see
-    // Similarity.requireUniqueKeys; a compaction's base may not be)
-    Similarity.requireUniqueKeys(hashes, "doc_id", "writeHashStore")
+    // IndexStore.requireUniqueKeys; a compaction's base may not be)
+    IndexStore.requireUniqueKeys(hashes, "doc_id", "writeHashStore")
     // the persisted radius is authoritative for every later probe, so the
     // banding exactness bound must hold at build time
     require(maxHamming <= 3 && maxHamming >= 0,
@@ -1076,7 +1076,7 @@ object Multimodal {
     import spark.implicits._
     // one media row per doc_id: a duplicated doc with DIFFERENT payloads
     // would union two frame sets into one base doc (r11 advisor class)
-    Similarity.requireUniqueKeys(media, "doc_id", "buildVideoFrameStore")
+    IndexStore.requireUniqueKeys(media, "doc_id", "buildVideoFrameStore")
     frameStore.publish(spark, dir) { v =>
       v.base("frames", videoFrameHashes(spark, media).toDF()
         .select(col("doc_id"), col("fhash")).distinct())

@@ -40,34 +40,74 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = VectorFunctions.cosineSim(a, b)
 
-  /** The shared scoring prelude of the exact-scan family: every corpus
-    * vector against every broadcast query vector, self-excluded, rounded
-    * cosine — `(query_id, vec_id, cos)`. One definition so a change to
-    * the rounding/exclusion rule cannot silently fork between the
-    * operators (and their oracles/specs) built on it.
+  // The four steps every top-k serve below shares — query panel, IVF cell
+  // probe, exact score, rank tail — each defined once, so the rounding,
+  // self-exclusion and rank/tiebreak rules the oracles pin cannot fork
+  // between sibling serves.
+
+  /** The query panel: `(query_id, q_emb)` for the vectors `pick` selects,
+    * followed by `carry`.
     */
-  private def scoredScan(emb: DataFrame, queryIds: Seq[Long]): DataFrame = {
-    val queries = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    emb.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-  }
+  private def queryPanel(vectors: DataFrame, pick: Column, carry: Column*): DataFrame =
+    vectors.filter(pick)
+      .select(Seq(col("vec_id").as("query_id"), col("embedding").as("q_emb")) ++ carry: _*)
+
+  private def queryPanel(vectors: DataFrame, queryIds: Seq[Long]): DataFrame =
+    queryPanel(vectors, col("vec_id").isInCollection(queryIds))
+
+  /** The IVF cell probe: each panel query against the broadcast centroids
+    * (`centCell`, `centroid`), cells ranked by `(c_cos desc, centCell)`, the
+    * first `nProbe` kept — `(query_id, q_emb, centCell)`.
+    */
+  private def probeCells(queries: DataFrame, centroids: DataFrame, centCell: String,
+      nProbe: Int): DataFrame =
+    queries.crossJoin(broadcast(centroids))
+      .withColumn("c_cos", cosine(col("q_emb"), col("centroid")))
+      .withColumn("c_rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col(centCell))))
+      .filter(col("c_rank") <= nProbe)
+      .select(col("query_id"), col("q_emb"), col(centCell))
+
+  /** The exact score of a candidate row: its rounded cosine to its query. */
+  private val exactCos: Column = round(cosine(col("q_emb"), col("embedding")), 6)
+
+  /** Exact scoring of candidate rows (`query_id`, `vec_id`, `q_emb`,
+    * `embedding`): self-excluded, [[exactCos]] as `cos` —
+    * `(query_id, vec_id, carry…, cos)`.
+    */
+  private def exactScore(cand: DataFrame, carry: Column*): DataFrame =
+    rescore(cand.filter(col("vec_id") =!= col("query_id")), carry: _*)
+
+  /** [[exactScore]] without the self-exclusion, for a shortlist drawn
+    * from an already self-excluded stage.
+    */
+  private def rescore(shortlist: DataFrame, carry: Column*): DataFrame =
+    shortlist.select(Seq(col("query_id"), col("vec_id")) ++ carry :+ exactCos.as("cos"): _*)
 
   /** The shared `(cos desc, vec_id)` per-anchor ranking window. */
   private val anchorRank = Window.partitionBy(col("query_id"))
     .orderBy(col("cos").desc, col("vec_id"))
+
+  /** Each query's first `k` scored rows by [[anchorRank]], numbered `rank`. */
+  private def topRanked(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(anchorRank)).filter(col("rank") <= k)
+
+  /** The rank tail: [[topRanked]] in `(query_id, rank)` order. */
+  private def rankTail(scored: DataFrame, k: Int): DataFrame =
+    topRanked(scored, k).orderBy(col("query_id"), col("rank"))
+
+  /** The exact scan: every corpus vector against every broadcast query
+    * vector, [[exactScore]]d — `(query_id, vec_id, cos)`.
+    */
+  private def scoredScan(emb: DataFrame, queryIds: Seq[Long]): DataFrame =
+    exactScore(emb.crossJoin(broadcast(queryPanel(emb, queryIds))))
 
   /** Exact top-k neighbors for each query vector (queries broadcast).
     * Rank on the ROUNDED cosine with vec_id tiebreak so ordering is
     * engine-deterministic.
     */
   def bruteForceTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10): DataFrame =
-    scoredScan(emb, queryIds)
-      .withColumn("rank", row_number().over(anchorRank))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    rankTail(scoredScan(emb, queryIds), k)
 
   /** Matryoshka-truncated top-k (MRL, Kusupati et al. 2022,
     * arXiv:2205.13147): score on only the FIRST `dims` components of
@@ -116,11 +156,7 @@ object Similarity {
     */
   def hardNegatives(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       floor: Double = 0.5, ceiling: Double = 0.95): DataFrame =
-    scoredScan(emb, queryIds)
-      .filter(col("cos") >= floor && col("cos") < ceiling)
-      .withColumn("rank", row_number().over(anchorRank))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    rankTail(scoredScan(emb, queryIds).filter(col("cos") >= floor && col("cos") < ceiling), k)
 
   /** Contrastive training-pair mining — the one-stop pair builder for
     * embedding-model training: for each anchor, its `kPos` nearest
@@ -137,11 +173,9 @@ object Similarity {
       kPos: Int = 3, kNeg: Int = 10,
       floor: Double = 0.5, ceiling: Double = 0.95): DataFrame = {
     val scored = scoredScan(emb, queryIds)
-    val pos = scored.withColumn("rank", row_number().over(anchorRank))
-      .filter(col("rank") <= kPos).withColumn("role", lit("pos"))
-    val neg = scored.filter(col("cos") >= floor && col("cos") < ceiling)
-      .withColumn("rank", row_number().over(anchorRank))
-      .filter(col("rank") <= kNeg).withColumn("role", lit("neg"))
+    val pos = topRanked(scored, kPos).withColumn("role", lit("pos"))
+    val neg = topRanked(scored.filter(col("cos") >= floor && col("cos") < ceiling), kNeg)
+      .withColumn("role", lit("neg"))
     pos.unionByName(neg).orderBy(col("query_id"), col("role"), col("rank"))
   }
 
@@ -678,16 +712,13 @@ object Similarity {
   def mmrRerank(emb: DataFrame, queryEvery: Int = 100, poolK: Int = 10,
       k: Int = 5, lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && poolK >= k, s"need poolK >= k >= 1, got poolK=$poolK k=$k")
-    val q = emb.filter(col("vec_id") % queryEvery === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val q = queryPanel(emb, col("vec_id") % queryEvery === 0)
     // the pool CARRIES its members' embeddings (poolK × queries vectors —
     // tiny), so the pairwise-sim stage never re-joins the corpus: one
     // corpus scan total
     val poolE = emb.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("rel"),
-        col("embedding"))
+      .select(col("query_id"), col("vec_id"), exactCos.as("rel"), col("embedding"))
       .withColumn("rk", row_number().over(anchorRank.orderBy(col("rel").desc, col("vec_id"))))
       .filter(col("rk") <= poolK)
       .select(col("query_id"), col("vec_id"), col("rel"), col("embedding"))
@@ -913,26 +944,6 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
-  /** Triangle count + local clustering coefficient over the same
-    * LSH-pruned kNN graph [[embeddingPagerank]] ranks — the
-    * community-density read next to PageRank's centrality read: a node
-    * whose neighbors also neighbor EACH OTHER (coefficient → 1) sits
-    * inside a tight semantic cluster; a high-degree node with
-    * coefficient → 0 is a hub bridging unrelated regions (and a prime
-    * dedup/diversity-audit target). `coeff = 2·T / (deg·(deg−1))`.
-    *
-    * Algorithm (the standard distributed triangle join, node-iterator
-    * form): UNDIRECTED edges from the top-k lists (canonical u<v,
-    * distinct); wedges join the edge list with itself on the pivot node
-    * (v<w orders each wedge once); a semi-join against the edge list
-    * closes triangles. Every step is edge-list-sized (≈N·k rows) — the
-    * corpus appears only through the candidate stage, and no step is
-    * ever N². Degree counts come from the same canonical edge list.
-    *
-    * Determinism: edges derive from round-6 cosines with the dst
-    * tiebreak (the pagerank discipline), and everything after is exact
-    * integer counting; the coefficient is one rounded division.
-    */
   /** LSH plane count holding a TARGET bucket occupancy: with FIXED planes
     * the per-bucket population grows linearly in N, so in-bucket candidate
     * pairs grow QUADRATICALLY — the r9 sf1 sweep measured the graph
@@ -983,6 +994,26 @@ object Similarity {
       .distinct().localCheckpoint(true)
   }
 
+  /** Triangle count + local clustering coefficient over the same
+    * LSH-pruned kNN graph [[embeddingPagerank]] ranks — the
+    * community-density read next to PageRank's centrality read: a node
+    * whose neighbors also neighbor EACH OTHER (coefficient → 1) sits
+    * inside a tight semantic cluster; a high-degree node with
+    * coefficient → 0 is a hub bridging unrelated regions (and a prime
+    * dedup/diversity-audit target). `coeff = 2·T / (deg·(deg−1))`.
+    *
+    * Algorithm (the standard distributed triangle join, node-iterator
+    * form): UNDIRECTED edges from the top-k lists (canonical u<v,
+    * distinct); wedges join the edge list with itself on the pivot node
+    * (v<w orders each wedge once); a semi-join against the edge list
+    * closes triangles. Every step is edge-list-sized (≈N·k rows) — the
+    * corpus appears only through the candidate stage, and no step is
+    * ever N². Degree counts come from the same canonical edge list.
+    *
+    * Determinism: edges derive from round-6 cosines with the dst
+    * tiebreak (the pagerank discipline), and everything after is exact
+    * integer counting; the coefficient is one rounded division.
+    */
   def embeddingTriangles(emb: DataFrame, k: Int = 4): DataFrame = {
     val edges = knnUndirectedEdges(emb, k)
     // both endpoints see the edge for degree and for wedge pivoting
@@ -1048,6 +1079,23 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
+  /** The ±1 sign rows, one per output axis, from the portable md5-prefix
+    * hash of `"jl:<j>:<d>"` (d is 1-based) — computed ONCE driver-side
+    * and shipped as plan literals, because the matrix is data-independent.
+    * Rows are `maxDim` long; [[graft.functions.VecDot]] stops at the
+    * shorter input, so one matrix serves any embedding dimension ≤ maxDim.
+    */
+  private[graft] def jlSigns(k: Int, maxDim: Int): Array[Array[Double]] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    Array.tabulate(k) { j =>
+      Array.tabulate(maxDim) { i =>
+        val hex = md.digest(s"jl:$j:${i + 1}".getBytes("UTF-8"))
+          .map("%02x".format(_)).mkString.take(15)
+        if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1.0 else -1.0
+      }
+    }
+  }
+
   /** Johnson-Lindenstrauss random projection: embed the corpus into
     * `k` dimensions with a deterministic ±1 sign matrix (Achlioptas
     * 2003 — database-friendly projections), `y_j = Σ_d sign(j,d)·x_d /
@@ -1070,51 +1118,36 @@ object Similarity {
     * the scan, no explode, no shuffle bigger than the 16-rows-per-vector
     * output, and no fit state at all.
     */
-  /** The ±1 sign rows, one per output axis, from the portable md5-prefix
-    * hash of `"jl:<j>:<d>"` (d is 1-based) — computed ONCE driver-side
-    * and shipped as plan literals, because the matrix is data-independent.
-    * Rows are `maxDim` long; [[graft.functions.VecDot]] stops at the
-    * shorter input, so one matrix serves any embedding dimension ≤ maxDim.
-    */
-  private[graft] def jlSigns(k: Int, maxDim: Int): Array[Array[Double]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Array.tabulate(k) { j =>
-      Array.tabulate(maxDim) { i =>
-        val hex = md.digest(s"jl:$j:${i + 1}".getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(15)
-        if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1.0 else -1.0
-      }
-    }
-  }
-
   def jlProject(emb: DataFrame, k: Int = 16): DataFrame = {
     require(k == 16, "k is pinned to 16 (exact dyadic 1/sqrt(k) = 1/4)")
     // k codegen'd VecDot loops per row against literal sign rows — pure
     // map work, no explode, no shuffle before the 16-rows-per-vector
     // output (the r9 rewrite: the explode + (vec, axis)-keyed aggregate
     // formulation cost 4.5 s at sf0.1; this one is scan-bound)
-    val signs = jlSigns(k, maxDim = 512)
-    val ys = (0 until k).map { j =>
-      round(VectorFunctions.vecDot(col("embedding"),
-        typedLit(signs(j).toSeq)) / 4.0, 6)
-    }
-    emb.select(col("vec_id"), posexplode(array(ys: _*)).as(Seq("j", "y")))
+    emb.select(col("vec_id"), posexplode(array(jlAxes: _*)).as(Seq("j", "y")))
       .select(col("vec_id"), col("j").cast("long").as("j"), col("y"))
       .orderBy(col("vec_id"), col("j"))
+  }
+
+  /** The 16 round-6 JL components of `embedding`, one column per axis. */
+  private def jlAxes: Seq[Column] = {
+    val signs = jlSigns(16, maxDim = 512)
+    (0 until 16).map { j =>
+      round(VectorFunctions.vecDot(col("embedding"), typedLit(signs(j).toSeq)) / 4.0, 6)
+    }
   }
 
   /** The corpus in JL-reduced form: `(vec_id, embedding)` with the
     * 16-component sign projection as the vector (components round-6, so
     * both engines score the identical reduced space).
     */
-  private def jlReduced(emb: DataFrame): DataFrame = {
-    val signs = jlSigns(16, maxDim = 512)
-    val ys = (0 until 16).map { j =>
-      round(VectorFunctions.vecDot(col("embedding"),
-        typedLit(signs(j).toSeq)) / 4.0, 6)
-    }
-    emb.select(col("vec_id"), array(ys: _*).as("embedding"))
-  }
+  private def jlReduced(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), array(jlAxes: _*).as("embedding"))
+
+  /** The persisted JL index ([[IndexStore]] layout): the 16-d `reduced`
+    * projection the shortlist scans and the full `vectors`.
+    */
+  private val jlStore = new IndexStore("reduced", "vectors")
 
   /** Persist the JL-reduced corpus as a versioned serving index
     * ([[IndexStore]] layout): the 16-component
@@ -1124,37 +1157,8 @@ object Similarity {
     * matrix is data-independent plan literals — so appends can never
     * drift from a stale model.
     */
-  /** Base-build inputs must be ONE ROW PER KEY (r11 advisor catch): the
-    * live view's base/recent split ([[IndexStore.Root.live]]) passes
-    * base rows through WITHOUT a per-key window — the whole point of the
-    * split — so a base built from duplicate-keyed input would keep the
-    * duplicates forever. Only the build input is checked: an append that
-    * carries a key twice keeps both rows in the live view, and a
-    * compaction lands that view as its base, so after a compaction a
-    * store holds one row per key only if its appends did. A duplicate key
-    * in a build input is a data bug; fail loud at build time instead of
-    * silently changing serve results. Cost: one full-input
-    * map-side-combined groupBy over the build keys (the `limit(1)` bounds
-    * only the driver collect, not the shuffle) — paid once per offline
-    * base build, never on a serve path.
-    */
-  private[ext] def requireUniqueKeys(df: DataFrame, key: String,
-      ctx: String): Unit = {
-    val dup = df.groupBy(col(key)).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"$ctx: build input has duplicate $key=${dup.headOption.map(_.get(0)).orNull}" +
-        s" — a build input must be one-row-per-$key; the live view" +
-        " resolves keys across appends, never within the base build")
-  }
-
-  /** The persisted JL index ([[IndexStore]] layout): the 16-d `reduced`
-    * projection the shortlist scans and the full `vectors`.
-    */
-  private val jlStore = new IndexStore("reduced", "vectors")
-
   def buildJlIndex(emb: DataFrame, dir: String): Unit = {
-    requireUniqueKeys(emb, "vec_id", "buildJlIndex")
+    IndexStore.requireUniqueKeys(emb, "vec_id", "buildJlIndex")
     jlStore.publish(emb.sparkSession, dir) { v =>
       v.base("reduced", jlReduced(emb))
       v.base("vectors", emb)
@@ -1179,20 +1183,7 @@ object Similarity {
   def jlTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 200): DataFrame = {
     val root = IndexStore.open(spark, dir)
-    val reduced = root.batches("reduced")
-    val vectors = root.batches("vectors")
-    val cand = bruteForceTopK(
-        reduced.select(col("vec_id"), col("embedding")), queryIds, shortlist)
-      .select(col("query_id"), col("vec_id"))
-    val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    vectors.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rank", row_number().over(anchorRank))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    jlServe(root.batches("reduced"), root.batches("vectors"), queryIds, k, shortlist)
   }
 
   /** Two-stage exact-k serving through the JL space: shortlist by cosine
@@ -1220,18 +1211,19 @@ object Similarity {
     * scanned at full dimension.
     */
   def jlShortlistTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
-      shortlist: Int = 200): DataFrame = {
-    val cand = bruteForceTopK(jlReduced(emb), queryIds, shortlist)
+      shortlist: Int = 200): DataFrame =
+    jlServe(jlReduced(emb), emb, queryIds, k, shortlist)
+
+  /** The two-stage JL serve: the top-`shortlist` of each query by
+    * [[bruteForceTopK]] over the `(vec_id, embedding)` rows of `reduced`,
+    * exact-scored against the full `vectors` and ranked to `k`.
+    */
+  private def jlServe(reduced: DataFrame, vectors: DataFrame, queryIds: Seq[Long],
+      k: Int, shortlist: Int): DataFrame = {
+    val cand = bruteForceTopK(reduced, queryIds, shortlist)
       .select(col("query_id"), col("vec_id"))
-    val queries = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    emb.join(broadcast(cand), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rank", row_number().over(anchorRank))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    rankTail(rescore(vectors.join(broadcast(cand), Seq("vec_id"))
+      .join(broadcast(queryPanel(vectors, queryIds)), Seq("query_id"))), k)
   }
 
   /** Community detection over the kNN graph by synchronous label
@@ -1303,7 +1295,7 @@ object Similarity {
     */
   def buildIvfIndex(emb: DataFrame, dir: String, nCells: Int = 16, iters: Int = 3): Unit = {
     import emb.sparkSession.implicits._
-    requireUniqueKeys(emb, "vec_id", "buildIvfIndex")
+    IndexStore.requireUniqueKeys(emb, "vec_id", "buildIvfIndex")
     val (cents, cells) = kmeansFit(emb, nCells, iters)
     // a rebuild publishes a complete new version, so readers never pair
     // fresh cell assignments with stale centroids; the old version's
@@ -1345,28 +1337,12 @@ object Similarity {
       queryIds: Seq[Long], k: Int = 10, nProbe: Int = 2): DataFrame = {
     val root = IndexStore.open(spark, dir)
     val vectors = root.batches("vectors")
-    val centDf = root.read("centroids")
-    val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val probes = probeCells(queryPanel(vectors, queryIds), root.read("centroids"), "cell", nProbe)
     // bounded collect: nProbe × queries cell ids drive partition pruning
-    val probes = queries.crossJoin(broadcast(centDf))
-      .withColumn("c_cos", cosine(col("q_emb"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col("cell"))))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("cell"))
     val probedCells = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    vectors
-      .filter(col("cell").isInCollection(probedCells)) // partition pruning
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    rankTail(exactScore(vectors.filter(col("cell").isInCollection(probedCells))
+      .join(broadcast(probes), Seq("cell")), col("cell")), k)
   }
 
   /** IVF-served dense candidate pool for a corpus-derived query panel
@@ -1387,19 +1363,11 @@ object Similarity {
       queryEvery: Int, poolK: Int = 20, nProbe: Int = 2): DataFrame = {
     val root = IndexStore.open(spark, dir)
     val vectors = root.batches("vectors")
-    val centDf = root.read("centroids")
-    val queries = vectors.filter(col("vec_id") % queryEvery === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = queries.crossJoin(broadcast(centDf))
-      .withColumn("c_cos", cosine(col("q_emb"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col("cell"))))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("cell"))
+    val probes = probeCells(queryPanel(vectors, col("vec_id") % queryEvery === 0),
+      root.read("centroids"), "cell", nProbe)
     vectors
       .join(probes, Seq("cell"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
+      .select(col("query_id"), col("vec_id").as("doc_id"), exactCos.as("cos"))
       .withColumn("rank_dense", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("doc_id"))))
       .filter(col("rank_dense") <= poolK)
@@ -1417,32 +1385,24 @@ object Similarity {
     */
   def ivfTopKKmeans(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       nProbe: Int = 2, nCells: Int = 16, iters: Int = 3): DataFrame = {
+    import emb.sparkSession.implicits._
     // reuse the assignment that produced the final centroids (each centroid
     // IS the mean of its returned cell) — no 4th assign pass over the corpus
     val (cents, cells) = kmeansFit(emb, nCells, iters)
-    ivfTopKWithCells(emb.join(cells, Seq("vec_id")), cents, queryIds, k, nProbe)
+    ivfTopKWithCells(emb.join(cells, Seq("vec_id")), "cell",
+      cents.toDF("c_cell", "centroid"), "c_cell", queryIds, k, nProbe)
   }
 
-  private def ivfTopKWithCells(embWithCell: DataFrame, cents: Seq[(Int, Array[Double])],
-      queryIds: Seq[Long], k: Int, nProbe: Int): DataFrame = {
-    import embWithCell.sparkSession.implicits._
-    val centDf = cents.toDF("c_cell", "centroid")
-    val queries = embWithCell.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = queries.crossJoin(broadcast(centDf))
-      .withColumn("c_cos", cosine(col("q_emb"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col("c_cell"))))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("c_cell"))
-    embWithCell.join(broadcast(probes), col("cell") === col("c_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+  /** The IVF serve: each query probes its `nProbe` nearest `centroids`
+    * ([[probeCells]] on their `centCell`), and the top-k comes from the
+    * exact scores of the `emb` rows whose `cell` column names a probed
+    * cell — `(query_id, vec_id, cell, cos, rank)`.
+    */
+  private def ivfTopKWithCells(emb: DataFrame, cell: String, centroids: DataFrame,
+      centCell: String, queryIds: Seq[Long], k: Int, nProbe: Int): DataFrame = {
+    val probes = probeCells(queryPanel(emb, queryIds), centroids, centCell, nProbe)
+    rankTail(exactScore(emb.join(broadcast(probes), col(cell) === col(centCell)),
+      col("cell")), k)
   }
 
   /** IVF centroids: per-cell mean vector, computed distributively via
@@ -1465,25 +1425,8 @@ object Similarity {
     * nearest cells, exact top-k within the probed subset.
     */
   def ivfTopK(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
-      nProbe: Int = 2, cellCol: String = "label"): DataFrame = {
-    val centroids = ivfCentroids(emb, cellCol)
-    val queries = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("c_cos", cosine(col("q_emb"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col("cell"))))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("cell"))
-    emb.join(broadcast(probes), col(cellCol) === col("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("cell"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
-  }
+      nProbe: Int = 2, cellCol: String = "label"): DataFrame =
+    ivfTopKWithCells(emb, cellCol, ivfCentroids(emb, cellCol), "cell", queryIds, k, nProbe)
 
   // ------------------------------------------------- product quantization
 
@@ -1601,11 +1544,8 @@ object Similarity {
     // used to be re-assembled from the m per-subspace assignments with an
     // m-way self-join — m−1 join stages over slices of one checkpoint
     val (books, assigned) = pqFitJoint(emb, m, ks, iters, dim)
-    val codes = pqCodesWide(assigned, m)
-    val queries = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    pqScoreAndRank(codes, queries, emb, lutColumns(books), m, dim / m,
-      k, shortlist)
+    pqScoreAndRank(pqCodesWide(assigned, m), queryPanel(emb, queryIds), emb,
+      lutColumns(books), m, dim / m, k, shortlist)
   }
 
   /** Per-subspace literal LUT columns: codeword vectors as nested array
@@ -1628,16 +1568,13 @@ object Similarity {
       }: _*)
     }
 
-  /** Shared PQ scoring tail: ADC over the codes (fixed-order left-assoc
-    * sums, mirrored exactly by the oracle), then either pure-ADC top-k or
-    * shortlist nomination + exact cosine re-rank against `vectors`.
-    */
-  /** `adcFloor`/`band` parameterize the hard-negative variant: the ADC
-    * floor prunes the nomination window's input, the exact band applies
-    * after the re-rank — ONE definition of the arithmetic both the
-    * flat-PQ top-k and the index-served miner share, mirroring the
-    * parameterized oracle builder (Oracles.pqReplaySql) so the engine
-    * and oracle cannot silently fork.
+  /** Shared PQ scoring: self-excluded ADC over the codes
+    * ([[pqApproxCos]]), then [[pqRankTail]]. `adcFloor`/`band`
+    * parameterize the hard-negative variant: the ADC floor prunes the
+    * nomination window's input, the exact band applies after the re-rank.
+    * The flat-PQ top-k and the index-served miner share this one
+    * definition, mirroring the parameterized oracle builder
+    * (Oracles.pqReplaySql).
     */
   private def pqScoreAndRank(codes: DataFrame, queries: DataFrame,
       vectors: DataFrame, luts: Seq[Column], m: Int, subDim: Int,
@@ -1679,34 +1616,21 @@ object Similarity {
     require(band.isEmpty || shortlist > 0,
       "a score band requires the exact-rerank path (shortlist > 0): the " +
       "pure-ADC branch would band the approximate score")
-    val wApprox = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_approx").desc, col("vec_id"))
-    def bandFilter(df: DataFrame): DataFrame = band.fold(df) { case (floor, ceiling) =>
-      df.filter(col("cos") >= floor && col("cos") < ceiling)
-    }
-    if (shortlist <= 0)
-      bandFilter(scored.withColumnRenamed("cos_approx", "cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-        .filter(col("rank") <= k)
-        .orderBy(col("query_id"), col("rank"))
+    if (shortlist <= 0) rankTail(scored.withColumnRenamed("cos_approx", "cos"), k)
     else {
       val nominated = scored
-        .withColumn("arank", row_number().over(wApprox))
+        .withColumn("arank", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(col("cos_approx").desc, col("vec_id"))))
         .filter(col("arank") <= shortlist)
         .select(col("query_id"), col("vec_id"))
-      val rescored = nominated
+      val rescored = rescore(nominated
         .join(vectors.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-        .join(broadcast(queries), Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
+        .join(broadcast(queries), Seq("query_id")))
       // band (when set) applies to the EXACT score, before the rank —
       // filter-then-rank, identical to the brute-force miner's ordering
-      bandFilter(rescored)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-        .filter(col("rank") <= k)
-        .orderBy(col("query_id"), col("rank"))
+      rankTail(band.fold(rescored) { case (floor, ceiling) =>
+        rescored.filter(col("cos") >= floor && col("cos") < ceiling)
+      }, k)
     }
   }
 
@@ -1724,7 +1648,7 @@ object Similarity {
   def buildPqIndex(emb: DataFrame, dir: String, m: Int = 8, ks: Int = 16,
       iters: Int = 2, dim: Int = 64): Unit = {
     import emb.sparkSession.implicits._
-    requireUniqueKeys(emb, "vec_id", "buildPqIndex")
+    IndexStore.requireUniqueKeys(emb, "vec_id", "buildPqIndex")
     // one version holds codes, codebooks and vectors: codes can never pair
     // with codebooks from a different fit
     pqStore.publish(emb.sparkSession, dir) { v =>
@@ -1798,26 +1722,6 @@ object Similarity {
       v.write("codebooks", old.read("codebooks"))
     }
 
-  /** Query a persisted PQ index: the corpus-wide scan reads the CODES
-    * parquet only; codebooks (driver-bounded) come back as plan literals;
-    * the vectors table is touched just for the query rows and the
-    * shortlist re-rank.
-    */
-  /** Persist an INT8 index — the standard serving compression one tier
-    * lighter than PQ: per-vector symmetric quantization (scale =
-    * 127/max|v|, [[quantizeInt8]]'s exact formula) stores each embedding
-    * as d bytes + one scale. Cosine against the int8 codes needs NO
-    * dequantization — the per-vector scale cancels in the cosine ratio —
-    * so serving scans an array<int> column and the raw vectors are read
-    * only for the shortlist re-rank. Stored in the [[IndexStore]] layout
-    * like the IVF/PQ indexes.
-    *
-    * The quantize pass is posexplode + per-vector window + ordered
-    * re-collect (ONE vec_id shuffle): computing the row max inside a
-    * `transform` lambda would re-evaluate it per element once
-    * CollapseProject inlines it — the [[quantizeInt8]] trap, avoided the
-    * same way.
-    */
   /** The int8 code table for a vector batch: per-vector scale + ordered
     * code array — shared by the base build and the append/streaming
     * maintain paths, so the quantization arithmetic has one definition.
@@ -1840,8 +1744,23 @@ object Similarity {
     */
   private val int8Store = new IndexStore("codes", "vectors")
 
+  /** Persist an INT8 index — the standard serving compression one tier
+    * lighter than PQ: per-vector symmetric quantization (scale =
+    * 127/max|v|, [[quantizeInt8]]'s exact formula) stores each embedding
+    * as d bytes + one scale. Cosine against the int8 codes needs NO
+    * dequantization — the per-vector scale cancels in the cosine ratio —
+    * so serving scans an array<int> column and the raw vectors are read
+    * only for the shortlist re-rank. Stored in the [[IndexStore]] layout
+    * like the IVF/PQ indexes.
+    *
+    * The quantize pass is posexplode + per-vector window + ordered
+    * re-collect (ONE vec_id shuffle): computing the row max inside a
+    * `transform` lambda would re-evaluate it per element once
+    * CollapseProject inlines it — the [[quantizeInt8]] trap, avoided the
+    * same way.
+    */
   def buildInt8Index(emb: DataFrame, dir: String): Unit = {
-    requireUniqueKeys(emb, "vec_id", "buildInt8Index")
+    IndexStore.requireUniqueKeys(emb, "vec_id", "buildInt8Index")
     int8Store.publish(emb.sparkSession, dir) { v =>
       v.base("codes", int8Codes(emb))
       v.base("vectors", emb)
@@ -1875,17 +1794,15 @@ object Similarity {
     * codes column (cast to double — the shared codegen'd [[CosineSim]]
     * loop; the quantization scale cancels), then the SAME shortlist
     * nomination + exact re-rank tail as the PQ paths ([[pqRankTail]]),
-    * so the rank/tiebreak discipline has one definition across every
-    * approximate server.
+    * which ends, like every top-k here, in the shared exact score
+    * ([[rescore]]) and [[rankTail]].
     */
   def int8TopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 50): DataFrame = {
     val root = IndexStore.open(spark, dir)
-    val codes = root.batches("codes")
     val vectors = root.batches("vectors")
-    val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = codes.crossJoin(broadcast(queries))
+    val queries = queryPanel(vectors, queryIds)
+    val scored = root.batches("codes").crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         round(cosine(col("q_emb"), col("codes").cast("array<double>")), 6)
@@ -1909,13 +1826,17 @@ object Similarity {
     (codes, vectors, lutColumns(codebooks), m)
   }
 
+  /** Query a persisted PQ index: the corpus-wide scan reads the CODES
+    * parquet only; codebooks (driver-bounded) come back as plan literals;
+    * the vectors table is touched just for the query rows and the
+    * shortlist re-rank.
+    */
   def pqTopKFromIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       queryIds: Seq[Long], k: Int = 10, shortlist: Int = 50,
       dim: Int = 64): DataFrame = {
     val (codes, vectors, luts, m) = loadPqIndex(spark, dir)
-    val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    pqScoreAndRank(codes, queries, vectors, luts, m, dim / m, k, shortlist)
+    pqScoreAndRank(codes, queryPanel(vectors, queryIds), vectors, luts, m, dim / m,
+      k, shortlist)
   }
 
   /** Hard-negative mining served from a persisted PQ index — the scale
@@ -1943,12 +1864,8 @@ object Similarity {
       floor: Double = 0.5, ceiling: Double = 0.95, shortlist: Int = 200,
       margin: Double = 0.05, dim: Int = 64): DataFrame = {
     val (codes, vectors, luts, m) = loadPqIndex(spark, dir)
-    val queries = vectors.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    // same shared scoring/ranking tail as pqTopKFromIndex, with the
-    // margined ADC floor on nomination and the exact band on the re-rank
-    pqScoreAndRank(codes, queries, vectors, luts, m, dim / m, k, shortlist,
-      adcFloor = Some(floor - margin), band = Some((floor, ceiling)))
+    pqScoreAndRank(codes, queryPanel(vectors, queryIds), vectors, luts, m, dim / m,
+      k, shortlist, adcFloor = Some(floor - margin), band = Some((floor, ceiling)))
   }
 
   /** IVF-PQ: the two index tiers composed — coarse k-means cells prune
@@ -1966,29 +1883,18 @@ object Similarity {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val subDim = dim / m
     val coarseF = Future { kmeansFit(emb, nCells, iters) }
     val (books, assigned) = pqFitJoint(emb, m, ks, iters, dim)
     val (coarse, cells) = Await.result(coarseF, Duration.Inf)
     val codes = pqCodesWide(assigned, m)
       .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val luts = lutColumns(books)
-    val queries = emb.filter(col("vec_id").isInCollection(queryIds))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    // coarse probes: rank cells by query-centroid cosine (broadcast both —
-    // centroids are nCells × dim doubles, queries are bounded)
-    val centDf = coarse.toDF("c_cell", "centroid")
-    val probes = queries.crossJoin(broadcast(centDf))
-      .withColumn("c_cos", cosine(col("q_emb"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_cos").desc, col("c_cell"))))
-      .filter(col("c_rank") <= nProbe)
-      .select(col("query_id"), col("q_emb"), col("c_cell"))
+    val queries = queryPanel(emb, queryIds)
+    val probes = probeCells(queries, coarse.toDF("c_cell", "centroid"), "c_cell", nProbe)
     // same ADC arithmetic and ranking tail as flat PQ — only the join that
     // selects WHICH codes get scored differs (probed cells vs the corpus)
     val scored = codes.join(broadcast(probes), col("cell") === col("c_cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), pqApproxCos(luts, m, subDim))
+      .select(col("query_id"), col("vec_id"), pqApproxCos(lutColumns(books), m, dim / m))
     pqRankTail(scored, queries, emb, k, shortlist)
   }
 
@@ -2042,9 +1948,8 @@ object Similarity {
         b.bitwiseXOR(call_function("shiftleft", lit(1L),
           element_at(sortedIdx, p + 1)))
       })
-      val queries = bucketed.filter(col("vec_id").isInCollection(queryIds))
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-          explode(array(probeCols: _*)).as("q_bucket"))
+      val queries = queryPanel(bucketed, col("vec_id").isInCollection(queryIds),
+        explode(array(probeCols: _*)).as("q_bucket"))
       bucketed.join(broadcast(queries), col("bucket") === col("q_bucket"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), col("q_emb"), col("embedding"))
@@ -2056,12 +1961,6 @@ object Similarity {
       .dropDuplicates("query_id", "vec_id")
       .localCheckpoint(true)
     tableCaches.foreach(_.unpersist())
-    candidates
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    rankTail(rescore(candidates), k)
   }
 }

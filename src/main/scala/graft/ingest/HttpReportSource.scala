@@ -38,10 +38,7 @@ final class HttpReportSource(
   @transient private lazy val mapper = new ObjectMapper()
 
   private def classify(status: Int, body: String, context: String): Nothing =
-    if (Retry.isRetriableStatus(status))
-      throw Retry.RetriableFailure(s"HTTP $status on $context: ${body.take(200)}")
-    else
-      throw Retry.TerminalFailure(s"HTTP $status on $context: ${body.take(200)}")
+    Retry.failStatus(status, s"HTTP $status on $context: ${body.take(200)}")
 
   override def generateReport(token: String, reportName: String, fromDate: String, toDate: String): String = {
     val payload = mapper.createObjectNode()
@@ -113,14 +110,10 @@ object HttpTokenFetcher {
       .POST(HttpRequest.BodyPublishers.ofString(form))
       .build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() / 100 != 2) {
-      // same classification as the report calls: bad credentials (401)
-      // must fail fast, not burn the retry budget
-      if (Retry.isRetriableStatus(resp.statusCode()))
-        throw Retry.RetriableFailure(s"HTTP ${resp.statusCode()} fetching token")
-      else
-        throw Retry.TerminalFailure(s"HTTP ${resp.statusCode()} fetching token")
-    }
+    // same classification as the report calls: bad credentials (401)
+    // must fail fast, not burn the retry budget
+    if (resp.statusCode() / 100 != 2)
+      Retry.failStatus(resp.statusCode(), s"HTTP ${resp.statusCode()} fetching token")
     val root = mapper.readTree(resp.body())
     val access = root.get("access_token")
     if (access == null) throw Retry.TerminalFailure("no access_token in token response")

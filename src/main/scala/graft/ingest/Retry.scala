@@ -60,4 +60,12 @@ object Retry {
     */
   def isRetriableStatus(status: Int): Boolean =
     status >= 500 || status == 429
+
+  /** Fail a call that got the non-2xx `status`: a [[RetriableFailure]]
+    * when [[isRetriableStatus]], else a [[TerminalFailure]], carrying
+    * `message`.
+    */
+  def failStatus(status: Int, message: String): Nothing =
+    if (isRetriableStatus(status)) throw RetriableFailure(message)
+    else throw TerminalFailure(message)
 }

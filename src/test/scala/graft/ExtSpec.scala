@@ -3761,4 +3761,44 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaAgg == viaWindow)
     assert(viaAgg == Map(1L -> 3L, 2L -> 1L, 3L -> 6L))
   }
+
+  test("exhaustive settings reduce every ANN server to brute force") {
+    import org.apache.spark.sql.DataFrame
+    // probing every cell, every bucket, or a corpus-sized shortlist
+    // leaves only the shared exact score and rank tail: each server must
+    // then return brute force's rows exactly
+    val qids = Seq(0L, 1L, 2L)
+    val n = emb.count().toInt
+    val labels = emb.select("label").distinct().count().toInt
+    def rows(df: DataFrame): Set[(Long, Long, Double, Int)] =
+      df.select("query_id", "vec_id", "cos", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val brute = rows(Similarity.bruteForceTopK(emb, qids, 10))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-exhaustive").toString
+    Similarity.buildIvfIndex(emb, s"$tmp/ivf", nCells = 8)
+    Similarity.buildPqIndex(emb, s"$tmp/pq")
+    Similarity.buildJlIndex(emb, s"$tmp/jl")
+    spark.catalog.clearCache()
+    val servers: Seq[(String, () => DataFrame)] = Seq(
+      "ivfTopK" -> (() => Similarity.ivfTopK(emb, qids, 10, nProbe = labels)),
+      "ivfTopKKmeans" -> (() =>
+        Similarity.ivfTopKKmeans(emb, qids, 10, nProbe = 8, nCells = 8)),
+      "ivfTopKFromIndex" -> (() =>
+        Similarity.ivfTopKFromIndex(spark, s"$tmp/ivf", qids, 10, nProbe = 8)),
+      "jlShortlistTopK" -> (() => Similarity.jlShortlistTopK(emb, qids, 10, shortlist = n)),
+      "jlTopKFromIndex" -> (() =>
+        Similarity.jlTopKFromIndex(spark, s"$tmp/jl", qids, 10, shortlist = n)),
+      "pqTopK" -> (() => Similarity.pqTopK(emb, qids, 10, shortlist = n)),
+      "pqTopKFromIndex" -> (() =>
+        Similarity.pqTopKFromIndex(spark, s"$tmp/pq", qids, 10, shortlist = n)),
+      "ivfpqTopK" -> (() =>
+        Similarity.ivfpqTopK(emb, qids, 10, nCells = 8, nProbe = 8, shortlist = n)),
+      "lshTopK" -> (() => Similarity.lshTopK(emb, qids, 10, numPlanes = 4, nProbes = 16)))
+    servers.foreach { case (name, serve) =>
+      val got = rows(serve())
+      spark.catalog.clearCache()
+      assert(got == brute,
+        s"$name: missed=${brute.diff(got).take(5)} extra=${got.diff(brute).take(5)}")
+    }
+  }
 }
