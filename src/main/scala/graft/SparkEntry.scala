@@ -690,7 +690,7 @@ object SparkEntry {
       TextAnalysis.unigramFertility(docs(s, dir))),
     "text_unigram_persisted" -> ((s, dir) => {
       val store = graft.ext.IndexCache.ensure(s, dir, "unigram_vocab",
-        table = "documents", params = "v1,k=300,split=mod5") { d =>
+        table = "documents", params = "v2,k=300,split=mod5") { d =>
         TextAnalysis.buildUnigramVocab(
           docs(s, dir).filter(col0("doc_id") % 5 =!= 0), d)
       }

@@ -569,39 +569,48 @@ object Similarity {
     emb.select(col("vec_id") +: zs: _*).orderBy(col("vec_id"))
   }
 
-  /** Persist the fitted PCA model — `$dir/mu` (d rows) + `$dir/model`
-    * (k·d rows) — so the three PCA-family queries share ONE sufficient-
-    * statistics pass per corpus (fit-once/serve-many, the
+  /** Persist the fitted PCA model so the three PCA-family queries share
+    * ONE sufficient-statistics pass per corpus (fit-once/serve-many, the
     * `text_lr_persisted` contract: serving reproduces the self-fit
     * output bit-for-bit because the persisted values ARE the grid-
     * rounded fit values, round-tripped losslessly through parquet
-    * doubles).
+    * doubles). `mu` (d rows) and `model` (k·d rows) land in one
+    * [[IndexStore]] version, so a reader never pairs a new `mu` with an
+    * old `model`; a flat pre-versioning `mu`/`model` directory stays
+    * readable.
     */
   def buildPcaIndex(emb: DataFrame, dir: String, k: Int = 2,
       iters: Int = 5): Unit = {
     val m = pcaFit(emb, k, iters)
     val spark = emb.sparkSession
-    m.muDf(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/mu")
-    m.modelDf(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
+    pcaStore.publish(spark, dir) { v =>
+      v.write("mu", m.muDf(spark).coalesce(1))
+      v.write("model", m.modelDf(spark).coalesce(1))
+    }
   }
+
+  /** The persisted PCA model ([[IndexStore]] layout). */
+  private val pcaStore = new IndexStore("mu", "model")
 
   /** The persisted model table, oracle-shaped (`component, dim, w,
     * eigenvalue, var_share` ordered by component, dim).
     */
   def pcaModelDfFromIndex(spark: org.apache.spark.sql.SparkSession,
       idx: String): DataFrame =
-    spark.read.parquet(s"$idx/model").orderBy(col("component"), col("dim"))
+    IndexStore.open(spark, idx).read("model").orderBy(col("component"), col("dim"))
 
   /** Rehydrate the driver-resident model from the persisted artifact —
-    * bounded collects of d mu rows + k·d model rows.
+    * bounded collects of d mu rows + k·d model rows, both from one
+    * opened version.
     */
   private[graft] def pcaModelFromIndex(spark: org.apache.spark.sql.SparkSession,
       idx: String): PcaModel = {
-    val muRows = spark.read.parquet(s"$idx/mu").collect()
+    val root = IndexStore.open(spark, idx)
+    val muRows = root.read("mu").collect()
     val d = muRows.length
     val mu = new Array[Double](d)
     muRows.foreach(r => mu(r.getAs[Int]("dim")) = r.getAs[Double]("mu"))
-    val modelRows = spark.read.parquet(s"$idx/model").collect()
+    val modelRows = root.read("model").collect()
     val k = modelRows.iterator.map(_.getAs[Int]("component")).max + 1
     val w = Array.fill(k)(new Array[Double](d))
     val ev = new Array[Double](k)

@@ -606,9 +606,7 @@ object TextAnalysis {
     val (_, seqs) = bpeTrain(docs, rounds)
     val wordSegs = seqs.select(col("word"),
       size(split(col("seq"), " ")).cast("long").as("segs"))
-    docs.select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-          .as("word"))
+    docWords(docs)
       .join(broadcast(wordSegs), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("segs")).as("n_bpe_tokens"))
@@ -661,9 +659,7 @@ object TextAnalysis {
   def bpeRoundTrip(docs: DataFrame, rounds: Int = 3): DataFrame = {
     val (_, seqs) = bpeTrain(docs, rounds)
     val wordSegs = seqs.select(col("word"), detokenize(col("seq")).as("decoded"))
-    val perDoc = docs.select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-          .as("word"))
+    val perDoc = docWords(docs)
       .join(broadcast(wordSegs), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -1654,9 +1650,7 @@ object TextAnalysis {
     * builder persists (token → n, vocabulary-sized).
     */
   def tokenCounts(docs: DataFrame): DataFrame =
-    docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy(col("token")).agg(count(lit(1)).as("n"))
+    textTokens(docs).groupBy(col("token")).agg(count(lit(1)).as("n"))
 
   /** The scoring core of [[vocabDrift]] over an already-aggregated
     * `(token, ya, yb)` count frame — shared verbatim by the batch
@@ -1707,25 +1701,58 @@ object TextAnalysis {
     * the occurrence mean, and the oracle replays the SAME weighted form.
     */
   def bigramPerplexity(docs: DataFrame): DataFrame = {
-    // one corpus window pass; groupBy(doc_id, sh) reuses the window's
-    // doc_id hash partitioning, so the collapse is exchange-free
-    val bgDoc = graft.ext.Dedup.shinglesMultiset(docs, 2)
+    val bgDoc = docBigrams(docs)
+    val c2 = bigramCounts(bgDoc)
+    bigramLmScore(Map("c2" -> c2, "ctx" -> bigramContexts(c2), "meta" -> vocabSize(docs)),
+      bgDoc, "inner")
+  }
+
+  /** Per-doc bigram multiplicities `(doc_id, sh, mult)`: the collapse
+    * reuses the shingle window's doc_id partitioning (exchange-free).
+    */
+  private def docBigrams(docs: DataFrame): DataFrame =
+    graft.ext.Dedup.shinglesMultiset(docs, 2)
       .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("mult"))
-    val c2 = bgDoc.groupBy(col("sh")).agg(sum(col("mult")).as("n2"))
-    val ctx = c2.select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
-      .groupBy(col("w1")).agg(sum(col("n2")).as("n1"))
-    val tokens = docs
-      .select(explode(split(lower(col("text")), "\\s+")).as("token"))
+
+  /** Corpus bigram counts `(sh, n2)`, the additive table both LMs fit on. */
+  private def bigramCounts(bgDoc: DataFrame): DataFrame =
+    bgDoc.groupBy(col("sh")).agg(sum(col("mult")).as("n2"))
+
+  /** The lowercased non-empty whitespace tokens of `docs`. */
+  private def textTokens(docs: DataFrame): DataFrame =
+    docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
       .filter(col("token") =!= "")
-    val vocab = tokens.agg(countDistinct(col("token")).as("v"))
-    val logp = -log((col("n2").cast("double") + lit(0.5)) /
-      (col("n1").cast("double") + lit(0.5) * col("v")))
+
+  /** The vocabulary size V as a one-row `(v)` frame. */
+  private def vocabSize(docs: DataFrame): DataFrame =
+    textTokens(docs).agg(countDistinct(col("token")).as("v"))
+
+  /** The add-0.5 LM's context totals `ctx (w1, n1)`. */
+  private def bigramContexts(c2: DataFrame): DataFrame =
+    c2.select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
+      .groupBy(col("w1")).agg(sum(col("n2")).as("n1"))
+
+  /** Score per-doc bigrams against an add-0.5 LM's tables by name (`c2`,
+    * `ctx`, `meta`), joined `how`: `inner` on the corpus the LM was fitted
+    * on, `left` for held-out text. Counts coalesce to zero, a no-op on
+    * every in-corpus bigram, so both joins give the same rows there.
+    */
+  private def bigramLmScore(lm: String => DataFrame, bgDoc: DataFrame,
+      how: String): DataFrame = {
+    val logp = -log((coalesce(col("n2"), lit(0L)).cast("double") + lit(0.5)) /
+      (coalesce(col("n1"), lit(0L)).cast("double") + lit(0.5) * col("v")))
+    perplexityOf(bgDoc.withColumn("w1", substring_index(col("sh"), " ", 1))
+      .join(lm("c2"), Seq("sh"), how)
+      .join(lm("ctx"), Seq("w1"), how)
+      .crossJoin(broadcast(lm("meta"))), logp)
+  }
+
+  /** Both LMs' per-doc output: `n_bigrams`, the multiplicity-weighted
+    * mean surprisal `avg_surprisal` and its `ppl = exp`, 4 places.
+    */
+  private def perplexityOf(scored: DataFrame, logp: Column): DataFrame = {
     val avgSur = sum(col("mult").cast("double") * logp) / sum(col("mult")).cast("double")
-    bgDoc.withColumn("w1", substring_index(col("sh"), " ", 1))
-      .join(c2, Seq("sh"))
-      .join(ctx, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      .groupBy(col("doc_id"))
+    scored.groupBy(col("doc_id"))
       .agg(
         sum(col("mult")).as("n_bigrams"),
         round(avgSur, 4).as("avg_surprisal"),
@@ -1743,27 +1770,21 @@ object TextAnalysis {
     *   - `meta` — one row, the vocabulary size V.
     * Every table is distinct-bigram-sized, never occurrence-sized.
     */
-  def buildBigramLm(docs: DataFrame, dir: String): Unit = {
-    val spark = docs.sparkSession
-    bigramLmStore.publish(spark, dir) { v =>
-      v.write("c2", graft.ext.Dedup.shinglesMultiset(docs, 2)
-        .groupBy(col("sh")).agg(count(lit(1)).as("n2")))
-      v.write("ctx", v.read("c2")
-        .select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
-        .groupBy(col("w1")).agg(sum(col("n2")).as("n1")))
-      v.write("meta", docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
-        .filter(col("token") =!= "")
-        .agg(countDistinct(col("token")).as("v")))
+  def buildBigramLm(docs: DataFrame, dir: String): Unit =
+    bigramLmStore.publish(docs.sparkSession, dir) { v =>
+      v.write("c2", bigramCounts(docBigrams(docs)))
+      // ctx derives from the persisted c2, never from a second corpus pass
+      v.write("ctx", bigramContexts(v.read("c2")))
+      v.write("meta", vocabSize(docs))
     }
-  }
 
   /** The persisted bigram LM ([[IndexStore]] layout). */
   private val bigramLmStore = new IndexStore("c2", "ctx", "meta")
 
-  /** Score documents against a PERSISTED bigram LM — identical add-0.5
-    * arithmetic to [[bigramPerplexity]], so scoring a corpus against its
-    * own LM reproduces the in-memory result bit-for-bit (the registered
-    * twin reuses that oracle verbatim). The joins are LEFT with
+  /** Score documents against a PERSISTED bigram LM — [[bigramPerplexity]]'s
+    * own [[bigramLmScore]], so scoring a corpus against its own LM
+    * reproduces the in-memory result bit-for-bit (the registered twin
+    * reuses that oracle verbatim). The joins are LEFT with
     * zero-coalesced counts, which is exactly what the smoothing
     * prescribes for HELD-OUT text: an unseen bigram in a seen context
     * scores `-ln(0.5 / (n1 + 0.5·V))`, an unseen context scores
@@ -1778,26 +1799,8 @@ object TextAnalysis {
     perplexityFromLm(IndexStore.open(spark, dir), docs)
 
   /** [[perplexityFromLm]] against an opened (pinned) root. */
-  private[graft] def perplexityFromLm(root: IndexStore.Root, docs: DataFrame): DataFrame = {
-    val c2 = root.read("c2")
-    val ctx = root.read("ctx")
-    val vocab = root.read("meta")
-    val bgDoc = graft.ext.Dedup.shinglesMultiset(docs, 2)
-      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("mult"))
-    val logp = -log((coalesce(col("n2"), lit(0L)).cast("double") + lit(0.5)) /
-      (coalesce(col("n1"), lit(0L)).cast("double") + lit(0.5) * col("v")))
-    val avgSur = sum(col("mult").cast("double") * logp) / sum(col("mult")).cast("double")
-    bgDoc.withColumn("w1", substring_index(col("sh"), " ", 1))
-      .join(c2, Seq("sh"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .crossJoin(broadcast(vocab))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("mult")).as("n_bigrams"),
-        round(avgSur, 4).as("avg_surprisal"),
-        round(exp(avgSur), 4).as("ppl"))
-      .orderBy(col("doc_id"))
-  }
+  private[graft] def perplexityFromLm(root: IndexStore.Root, docs: DataFrame): DataFrame =
+    bigramLmScore(root.read, docBigrams(docs), "left")
 
   /** Interpolated Kneser–Ney bigram perplexity (Kneser & Ney 1995; Chen
     * & Goodman 1999's interpolated form) — the smoothing the add-0.5 LM
@@ -1828,37 +1831,9 @@ object TextAnalysis {
     * is distinct-bigram-sized, B/V ride a one-row broadcast.
     */
   def knPerplexity(docs: DataFrame, d: Double = 0.75): DataFrame = {
-    val bgDoc = graft.ext.Dedup.shinglesMultiset(docs, 2)
-      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("mult"))
-    val c2 = bgDoc.groupBy(col("sh")).agg(sum(col("mult")).as("n2"))
-    val ctx = c2.select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
-      .groupBy(col("w1"))
-      .agg(sum(col("n2")).as("n1"), count(lit(1)).as("tw"))
-    val cont = c2.select(substring_index(col("sh"), " ", -1).as("w2"))
-      .groupBy(col("w2")).agg(count(lit(1)).as("nc"))
-    val tokens = docs
-      .select(explode(split(lower(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "")
-    val meta = c2.agg(count(lit(1)).as("bt"))
-      .crossJoin(broadcast(tokens.agg(countDistinct(col("token")).as("v"))))
-    val pc = (col("nc").cast("double") + lit(0.5)) /
-      (col("bt").cast("double") + lit(0.5) * col("v"))
-    val logp = -log((greatest(col("n2").cast("double") - lit(d), lit(0.0)) +
-      lit(d) * col("tw").cast("double") * pc) / col("n1").cast("double"))
-    val avgSur = sum(col("mult").cast("double") * logp) / sum(col("mult")).cast("double")
-    bgDoc
-      .withColumn("w1", substring_index(col("sh"), " ", 1))
-      .withColumn("w2", substring_index(col("sh"), " ", -1))
-      .join(c2, Seq("sh"))
-      .join(ctx, Seq("w1"))
-      .join(cont, Seq("w2"))
-      .crossJoin(broadcast(meta))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("mult")).as("n_bigrams"),
-        round(avgSur, 4).as("avg_surprisal"),
-        round(exp(avgSur), 4).as("ppl"))
-      .orderBy(col("doc_id"))
+    val bgDoc = docBigrams(docs)
+    val c2 = bigramCounts(bgDoc)
+    knScore(knDerived(c2, vocabSize(docs)) + ("c2" -> c2), bgDoc, "inner", d)
   }
 
   /** Persist the Kneser–Ney LM [[knPerplexity]] fits on the fly — the
@@ -1871,22 +1846,18 @@ object TextAnalysis {
     *   - `cont` — (w2, nc) distinct-context (continuation) counts,
     *   - `meta` — one row, (bt = distinct bigrams, v = vocabulary).
     */
-  def buildKnLm(docs: DataFrame, dir: String): Unit = {
-    val spark = docs.sparkSession
-    knLmStore.publish(spark, dir) { v =>
-      v.write("c2", graft.ext.Dedup.shinglesMultiset(docs, 2)
-        .groupBy(col("sh")).agg(count(lit(1)).as("n2")))
+  def buildKnLm(docs: DataFrame, dir: String): Unit =
+    knLmStore.publish(docs.sparkSession, dir) { v =>
+      v.write("c2", bigramCounts(docBigrams(docs)))
       // vocab persisted as a table (r12 judge ask #3): `v` used to be an
       // inline countDistinct over the build corpus, which made the LM the
       // one store that could only ever be refit from scratch — the
       // incremental append/compact lifecycle needs the token SET to union
       // (a one-token document grows v without contributing a bigram, so v
       // is NOT derivable from c2)
-      v.write("vocab", docs.select(explode(split(lower(col("text")), "\\s+")).as("token"))
-        .filter(col("token") =!= "").distinct())
+      v.write("vocab", textTokens(docs).distinct())
       writeKnDerived(v)
     }
-  }
 
   /** The persisted KN LM ([[IndexStore]] layout): the frozen `c2`, `ctx`,
     * `cont`, `vocab` and `meta`, plus the appends' `c2_delta` (the commit
@@ -1895,21 +1866,22 @@ object TextAnalysis {
   private val knLmStore = new IndexStore(
     "c2_delta", "vocab_delta", "c2", "ctx", "cont", "vocab", "meta")
 
-  /** The c2-derived KN tables (ctx, cont, meta) — shared by the scratch
-    * build and the compaction fold: everything but the additive bigram
-    * counts and the vocab union re-derives from the distinct-bigram-
-    * sized c2 frame, never from the corpus.
+  /** The c2-derived KN tables — `ctx` (w1, n1, tw), `cont` (w2, nc), the
+    * one-row `meta` (bt, v) — shared by the in-memory fit, the build and
+    * the compaction fold: everything but the additive bigram counts and
+    * the vocab union re-derives from c2, never from the corpus.
     */
-  private def writeKnDerived(v: IndexStore.Root): Unit = {
-    val c2 = v.read("c2")
-    v.write("ctx", c2.select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
+  private def knDerived(c2: DataFrame, v: DataFrame): Map[String, DataFrame] = Map(
+    "ctx" -> c2.select(substring_index(col("sh"), " ", 1).as("w1"), col("n2"))
       .groupBy(col("w1"))
-      .agg(sum(col("n2")).as("n1"), count(lit(1)).as("tw")))
-    v.write("cont", c2.select(substring_index(col("sh"), " ", -1).as("w2"))
-      .groupBy(col("w2")).agg(count(lit(1)).as("nc")))
-    v.write("meta", c2.agg(count(lit(1)).as("bt"))
-      .crossJoin(broadcast(v.read("vocab").agg(count(lit(1)).as("v")))))
-  }
+      .agg(sum(col("n2")).as("n1"), count(lit(1)).as("tw")),
+    "cont" -> c2.select(substring_index(col("sh"), " ", -1).as("w2"))
+      .groupBy(col("w2")).agg(count(lit(1)).as("nc")),
+    "meta" -> c2.agg(count(lit(1)).as("bt")).crossJoin(broadcast(v)))
+
+  private def writeKnDerived(v: IndexStore.Root): Unit =
+    knDerived(v.read("c2"), v.read("vocab").agg(count(lit(1)).as("v")))
+      .foreach { case (table, df) => v.write(table, df) }
 
   /** Incremental KN-LM maintenance (r12 judge ask #3 — the last
     * non-incremental persisted store): bigram counts are ADDITIVE, so an
@@ -1934,10 +1906,8 @@ object TextAnalysis {
     // deltas are harmless to overwrite either way (the fold is a distinct
     // union).
     knLmStore.append(spark, dir, batchId) { (root, id) =>
-      root.land("vocab_delta", newDocs.select(explode(split(lower(col("text")), "\\s+"))
-        .as("token")).filter(col("token") =!= "").distinct(), id)
-      root.land("c2_delta", graft.ext.Dedup.shinglesMultiset(newDocs, 2)
-        .groupBy(col("sh")).agg(count(lit(1)).as("n2")), id)
+      root.land("vocab_delta", textTokens(newDocs).distinct(), id)
+      root.land("c2_delta", bigramCounts(docBigrams(newDocs)), id)
     }
 
   /** Fold the KN-LM delta tail into a fresh version: c2 = Σ(base +
@@ -1973,44 +1943,42 @@ object TextAnalysis {
       writeKnDerived(v)
     }
 
-  /** Score documents against a PERSISTED KN LM — identical arithmetic to
-    * [[knPerplexity]] on in-corpus text (so the registered twin reuses
-    * that oracle verbatim), with the HELD-OUT semantics interpolated KN
-    * prescribes, all finite:
+  /** Score documents against a PERSISTED KN LM — [[knPerplexity]]'s own
+    * [[knScore]], so in-corpus text scores identically (the registered
+    * twin reuses that oracle verbatim), with the HELD-OUT semantics
+    * interpolated KN prescribes, all finite:
     *   - unseen bigram in a seen context: the discounted term is 0 and
     *     the back-off mass carries it — `P = D·T(w1)·Pc(w2) / n1`;
     *   - unseen w2: the continuation floor — `Pc = 0.5 / (B + 0.5·V)`;
     *   - unseen context w1: pure continuation back-off — `P = Pc(w2)`.
     */
   def knPerplexityFromLm(spark: org.apache.spark.sql.SparkSession,
-      dir: String, docs: DataFrame, d: Double = 0.75): DataFrame = {
-    val root = IndexStore.open(spark, dir)
-    val c2 = root.read("c2")
-    val ctx = root.read("ctx")
-    val cont = root.read("cont")
-    val meta = root.read("meta")
-    val bgDoc = graft.ext.Dedup.shinglesMultiset(docs, 2)
-      .groupBy(col("doc_id"), col("sh")).agg(count(lit(1)).as("mult"))
+      dir: String, docs: DataFrame, d: Double = 0.75): DataFrame =
+    knPerplexityFromLm(IndexStore.open(spark, dir), docs, d)
+
+  /** [[knPerplexityFromLm]] against an opened root. */
+  private[graft] def knPerplexityFromLm(root: IndexStore.Root, docs: DataFrame,
+      d: Double): DataFrame =
+    knScore(root.read, docBigrams(docs), "left", d)
+
+  /** Score per-doc bigrams against a KN LM's tables, joined `how` as in
+    * [[bigramLmScore]] (on in-corpus bigrams n1, n2, nc are never null).
+    */
+  private def knScore(lm: String => DataFrame, bgDoc: DataFrame, how: String,
+      d: Double): DataFrame = {
     val pc = (coalesce(col("nc"), lit(0L)).cast("double") + lit(0.5)) /
       (col("bt").cast("double") + lit(0.5) * col("v"))
     val knSeen = -log((greatest(coalesce(col("n2"), lit(0L)).cast("double") - lit(d),
         lit(0.0)) +
       lit(d) * col("tw").cast("double") * pc) / col("n1").cast("double"))
     val logp = when(col("n1").isNull, -log(pc)).otherwise(knSeen)
-    val avgSur = sum(col("mult").cast("double") * logp) / sum(col("mult")).cast("double")
-    bgDoc
+    perplexityOf(bgDoc
       .withColumn("w1", substring_index(col("sh"), " ", 1))
       .withColumn("w2", substring_index(col("sh"), " ", -1))
-      .join(c2, Seq("sh"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(meta))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("mult")).as("n_bigrams"),
-        round(avgSur, 4).as("avg_surprisal"),
-        round(exp(avgSur), 4).as("ppl"))
-      .orderBy(col("doc_id"))
+      .join(lm("c2"), Seq("sh"), how)
+      .join(lm("ctx"), Seq("w1"), how)
+      .join(lm("cont"), Seq("w2"), how)
+      .crossJoin(broadcast(lm("meta"))), logp)
   }
 
   /** CCNet-style segment-level boilerplate removal: split every document
@@ -2132,30 +2100,31 @@ object TextAnalysis {
     * ≤`buckets` rows (broadcastable however big the corpora are), the
     * scalar feature totals ride a 1-row broadcast crossJoin, and scoring
     * is a broadcast join of the tiny log-ratio model onto the per-doc
-    * bucket counts — the only big shuffles are the two (doc_id,b)
-    * aggregations. The raw feature scan is computed twice (model fit +
-    * scoring); at 100 TB persist [[hashedNgramFeatures]]' aggregation or
-    * fit the raw model on a sample (the paper does) — the smoothed model
-    * only needs bucket *proportions*.
+    * bucket counts — the only big shuffle is the scored corpus's
+    * (doc_id,b) aggregation. The raw feature scan is computed twice
+    * (model fit + scoring: [[dsirFit]] is the build's fit verbatim); at
+    * 100 TB persist the model ([[buildDsirModel]]) or fit the raw side on
+    * a sample (the paper does) — the smoothed model only needs bucket
+    * *proportions*.
     */
   def dsirWeights(raw: DataFrame, target: DataFrame, buckets: Int = 64,
-      lambda: Double = 1.0): DataFrame = {
-    val docB = hashedNgramFeatures(raw, buckets)
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-    val rawM = docB.groupBy(col("b")).agg(sum(col("c")).as("cr"))
-    val tgtM = hashedNgramFeatures(target, buckets)
-      .groupBy(col("b")).agg(count(lit(1)).as("ct"))
-    dsirScore(docB, dsirLrFromCounts(rawM, tgtM, buckets, lambda))
-  }
+      lambda: Double = 1.0): DataFrame =
+    dsirScore(dsirDocBuckets(raw, buckets), dsirFit(raw, target, buckets, lambda))
 
-  /** The smoothed log-ratio model from bucket counts — ONE definition
-    * shared by the in-memory and persisted-model paths so their
-    * arithmetic can never fork. ≤`buckets` rows in, ≤`buckets` rows out;
-    * the scalar totals ride a 1-row broadcast crossJoin.
+  /** Per-doc bucket counts `(doc_id, b, c)` — what [[dsirScore]] scores. */
+  private def dsirDocBuckets(docs: DataFrame, buckets: Int): DataFrame =
+    hashedNgramFeatures(docs, buckets)
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
+
+  /** The smoothed log-ratio model `(b, lr)`, the one fit of
+    * [[dsirWeights]] and [[buildDsirModel]]: both corpora collapse to
+    * ≤`buckets` counts; the totals ride a 1-row broadcast crossJoin.
     */
-  private def dsirLrFromCounts(rawM: DataFrame, tgtM: DataFrame,
-      buckets: Int, lambda: Double): DataFrame = {
-    val model = rawM.join(tgtM, Seq("b"), "full_outer")
+  private def dsirFit(raw: DataFrame, target: DataFrame, buckets: Int,
+      lambda: Double): DataFrame = {
+    def bucketCounts(docs: DataFrame, name: String) =
+      hashedNgramFeatures(docs, buckets).groupBy(col("b")).agg(count(lit(1)).as(name))
+    val model = bucketCounts(raw, "cr").join(bucketCounts(target, "ct"), Seq("b"), "full_outer")
       .select(col("b"), coalesce(col("cr"), lit(0L)).as("cr"),
         coalesce(col("ct"), lit(0L)).as("ct"))
     val tot = model.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
@@ -2188,12 +2157,8 @@ object TextAnalysis {
   def buildDsirModel(raw: DataFrame, target: DataFrame, dir: String,
       buckets: Int = 64, lambda: Double = 1.0): Unit = {
     val spark = raw.sparkSession
-    val rawM = hashedNgramFeatures(raw, buckets)
-      .groupBy(col("b")).agg(count(lit(1)).as("cr"))
-    val tgtM = hashedNgramFeatures(target, buckets)
-      .groupBy(col("b")).agg(count(lit(1)).as("ct"))
     dsirStore.publish(spark, dir) { v =>
-      v.write("lmodel", dsirLrFromCounts(rawM, tgtM, buckets, lambda))
+      v.write("lmodel", dsirFit(raw, target, buckets, lambda))
       v.write("meta", spark.range(1).select(lit(buckets).cast("int").as("buckets")))
     }
   }
@@ -2201,10 +2166,10 @@ object TextAnalysis {
   /** The persisted DSIR model ([[IndexStore]] layout). */
   private val dsirStore = new IndexStore("lmodel", "meta")
 
-  /** Score documents against a PERSISTED DSIR model — identical
-    * arithmetic to [[dsirWeights]] (shared [[dsirScore]] and a
-    * round-tripped double `lr` column), so scoring a corpus against its
-    * own model reproduces the in-memory result bit-for-bit and the
+  /** Score documents against a PERSISTED DSIR model — the same
+    * [[dsirScore]] over the same [[dsirFit]] output (a round-tripped
+    * double `lr` column) as [[dsirWeights]], so scoring a corpus against
+    * its own model reproduces the in-memory result bit-for-bit and the
     * registered twin reuses that oracle verbatim. The only driver action
     * is the 1-row meta read.
     */
@@ -2213,14 +2178,10 @@ object TextAnalysis {
     dsirWeightsFromModel(IndexStore.open(spark, dir), docs)
 
   /** [[dsirWeightsFromModel]] against an opened (pinned) root. */
-  private[graft] def dsirWeightsFromModel(root: IndexStore.Root, docs: DataFrame): DataFrame = {
-    val lmodel = root.read("lmodel")
+  private[graft] def dsirWeightsFromModel(root: IndexStore.Root, docs: DataFrame): DataFrame =
     // bounded driver action: meta is one row by construction
-    val buckets = root.read("meta").first().getInt(0)
-    val docB = hashedNgramFeatures(docs, buckets)
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-    dsirScore(docB, lmodel)
-  }
+    dsirScore(dsirDocBuckets(docs, root.read("meta").first().getInt(0)),
+      root.read("lmodel"))
 
   /** DSIR selection: Gumbel-top-k resampling without replacement with
     * probabilities ∝ the importance weights (arXiv:2302.03169 §2.3) —
@@ -2930,16 +2891,20 @@ object TextAnalysis {
     // xf/dl re-ran the whole feature pipeline: +2 s per eval row at
     // sf0.1, ×6 registered eval queries)
     try {
-      val w = lrFitWeights(xf, dl, buckets, iters)
-      lrProbabilities(xf, w)
-        .join(dl, Seq("doc_id"))
-        .select(col("doc_id"), round(col("p"), 4).as("p"),
-          (col("p") >= 0.5).as("pred_en"), (col("y") === 1).as("is_en"))
-        .withColumn("correct", col("pred_en") === col("is_en"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true)
+      lrScore(xf, dl, lrFitWeights(xf, dl, buckets, iters)).localCheckpoint(true)
     } finally { xf.unpersist(); dl.unpersist() }
   }
+
+  /** [[lrPredict]]'s and [[lrPredictFromModel]]'s output under weights
+    * `w`: p to 4 places, the 0.5-threshold prediction, label, agreement.
+    */
+  private def lrScore(xf: DataFrame, dl: DataFrame, w: Map[Long, Double]): DataFrame =
+    lrProbabilities(xf, w)
+      .join(dl, Seq("doc_id"))
+      .select(col("doc_id"), round(col("p"), 4).as("p"),
+        (col("p") >= 0.5).as("pred_en"), (col("y") === 1).as("is_en"))
+      .withColumn("correct", col("pred_en") === col("is_en"))
+      .orderBy(col("doc_id"))
 
   /** Persist the fitted LR weight vector (fit-once-score-many) as one
     * [[IndexStore]] version holding the ≤`buckets`+1-row `weights` table
@@ -2961,8 +2926,8 @@ object TextAnalysis {
 
   /** Score documents against a PERSISTED LR model: the weights collect
     * to a ≤`buckets`+1 driver map (bounded by construction) and re-enter
-    * [[lrProbabilities]] — the same scoring core the in-memory fit used
-    * — so scoring a corpus against its own model reproduces
+    * [[lrScore]] — the same output the in-memory predict emits — so
+    * scoring a corpus against its own model reproduces
     * [[lrPredict]] bit-for-bit and the registered twin reuses that
     * oracle verbatim (the [[dsirWeightsFromModel]] discipline; weights
     * on the 1e-6 grid round-trip parquet exactly).
@@ -2978,67 +2943,46 @@ object TextAnalysis {
     // bounded driver action: meta is one row by construction
     val buckets = root.read("meta").first().getInt(0)
     val (xf, dl) = lrFrames(docs, buckets)
-    lrProbabilities(xf, w)
-      .join(dl, Seq("doc_id"))
-      .select(col("doc_id"), round(col("p"), 4).as("p"),
-        (col("p") >= 0.5).as("pred_en"), (col("y") === 1).as("is_en"))
-      .withColumn("correct", col("pred_en") === col("is_en"))
-      .orderBy(col("doc_id"))
+    lrScore(xf, dl, w)
   }
 
-  /** BM25 sparse retrieval: top-k documents per query via an
-    * inverted-index equi-join — the lexical half of a RAG serving stack,
-    * complementing the dense ANN tier in [[Similarity]]. Okapi weighting:
-    * `idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`,
-    * `w(t,d) = idf · tf(k1+1) / (tf + k1(1 - b + b·dl/avgdl))`.
-    *
-    * Queries are derived deterministically from the corpus itself (every
-    * `queryEvery`-th document contributes its first `queryTerms` distinct
-    * tokens in order of first appearance), so the operator needs no
-    * external input and the DuckDB oracle can replay it exactly. Scores
-    * quantize per-term to 6 decimals and per-doc to 4 BEFORE ranking so
-    * partial-aggregation summation order can't flip the argsort across
-    * engines (the [[nbPredict]] discipline).
-    *
-    * Scale shape: the postings list `(token, doc_id, tf)` is the one
-    * corpus-sized frame and every step over it is token- or doc-keyed
-    * (map-side combinable); `df` is vocabulary-bounded, `N`/`avgdl` a
-    * broadcast scalar, and the query set broadcasts into the postings
-    * join so scoring touches only postings of queried tokens — at 100 TB
-    * this is the standard distributed inverted-index shape. Top-k is a
-    * per-query window over the scored candidates (bounded by queries ×
-    * matched docs), not a global sort.
+  /** The postings frame the whole BM25 family fits on: `tf (doc_id,
+    * token, tf, first_pos, dl)`, one row per (doc, token), carrying its
+    * document's length. It is the one corpus-derived table of the index;
+    * [[bm25DfStats]] derives the rest from it, in memory ([[bm25TopK]])
+    * and in a published version ([[writeBm25Derived]]) alike, so the
+    * SAME frames are persisted once ([[buildBm25Index]]) and served many
+    * times, the inverted-index production pattern. `first_pos` (min
+    * token position per doc) lets the corpus-derived query panel be
+    * re-derived from the index at any (queryEvery, queryTerms,
+    * maxQueries) without the raw text.
     */
-  /** The postings-index frames the whole BM25 family shares:
-    * `tf (doc_id, token, tf, first_pos)`, `dl (doc_id, dl)`,
-    * `df (token, df)`, `stats (n_docs, avgdl)`. Every frame is exactly
-    * what [[bm25TopK]] always derived inline — split out so the SAME
-    * frames can be persisted once ([[buildBm25Index]]) and served many
-    * times, the inverted-index production pattern. `first_pos` rides the
-    * tf frame (min token position per doc) so the corpus-derived query
-    * panel can be re-derived from the index at any (queryEvery,
-    * queryTerms, maxQueries) without the raw text. `avgdl` is an
-    * order-free mean (integer-valued doubles sum exactly), so the
-    * persisted and inline values are bit-identical.
-    */
-  private def bm25Postings(docs: DataFrame):
-      (DataFrame, DataFrame, DataFrame) = {
-    val tokens = docs
+  private def bm25Postings(docs: DataFrame): DataFrame =
+    withDocLength(docs
       .select(col("doc_id"),
         posexplode(split(lower(col("text")), "\\s+")).as(Seq("pos", "token")))
       .filter(col("token") =!= "")
-    val tfRaw = tokens.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos"))
-    val dl = tfRaw.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    // DENORMALIZED postings (impact-ready layout): each posting carries
-    // its document's length, so serving never joins the corpus-sized dl
-    // frame — the one join this moves is paid once at build time
-    val tf = tfRaw.join(dl, Seq("doc_id"))
-    val dfreq = tfRaw.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    // N counts docs with at least one token — the indexed population
-    val stats = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    (tf, dfreq, stats)
-  }
+      .groupBy(col("doc_id"), col("token"))
+      .agg(count(lit(1)).as("tf"), min(col("pos")).as("first_pos")))
+
+  /** Postings with each document's length `dl` joined on (impact-ready):
+    * serving never joins the corpus-sized dl frame.
+    */
+  private def withDocLength(tfRaw: DataFrame): DataFrame =
+    tfRaw.join(tfRaw.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")), Seq("doc_id"))
+
+  /** `df (token, df)` and the one-row `stats (n_docs, avgdl)` of a
+    * postings frame. df is the per-token row count; stats collapse the
+    * postings to one row per doc first (dl is denormalized onto every
+    * posting, so `max` reads the one value back). N counts docs with at
+    * least one token — the indexed population; avgdl is an order-free
+    * mean (integer-valued doubles sum exactly), so the persisted and
+    * inline values are bit-identical.
+    */
+  private def bm25DfStats(tf: DataFrame): (DataFrame, DataFrame) = (
+    tf.groupBy(col("token")).agg(count(lit(1)).as("df")),
+    tf.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl")))
 
   /** The persisted BM25 index ([[IndexStore]] layout): the appends'
     * `tf_delta` batches (the commit table) and the six tables a complete
@@ -3060,7 +3004,7 @@ object TextAnalysis {
       k1: Double = 1.2, b: Double = 0.75): Unit = {
     val spark = docs.sparkSession
     bm25Store.publish(spark, dir) { v =>
-      v.write("tf", bm25Postings(docs)._1)
+      v.write("tf", bm25Postings(docs))
       writeBm25Derived(v, mChampions, k1, b)
     }
   }
@@ -3070,22 +3014,17 @@ object TextAnalysis {
     * everything but the additive per-(doc, token) counts re-derives from
     * the persisted `tf` frame (index-sized, never corpus-sized), which
     * is the invariant that makes the fold bit-identical to a rebuild.
-    * df is the per-token row count of tf; stats collapse tf to one row
-    * per doc first (dl is denormalized onto every posting, so `max`
-    * reads the one value back) — both produce exactly the frames
-    * [[bm25Postings]] derives inline, value for value.
+    * df and stats are [[bm25DfStats]], the frames [[bm25TopK]] derives
+    * in memory.
     */
   private def writeBm25Derived(v: IndexStore.Root, mChampions: Int, k1: Double,
       b: Double): Unit = {
     val postings = v.read("tf")
     val spark = postings.sparkSession
     import spark.implicits._
-    v.write("df", postings.groupBy(col("token")).agg(count(lit(1)).as("df")))
-    // N counts docs with at least one token — the indexed population;
-    // avgdl is an order-free mean (integer-valued doubles sum exactly)
-    v.write("stats", postings.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-      .coalesce(1))
+    val (dfreq, stats) = bm25DfStats(postings)
+    v.write("df", dfreq)
+    v.write("stats", stats.coalesce(1))
     // CHAMPION LIST (impact-ordered static pruning — Persin'94 /
     // Manning-Raghavan-Schütze §7.1.3, the batch-friendly stand-in for
     // WAND's dynamic postings skipping): per token, keep only the
@@ -3139,7 +3078,7 @@ object TextAnalysis {
   def appendToBm25Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, newDocs: DataFrame, batchId: Option[Long] = None): Unit =
     bm25Store.append(spark, dir, batchId)((root, id) =>
-      root.land("tf_delta", bm25Postings(newDocs)._1, id))
+      root.land("tf_delta", bm25Postings(newDocs), id))
 
   /** Fold the BM25 delta tail into a fresh version: tf = Σ(base +
     * deltas) per (doc, token) with first_pos = min and dl re-derived
@@ -3169,13 +3108,26 @@ object TextAnalysis {
       val base = old.read("tf").select(raw: _*)
       val folded = old.batchesIfAny("tf_delta")
         .fold(base)(d => base.unionByName(d.select(raw: _*)))
-      val tfRaw = folded.groupBy(col("doc_id"), col("token"))
-        .agg(sum(col("tf")).as("tf"), min(col("first_pos")).as("first_pos"))
-      val dl = tfRaw.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      v.write("tf", tfRaw.join(dl, Seq("doc_id")))
+      v.write("tf", withDocLength(folded.groupBy(col("doc_id"), col("token"))
+        .agg(sum(col("tf")).as("tf"), min(col("first_pos")).as("first_pos"))))
       writeBm25Derived(v, cp.getAs[Int]("m"),
         cp.getAs[Double]("k1"), cp.getAs[Double]("b"))
     }
+
+  /** Open the BM25 index at `indexDir` for a champion serve, failing loud
+    * unless its champion lists were impact-ordered under the serve's
+    * (k1, b).
+    */
+  private def openChampions(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String, k1: Double, b: Double): IndexStore.Root = {
+    val root = IndexStore.open(spark, indexDir)
+    // bounded driver action: champ_params is one row by construction
+    val cp = root.read("champ_params").collect()(0)
+    require(cp.getAs[Double]("k1") == k1 && cp.getAs[Double]("b") == b,
+      s"champion list impact-ordered under (k1=${cp.getAs[Double]("k1")}, " +
+        s"b=${cp.getAs[Double]("b")}), serve asked (k1=$k1, b=$b)")
+    root
+  }
 
   /** [[bm25TopKFromIndex]] against the CHAMPION prefix (`tf_top`) instead
     * of the full postings — the impact-ordered pruning twin. Semantics
@@ -3193,21 +3145,6 @@ object TextAnalysis {
     * (k1, b) must match the build's impact ordering — enforced
     * fail-loud from `champ_params`.
     */
-  /** Open the BM25 index at `indexDir` for a champion serve, failing loud
-    * unless its champion lists were impact-ordered under the serve's
-    * (k1, b).
-    */
-  private def openChampions(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String, k1: Double, b: Double): IndexStore.Root = {
-    val root = IndexStore.open(spark, indexDir)
-    // bounded driver action: champ_params is one row by construction
-    val cp = root.read("champ_params").collect()(0)
-    require(cp.getAs[Double]("k1") == k1 && cp.getAs[Double]("b") == b,
-      s"champion list impact-ordered under (k1=${cp.getAs[Double]("k1")}, " +
-        s"b=${cp.getAs[Double]("b")}), serve asked (k1=$k1, b=$b)")
-    root
-  }
-
   def bm25TopKFromChampions(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, queryEvery: Int = 100, queryTerms: Int = 4,
       topK: Int = 5, k1: Double = 1.2, b: Double = 0.75,
@@ -3231,7 +3168,7 @@ object TextAnalysis {
     *
     * `guaranteed = (θ > max_contender + ε) ∧ (θ > ub_total + ε)` where θ
     * is the k-th best champion score and max_contender the best
-    * `s_champ + miss_ub` among below-k candidates — when true, the
+    * champion `score + miss_ub` among below-k candidates — when true, the
     * champion top-k SET provably equals the exact top-k set (ordering
     * within it may differ; strict inequalities keep ties conservative:
     * an uncertifiable tie reports false, never a wrong true). This is
@@ -3274,19 +3211,15 @@ object TextAnalysis {
     val ubTot = ub.groupBy(col("query_id")).agg(sum(col("ub")).as("ub_total"))
     // candidate champion scores + the ub mass of the tokens each
     // candidate DID match (its miss is the query total minus that)
-    val cand = broadcast(qtokens)
-      .join(root.read("tf_top"), Seq("token"))
-      .join(broadcast(qidf), Seq("token"))
-      .join(broadcast(ub), Seq("query_id", "token"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(graft.functions.Exact.sumQLR(bm25TermW(k1, b), 6, 4).as("s_champ"),
-        sum(col("ub")).as("matched_ub"))
+    val cand = bm25Scores(bm25Matched(qtokens, root.read("tf_top"), qidf)
+        .join(broadcast(ub), Seq("query_id", "token")), k1, b,
+      sum(col("ub")).as("matched_ub"))
     val ranked = cand.join(broadcast(ubTot), Seq("query_id"))
       .withColumn("miss_ub", col("ub_total") - col("matched_ub"))
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("query_id"))
-          .orderBy(col("s_champ").desc, col("doc_id"))))
+          .orderBy(col("score").desc, col("doc_id"))))
     // ONE conditional aggregation over the ranked candidates (r16, guide
     // §2.4): θ / n_top / max_contender were two filtered aggs over a
     // checkpointed frame plus a re-join — same partitioning as the
@@ -3295,9 +3228,9 @@ object TextAnalysis {
     // (broadcast-joined above); min/max/count over the rk conditions are
     // exactly the old filtered aggregates.
     ranked.groupBy(col("query_id"))
-      .agg(min(when(col("rk") <= topK, col("s_champ"))).as("theta"),
+      .agg(min(when(col("rk") <= topK, col("score"))).as("theta"),
         count(when(col("rk") <= topK, lit(1))).as("n_top"),
-        max(when(col("rk") > topK, col("s_champ") + col("miss_ub")))
+        max(when(col("rk") > topK, col("score") + col("miss_ub")))
           .as("max_contender"),
         first(col("ub_total")).as("ub_total"))
       .select(col("query_id"), col("theta"), col("ub_total"),
@@ -3427,33 +3360,19 @@ object TextAnalysis {
     // exact re-score of the certified sets: candidate docs' postings via
     // a broadcast doc_id semi-join, then the ordinary scorer restricted
     // to the (query, doc) pairs — identical arithmetic ⇒ identical scores
-    val rescored = tf
+    val rescored = bm25Scores(tf
       .join(broadcast(champPairs.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
       .join(broadcast(qtokens), Seq("token"))
       .join(broadcast(champPairs), Seq("query_id", "doc_id"), "left_semi")
-      .join(broadcast(qidf), Seq("token"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(Exact.sumQLR(bm25TermW(k1, b), 6, 4).as("score"))
+      .join(broadcast(qidf), Seq("token")), k1, b)
     // uncertified queries (and any query the certificate never saw):
     // the ordinary exact scorer over their panel slice
     val fallbackQ = qtokens.select(col("query_id")).distinct()
       .join(broadcast(certOk), Seq("query_id"), "left_anti")
-    val fbScored = broadcast(qtokens
-        .join(broadcast(fallbackQ), Seq("query_id"), "left_semi"))
-      .join(tf, Seq("token"))
-      .join(broadcast(qidf), Seq("token"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(Exact.sumQLR(bm25TermW(k1, b), 6, 4).as("score"))
-    val hits = rescored.unionByName(fbScored)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("query_id"))
-          .orderBy(col("score").desc, col("doc_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
-      .orderBy(col("query_id"), col("rank"))
-    (hits, cert)
+    val fbScored = bm25Scores(bm25Matched(
+      qtokens.join(broadcast(fallbackQ), Seq("query_id"), "left_semi"), tf, qidf), k1, b)
+    (bm25Ranked(rescored.unionByName(fbScored), topK), cert)
   }
 
   /** [[bm25TopK]] served from a persisted postings index — identical
@@ -3470,6 +3389,29 @@ object TextAnalysis {
       queryEvery, queryTerms, topK, k1, b, maxQueries)
   }
 
+  /** BM25 sparse retrieval: top-k documents per query via an
+    * inverted-index equi-join — the lexical half of a RAG serving stack,
+    * complementing the dense ANN tier in [[Similarity]]. Okapi weighting:
+    * `idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5))`,
+    * `w(t,d) = idf · tf(k1+1) / (tf + k1(1 - b + b·dl/avgdl))`.
+    *
+    * Queries are derived deterministically from the corpus itself (every
+    * `queryEvery`-th document contributes its first `queryTerms` distinct
+    * tokens in order of first appearance), so the operator needs no
+    * external input and the DuckDB oracle can replay it exactly. Scores
+    * quantize per-term to 6 decimals and per-doc to 4 BEFORE ranking so
+    * partial-aggregation summation order can't flip the argsort across
+    * engines (the [[nbPredict]] discipline).
+    *
+    * Scale shape: the postings list `(token, doc_id, tf)` is the one
+    * corpus-sized frame and every step over it is token- or doc-keyed
+    * (map-side combinable); `df` is vocabulary-bounded, `N`/`avgdl` a
+    * broadcast scalar, and the query set broadcasts into the postings
+    * join so scoring touches only postings of queried tokens — at 100 TB
+    * this is the standard distributed inverted-index shape. Top-k is a
+    * per-query window over the scored candidates (bounded by queries ×
+    * matched docs), not a global sort.
+    */
   def bm25TopK(
       docs: DataFrame,
       queryEvery: Int = 100,
@@ -3478,12 +3420,12 @@ object TextAnalysis {
       k1: Double = 1.2,
       b: Double = 0.75,
       maxQueries: Int = Int.MaxValue): DataFrame = {
-    val (tf, dfreq, stats) = bm25Postings(docs)
+    val tf = bm25Postings(docs)
+    val (dfreq, stats) = bm25DfStats(tf)
     bm25HitsFrom(tf, dfreq, stats, queryEvery, queryTerms, topK, k1, b,
       maxQueries)
   }
 
-  /** The scorer over the four postings frames (inline or index-served). */
   /** The fixed query panel: first `queryTerms` tokens (by first position)
     * of every `queryEvery`-th doc, capped at `maxQueries`. maxQueries
     * caps the derived set at a FIXED size: with the plain modulus the
@@ -3543,6 +3485,7 @@ object TextAnalysis {
     col("idf") * (col("tf") * lit(k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
 
+  /** The scorer over the four postings frames (inline or index-served). */
   private def bm25HitsFrom(tf: DataFrame, dfreq: DataFrame,
       stats: DataFrame, queryEvery: Int, queryTerms: Int, topK: Int,
       k1: Double, b: Double, maxQueries: Int,
@@ -3557,12 +3500,22 @@ object TextAnalysis {
     * scoring frames).
     */
   private def bm25HitsFromPanel(qtokens: DataFrame, scoreTf: DataFrame,
-      qidf: DataFrame, topK: Int, k1: Double, b: Double): DataFrame = {
-    val termW = bm25TermW(k1, b)
-    val scored = broadcast(qtokens)
+      qidf: DataFrame, topK: Int, k1: Double, b: Double): DataFrame =
+    bm25Ranked(bm25Scores(bm25Matched(qtokens, scoreTf, qidf), k1, b), topK)
+
+  /** The postings of `scoreTf` matching a panel token, with its idf. */
+  private def bm25Matched(qtokens: DataFrame, scoreTf: DataFrame,
+      qidf: DataFrame): DataFrame =
+    broadcast(qtokens)
       .join(scoreTf, Seq("token"))
       .join(broadcast(qidf), Seq("token"))
-      .groupBy(col("query_id"), col("doc_id"))
+
+  /** The BM25 `score` per (query_id, doc_id) of every serve; the champion
+    * certificate adds its bound mass as an `extra` aggregate.
+    */
+  private def bm25Scores(matched: DataFrame, k1: Double, b: Double,
+      extra: Column*): DataFrame =
+    matched.groupBy(col("query_id"), col("doc_id"))
       // r10 (advisor catch): a plain double sum of the 6-dp-quantized term
       // weights lands on the exact 4-dp `.xxxx50` tie ~1% of cells, where
       // it is partial-aggregation-order-dependent AND `round(double, 4)`
@@ -3573,8 +3526,10 @@ object TextAnalysis {
       // double op per matched row (an explicit round(_, 6) before it was
       // a second, BigDecimal-backed quantization of the same grid point;
       // the oracle twins quantize once the same way).
-      .agg(Exact.sumQLR(termW, 6, 4).as("score"))
+      .agg(Exact.sumQLR(bm25TermW(k1, b), 6, 4).as("score"), extra: _*)
 
+  /** The top `topK` per query by (score desc, doc_id), ordered. */
+  private def bm25Ranked(scored: DataFrame, topK: Int): DataFrame =
     scored
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -3582,7 +3537,6 @@ object TextAnalysis {
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score"))
       .orderBy(col("query_id"), col("rank"))
-  }
 
   /** Retrieval quality metrics over [[bm25TopK]]'s corpus-derived query
     * set — the EVALUATION layer a retrieval stack ships with: each query
@@ -3958,17 +3912,28 @@ object TextAnalysis {
     * and excluded (they don't occur in this feed; a production corpus
     * would route them to the char fallback).
     */
-  def unigramEncodeCounts(docs: DataFrame, multiK: Int = 300): DataFrame = {
-    val wordSegs = unigramSegments(docs, multiK)
+  def unigramEncodeCounts(docs: DataFrame, multiK: Int = 300): DataFrame =
+    unigramBill(docs, uniWords(docs), unigramVocab(docs, multiK))
+
+  /** The per-doc bill `(doc_id, n_words, n_unigram_tokens)` under
+    * `vocab` over the segmented `words` (others drop at the join), shared
+    * by [[unigramEncodeCounts]] and [[unigramEncodeFromVocab]].
+    */
+  private def unigramBill(docs: DataFrame, words: DataFrame,
+      vocab: DataFrame): DataFrame = {
+    val wordSegs = viterbiSegments(words, vocab.select(col("piece"), col("logp")))
       .select(col("word"), col("n_pieces").cast("long").as("segs"))
-    docs.select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-          .as("word"))
+    docWords(docs)
       .join(broadcast(wordSegs), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("segs")).as("n_unigram_tokens"))
       .orderBy(col("doc_id"))
   }
+
+  /** Every [a-z]+ word occurrence of each doc, `(doc_id, word)`. */
+  private def docWords(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))).as("word"))
 
   /** Per-language unigram FERTILITY (pieces per word) — the unigram twin
     * of [[bpeFertility]], the multilingual-tokenizer-equity metric under
@@ -3995,9 +3960,7 @@ object TextAnalysis {
   def unigramRoundTrip(docs: DataFrame, multiK: Int = 300): DataFrame = {
     val wordSegs = unigramSegments(docs, multiK)
       .select(col("word"), detokenize(col("seg")).as("decoded"))
-    val perDoc = docs.select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-          .as("word"))
+    val perDoc = docWords(docs)
       .join(broadcast(wordSegs), Seq("word"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -4023,10 +3986,16 @@ object TextAnalysis {
 
   /** Persist the trained piece vocabulary — the fit half of the
     * tokenizer's fit→persist→serve lifecycle (the LR/LM/index store
-    * discipline): a ≤(chars + multiK)-row table, one file.
+    * discipline): one [[IndexStore]] version holding the ≤(chars +
+    * multiK)-row `vocab` table, one file.
     */
   def buildUnigramVocab(docs: DataFrame, dir: String, multiK: Int = 300): Unit =
-    unigramVocab(docs, multiK).coalesce(1).write.mode("overwrite").parquet(dir)
+    unigramStore.publish(docs.sparkSession, dir) { v =>
+      v.write("vocab", unigramVocab(docs, multiK).coalesce(1))
+    }
+
+  /** The persisted unigram vocabulary ([[IndexStore]] layout). */
+  private val unigramStore = new IndexStore("vocab")
 
   /** Serve: per-doc token bill for an INCOMING corpus under the FROZEN
     * persisted vocabulary — never a re-fit. Serve-side words containing
@@ -4036,20 +4005,19 @@ object TextAnalysis {
     * a production feed routes them to a byte fallback).
     */
   def unigramEncodeFromVocab(spark: org.apache.spark.sql.SparkSession,
-      vocabDir: String, docs: DataFrame): DataFrame = {
-    val vocab = spark.read.parquet(vocabDir).select(col("piece"), col("logp"))
+      vocabDir: String, docs: DataFrame): DataFrame =
+    unigramEncoder(spark, vocabDir)(docs)
+
+  /** [[unigramEncodeFromVocab]] with the live vocabulary and its alphabet
+    * read once, for any number of doc frames.
+    */
+  private[graft] def unigramEncoder(spark: org.apache.spark.sql.SparkSession,
+      vocabDir: String): DataFrame => DataFrame = {
+    val vocab = IndexStore.open(spark, vocabDir).read("vocab")
     val charsStr = vocab.filter(length(col("piece")) === 1)
       .select(col("piece")).collect().map(_.getString(0)).sorted.mkString
     val covered = length(translate(col("word"), charsStr, "")) === 0
-    val wordSegs = viterbiSegments(uniWords(docs).filter(covered), vocab)
-      .select(col("word"), col("n_pieces").cast("long").as("segs"))
-    docs.select(col("doc_id"),
-        explode(regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
-          .as("word"))
-      .join(broadcast(wordSegs), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"), sum(col("segs")).as("n_unigram_tokens"))
-      .orderBy(col("doc_id"))
+    docs => unigramBill(docs, uniWords(docs).filter(covered), vocab)
   }
 
   /** The Viterbi core of [[unigramSegments]] over an explicit piece

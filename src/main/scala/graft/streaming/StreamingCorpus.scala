@@ -431,8 +431,8 @@ object StreamingCorpus {
       outDir: String, checkpointDir: String,
       hasher: (SparkSession, DataFrame) => DataFrame): StreamingQuery = {
     // pin the store version at stream start (the lmScoreIngest
-    // discipline): a concurrent rebuild flips CURRENT for the NEXT
-    // stream, never mid-stream — within-batch and probe radii can't split
+    // discipline: rebuild only while the stream is stopped), so the
+    // within-batch and probe radii can't split
     val root = IndexStore.open(media.sparkSession, storeDir)
     val radius = graft.ext.Multimodal.readStoreRadius(root)
     Landing.eachBatch(media, checkpointDir) { (b, batchId, scope) =>
@@ -623,14 +623,16 @@ object StreamingCorpus {
     * equals the batch [[graft.ext.TextAnalysis.perplexityFromLm]] over
     * the same input exactly; held-out smoothing (zero-coalesced LEFT
     * joins) keeps every score finite. The LM version is resolved ONCE at
-    * stream start — a concurrent rebuild flips CURRENT for the NEXT
-    * stream, never mid-stream (scores within one run are mutually
-    * consistent). Scores land batch-id-keyed with OVERWRITE.
+    * stream start, so scores within one run are mutually consistent.
+    * Rebuild or compact the LM only while the stream is STOPPED:
+    * [[graft.ext.IndexStore.publish]] deletes the superseded version at
+    * once, so the running stream's next batch would read deleted files;
+    * the restart picks up the new version. Scores land batch-id-keyed
+    * with OVERWRITE.
     */
   def lmScoreIngest(docs: DataFrame, lmDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
-    // pin the version at stream start: a concurrent rebuild cannot flip
-    // it mid-stream
+    // pin the version at stream start (rebuild only while stopped)
     val root = IndexStore.open(docs.sparkSession, lmDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
       Landing.write(TextAnalysis.perplexityFromLm(root,
@@ -661,9 +663,9 @@ object StreamingCorpus {
     * document's weight depends only on itself and the frozen model, so
     * verdicts are final at arrival and the stream equals the batch
     * [[graft.ext.TextAnalysis.dsirWeightsFromModel]] over the same input
-    * exactly. The model version is pinned at stream start (a concurrent
-    * rebuild flips CURRENT for the NEXT stream, never mid-stream); scores
-    * land batch-id-keyed with OVERWRITE for replay idempotence.
+    * exactly. The model version is pinned at stream start; rebuild it
+    * only while the stream is stopped ([[lmScoreIngest]]). Scores land
+    * batch-id-keyed with OVERWRITE for replay idempotence.
     */
   def dsirScoreIngest(docs: DataFrame, modelDir: String, outDir: String,
       checkpointDir: String): StreamingQuery = {
@@ -840,10 +842,10 @@ object StreamingCorpus {
   /** Streaming SEMANTIC decontamination against the frozen persisted
     * benchmark store ([[graft.ext.Dedup.buildSemContamStore]]) — the
     * embedding-space twin of [[decontaminateIngest]]: version root
-    * pinned at stream start (a benchmark refresh cannot flip verdicts
-    * mid-stream), per-vec verdicts final at arrival (the store is
-    * frozen and the probe is per-row), landed batch-id-keyed with
-    * OVERWRITE. Shares
+    * pinned at stream start (refresh the benchmark store only while the
+    * stream is stopped — [[lmScoreIngest]]), per-vec verdicts final at
+    * arrival (the store is frozen and the probe is per-row), landed
+    * batch-id-keyed with OVERWRITE. Shares
     * [[graft.ext.Dedup.semanticContaminationFromStore]] verbatim, so a
     * streamed crawl flags row-for-row identically to the batch probe.
     */
@@ -865,8 +867,8 @@ object StreamingCorpus {
   /** Streaming LR scoring against the frozen persisted classifier
     * ([[graft.ext.TextAnalysis.buildLrModel]]) — the [[lmScoreIngest]]/
     * [[dsirScoreIngest]] serving shape for the third model family:
-    * version root pinned at stream start (a concurrent rebuild cannot
-    * flip predictions mid-stream), per-doc verdicts final at arrival
+    * version root pinned at stream start (rebuild only while the stream
+    * is stopped — [[lmScoreIngest]]), per-doc verdicts final at arrival
     * (model is frozen, scoring is per-doc), landed batch-id-keyed with
     * OVERWRITE. Shares [[graft.ext.TextAnalysis.lrPredictFromModel]]
     * verbatim, so a streamed corpus scores row-for-row identically to
@@ -883,19 +885,21 @@ object StreamingCorpus {
 
   /** Streaming tokenizer serving — the fourth frozen-model family next
     * to the LM/LR/DSIR ingests: every arriving batch's per-doc token
-    * bill is computed against the PERSISTED unigram vocabulary
-    * (never a re-fit; the vocab path is pinned at stream start), final
-    * at arrival (the bill is per-doc under a frozen model), landed
-    * batch-id-keyed with OVERWRITE. Shares
-    * [[graft.ext.TextAnalysis.unigramEncodeFromVocab]] verbatim, so a
+    * bill is computed against the PERSISTED unigram vocabulary (never a
+    * re-fit), final at arrival (the bill is per-doc under a frozen
+    * model), landed batch-id-keyed with OVERWRITE. The vocabulary's
+    * version and alphabet are read once, at stream start; rebuild it only
+    * while the stream is stopped ([[lmScoreIngest]]). Shares
+    * [[graft.ext.TextAnalysis.unigramEncodeFromVocab]]'s encoder, so a
     * streamed corpus bills row-for-row identically to the batch serve.
     */
   def unigramEncodeIngest(docs: DataFrame, vocabDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery =
+      checkpointDir: String): StreamingQuery = {
+    val encode = TextAnalysis.unigramEncoder(docs.sparkSession, vocabDir)
     Landing.eachBatch(docs, checkpointDir) { (batch, batchId, _) =>
-      Landing.write(TextAnalysis.unigramEncodeFromVocab(batch.sparkSession, vocabDir,
-        batch.drop("event_time")), outDir, batchId)
+      Landing.write(encode(batch.drop("event_time")), outDir, batchId)
     }
+  }
 
   /** Streaming token-budget best-first selection — the streaming twin of
     * [[graft.ext.TextAnalysis.selectByTokenBudget]]. A document's
@@ -1211,10 +1215,15 @@ object StreamingCorpus {
 
   /** Freeze a reference vocabulary snapshot (token → n) for the streaming
     * drift monitor — the "crawl T" side the incoming "crawl T+1" stream
-    * is scored against.
+    * is scored against — as the `counts` table of one
+    * [[graft.ext.IndexStore]] version.
     */
   def buildVocabRef(docs: DataFrame, refDir: String): Unit =
-    TextAnalysis.tokenCounts(docs).write.mode("overwrite").parquet(refDir)
+    vocabRefStore.publish(docs.sparkSession, refDir)(
+      _.write("counts", TextAnalysis.tokenCounts(docs)))
+
+  /** The frozen reference vocabulary ([[graft.ext.IndexStore]] layout). */
+  private val vocabRefStore = new IndexStore("counts")
 
   /** Streaming twin of [[graft.ext.TextAnalysis.vocabDrift]]: each doc
     * micro-batch collapses to vocabulary-sized partial token counts,
@@ -1247,7 +1256,7 @@ object StreamingCorpus {
     */
   def vocabDriftView(spark: SparkSession, refDir: String, outDir: String,
       topK: Int = 30, minSupport: Long = 5): DataFrame = {
-    val ref = spark.read.parquet(refDir)
+    val ref = IndexStore.open(spark, refDir).read("counts")
       .select(col("token"), col("n").as("ya"))
     val streamed = spark.read.parquet(s"$outDir/counts")
       .groupBy(col("token")).agg(sum(col("n")).as("yb"))

@@ -2519,6 +2519,18 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
       key(Similarity.embeddingPcaProject(emb).collect()))
     assert(key(Similarity.whitenFromIndex(spark, dir, emb).collect()) ==
       key(Similarity.embeddingWhiten(emb).collect()))
+    // a rebuild publishes a new version (mu and model together), sweeps
+    // the old one, and serves the same outputs
+    val root1 = graft.ext.IndexStore.resolve(spark, dir)
+    val before = key(Similarity.pcaProjectFromIndex(spark, dir, emb).collect())
+    Similarity.buildPcaIndex(emb, dir, k = 2, iters = 5)
+    val root2 = graft.ext.IndexStore.resolve(spark, dir)
+    def ver(r: String) = r.split("/v_").last.toLong
+    assert(ver(root2) == ver(root1) + 1, s"$root1 -> $root2")
+    assert(!new java.io.File(root1).exists(), s"stale $root1 not swept")
+    assert(key(Similarity.pcaProjectFromIndex(spark, dir, emb).collect()) == before)
+    assert(key(Similarity.pcaModelDfFromIndex(spark, dir).collect()) ==
+      key(Similarity.embeddingPcaModel(emb).collect()))
   }
 
   test("embeddingPagerank conserves mass and concentrates it on the kNN hub") {
@@ -3076,6 +3088,19 @@ class ExtSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(seg.split(" ").mkString("") == word, s"EM $word: '$seg'") }
     assert(em("abcd") == (("abcd", true)), s"EM drift: ${em("abcd")}")
     assert(em("the") == (("the", false)))
+  }
+
+  test("unigram bill: the self-fit encode equals build-then-serve on the same corpus") {
+    val docs = Queries.table(spark, "/root/testdata/sf0.001", "documents")
+    val dir = java.nio.file.Files.createTempDirectory("graft-uni-bill").toString
+    graft.ext.TextAnalysis.buildUnigramVocab(docs, dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val fit = rows(graft.ext.TextAnalysis.unigramEncodeCounts(docs))
+    // every in-corpus word is covered by the vocabulary's alphabet, so the
+    // serve's domain filter drops nothing and the bills agree row for row
+    assert(fit.nonEmpty)
+    assert(rows(graft.ext.TextAnalysis.unigramEncodeFromVocab(spark, dir, docs)) == fit)
   }
 
   test("communities: planted cliques converge to their min-id label; sizes consistent") {
